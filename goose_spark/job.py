@@ -200,7 +200,11 @@ def extract(pages: DataFrame, partitions: int | None = None,
         # fine-grained tasks (4× cores): the skew tail is single giant
         # documents that pin a task; small partitions let the scheduler
         # pack around them and cap stragglers at ~one giant doc each
-        # (measured on the sf0.1 corpus: 4× beats 2× and 8×)
+        # (measured on the sf0.1 corpus on a 32-vCPU host: 4× beats 2×
+        # and 8×). On a 4-vCPU host, width = cores cut the benchmark
+        # full_crawl's CPU 30-35% but lost ~10% wall on a seed whose two
+        # giant pages hash into one partition: narrowing the width
+        # needs size-aware packing first.
         partitions = spark.sparkContext.defaultParallelism * 4
     cols = pages.select("url", "warc_ts", "html", "lang")
     bucketed = with_bucket(cols)

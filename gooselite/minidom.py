@@ -12,12 +12,28 @@ implied end tags for p / li / dt / dd / td / th / tr / option, raw-text
 script/style (html.parser CDATA mode), mismatched end tags ignored.
 Entity decoding: ``convert_charrefs=True`` (stdlib) — entities become text.
 
+Tokenizing is split in two. The builder overrides html.parser's
+``goahead`` with one loop that handles the three common tokens inline,
+with no per-token callback dispatch: text runs (``html.unescape`` only
+when the run holds ``&``), complete start tags (one precompiled regex
+built from html.parser's own start-tag grammar; attributes still go
+through its ``attrfind_tolerant``) and complete end tags. Every other
+construct — comments, ``<!doctype``, ``<?pi``, ``<![``, malformed or
+unterminated tags, a bare ``<``, end tags in script/style — is handed to
+the inherited html.parser method for that one construct, under the
+stdlib loop's own end-of-input recovery. So the trees, and the inputs
+that raise ParseError, are exactly html.parser's (tests/test_minidom.py
+checks this against the stdlib loop).
+
 All traversals are iterative (no recursion) so pathologically nested
 real-world HTML cannot blow the stack.
 """
 
 from __future__ import annotations
 
+import html.parser as _hp
+import re
+from html import unescape
 from html.parser import HTMLParser
 from types import MappingProxyType
 
@@ -61,7 +77,7 @@ class Node:
         # precomputed: the profiler showed a property here costs ~13% of
         # total extraction time (6M+ calls/150 docs). Node kind never
         # changes (div→p stays an element), so a plain slot is safe.
-        self.is_element: bool = not tag.startswith("#")
+        self.is_element: bool = tag[:1] != "#"
 
     def append(self, child: "Node") -> None:
         child.parent = self
@@ -310,6 +326,39 @@ _IMPLIED_CLOSE: dict[str, tuple[frozenset[str], frozenset[str]]] = {
 }
 
 
+# -- tokenizer fast path ------------------------------------------------------
+# A start tag html.parser accepts as complete: its locatestarttagend_tolerant
+# grammar, verbatim but with the tag name as group 1, matched ATOMICALLY
+# (the first match, which is what check_for_whole_start_tag reads), then
+# ">" or "/>". The empty group 2 inside the lookahead marks where
+# tagfind_tolerant stops, which is where parse_starttag's attribute scan
+# begins.
+_STARTTAG = re.compile(r"""
+  <(?>
+    ([a-zA-Z][^\t\n\r\f />\x00]*)      # tag name
+    (?=(?:\s|/(?!>))*())               # tagfind_tolerant's end
+    (?:[\s/]*                          # optional whitespace before attribute name
+      (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
+        (?:\s*=+\s*                    # value indicator
+          (?:'[^']*'                   # LITA-enclosed value
+            |"[^"]*"                   # LIT-enclosed value
+            |(?!['"])[^>\s]*           # bare value
+           )
+          \s*                          # possibly followed by a space
+         )?(?:\s|/(?!>))*
+       )*
+     )?
+    \s*                                # trailing whitespace
+  )/?>
+""", re.VERBOSE).match
+_ATTRFIND = _hp.attrfind_tolerant.match
+_ENDTAG = _hp.endtagfind.match  # a complete "</name>"
+_STARTTAGOPEN = _hp.starttagopen.match
+_CHARREF_TAIL = re.compile(r"[\s;]").search
+_CDATA_TAGS = frozenset(HTMLParser.CDATA_CONTENT_ELEMENTS)
+_P_ONLY = frozenset(("p",))
+
+
 class _TreeBuilder(HTMLParser):
     def __init__(self, keep_raw_text: bool = False,
                  xml_mode: bool = False) -> None:
@@ -349,7 +398,153 @@ class _TreeBuilder(HTMLParser):
                 out[name] = value if value is not None else ""
         return out
 
-    # HTMLParser callbacks ----------------------------------------------------
+    # tokenizer ---------------------------------------------------------------
+    def goahead(self, end: int) -> None:
+        """html.parser's ``goahead`` (3.11, ``convert_charrefs=True``)
+        with text runs, complete start tags and complete end tags
+        tokenized and applied to the tree inline. Any other construct at
+        a ``<`` goes to the inherited ``parse_*`` method, with the
+        stdlib's ``end`` / ``k < 0`` recovery around it."""
+        rawdata = self.rawdata
+        n = len(rawdata)
+        stack = self.stack
+        skip_raw = not self.keep_raw_text
+        xml_mode = self.xml_mode
+        startswith = rawdata.startswith
+        cdata = self.cdata_elem
+        i = 0
+        while i < n:
+            if cdata is None:
+                j = rawdata.find("<", i)
+                if j < 0:
+                    # a charref may be cut at the buffer end: leave it
+                    # for more input, as html.parser does
+                    amppos = rawdata.rfind("&", max(i, n - 34))
+                    if amppos >= 0 and not _CHARREF_TAIL(rawdata, amppos):
+                        break
+                    j = n
+            else:
+                match = self.interesting.search(rawdata, i)
+                if match is None:
+                    break
+                j = match.start()
+            if i < j:
+                data = rawdata[i:j]
+                if cdata is None and "&" in data:
+                    data = unescape(data)
+                # script/style content is never consulted: the cleaner
+                # (A6) drops those subtrees before any text is read and
+                # no metadata getter looks inside them, so the (often
+                # large) JS/CSS payload is never copied into a node
+                top = stack[-1]
+                if data and not (skip_raw and top.tag in RAW_TEXT_TAGS):
+                    node = Node(TEXT, None, data)
+                    node.parent = top
+                    top.children.append(node)
+            i = j
+            if i == n:
+                break
+            if cdata is None:
+                m = _STARTTAG(rawdata, i)
+                if m is not None:
+                    k = m.end()
+                    attrib = None
+                    tail = ">"
+                    if k != m.end(1) + 1:  # more than "<name>"
+                        # parse_starttag's attribute scan, first name wins
+                        a = m.start(2)
+                        while a < k:
+                            am = _ATTRFIND(rawdata, a)
+                            if not am:
+                                break
+                            name, rest, value = am.group(1, 2, 3)
+                            if not rest:
+                                value = ""
+                            elif value[:1] == "'" == value[-1:] or \
+                                    value[:1] == '"' == value[-1:]:
+                                value = value[1:-1]
+                            if "&" in value:
+                                value = unescape(value)
+                            if attrib is None:
+                                attrib = {name.lower(): value}
+                            else:
+                                attrib.setdefault(name.lower(), value)
+                            a = am.end()
+                        tail = rawdata[a:k].strip()
+                    # any other tail: parse_starttag below makes it text
+                    if tail == ">" or tail == "/>":
+                        tag = m.group(1).lower()
+                        node = Node(tag, attrib)
+                        i = k
+                        if tail == "/>":
+                            top = stack[-1]
+                            node.parent = top
+                            top.children.append(node)
+                            continue
+                        if not xml_mode:
+                            if tag in P_CLOSING_TAGS:
+                                self._close_implied(_P_ONLY, _SCOPE_BOUNDARY)
+                            implied = _IMPLIED_CLOSE.get(tag)
+                            if implied is not None:
+                                self._close_implied(*implied)
+                        top = stack[-1]
+                        node.parent = top
+                        top.children.append(node)
+                        if xml_mode or tag not in VOID_ELEMENTS:
+                            stack.append(node)
+                        if tag in _CDATA_TAGS:
+                            self.set_cdata_mode(tag)
+                            cdata = tag
+                        continue
+                else:
+                    m = _ENDTAG(rawdata, i)
+                    if m is not None:
+                        tag = m.group(1).lower()
+                        # a void element is never on the stack (html mode)
+                        if stack[-1].tag == tag:
+                            stack.pop()
+                        else:
+                            self.handle_endtag(tag)
+                        i = m.end()
+                        continue
+            # rare constructs: html.parser's own methods and recovery
+            if _STARTTAGOPEN(rawdata, i):
+                k = self.parse_starttag(i)
+            elif startswith("</", i):
+                k = self.parse_endtag(i)
+            elif startswith("<!--", i):
+                k = self.parse_comment(i)
+            elif startswith("<?", i):
+                k = self.parse_pi(i)
+            elif startswith("<!", i):
+                k = self.parse_html_declaration(i)
+            elif i + 1 < n:
+                self.handle_data("<")
+                k = i + 1
+            else:
+                break
+            cdata = self.cdata_elem
+            if k < 0:
+                if not end:
+                    break
+                k = rawdata.find(">", i + 1)
+                if k < 0:
+                    k = rawdata.find("<", i + 1)
+                    if k < 0:
+                        k = i + 1
+                else:
+                    k += 1
+                if cdata is None:
+                    self.handle_data(unescape(rawdata[i:k]))
+                else:
+                    self.handle_data(rawdata[i:k])
+            i = k
+        if end and i < n and not self.cdata_elem:
+            self.handle_data(unescape(rawdata[i:n]))
+            i = n
+        self.rawdata = rawdata[i:]
+
+    # html.parser callbacks (the rare constructs above) -----------------------
     def handle_starttag(self, tag: str, attrs) -> None:
         if self.xml_mode:
             node = Node(tag, self._attrs_to_dict(attrs))
@@ -357,7 +552,7 @@ class _TreeBuilder(HTMLParser):
             self.stack.append(node)
             return
         if tag in P_CLOSING_TAGS:
-            self._close_implied(frozenset(("p",)), _SCOPE_BOUNDARY)
+            self._close_implied(_P_ONLY, _SCOPE_BOUNDARY)
         implied = _IMPLIED_CLOSE.get(tag)
         if implied is not None:
             self._close_implied(*implied)
@@ -381,23 +576,12 @@ class _TreeBuilder(HTMLParser):
 
     def handle_data(self, data: str) -> None:
         if data:
-            # script/style content is never consulted: the cleaner (A6)
-            # drops those subtrees before any text is read, and no
-            # metadata getter looks inside them — skipping the text node
-            # at parse time avoids allocating/copying the (often large)
-            # JS/CSS payload of real-world pages entirely
             if self.stack[-1].tag in RAW_TEXT_TAGS and not self.keep_raw_text:
                 return
             self._top().append(new_text(data))
 
     def handle_comment(self, data: str) -> None:
         self._top().append(Node(COMMENT, text=data))
-
-    def updatepos(self, i: int, j: int) -> int:
-        """No-op override of _markupbase position tracking: it exists
-        only for error line/col reporting, which this builder never
-        surfaces — ~3% of parse time on large pages."""
-        return j
 
     # declarations / PIs / unknown: ignored
     def handle_decl(self, decl: str) -> None:

@@ -19,10 +19,14 @@ tests/test_warc.py).
 """
 from __future__ import annotations
 
+import re
 import zlib
 from typing import List, NamedTuple, Optional
 
 _CRLF = b"\r\n"
+# an HTTP start line: a status line, or a request line (method SP
+# target SP version) — never a header field, whose name has no space
+_START_LINE = re.compile(rb"HTTP/|[^\s:]+ \S+ HTTP/")
 
 
 class WarcRecord(NamedTuple):
@@ -74,7 +78,10 @@ def write_warc(pages, warc_date: str = "2026-01-01T00:00:00Z",
                 [("WARC-Type", "request"), ("WARC-Date", warc_date),
                  ("WARC-Target-URI", url),
                  ("Content-Type", "application/http; msgtype=request")], req))
-        head = b"".join(f"{k}: {v}".encode() + _CRLF for k, v in extra)
+        # the writer frames the body itself: a caller's Content-Length
+        # would be a second, possibly conflicting, one
+        head = b"".join(f"{k}: {v}".encode() + _CRLF for k, v in extra
+                        if k.lower() != "content-length")
         http = (f"HTTP/1.1 {status_line}".encode() + _CRLF + head
                 + f"Content-Length: {len(payload)}".encode() + _CRLF + _CRLF
                 + payload)
@@ -211,14 +218,18 @@ def read_warc(b: bytes) -> List[WarcRecord]:
 
 
 def parse_http_headers(head: Optional[bytes]) -> dict:
-    """Parse a raw HTTP header block (status line + CRLF header lines)
-    into a lowercase-keyed dict. Duplicate field names are joined with
-    ", " per RFC 9110 §5.2 list-combination; malformed lines (no colon)
-    are skipped. Returns {} for None/empty input."""
+    """Parse a raw HTTP header block (an optional status or request
+    line, then CRLF header lines) into a lowercase-keyed dict. Duplicate
+    field names are joined with ", " per RFC 9110 §5.2
+    list-combination; malformed lines (no colon) are skipped. Returns
+    {} for None/empty input."""
     out: dict = {}
     if not head:
         return out
-    for line in head.split(_CRLF)[1:]:
+    lines = head.split(_CRLF)
+    if _START_LINE.match(lines[0]):
+        del lines[0]
+    for line in lines:
         k, sep, v = line.partition(b":")
         if not sep or not k.strip():
             continue

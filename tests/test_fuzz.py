@@ -1,11 +1,13 @@
 """Property tests (SURVEY.md §5.2): extract_one must be total — any
 bytes in, a well-formed result dict out, never an exception. Hypothesis
-drives random byte blobs, mangled HTML, and truncations."""
+drives random byte blobs, mangled HTML, and truncations. The parser is
+total on its own too: a tree or a ParseError, in every mode."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gooselite import extract_one
+from gooselite.minidom import DOCUMENT, ParseError, parse_html
 
 VALID_STATUS = {"ok", "empty", "parse_error", "decode_error"}
 
@@ -60,3 +62,14 @@ def test_truncation_never_raises(cut):
             b"</head><body><div><p>Some of the words that we know are "
             b"here in the page body for all of us.</p></div></body></html>")
     _check(extract_one(page[:cut], "en", "https://fuzz.example/t"))
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.text(max_size=2048))
+def test_parse_html_returns_tree_or_parse_error(text):
+    for mode in ({}, {"keep_raw_text": True}, {"xml_mode": True}):
+        try:
+            root = parse_html(text, **mode)
+        except ParseError:
+            continue
+        assert root.tag == DOCUMENT and root.parent is None

@@ -1,4 +1,11 @@
-from gooselite.minidom import parse_html
+import os
+from html.parser import HTMLParser
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from gooselite.minidom import ParseError, _TreeBuilder, parse_html
 
 
 def test_basic_tree_and_text():
@@ -114,3 +121,116 @@ def test_xml_mode_void_elements_nest():
     nested = parse_html("<p>a<p>b</p></p>", xml_mode=True)
     outer = nested.get_elements_by_tag("p")[0]
     assert outer.get_text().replace(" ", "") == "ab"
+
+
+# -- differential: the fused tokenizer vs html.parser's own loop -------------
+
+MODES = ({}, {"keep_raw_text": True}, {"xml_mode": True})
+
+
+class _StdlibLoop(_TreeBuilder):
+    """The oracle: the same tree callbacks driven by html.parser's goahead."""
+
+    goahead = HTMLParser.goahead
+
+
+def _parse_stdlib(text, **mode):
+    builder = _StdlibLoop(**mode)
+    try:
+        builder.feed(text)
+        builder.close()
+    except Exception as exc:
+        raise ParseError(str(exc)) from exc
+    return builder.root
+
+
+def _node_seq(root):
+    """(depth, tag, attribute items in order, text) in document order."""
+    out = []
+    stack = [(root, 0)]
+    while stack:
+        node, depth = stack.pop()
+        out.append((depth, node.tag, tuple(node.attrib.items()), node.text))
+        stack.extend((kid, depth + 1) for kid in reversed(node.children))
+    return out
+
+
+def _outcome(parse, text, mode):
+    try:
+        return _node_seq(parse(text, **mode))
+    except ParseError as exc:
+        return ("ParseError", str(exc))
+
+
+def _assert_same(text):
+    for mode in MODES:
+        assert _outcome(parse_html, text, mode) == \
+            _outcome(_parse_stdlib, text, mode), (mode, text[:200])
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_tokenizer_matches_stdlib_loop_on_fixture_pages(sf):
+    import pyarrow.parquet as pq
+
+    from goose_spark.ducklab import SF_DIR_DEFAULT
+    from goose_spark.fixtures import ensure_pages
+    from gooselite.encoding import DecodeError, decode_html
+
+    pages, _ = ensure_pages(os.path.join(os.path.dirname(SF_DIR_DEFAULT), sf))
+    checked = 0
+    for blob in pq.read_table(pages, columns=["html"]).column("html").to_pylist():
+        if not blob:
+            continue
+        try:
+            text, _enc = decode_html(blob)
+        except DecodeError:
+            continue
+        _assert_same(text)
+        checked += 1
+    assert checked > 100
+
+
+_NAMES = ["p", "P", "div", "DiV", "li", "td", "TR", "br", "img", "link", "a",
+          "b", "span", "table", "option", "dl", "dt", "dd", "html", "body",
+          "script", "style", "SCRIPT", "x-y", "h1"]
+_ATTR = st.tuples(
+    st.sampled_from(["class", "CLASS", "id", "href", "data-x", "x", "=x", "a'b"]),
+    st.sampled_from(["", "=v", '="a b"', "='q'", '="&amp;&#x41;"', "=&bogus",
+                     "= 'sp' ", "==x", "=", '="unterminated', "=a/", "=/"]),
+).map(lambda nv: " " + nv[0] + nv[1])
+_START = st.tuples(
+    st.sampled_from(_NAMES), st.lists(_ATTR, max_size=4),
+    st.sampled_from([">", "/>", " />", " >", "/ >", "", "\n>"]),
+).map(lambda t: "<" + t[0] + "".join(t[1]) + t[2])
+_END = st.sampled_from(_NAMES).flatmap(lambda n: st.sampled_from(
+    [f"</{n}>", f"</{n} >", f"</ {n}>", f"</{n} junk>", f"</{n}"]))
+_MARKUP = st.sampled_from([
+    "<!-- c -->", "<!--x", "<!---->", "<!-- a -- b --!>", "<!>", "<!x>",
+    "<!doctype html>", "<!DOCTYPE", "<?pi x?>", "<?pi", "<![CDATA[x]]>",
+    "<![bogus[x]]>", "<![if x]>", "<![", "</>", "</", "<", "&", "&amp;",
+    "&#x41;", "&#65", "&bogus", "&#1;", "& ;", "<3", "< p>",
+    "<script>a < b</scriptx>c</script>", "<style>x</style >",
+    "<script>", "</SCRIPT>", "<SCRIPT>x</script>",
+])
+_TEXT = st.text(alphabet="ab &;<>\"'=/!-#x\n", max_size=12)
+_SOUP = st.lists(st.one_of(_START, _END, _MARKUP, _TEXT), max_size=40) \
+    .map("".join)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_SOUP)
+def test_tokenizer_matches_stdlib_loop_on_tag_soup(text):
+    _assert_same(text)
+
+
+@pytest.mark.parametrize("text", [
+    "<![bogus[x]]>",            # ParseError from parse_marked_section
+    "<p>a<![bogus[",
+    "<div class='x' <!-- -->",
+    "<p>tail &amp",             # charref cut at the buffer end
+    "<script>never closed <b>",
+    "<a href=/x/>t</a>",        # bare value swallows the slash
+    "<br/><br /><img src=a/>",
+])
+def test_tokenizer_matches_stdlib_loop_on_edge_cases(text):
+    _assert_same(text)

@@ -227,3 +227,28 @@ def test_parse_http_headers_edge_cases():
     assert h["x-empty"] == ""
     assert "garbage line without colon" not in str(h)
     assert len(h) == 2
+
+
+def test_parse_http_headers_keeps_first_line_without_status_line():
+    from gooselite.warc import parse_http_headers
+
+    head = b"Content-Type: text/html\r\nLocation: https://e/moved\r\n"
+    assert parse_http_headers(head) == {"content-type": "text/html",
+                                        "location": "https://e/moved"}
+    # status and request lines are still dropped, colon or not
+    assert parse_http_headers(b"HTTP/1.1 200 OK: fine\r\nA: 1") == {"a": "1"}
+    assert parse_http_headers(b"GET https://e/x HTTP/1.1\r\nHost: e") == \
+        {"host": "e"}
+
+
+def test_write_warc_drops_caller_content_length():
+    from gooselite.warc import parse_http_headers
+
+    pages = [("https://e/cl", b"body", "200 OK",
+              [("content-LENGTH", "999"), ("Content-Type", "text/plain")])]
+    (resp,) = [r for r in read_warc(write_warc(pages))
+               if r.rec_type == "response"]
+    assert resp.http_headers.lower().count(b"content-length") == 1
+    assert parse_http_headers(resp.http_headers) == {
+        "content-type": "text/plain", "content-length": "4"}
+    assert resp.payload == b"body"
