@@ -1,11 +1,10 @@
 #!/usr/bin/env python
-"""Headline benchmark (driver contract): runs the flagship extraction +
-headline relational/text operators at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line. Fixture synthesis (cached in /tmp) is excluded from timings.
-
-Scaling evidence (N vs 4N, BASELINE.md) is produced separately by
-BENCH/run_scaling.py — two parallelism levels need two JVMs.
+"""The ``headline_suite_sec`` line: the flagship extraction plus the tail
+operators below at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data)
+on local[$SPARK_GRAFT_CPUS] (default: every CPU),
+printed as ONE JSON line. Fixture synthesis (cached in /tmp) is not
+timed. Each number is a plain min of N wall times with no host-noise
+correction; perfbench/run.py is the calibrated, layer-split benchmark.
 """
 
 from __future__ import annotations
@@ -15,45 +14,15 @@ import os
 import sys
 import time
 
-
-# Best q_extract wall seconds ever recorded on this box per sf, updated
-# when a faster quiet-window run lands (BENCH/BASELINE.md history). Used
-# only to veto premature early-stop — never reported as the measurement.
-_HISTORICAL_BEST_S = {0.1: 10.5, 0.01: 2.8}
-
-# The headline tail queries timed after q_extract — single source of
-# truth for both the timing loop and the guard-coverage check below.
+# Timed after q_extract, min of 2 passes each; the sum of all these plus
+# q_extract is the headline.
 _TAIL_QUERIES = (
     "q_hash_agg", "q_window_dedupe", "q_equi_join_3way", "q_topk",
     "q_dedup_exact", "q_token_count", "q_fingerprint",
     "q_minhash_pairs", "q_simhash", "q_ann_cosine_topk",
     "q_pdf_extract", "q_image_decode", "q_repetition_filter",
-    # late-r4 corpus-maintenance flagships (adds ~2.5s to the suite
-    # total vs r3's query set)
-    "q_paragraph_dedup", "q_pagerank",
-    # late-r4 span-level dedup (adds ~1s vs the 16-query set)
-    "q_substring_dedup",
+    "q_paragraph_dedup", "q_pagerank", "q_substring_dedup",
 )
-
-# Per-tail-query quiet-window bests at sf0.1 (best of BENCH_r2-r4 +
-# quiet-window re-lands). Same role as above: a recorded number >1.5×
-# its best for unchanged code is epoch noise (BENCH_r04 recorded
-# q_dedup_exact 2.11 s vs 0.29 s best with byte-identical queries.py);
-# the guard buys those queries extra attempts and, failing that, tags
-# them epoch_capped in the output instead of letting a governor-bound
-# window masquerade as a regression.
-_TAIL_HISTORICAL_BEST_S = {
-    0.1: {  # refreshed from the r5 quiet-window session (2026-08-18)
-        "q_hash_agg": 0.30, "q_window_dedupe": 0.45,
-        "q_equi_join_3way": 0.38, "q_topk": 0.17, "q_dedup_exact": 0.19,
-        "q_token_count": 0.14, "q_fingerprint": 0.14,
-        "q_minhash_pairs": 1.24, "q_simhash": 0.13,
-        "q_ann_cosine_topk": 0.53, "q_pdf_extract": 1.19,
-        "q_image_decode": 0.61, "q_repetition_filter": 0.53,
-        "q_paragraph_dedup": 0.43, "q_pagerank": 0.47,
-        "q_substring_dedup": 2.25,
-    },
-}
 
 
 def build_session(cpus: int):
@@ -75,7 +44,7 @@ def build_session(cpus: int):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     sf = float(os.path.basename(os.path.normpath(sf_dir)).replace("sf", "") or 0)
 
     from pyspark.sql import functions as F
@@ -85,166 +54,51 @@ def main() -> None:
 
     pages_path, _ = ensure_pages(sf_dir)  # cached; generation NOT timed
 
-    # Pre-cooldown: this host applies a multi-minute load governor after
-    # sustained wide load (BENCH/BASELINE.md), and the driver typically
-    # invokes bench right after its correctness pass — which would charge
-    # the governor's penalty to the first timed runs (measured: identical
-    # code 18.9 s in a settled window vs 36 s launched hot). Wait, capped,
-    # for the 1-minute load average to settle before starting the JVM;
-    # the wait is recorded in the output, never the timings.
-    precool = 0.0
-    try:
-        # 1.2 not 2.0: a session launched at load 1.8 (just under the
-        # old gate) still recorded a 54 s first pass on code whose
-        # quiet-window time is 14.9 s
-        while precool < 120 and os.getloadavg()[0] > 1.2:
-            time.sleep(10)
-            precool += 10
-    except OSError:  # pragma: no cover - platforms without getloadavg
-        pass
-
     spark = build_session(cpus)
     J.configure_session(spark)
 
-    timings: dict[str, float] = {}
-    extras: dict[str, float] = {}
-
     # --- flagship: the extraction pipeline (dedupe → salt → mapInPandas) ---
-    # Protocol (BENCH/BASELINE.md): the box has bursty noisy-neighbor
-    # interference (2-3× single-run swings), so (a) an untimed warm-up
-    # slice spins up the JVM stages, python workers, malloc arenas and
-    # stopword tables, then (b) the timed pass runs twice and the min is
-    # reported — a cold noisy window no longer masquerades as throughput.
     todo = J.prepare(J.read_pages(spark, pages_path))
+    # untimed warm-up: JVM stages, python workers, stopword tables
+    J.extract(todo.limit(64), partitions=cpus).agg(
+        F.count(F.lit(1))).collect()
 
-    def _extract_pass():
+    runs: list[float] = []
+    for _ in range(3):
         t0 = time.perf_counter()
         row = J.extract(todo, partitions=cpus * 4).agg(
             F.count(F.lit(1)).alias("docs"),
-            F.sum(F.length("cleaned_text")).alias("chars_out"),
             F.sum("bytes_in").alias("bytes_in"),
         ).collect()[0]
-        return time.perf_counter() - t0, row
+        runs.append(time.perf_counter() - t0)
+    timings = {"q_extract": min(runs)}
+    mb_in = (row["bytes_in"] or 0) / 1e6
 
-    J.extract(todo.limit(64), partitions=cpus).agg(
-        F.count(F.lit(1))).collect()  # warm-up, untimed
-
-    # adaptive min-of-N: keep timing until the two best passes agree
-    # within 20% (attempt cap below). Quiet windows stop at 2; a noisy window
-    # (observed 134 s then 31 s, identical code) gets more chances to
-    # catch a gap in the interference.
-    #
-    # Historical-best guard (VERDICT r2 item 6): two passes that agree
-    # can still both sit in the same slow window (r2 driver run: 25.5 s
-    # and 30.6 s agreed within 20% while the recorded best for identical
-    # code was 10.5 s). When the session best is >1.5× the recorded
-    # historical best for this sf, agreement is NOT evidence of a quiet
-    # window — keep retrying inside the same attempt/time caps.
-    hist_best = _HISTORICAL_BEST_S.get(round(sf, 4))
-    runs: list[float] = []
-    row = None
-    settle = 0.0
-    loop_t0 = time.perf_counter()
-    # attempt cap 6 (was 4): the 300 s time budget is the real guard;
-    # a noisy epoch with 30-50 s passes deserves the extra chances
-    # (observed [54, 104, 38, 29] stopping at the old attempt cap with
-    # 76 s of budget left and the window visibly improving)
-    while len(runs) < 6 and sum(runs) < 300 \
-            and time.perf_counter() - loop_t0 < 480:
-        t, r = _extract_pass()
-        runs.append(t)
-        row = r if row is None else row
-        if len(runs) >= 2 and sorted(runs)[1] <= sorted(runs)[0] * 1.2:
-            if hist_best is None or min(runs) <= hist_best * 1.5:
-                break
-        # governor-aware spacing: back-to-back 32-thread attempts keep
-        # the load governor engaged, so a hot epoch records 3-5 slow
-        # passes in a row ([94.9, 88.5, 65.2, ...] on code whose quiet
-        # time is 19 s) while the single-core calibration looks normal
-        # — only TIME heals it. When a pass lands far off the recorded
-        # best, let the box settle before the next attempt; the sleep
-        # is recorded, never timed.
-        # only settle when a NEXT attempt is actually possible under
-        # all three loop bounds — otherwise the sleep is dead wall time
-        if (hist_best is not None and t > hist_best * 3
-                and len(runs) < 6 and sum(runs) < 300
-                and time.perf_counter() - loop_t0 + 45 < 480):
-            time.sleep(45)
-            settle += 45
-    extras["intra_settle_s"] = settle
-    timings["q_extract"] = min(runs)
-    extras["q_extract_runs"] = [round(t, 3) for t in runs]
-    extras["precooldown_s"] = round(precool, 1)
-    if hist_best is not None:
-        extras["q_extract_historical_best"] = hist_best
-    extras["docs_extracted"] = int(row["docs"])
-    extras["mb_in"] = round((row["bytes_in"] or 0) / 1e6, 1)
-    extras["docs_per_sec"] = round(row["docs"] / timings["q_extract"], 2)
-    extras["mb_per_sec"] = round((row["bytes_in"] or 0) / 1e6 / timings["q_extract"], 2)
-
-    # --- headline relational / text / similarity operators ---
-    # min-of-2 per query: the first run doubles as its warm-up (plan
-    # compile, scan cache); a noisy-window first run no longer defines
-    # the recorded number (q_minhash_pairs measured 8.4s cold / 1.7s warm
-    # in a quiet window, 42s in a noisy one).
+    # --- tail: the first pass doubles as each query's warm-up ---
     import __spark_entry__ as entry
 
     qs = entry.queries()
     for name in _TAIL_QUERIES:
-        best = float("inf")
+        walls = []
         for _ in range(2):
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = best
+            walls.append(time.perf_counter() - t0)
+        timings[name] = min(walls)
 
-    # Tail historical-best guard (VERDICT r4 item 4): min-of-2 passes
-    # that both land in a governor-degraded window still record a bogus
-    # 10× number for unchanged code. Queries sitting >1.5× their quiet-
-    # window best get up to 2 extra attempts inside a shared 90 s
-    # budget; any still over after that are tagged epoch_capped so the
-    # reader can tell host noise from a code regression.
-    tail_best = _TAIL_HISTORICAL_BEST_S.get(round(sf, 4), {})
-    retry_t0 = time.perf_counter()
-    epoch_capped: list[str] = []
-    for name, hist in tail_best.items():
-        if name not in timings:
-            continue
-        attempts = 0
-        while (timings[name] > hist * 1.5 and attempts < 2
-               and time.perf_counter() - retry_t0 < 90):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            timings[name] = min(timings[name], time.perf_counter() - t0)
-            attempts += 1
-        if timings[name] > hist * 1.5:
-            epoch_capped.append(name)
-    if epoch_capped:
-        extras["epoch_capped"] = sorted(epoch_capped)
-        extras["epoch_capped_note"] = (
-            "queries >1.5x their recorded quiet-window best after "
-            "retries — usually a host-governor epoch (BENCH/BASELINE.md) "
-            "but the guard cannot rule out a code regression; compare "
-            "against the per-query history before trusting either way")
-    # Desync trap: a timed query with no historical-best entry is
-    # recorded UNGUARDED (a governor epoch writes a bogus number for
-    # it) — surface the gap instead of hiding it.
-    if tail_best:
-        unguarded = sorted(n for n in _TAIL_QUERIES if n not in tail_best)
-        if unguarded:
-            extras["unguarded_tail"] = unguarded
-
-    total = sum(timings.values())
-    result = {
+    print(json.dumps({
         "metric": "headline_suite_sec",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "sf": sf,
         "cpus": cpus,
-        **extras,
-    }
-    print(json.dumps(result))
+        "q_extract_runs": [round(t, 3) for t in runs],
+        "docs_extracted": int(row["docs"]),
+        "mb_in": round(mb_in, 1),
+        "docs_per_sec": round(row["docs"] / timings["q_extract"], 2),
+        "mb_per_sec": round(mb_in / timings["q_extract"], 2),
+    }))
     spark.stop()
 
 

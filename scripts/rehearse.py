@@ -7,7 +7,7 @@ SUM->HUGEINT class the type-insensitive pytest compare missed in r3/r4).
 Probes without an oracle get the weaker rows-only check, like the driver.
 
 Usage:
-    python scripts/rehearse.py            # first 50 (the graded window)
+    python scripts/rehearse.py            # the 50 graded probes
     python scripts/rehearse.py --all      # all registered probes
     python scripts/rehearse.py q_pagerank q_pmi_bigrams   # just these
 
@@ -28,8 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from goose_spark.ducklab import SF_DIR_DEFAULT as SF_DIR  # noqa: E402
 from goose_spark.ducklab import duck_views  # noqa: E402
-
-GRADED_WINDOW = 50
 
 
 def value_hash(tbl):
@@ -53,13 +51,12 @@ def main(argv):
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    names = list(qs)
     if "--all" in argv:
-        sel = names
+        sel = list(qs)
     elif [a for a in argv if not a.startswith("-")]:
         sel = [a for a in argv if not a.startswith("-")]
     else:
-        sel = names[:GRADED_WINDOW]
+        sel = [fn.__name__ for fn, _ in entry.probes()[0]]
 
     spark = (SparkSession.builder.master("local[16]")
              .config("spark.sql.shuffle.partitions", "16")
