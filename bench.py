@@ -58,15 +58,18 @@ def main() -> None:
     J.configure_session(spark)
 
     # --- flagship: the extraction pipeline (dedupe → salt → mapInPandas) ---
-    todo = J.prepare(J.read_pages(spark, pages_path))
+    pages = J.read_pages(spark, pages_path)
+    todo = J.prepare(pages)
+    width = spark.sparkContext.defaultParallelism  # extract()'s default
     # untimed warm-up: JVM stages, python workers, stopword tables
-    J.extract(todo.limit(64), partitions=cpus).agg(
-        F.count(F.lit(1))).collect()
+    J.extract(todo.limit(64)).agg(F.count(F.lit(1))).collect()
 
     runs: list[float] = []
     for _ in range(3):
         t0 = time.perf_counter()
-        row = J.extract(todo, partitions=cpus * 4).agg(
+        # the same placement plan as run_job, timed with the extraction
+        slot_map = J.slot_plan(pages, width)
+        row = J.extract(todo, width, slot_map=slot_map).agg(
             F.count(F.lit(1)).alias("docs"),
             F.sum("bytes_in").alias("bytes_in"),
         ).collect()[0]

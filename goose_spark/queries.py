@@ -345,9 +345,12 @@ FROM events
 # -------------------------------------------------------- salting (B15) ----
 def q_salt_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B15: aggregation result must be invariant under salted repartition —
-    the oracle is the plain GROUP BY, proving the salt changes nothing."""
+    the oracle is the plain GROUP BY, proving the salt changes nothing.
+    The salt is the job's: repartitionById places each row in the slot
+    pmod(xxhash64(key), 64) names, with no second hash."""
     li = load(spark, sf_dir, "lineitem")
-    salted = li.repartition(64, F.pmod(F.xxhash64("l_orderkey"), F.lit(64)))
+    salted = li.repartitionById(
+        64, F.pmod(F.xxhash64("l_orderkey"), F.lit(64)).cast("int"))
     return salted.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.count(F.lit(1)).alias("n"),
