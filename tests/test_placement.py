@@ -1,6 +1,5 @@
 """Placement of the extraction stage (B15): one Python task per core, and
-each hashed slot's largest page re-dealt by bytes (LPT) so two large
-pages that hash together land in different tasks."""
+every page in the partition its slot pmod(xxhash64(url), P) names."""
 
 import datetime
 
@@ -10,36 +9,6 @@ from pyspark.sql import functions as F
 from goose_spark import job as J
 
 
-# ------------------------------------------------- the LPT re-deal alone ---
-def test_deal_separates_two_large_pages_in_one_slot():
-    # slot 0 holds a (1000) and a 900-byte page; the others hold 40-70
-    summary = {0: (1950, 1000, "a"), 1: (60, 10, "b"),
-               2: (70, 10, "c"), 3: (40, 10, "d")}
-    moves = J.deal_largest(summary, 4)
-    assert moves.get("a", 0) != 0  # the largest left the 900-byte page
-
-
-def test_deal_moves_only_the_largest_of_a_slot():
-    # three large pages (1000, 900, 800) in slot 0: only `a` is dealt,
-    # and slot 0 keeps the other two, so nothing is dealt into it
-    summary = {0: (2750, 1000, "a"), 1: (60, 10, "b"),
-               2: (70, 10, "c"), 3: (40, 10, "d")}
-    moves = J.deal_largest(summary, 4)
-    assert moves["a"] != 0
-    assert 0 not in moves.values()
-
-
-def test_deal_keeps_balanced_slots_home_and_fills_empty_ones():
-    balanced = {s: (100, 10, f"u{s}") for s in range(4)}
-    assert J.deal_largest(balanced, 4) == {}
-    # slot 1 is empty and slot 3 holds only 0-byte pages, which are not
-    # dealt: the largest pages of slots 0 and 2 move into those two
-    moves = J.deal_largest({0: (100, 60, "big"), 2: (100, 10, "c"),
-                            3: (0, 0, "nul")}, 4)
-    assert moves == {"big": 1, "c": 3}
-
-
-# ----------------------------------------------------------- with Spark ---
 def _udf_tasks(spark, group: str) -> int:
     """Tasks run by the stages of job group `group` that evaluate the
     extraction UDF (their operator graph holds MapInPandas)."""
@@ -76,33 +45,13 @@ def test_run_job_runs_one_udf_task_per_core(spark, sf0001_fixtures, tmp_path):
     assert _udf_tasks(spark, "placement-width") == sc.defaultParallelism
 
 
-def test_slot_summary_counts_null_and_empty_html_as_zero(spark):
-    pages = spark.createDataFrame(
-        [(f"https://z.example/{i}", None if i % 2 else bytearray())
-         for i in range(12)], "url string, html binary")
-    summary = J.slot_summary(pages, 4)
-    assert summary and all(total == 0 and top == 0
-                           for total, top, _ in summary.values())
-    assert J.deal_largest(summary, 4) == {}
-
-
-def test_two_large_pages_sharing_a_slot_run_in_different_tasks(spark,
-                                                               tmp_path):
+def test_every_page_runs_in_its_hashed_slot(spark, tmp_path):
     P = spark.sparkContext.defaultParallelism
-    slot = F.pmod(F.xxhash64("url"), F.lit(P))
-    cands = [r.url for r in spark.range(64).select(
-        F.concat(F.lit("https://big.example/"), F.col("id").cast("string"))
-        .alias("url")).collect()]
-    hashed = {r.url: r.s for r in spark.createDataFrame(
-        [(u,) for u in cands], "url string").select(
-            "url", slot.alias("s")).collect()}
-    big = [u for u in cands if hashed[u] == hashed[cands[0]]][:2]
-    assert len(big) == 2
-
     para = b"<p>The quick brown fox jumps over the lazy dog and the cat.</p>"
     ts = datetime.datetime(2025, 1, 1)
-    rows = [(u, ts, bytearray(b"<html><body>" + para * n + b"</body></html>"),
-             "en") for u, n in zip(big, (1600, 1300))]
+    rows = [(f"https://big.example/{i}", ts,
+             bytearray(b"<html><body>" + para * n + b"</body></html>"), "en")
+            for i, n in enumerate((1600, 1300))]
     rows += [(f"https://small.example/{i}", ts,
               bytearray(b"<html><body>" + para * 8 + b"</body></html>"), "en")
              for i in range(40)]
@@ -118,11 +67,9 @@ def test_two_large_pages_sharing_a_slot_run_in_different_tasks(spark,
                         columns=["url", "partition_id"]).to_pylist()
     pid = {r["url"]: r["partition_id"] for r in got}
     assert len(got) == len(rows) == len(pid)
-    assert pid[big[0]] != pid[big[1]]
     assert set(pid.values()) == set(range(P))
-    # pages the plan did not move sit in their hashed slot: no second hash
-    moved = J.slot_plan(J.read_pages(spark, pages_path), P)
-    assert big[0] in moved
+    # repartitionById places each row by its slot, with no second hash
+    slot = F.pmod(F.xxhash64("url"), F.lit(P))
     want = {r.url: r.s for r in spark.read.parquet(pages_path)
             .select("url", slot.alias("s")).collect()}
-    assert all(p == want[u] for u, p in pid.items() if u not in moved)
+    assert pid == want
