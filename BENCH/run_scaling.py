@@ -50,10 +50,10 @@ J.configure_session(spark)
 
 pages_path = {pages_path!r}
 # warmup: touch the input + spin up python workers on a tiny slice
-J.extract(J.prepare(J.read_pages(spark, pages_path).limit(64)), partitions=cpus).count()
+J.extract(J.prepare(J.read_pages(spark, pages_path).limit(64))).count()
 
 t0 = time.perf_counter()
-out = J.extract(J.prepare(J.read_pages(spark, pages_path)), partitions=cpus * 4)
+out = J.extract(J.prepare(J.read_pages(spark, pages_path)))
 row = out.agg(F.count(F.lit(1)).alias("docs"), F.sum("bytes_in").alias("b")).collect()[0]
 dt = time.perf_counter() - t0
 print("RESULT " + json.dumps({{"cpus": cpus, "sec": dt, "docs": int(row["docs"]),
@@ -75,8 +75,8 @@ tbl = pq.read_table({pages_path!r}, columns=["url", "html", "lang"])
 urls = tbl.column("url").to_pylist()
 htmls = tbl.column("html").to_pylist()
 langs = tbl.column("lang").to_pylist()
-# deterministic size-decorrelating stripe (the mp twin of the salted
-# repartition + in-partition hash sort): order by md5(url), round-robin
+# deterministic size-decorrelating stripe (the mp twin of the url
+# partitioning + in-partition hash sort): order by md5(url), round-robin
 order = sorted(range(len(urls)),
                key=lambda i: hashlib.md5(urls[i].encode()).digest())
 shards = [order[k::W] for k in range(W)]

@@ -29,14 +29,14 @@ Probe = tuple[Query, str | Callable[[], str] | None]
 
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The extraction pipeline end-to-end on pages synthesized from sf_dir's
-    documents: dedupe → anti-join-ready prep → salted, size-bucketed
-    mapInPandas extraction (SURVEY.md §3.2)."""
+    documents: partition by url → dedupe → anti-join-ready prep →
+    size-bucketed mapInPandas extraction (SURVEY.md §3.2)."""
     from goose_spark import job as J
     from goose_spark.fixtures import ensure_pages
 
     pages_path, _ = ensure_pages(sf_dir)
     pages = J.read_pages(spark, pages_path)
-    return J.extract(J.prepare(pages), partitions=8)
+    return J.extract(J.prepare(pages))
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -57,7 +57,7 @@ def main() -> None:
     spark = build_session(cpus)
     J.configure_session(spark)
 
-    # --- flagship: the extraction pipeline (dedupe → salt → mapInPandas) ---
+    # --- flagship: url partitioning → dedupe → mapInPandas extraction ---
     todo = J.prepare(J.read_pages(spark, pages_path))
     # untimed warm-up: JVM stages, python workers, stopword tables
     J.extract(todo.limit(64)).agg(F.count(F.lit(1))).collect()

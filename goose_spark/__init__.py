@@ -3,6 +3,6 @@
 Everything relational is built-in DataFrame API (Catalyst is the engine,
 SURVEY.md §2.7); the only custom compute is the gooselite extraction UDF
 (one ``mapInPandas`` call per Arrow batch, SURVEY.md §2.5) plus ~200 lines
-of job plumbing: dedupe, checkpoint anti-join, salting, size-bucketing,
+of job plumbing: url partitioning, dedupe, checkpoint anti-join, size-bucketing,
 metrics (SURVEY.md §7.3).
 """

@@ -1,5 +1,5 @@
-"""The extraction job: scan → dedupe → resume anti-join → salt → extract →
-write → metrics → checkpoint (SURVEY.md §3.2).
+"""The extraction job: scan → partition by url → dedupe → resume anti-join
+→ extract → write → metrics → checkpoint (SURVEY.md §3.2).
 
 Scale design (the part that must hold at 10^12 documents / 1000 executors):
 
@@ -7,18 +7,15 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
   plan selects only (url, warc_ts, html, lang) before the UDF and lets
   Catalyst push the projection into the Parquet/Iceberg scan — never
   ``select('*')`` (SURVEY.md §4.2).
-* **Dedupe + resume before the expensive stage.** row_number dedupe (B11)
-  and the checkpoint LEFT ANTI join (B4) run on (url, warc_ts) only —
-  Spark 4 pushes the projection down so the shuffle carries html only for
-  surviving rows... html must ride the dedupe shuffle on a plain parquet
-  scan; the cluster-scale fix is the bucketed-by-url layout, implemented
-  below (``write_pages_bucketed`` / ``dedupe_latest_bucketed``) and
-  plan-asserted shuffle-free. The anti-join's right side (checkpoint
-  urls) is small per run → broadcast.
-* **Salted repartition (B15).** ``repartitionById(P, slot)`` with
-  ``slot = pmod(xxhash64(url), P)`` and P = cores: one Python task per
-  core, each row in the partition its slot names (BASELINE.json:6
-  "salted repartitioning").
+* **One url partitioning, before the dedupe (B11, B15).** The scan is
+  hash-partitioned by url once, at the UDF width (P = cores). The dedupe
+  window's clustering by url is then met without a second exchange, the
+  broadcast resume anti-join (B4) keeps the partitioning, and the UDF
+  runs on those same P partitions: the fat html column shuffles once. A
+  table written by ``write_pages_bucketed`` with P buckets already has
+  this partitioning, so its pre-UDF plan has no exchange at all (both
+  plan-asserted in tests/test_plans.py). The checkpoint side of the
+  anti-join is small per run → broadcast.
 * **Size-bucketed Arrow batches (B16).** Spark 4.1 supports
   ``spark.sql.execution.arrow.maxBytesPerBatch`` — one giant document
   rides in its own small batch while 2 KB pages batch by the hundreds;
@@ -95,18 +92,15 @@ def write_pages_bucketed(pages: DataFrame, table: str,
     the scan reports HashPartitioning(url) so the dedupe window — and the
     checkpoint anti-join when both sides share the layout — run with ZERO
     exchange: the fat html column never shuffles (plan-asserted in
-    tests/test_plans.py::test_bucketed_dedupe_has_no_exchange). At 10^12
+    tests/test_plans.py). Write it with ``buckets`` equal to the UDF width
+    (cluster cores): the scan then already has the partitioning
+    ``prepare`` asks for and the whole pre-UDF plan is exchange-free; any
+    other count costs the one url shuffle a plain table pays. At 10^12
     rows this is the Iceberg `bucket(url, N)` partition transform
     (goose_spark/iceberg.py DDL); locally it is Spark's native bucketed
     parquet via saveAsTable."""
     (pages.write.mode("overwrite")
      .bucketBy(buckets, "url").sortBy("url").saveAsTable(table))
-
-
-def dedupe_latest_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """`dedupe_latest` over the bucketed layout — identical semantics,
-    shuffle-free plan."""
-    return dedupe_latest(spark.table(table))
 
 
 def resume_filter_bucketed(spark: SparkSession, pages_table: str,
@@ -163,73 +157,62 @@ def with_bucket(pages: DataFrame) -> DataFrame:
 
 
 def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
-    """B15: spread documents over `partitions` — giant-HTML skew cannot be
-    rebalanced by AQE inside the UDF stage, so it is spread explicitly.
+    """B15: the one placement rule — hash-partition by url into
+    `partitions` slots, row → pmod(hash(url), P) (Spark's murmur3 hash
+    partitioning). ``prepare`` applies it to the scan before the dedupe,
+    so the same partitioning serves the window, the anti-join and the UDF
+    stage; giant-HTML skew cannot be rebalanced by AQE inside the UDF
+    stage, so the spread is explicit.
 
-    The slot is pmod(xxhash64(url), P), and ``repartitionById`` sends
-    each row to the partition its slot names, with no second hash.
-    ``repartition(P, pmod(...))`` would re-hash the P distinct slot
-    values, a balls-into-bins collision (measured: 41/64 partitions
-    non-empty, some carrying 3 slots)."""
-    slot = F.pmod(F.xxhash64(F.col("url")), F.lit(partitions)).cast("int")
-    return df.repartitionById(partitions, slot)
+    The width is one Python task per core. Every Python task costs
+    ~0.23-0.28 s of worker CPU before the UDF runs (pyspark.worker's
+    importlib.invalidate_caches() re-reads 16 cached zip/jar entries,
+    230 ms measured in a worker), empty partitions included: 64 tasks
+    took 4.5-5.3 s, 4 tasks 0.44-0.53 s. A width of 4× cores paid it 16
+    times on local[4]; P = cores cut the benchmark full_crawl's CPU by
+    about 30%. The price is skew: with P slots, two giant pages that hash
+    into one slot share a task (on a full_crawl seed where they do,
+    3.05 s wall against 2.39 s with them apart). Re-dealing each slot's
+    largest page by bytes (LPT) fixed that seed, but planning it reads
+    every html value a second time (length(html)), and over seeds 1-10 it
+    tied plain hashing (median wall 2.53 against 2.51 s), so it is not
+    done. AQE coalescing instead (repartition(col) or REBALANCE) packs by
+    compressed shuffle bytes into 2-3 tasks and was slower."""
+    return df.repartition(partitions, "url")
 
 
-def extract(pages: DataFrame, partitions: int | None = None,
-            doc_timeout_s: float | None = None, config=None,
-            presalted: bool = False) -> DataFrame:
-    """The extraction operator (B17): prune columns, bucket, salt, then one
-    mapInPandas pass with gooselite. doc_timeout_s: per-doc wall budget
+def extract(pages: DataFrame, doc_timeout_s: float | None = None,
+            config=None) -> DataFrame:
+    """The extraction operator (B17): prune columns, bucket, then one
+    mapInPandas pass with gooselite over the input's own partitions
+    (``prepare`` has placed them). doc_timeout_s: per-doc wall budget
     (None → GOOSE_DOC_TIMEOUT_S env, default 300s; 0 disables).
     config: optional gooselite.config.ExtractionConfig (A21) riding the
-    UDF closure to every worker.
-
-    presalted=True: the input already arrives spread by url hash — the
-    url-bucketed table layout (write_pages_bucketed) IS the salt, since
-    bucket assignment is hash(url) % N just like salted_repartition. The
-    explicit repartition would be a second full shuffle of the fat html
-    column for zero added uniformity, so the bucketed flagship path skips
-    it; with it gone the whole pre-UDF plan is exchange-free
-    (plan-asserted in tests/test_plans.py). Partition granularity then
-    comes from the table's bucket count — size it ≥ cluster cores at
-    write time, the width the salt gives unbucketed sources."""
-    spark = pages.sparkSession
-    configure_session(spark)
-    if partitions is None:
-        # One Python task per core. Every Python task costs ~0.23-0.28 s
-        # of worker CPU before the UDF runs (pyspark.worker's
-        # importlib.invalidate_caches() re-reads 16 cached zip/jar
-        # entries, 230 ms measured in a worker), empty partitions
-        # included: 64 tasks took 4.5-5.3 s, 4 tasks 0.44-0.53 s. A
-        # width of 4× cores paid it 16 times on local[4]; P = cores cut
-        # the benchmark full_crawl's CPU by about 30%. The price is
-        # skew: with P slots, two giant pages that hash into one slot
-        # share a task (full_crawl seed 5: 3.05 s wall against 2.39 s
-        # with them apart). Re-dealing each slot's largest page by bytes
-        # (LPT) fixed that seed, but planning it reads every html value a
-        # second time (length(html)), and over seeds 1-10 it tied plain
-        # hashing (median wall 2.53 against 2.51 s), so it is not done.
-        # AQE coalescing instead (repartition(col) or REBALANCE) packs by
-        # compressed shuffle bytes into 2-3 tasks and was slower.
-        partitions = spark.sparkContext.defaultParallelism
+    UDF closure to every worker."""
+    configure_session(pages.sparkSession)
     cols = pages.select("url", "warc_ts", "html", "lang")
-    bucketed = with_bucket(cols)
-    salted = bucketed if presalted else salted_repartition(bucketed, partitions)
     # Decorrelate arrival order from any upstream ordering: after the
     # dedupe window the rows arrive url-sorted, and url order correlates
     # with document size in CC-style crawls, so giant docs cluster into
     # the same Arrow batches (measured: ~2× worker-side slowdown from
     # allocator churn). A cheap in-partition hash sort interleaves sizes.
-    shuffled = salted.sortWithinPartitions(F.xxhash64(F.col("url"), F.lit(1)))
+    shuffled = with_bucket(cols).sortWithinPartitions(
+        F.xxhash64(F.col("url"), F.lit(1)))
     return shuffled.mapInPandas(make_extract_batches(doc_timeout_s, config),
                                 schema=EXTRACTED)
 
 
 def prepare(pages: DataFrame, checkpoint: DataFrame | None = None,
-            run_id: str | None = None, broadcast: bool = True) -> DataFrame:
-    """dedupe → resume filter (the pre-extraction relational shell)."""
-    return resume_filter(dedupe_latest(pages), checkpoint, run_id,
-                         broadcast=broadcast)
+            run_id: str | None = None, broadcast: bool = True,
+            partitions: int | None = None) -> DataFrame:
+    """partition by url → dedupe → resume filter (the pre-extraction
+    relational shell). partitions: the UDF width (default
+    defaultParallelism, one Python task per core; see
+    salted_repartition)."""
+    if partitions is None:
+        partitions = pages.sparkSession.sparkContext.defaultParallelism
+    return resume_filter(dedupe_latest(salted_repartition(pages, partitions)),
+                         checkpoint, run_id, broadcast=broadcast)
 
 
 def metrics_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
@@ -265,60 +248,8 @@ def run_job(spark: SparkSession, pages_path: str, out_dir: str, run_id: str,
                       partitions)
 
 
-def _url_bucket_count(spark: SparkSession, table: str) -> int | None:
-    """Bucket count when `table` is bucketed by url in the catalog (Spark
-    native bucketing locally; the Iceberg bucket(url, N) transform at
-    scale); None when not url-bucketed."""
-    try:
-        rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-    except Exception:
-        return None
-    info = {r.col_name.strip(): (r.data_type or "").strip() for r in rows}
-    if ("Num Buckets" not in info
-            or info.get("Bucket Columns", "").strip("[]` ") != "url"):
-        return None
-    try:
-        return int(info["Num Buckets"])
-    except ValueError:
-        return None
-
-
-def run_job_table(spark: SparkSession, pages_table: str, out_dir: str,
-                  run_id: str, partitions: int | None = None) -> dict:
-    """Full batch job over a catalog pages table — the flagship entry at
-    cluster scale. When the table is bucketed by url
-    (write_pages_bucketed / Iceberg bucket(url, N)), the whole pre-UDF
-    plan runs exchange-free: the bucketed scan satisfies the dedupe
-    window's partitioning (B11) AND stands in for the salt (B15), so the
-    fat html column never shuffles — the #1 shuffle at 10^12 rows on an
-    unbucketed source (module docstring). Unbucketed tables fall through
-    to the salted path unchanged.
-
-    Guard: a table bucketed FAR below the cluster width (e.g. 4 buckets
-    on 32 cores) would silently run the UDF stage under-parallelized on
-    the exchange-free path — extract()'s task granularity comes from the
-    bucket count. In that case the salt is worth its shuffle back: the
-    job warns and falls through to the salted path instead of quietly
-    discarding the cluster."""
-    buckets = _url_bucket_count(spark, pages_table)
-    presalted = buckets is not None
-    if presalted and buckets < spark.sparkContext.defaultParallelism:
-        import warnings
-
-        warnings.warn(
-            f"run_job_table: {pages_table} has {buckets} url buckets but "
-            f"the cluster runs {spark.sparkContext.defaultParallelism} "
-            "slots; using the salted path — rewrite the table with "
-            "buckets ≥ cores for the exchange-free plan",
-            stacklevel=2)
-        presalted = False
-    return run_job_df(spark, spark.table(pages_table), out_dir, run_id,
-                      partitions, presalted=presalted)
-
-
 def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
-               run_id: str, partitions: int | None = None,
-               presalted: bool = False) -> dict:
+               run_id: str, partitions: int | None = None) -> dict:
     """Full batch job with durable writes + resumable checkpoint (B20/B21).
 
     Write order is the exactly-once-ish contract: EXTRACTED first, then
@@ -362,14 +293,15 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
                 stacklevel=2)
             broadcast_ckpt = False
 
-    todo = prepare(pages, checkpoint, run_id, broadcast=broadcast_ckpt)
+    todo = prepare(pages, checkpoint, run_id, broadcast=broadcast_ckpt,
+                   partitions=partitions)
 
     # B20: partitioned append; partition by size bucket (dt at real
     # scale). Cluster by the partition column first: dynamic partition
-    # writes emit one file per (task × partition-value), and the salt
-    # spreads every bucket across every task — tasks × buckets files
-    # (measured 3455 files for 5000 docs; linear in task count → 100×
-    # scale means hundreds of thousands of files per run). The
+    # writes emit one file per (task × partition-value), and the url
+    # partitioning spreads every bucket across every task — tasks ×
+    # buckets files (measured 3455 files for 5000 docs; linear in task
+    # count → 100× scale means hundreds of thousands of files per run). The
     # repartition shuffles only the (small) extracted output, after the
     # expensive UDF stage, and lands each bucket in one file. On Iceberg
     # the writer's target-file-size + fanout handles this instead.
@@ -383,7 +315,7 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     # local stand-in for an Iceberg snapshot/commit id).
     batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
     batch_root = os.path.join(extracted_path, f"batch={batch_id}")
-    (extract(todo, partitions, presalted=presalted)
+    (extract(todo)
      .repartition(F.col("bucket"))
      .write.mode("append").partitionBy("bucket").parquet(batch_root))
     new_files = sorted(_parquet_files(batch_root))

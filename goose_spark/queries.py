@@ -344,13 +344,12 @@ FROM events
 
 # -------------------------------------------------------- salting (B15) ----
 def q_salt_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B15: aggregation result must be invariant under salted repartition —
-    the oracle is the plain GROUP BY, proving the salt changes nothing.
-    The salt is the job's: repartitionById places each row in the slot
-    pmod(xxhash64(key), 64) names, with no second hash."""
+    """B15: aggregation result must be invariant under the job's
+    placement — the oracle is the plain GROUP BY, proving the spread
+    changes nothing. The placement is the job's: hash partitioning by
+    key, row → pmod(hash(key), 64)."""
     li = load(spark, sf_dir, "lineitem")
-    salted = li.repartitionById(
-        64, F.pmod(F.xxhash64("l_orderkey"), F.lit(64)).cast("int"))
+    salted = li.repartition(64, "l_orderkey")
     return salted.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.count(F.lit(1)).alias("n"),

@@ -24,7 +24,7 @@ def main() -> None:
     ap.add_argument("--dst", required=True, help="output dir (extracted/ metrics/ checkpoint/)")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--partitions", type=int, default=None,
-                    help="UDF-stage partitions (default 4x defaultParallelism)")
+                    help="UDF-stage partitions (default defaultParallelism)")
     ap.add_argument("--iceberg", action="store_true")
     ap.add_argument("--init-ddl", action="store_true",
                     help="with --iceberg: CREATE TABLE IF NOT EXISTS the "

@@ -1,5 +1,6 @@
 """Placement of the extraction stage (B15): one Python task per core, and
-every page in the partition its slot pmod(xxhash64(url), P) names."""
+every page in the partition Spark's hash partitioning by url names,
+pmod(hash(url), P) — the one url shuffle before the dedupe."""
 
 import datetime
 
@@ -68,8 +69,8 @@ def test_every_page_runs_in_its_hashed_slot(spark, tmp_path):
     pid = {r["url"]: r["partition_id"] for r in got}
     assert len(got) == len(rows) == len(pid)
     assert set(pid.values()) == set(range(P))
-    # repartitionById places each row by its slot, with no second hash
-    slot = F.pmod(F.xxhash64("url"), F.lit(P))
+    # the url partitioning made before the dedupe is the UDF's placement
+    slot = F.pmod(F.hash("url"), F.lit(P))
     want = {r.url: r.s for r in spark.read.parquet(pages_path)
             .select("url", slot.alias("s")).collect()}
     assert pid == want

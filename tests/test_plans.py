@@ -44,7 +44,7 @@ def test_extraction_scan_prunes_text_column(spark, sf0001_fixtures):
     extraction plan (html is needed; text is not)."""
     pages_path, _ = sf0001_fixtures
     pages = J.read_pages(spark, pages_path)
-    df = J.extract(J.prepare(pages), partitions=4)
+    df = J.extract(J.prepare(pages, partitions=4))
     plan = _plan(df)
     scan = plan.split("ReadSchema")[1][:500]
     assert "html" in scan
@@ -55,7 +55,7 @@ def test_extraction_plan_has_single_python_stage(spark, sf0001_fixtures):
     """One mapInPandas evaluation — no accidental extra Python round-trips."""
     pages_path, _ = sf0001_fixtures
     pages = J.read_pages(spark, pages_path)
-    df = J.extract(J.prepare(pages), partitions=4)
+    df = J.extract(J.prepare(pages, partitions=4))
     plan = _plan(df)
     tree = plan.split("\n\n")[0]  # the tree section (details repeat names)
     assert tree.count("MapInPandas") == 1
@@ -179,7 +179,7 @@ def test_bucketed_dedupe_has_no_exchange(spark, tmp_path):
 
     J.write_pages_bucketed(pages, "pages_bucketed_t", buckets=4)
     try:
-        out = J.dedupe_latest_bucketed(spark, "pages_bucketed_t")
+        out = J.dedupe_latest(spark.table("pages_bucketed_t"))
         tree = _plan(out).split("\n\n")[0]
         assert "Exchange" not in tree
         # identical semantics: same surviving (url, warc_ts) set
@@ -227,14 +227,40 @@ def test_bucketed_anti_join_has_no_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS ckpt_aj_t")
 
 
+def _shuffles_before_udf(df) -> list[str]:
+    """Non-broadcast Exchange lines of `df`'s plan tree (everything in
+    an extract() plan sits below its MapInPandas)."""
+    tree = _plan(df).split("\n\n")[0]
+    assert "MapInPandas" in tree
+    return [ln for ln in tree.splitlines()
+            if "Exchange" in ln and "BroadcastExchange" not in ln]
+
+
+def test_flagship_shuffles_html_once(spark, sf0001_fixtures):
+    """The unbucketed flagship path (partition by url → dedupe → resume
+    → extract) shuffles the html exactly once: the url partitioning
+    before the dedupe serves the window, the broadcast anti-join and the
+    UDF stage, so nothing re-partitions after the dedupe."""
+    import datetime
+
+    pages_path, _ = sf0001_fixtures
+    ckpt = spark.createDataFrame(
+        [("r0", "https://u/1", datetime.datetime(2025, 1, 1))],
+        "run_id string, url string, completed_ts timestamp")
+    out = J.extract(J.prepare(J.read_pages(spark, pages_path), ckpt))
+    exchanges = _shuffles_before_udf(out)
+    assert len(exchanges) == 1, exchanges
+
+
 def test_bucketed_flagship_pre_udf_is_exchange_free(spark, tmp_path):
     """VERDICT r4 item 6: the FLAGSHIP path (dedupe → resume → extract),
     not just the side APIs, must run with zero non-broadcast Exchange
-    before the UDF on a url-bucketed source — the bucketed scan satisfies
-    both the dedupe window's partitioning AND the salt, so the fat html
-    column never shuffles. The same pipeline on plain parquet keeps its
-    deliberate exchanges (dedupe shuffle + salt)."""
+    before the UDF on a source bucketed by url at the UDF width — the
+    bucketed scan already has the partitioning prepare() asks for, so the
+    fat html column never shuffles. Any other bucket count costs the one
+    url shuffle a plain table pays, and both give the plain rows."""
     import datetime
+    import shutil
 
     pages = spark.range(300).select(
         F.concat(F.lit("https://u/"), (F.col("id") % 100).cast("string"))
@@ -249,37 +275,31 @@ def test_bucketed_flagship_pre_udf_is_exchange_free(spark, tmp_path):
         [("r0", "https://u/1", datetime.datetime(2025, 1, 1))],
         "run_id string, url string, completed_ts timestamp")
 
-    # a crashed earlier session can leave the managed-table dir behind
-    # (LOCATION_ALREADY_EXISTS) even when the metastore entry is gone
-    spark.sql("DROP TABLE IF EXISTS pages_flag_t")
-    import shutil
-    shutil.rmtree(os.path.join(str(spark.conf.get("spark.sql.warehouse.dir"))
-                               .removeprefix("file:"), "pages_flag_t"),
-                  ignore_errors=True)
-    J.write_pages_bucketed(pages, "pages_flag_t", buckets=4)
-    try:
-        assert J._url_bucket_count(spark, "pages_flag_t") == 4
-        todo = J.prepare(spark.table("pages_flag_t"), ckpt)
-        out = J.extract(todo, presalted=True)
-        tree = _plan(out).split("\n\n")[0]
-        exchanges = [ln for ln in tree.splitlines()
-                     if "Exchange" in ln and "BroadcastExchange" not in ln]
-        assert exchanges == [], exchanges
-        assert "ArrowEvalPython" in tree or "MapInPandas" in tree
+    plain_path = str(tmp_path / "plain")
+    pages.write.parquet(plain_path)
+    plain = J.extract(J.prepare(spark.read.parquet(plain_path), ckpt,
+                                partitions=4))
+    want = sorted((r.url, r.cleaned_text) for r in plain.collect())
+    assert len(want) == 99
 
-        # identical semantics vs the salted path on plain parquet
-        plain_path = str(tmp_path / "plain")
-        pages.write.parquet(plain_path)
-        plain_todo = J.prepare(spark.read.parquet(plain_path), ckpt)
-        a = sorted((r.url, r.cleaned_text) for r in out.collect())
-        b = sorted((r.url, r.cleaned_text)
-                   for r in J.extract(plain_todo).collect())
-        assert a == b and len(a) == 99
-
-        # unbucketed sources fall through to the salted path
-        assert J._url_bucket_count(spark, "missing_table_xyz") is None
-    finally:
+    warehouse = str(spark.conf.get("spark.sql.warehouse.dir"))
+    for buckets, n_exchanges in ((4, 0), (8, 1)):
+        # a crashed earlier session can leave the managed-table dir
+        # behind (LOCATION_ALREADY_EXISTS) even when the metastore entry
+        # is gone
         spark.sql("DROP TABLE IF EXISTS pages_flag_t")
+        shutil.rmtree(os.path.join(warehouse.removeprefix("file:"),
+                                   "pages_flag_t"), ignore_errors=True)
+        J.write_pages_bucketed(pages, "pages_flag_t", buckets=buckets)
+        try:
+            out = J.extract(J.prepare(spark.table("pages_flag_t"), ckpt,
+                                      partitions=4))
+            exchanges = _shuffles_before_udf(out)
+            assert len(exchanges) == n_exchanges, (buckets, exchanges)
+            got = sorted((r.url, r.cleaned_text) for r in out.collect())
+            assert got == want, buckets
+        finally:
+            spark.sql("DROP TABLE IF EXISTS pages_flag_t")
 
 
 def test_decontaminate_broadcasts_eval_set(spark):

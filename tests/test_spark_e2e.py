@@ -17,7 +17,7 @@ from goose_spark import job as J
 def extracted_and_expected(spark, sf0001_fixtures):
     pages_path, expected_path = sf0001_fixtures
     pages = J.read_pages(spark, pages_path)
-    out = J.extract(J.prepare(pages), partitions=8).toPandas()
+    out = J.extract(J.prepare(pages, partitions=8)).toPandas()
     exp = pq.read_table(expected_path).to_pandas()
     return out, exp
 
@@ -71,11 +71,11 @@ def test_status_and_metrics_reconcile(spark, extracted_and_expected):
 
 
 def test_partitioning_invariance(spark, sf0001_fixtures, extracted_and_expected):
-    """B15: result identical under different salted partition counts."""
+    """B15: result identical under different url partition counts."""
     pages_path, _ = sf0001_fixtures
     base, _ = extracted_and_expected
     pages = J.read_pages(spark, pages_path)
-    alt = J.extract(J.prepare(pages), partitions=3).toPandas()
+    alt = J.extract(J.prepare(pages, partitions=3)).toPandas()
     b = base.sort_values("url")[["url", "cleaned_text", "status", "title"]].reset_index(drop=True)
     a = alt.sort_values("url")[["url", "cleaned_text", "status", "title"]].reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
@@ -89,7 +89,7 @@ def test_arrow_batch_size_invariance(spark, sf0001_fixtures, extracted_and_expec
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
         pages = J.read_pages(spark, pages_path)
-        alt = J.extract(J.prepare(pages), partitions=8).toPandas()
+        alt = J.extract(J.prepare(pages, partitions=8)).toPandas()
     finally:
         if old is not None:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
@@ -157,11 +157,11 @@ def test_per_doc_timeout_yields_timeout_row(spark):
     pages = spark.createDataFrame(
         [("https://slow.example/a", None, bytearray(html), "en")],
         schema="url string, warc_ts timestamp, html binary, lang string")
-    rows = J.extract(pages, partitions=2, doc_timeout_s=1e-4).collect()
+    rows = J.extract(pages, doc_timeout_s=1e-4).collect()
     assert len(rows) == 1
     assert rows[0].status == "timeout"
     assert rows[0].cleaned_text == ""
     assert "budget" in rows[0].err
     # and with the default budget the same page extracts fine
-    ok = J.extract(pages, partitions=2).collect()
+    ok = J.extract(pages).collect()
     assert ok[0].status == "ok"
