@@ -601,11 +601,13 @@ JOIN c{r} cc ON cc.cid = p.cid""")
 #
 # Scale shape: centroid assignment is a broadcast of K tiny rows + a
 # vec_id-keyed argmax window (identical to q_ann_ivf, oracle-proven);
-# the pair step shuffles once on centroid_id and SemDeDup's K grows
-# with N (paper: K ~ N/10k) so per-cluster membership — and therefore
-# the in-partition pair fan-out — stays bounded at 100 TB; a hot
-# cluster would be capped the same way q_simhash_pairs guards hot
-# buckets. The kept flag rejoins on vec_id (8-byte key, AQE-splittable).
+# the pair step is textops.bucket_pairs keyed by centroid_id, the same
+# bounded kernel as the MinHash and SimHash bands. SemDeDup's K grows
+# with N (paper: K ~ N/10k), so a cluster normally stays under
+# HOT_BUCKET_CAP and gets its exact clique; a hot cluster emits linear
+# star edges between IDENTICAL vectors only (exact = v), so it can
+# under-deduplicate but never drops a wrong vector. The kept flag
+# rejoins on vec_id (8-byte key, AQE-splittable).
 SEMDEDUP_TAU = 0.35  # sf0.01: drops 76/500 — non-degenerate either way
 
 
@@ -614,6 +616,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id < N_CENTROIDS, as q_ann_ivf), then within-cluster cosine
     pruning against lower-id members at SEMDEDUP_TAU."""
     from pyspark.sql import Window
+
+    from goose_spark.textops import bucket_pairs
 
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -631,16 +635,15 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .select("vec_id", "v", "centroid_id")
     )
-    lo = asg.select(F.col("vec_id").alias("id_lo"),
-                    F.col("centroid_id").alias("cid_lo"),
-                    F.col("v").alias("v_lo"))
-    pair_cos = _dot(F.col("v_lo"), F.col("v")) / (
-        _norm(F.col("v_lo")) * _norm(F.col("v")))
+    members = asg.select(
+        "centroid_id", F.col("v").alias("exact"),
+        F.struct(F.col("vec_id").alias("id"), "v").alias("m"))
+    pair_cos = _dot(F.col("a.v"), F.col("b.v")) / (
+        _norm(F.col("a.v")) * _norm(F.col("b.v")))
     dropped = (
-        asg.join(lo, (F.col("cid_lo") == F.col("centroid_id"))
-                 & (F.col("id_lo") < F.col("vec_id")))
+        bucket_pairs(members, ["centroid_id"])
         .filter(pair_cos >= SEMDEDUP_TAU)
-        .select("vec_id").distinct()
+        .select(F.col("b.id").alias("vec_id")).distinct()
     )
     return (
         asg.join(dropped.withColumn("_d", F.lit(1)), "vec_id", "left")

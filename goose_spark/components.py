@@ -6,7 +6,10 @@ The dedup operators (`q_minhash_pairs`, `q_simhash_pairs`,
 dedup pipeline must resolve pairs into groups and pick one keeper per
 group — transitively: if A~B and B~C, then {A,B,C} is one group even when
 A~C was never scored. That is connected components with the min-id member
-as the group keeper.
+as the group keeper. The MinHash, SimHash and SemDeDup pairs all come from
+one kernel, `textops.bucket_pairs`, whose hot buckets emit star edges
+instead of cliques; a star has the same components as the clique, so
+keeper resolution is unchanged by the cap.
 
 Algorithm: iterative min-label propagation. labels start as each node's
 own id; each round every node takes the min of its own label and its

@@ -335,9 +335,11 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     n = batch.count()
 
     # B21: checkpoint APPEND (not rewrite) strictly AFTER the durable
-    # extracted write — only the urls this batch completed.
+    # extracted write — only the urls this batch completed. No distinct():
+    # prepare() leaves one row per url and extraction emits one row per
+    # input row, so the url set is already unique.
     (
-        batch.select("url").distinct()
+        batch.select("url")
         .withColumn("run_id", F.lit(run_id))
         .withColumn("completed_ts", F.current_timestamp())
         .select("run_id", "url", "completed_ts")

@@ -195,10 +195,54 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return with_sh.select(id_col, sig.alias("sig"))
 
 
+# ---------------------------------------------------------- bucket pairs --
+HOT_BUCKET_CAP = 1000  # buckets above this emit star edges, not cliques
+
+
+def bucket_pairs(members: DataFrame, key: list[str]) -> DataFrame:
+    """The one near-duplicate pair generator (MinHash bands, SimHash
+    bands, SemDeDup clusters). Rows in: ``(*key, exact, m)``, ``m`` a
+    struct whose first field is ``id``. Rows out: member structs
+    ``(a, b)`` with ``a.id < b.id``, once per shared bucket — callers
+    verify and dedupe.
+
+    Bucket sizes are counted FIRST (PAPERS.md "CAMEL Hash Table"'s
+    bounded build, at shuffle granularity). A bucket of at most
+    HOT_BUCKET_CAP members emits its clique, so the oracles stay exact
+    under that margin. A hot bucket builds no quadratic expansion and no
+    giant collect_list: each member emits one star edge from the
+    lowest-id member (``anchor``, payload included) sharing its
+    ``exact`` value — linear, and component-equivalent to the clique
+    (goose_spark.components); members with different ``exact`` values
+    lose their pair. ONE linear pipeline (two windows, one groupBy on
+    key + a sub-key that is m.id only when hot, one explode per member):
+    branching off the input would run an upstream UDF twice. The key
+    window runs first, so its one shuffle also serves the (key, exact)
+    window and the groupBy."""
+    cap = HOT_BUCKET_CAP
+    grouped = (
+        members
+        .withColumn("bucket_n", F.count(F.lit(1)).over(Window.partitionBy(*key)))
+        .filter(F.col("bucket_n") > 1)
+        .withColumn("anchor", F.min("m").over(Window.partitionBy(*key, "exact")))
+        .groupBy(*key, F.when(F.col("bucket_n") > cap, F.col("m.id")).alias("sub"))
+        .agg(F.collect_list(F.struct("m", "anchor")).alias("ms"),
+             F.first("bucket_n").alias("bucket_n"))
+    )
+    edges = F.expr(
+        f"case when bucket_n <= {cap} then transform("
+        "  filter(ms, y -> x.m.id < y.m.id), y -> struct(x.m as a, y.m as b))"
+        " else filter(array(struct(x.anchor as a, x.m as b)),"
+        "             p -> p.a.id < p.b.id) end")
+    return (grouped.select("bucket_n", "ms", F.explode("ms").alias("x"))
+            .select(F.explode(edges).alias("e")).select("e.a", "e.b"))
+
+
 def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Banded LSH candidate generation over (doc_id, sig): explode the 8
-    md5-prefix band keys, self-join on (band_id, band_hash), dedupe to
-    distinct ordered (id_a, id_b). Only ~24-byte rows ever shuffle."""
+    md5-prefix band keys, pair each bucket with bucket_pairs (exact =
+    xxhash64(sig): a collision only adds a candidate), dedupe to
+    distinct ordered (id_a, id_b). Only ~40-byte rows ever shuffle."""
     rows_per_band = N_PERM // LSH_BANDS
     # sig is let-bound (single-element-array transform) for the same
     # reason as in minhash_signatures: 32 bare sig[i] references across
@@ -211,64 +255,61 @@ def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
         " substr(md5(concat_ws(',', "
         + ", ".join(f"cast(g[{b * rows_per_band + r}] as string)"
                     for r in range(rows_per_band))
-        + ")), 1, 16) as band_hash)"
+        + ")), 1, 16) as band_hash, xxhash64(g) as exact)"
         for b in range(LSH_BANDS))
     bands = sigs.select(
-        "doc_id",
+        F.struct(F.col("doc_id").alias("id")).alias("m"),
         F.explode(F.expr(
             f"transform(array(sig), g -> array({band_structs}))")[0]
         ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_hash")
-
-    left = bands.alias("a")
-    right = bands.select(F.col("doc_id").alias("doc_id_b"), "band_id", "band_hash")
+    ).select("band.*", "m")
     return (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("doc_id") < F.col("doc_id_b"))
-        .select(F.col("doc_id").alias("id_a"), F.col("doc_id_b").alias("id_b"))
+        bucket_pairs(bands, ["band_id", "band_hash"])
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
+
+
+def _id_side(df: DataFrame, col: str, side: str) -> DataFrame:
+    """(doc_id, col) renamed to (id_<side>, <col>_<side>) for a pair rejoin."""
+    return df.select(F.col("doc_id").alias(f"id_{side}"),
+                     F.col(col).alias(f"{col}_{side}"))
+
+
+def _minhash_verified(spark: SparkSession, sf_dir: str):
+    """The one MinHash verify path of both minhash probes: load → spread
+    → signatures → LSH candidates → shingle rejoins → rounded exact
+    Jaccard. Returns (candidates with ``jaccard``, signatures).
+
+    Small local files scan as ONE task, so the repartition spreads the
+    CPU-heavy hashing over all cores (at 100 TB the scan itself yields
+    thousands of splits). Banding shuffles only ~40-byte rows; the
+    shingle arrays join back in ONLY for the (rare) candidate pairs."""
+    d = load(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism)
+    sigs = minhash_signatures(d)
+    sh = d.select("doc_id", _shingles().alias("sh"))
+    return (
+        _lsh_candidate_pairs(sigs)
+        .join(_id_side(sh, "sh", "a"), "id_a")
+        .join(_id_side(sh, "sh", "b"), "id_b")
+        .select("id_a", "id_b", F.round(
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+            / F.size(F.array_union("sh_a", "sh_b")), 4).alias("jaccard"))
+    ), sigs
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs with exact-Jaccard
     verification (shingle arrays, array_intersect/union) — no Python UDFs.
 
-    Shuffle discipline (the 100 TB path): the band explode and pair
-    self-join carry only (doc_id, band_hash) — a 16-char hex-prefix
-    string key in probe mode (~24 B/row; deploy swaps it for xxhash64's
-    8-byte long, same plan shape), never the shingle arrays; shingles
-    join back in ONLY for the (rare) candidate pairs that survive
-    banding, so the wide data rides one narrow broadcast-sized join
-    instead of an 8×-exploded shuffle.
-
     Oracle-backed since r4: the signature hash is the engine-exact
     md5int60 + integer permutations (see minhash_signatures) and the
     band key is an md5 hex prefix, so the DuckDB twin reproduces the
-    candidate set bit-for-bit; planted-dup recall additionally asserted
-    in pytest.
+    candidate set bit-for-bit while no band bucket exceeds
+    HOT_BUCKET_CAP; planted-dup recall additionally asserted in pytest.
     """
-    # small local files scan as ONE task; spread the CPU-heavy shingle +
-    # 32-permutation hashing over all cores (at 100 TB the scan itself
-    # yields thousands of splits and this repartition is unnecessary)
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
-    pairs = _lsh_candidate_pairs(minhash_signatures(d))
-    sh = d.select("doc_id", _shingles().alias("sh"))
-    verified = (
-        pairs
-        .join(sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")), 4),
-        )
-        .filter(F.col("jaccard") >= 0.8)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
+    return _minhash_verified(spark, sf_dir)[0].filter(F.col("jaccard") >= 0.8)
 
 
 def _oracle_minhash_cte() -> str:
@@ -326,31 +367,15 @@ def q_minhash_est_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact binary fraction, so the estimate column is engine-exact; the
     plan adds one narrow signature join to the q_minhash_pairs shape
     (candidates are rare, signatures are 256 B/doc)."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
-    sigs = minhash_signatures(d)
-    pairs = _lsh_candidate_pairs(sigs)
-    est = (pairs
-           .join(sigs.select(F.col("doc_id").alias("id_a"),
-                             F.col("sig").alias("sig_a")), "id_a")
-           .join(sigs.select(F.col("doc_id").alias("id_b"),
-                             F.col("sig").alias("sig_b")), "id_b")
-           .withColumn("n_match", F.expr(
-               "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
-               " v -> v))").cast("long")))
-    sh = d.select("doc_id", _shingles().alias("sh"))
-    return (est
-            .join(sh.select(F.col("doc_id").alias("id_a"),
-                            F.col("sh").alias("sh_a")), "id_a")
-            .join(sh.select(F.col("doc_id").alias("id_b"),
-                            F.col("sh").alias("sh_b")), "id_b")
-            .select(
-                "id_a", "id_b", "n_match",
-                (F.col("n_match") / F.lit(float(N_PERM))).alias("jaccard_est"),
-                F.round(
-                    F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                    / F.size(F.array_union("sh_a", "sh_b")), 4)
-                .alias("jaccard_exact")))
+    cand, sigs = _minhash_verified(spark, sf_dir)
+    n_match = F.expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
+                     " v -> v))").cast("long")
+    return (cand
+            .join(_id_side(sigs, "sig", "a"), "id_a")
+            .join(_id_side(sigs, "sig", "b"), "id_b")
+            .select("id_a", "id_b", n_match.alias("n_match"),
+                    (n_match / F.lit(float(N_PERM))).alias("jaccard_est"),
+                    F.col("jaccard").alias("jaccard_exact")))
 
 
 ORACLE_MINHASH_EST_VS_EXACT = _oracle_minhash_cte() + f""",
@@ -497,39 +522,33 @@ FROM documents d LEFT JOIN sims USING (doc_id)
 
 SIMHASH_BANDS = 4   # 4 × 16-bit bands: hamming ≤ 3 ⇒ ≥ 1 band identical
 HAMMING_MAX = 3     # (pigeonhole) — banding loses NO pair under the gate
-HOT_BUCKET_CAP = 1000  # band buckets above this route to the exact path
 
 
 def simhash_pairs(docs: DataFrame) -> DataFrame:
     """SimHash near-duplicate pairs at scale: band each 64-bit fingerprint
-    into 4 × 16-bit keys, group by (band_id, band_value), generate pairs
-    INSIDE each band bucket, then verify hamming(sim_a, sim_b) ≤
-    HAMMING_MAX with JVM-side bit_count(xor). By pigeonhole, a pair
-    within the hamming gate shares at least one of the 4 bands, so
-    banding is recall-lossless for the gate.
+    into 4 × 16-bit keys, pair members INSIDE each band bucket
+    (bucket_pairs), then verify hamming(sim_a, sim_b) ≤ HAMMING_MAX with
+    JVM-side bit_count(xor). By pigeonhole, a pair within the hamming
+    gate shares at least one of the 4 bands, so banding is
+    recall-lossless for the gate.
 
     Plan shape (the 100 TB discipline): the expensive fingerprint UDF
     runs in ONE pass (a band self-JOIN would re-evaluate it per side —
     Spark does not reuse the unaliased subplan); everything after it
-    carries only (doc_id, 8-byte fingerprint, 2-byte band key) through a
-    single groupBy shuffle.
+    carries only (doc_id, 8-byte fingerprint, 2-byte band key).
 
     Hot-bucket guard (VERDICT r2 item 7): a pathological bucket (e.g.
-    millions of empty docs fingerprinting to 0) would make both the
-    collect_list array and the quadratic pair expansion a straggler.
-    Bucket sizes are counted FIRST (a 10-byte-row aggregate); buckets
-    over HOT_BUCKET_CAP members never reach collect_list — their members
-    are routed through the exact path: grouped by FULL fingerprint and
-    emitted as star edges (group-min ↔ member, hamming 0). A star is
-    component-equivalent to the clique for downstream keeper resolution
-    (goose_spark.components), and linear, not quadratic. Trade-off: two
-    hot-bucket docs with non-identical fingerprints lose their pair —
-    exactly the "route to exact dedup first" mitigation, now enforced in
-    the plan instead of documented."""
+    millions of empty docs fingerprinting to 0) routes to star edges
+    keyed by the FULL fingerprint (bucket_pairs with exact = simhash),
+    hamming 0 by construction. Trade-off: two hot-bucket docs with
+    non-identical fingerprints lose their pair — the "route to exact
+    dedup first" mitigation, enforced in the plan."""
     simhash64 = pandas_udf(_simhash_kernel, "long")
-    sigs = docs.select("doc_id", simhash64("text").alias("simhash"))
+    sigs = docs.select(F.col("doc_id").alias("id"),
+                       simhash64("text").alias("simhash"))
     bands = sigs.select(
-        F.struct("doc_id", "simhash").alias("m"),
+        F.struct("id", "simhash").alias("m"),
+        F.col("simhash").alias("exact"),
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band_id"),
@@ -538,70 +557,16 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
             )
             for b in range(SIMHASH_BANDS)
         ])).alias("band"),
-    ).select("m", "band.band_id", "band.band_val")
-    # ONE linear pipeline — no cold/hot plan branches. Branching two
-    # consumers off the UDF subtree duplicates it in the physical plan
-    # (measured: 2× ArrowEvalPython, no static ReusedExchange), i.e. the
-    # fingerprint would run twice. Instead:
-    #   1. window over (band_id, band_val): bucket_n;
-    #   2. window over (band_id, band_val, simhash): min_id — the star
-    #      anchor for hot buckets;
-    #   3. groupBy (band_id, band_val, subkey) where subkey = -1 for
-    #      cold rows and doc_id for hot rows: cold buckets aggregate
-    #      their ≤ HOT_BUCKET_CAP members into one array, HOT rows stay
-    #      ONE ROW PER GROUP — no giant collect_list array ever exists;
-    #   4. one projection emits either the all-pairs array (cold, array
-    #      expression bounded by the cap) or the single star edge (hot).
-    # Three narrow shuffles of ~20-byte rows replace the old single
-    # shuffle — the price of the guard; the wide text never shuffles.
-    wb = Window.partitionBy("band_id", "band_val")
-    ws = Window.partitionBy("band_id", "band_val", "simhash")
-    tagged = (
-        bands.select("band_id", "band_val",
-                     F.col("m.doc_id").alias("doc_id"),
-                     F.col("m.simhash").alias("simhash"))
-        .withColumn("min_id", F.min("doc_id").over(ws))
-        .withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bucket_n") > 1)
-    )
-    hot = F.col("bucket_n") > HOT_BUCKET_CAP
-    grouped = (
-        tagged.groupBy("band_id", "band_val",
-                       F.when(hot, F.col("doc_id")).otherwise(F.lit(-1))
-                       .alias("subkey"))
-        .agg(F.collect_list(F.struct("doc_id", "simhash", "min_id")).alias("ms"),
-             F.first("bucket_n").alias("bucket_n"))
-    )
-    # cold: all unordered pairs from the bounded member array; hot: the
-    # group is a single member — its star edge (min_id ↔ doc_id),
-    # dropped when the member IS the anchor. sim_* = null marks a star
-    # edge (hamming 0 by construction: identical fingerprints).
-    pair_struct = (
-        "flatten(transform(ms, a -> "
-        " filter(transform(ms, b -> struct(a.doc_id as id_a, b.doc_id as id_b,"
-        "                                  a.simhash as sim_a, b.simhash as sim_b)),"
-        "        p -> p.id_a < p.id_b)))"
-    )
-    star_struct = (
-        "filter(transform(ms, x -> struct(x.min_id as id_a, x.doc_id as id_b,"
-        "                                 cast(null as long) as sim_a,"
-        "                                 cast(null as long) as sim_b)),"
-        "       p -> p.id_a != p.id_b)"
-    )
-    edges = grouped.select(F.explode(F.expr(
-        f"case when bucket_n <= {HOT_BUCKET_CAP} then {pair_struct} "
-        f"else {star_struct} end")).alias("e")).select("e.*")
-    hamming = (
-        F.when(F.col("sim_a").isNull(), F.lit(0))
-        .otherwise(F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .cast("int")
-    )
-    # a pair can surface from a cold bucket of one band and a hot bucket
-    # of another: min-merge dedupes across bands AND across paths
+    ).select("band.*", "exact", "m")
+    hamming = F.bit_count(
+        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("int")
+    # a pair sharing several band buckets surfaces once per bucket
     return (
-        edges.withColumn("hamming", hamming)
+        bucket_pairs(bands, ["band_id", "band_val"])
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                hamming.alias("hamming"))
         .filter(F.col("hamming") <= HAMMING_MAX)
-        .groupBy("id_a", "id_b").agg(F.min("hamming").alias("hamming"))
+        .distinct()
     )
 
 

@@ -87,6 +87,21 @@ def test_simhash_pairs_single_udf_pass(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_near_dup_pairs_have_no_band_or_cluster_join(spark):
+    """Pairs come from the bounded bucket_pairs kernel, never from an
+    unguarded self-join on a MinHash band or a SemDeDup cluster: no join
+    in these plans is keyed by band_hash or centroid_id."""
+    from goose_spark import ann as A
+    from goose_spark import textops as T
+
+    for q in (T.q_minhash_pairs, T.q_minhash_est_vs_exact, A.q_semdedup):
+        keys = [ln for ln in _plan(q(spark, SF)).splitlines()
+                if " keys [" in ln]
+        assert keys, q.__name__  # the id rejoins are still there
+        assert not [ln for ln in keys
+                    if "band_hash" in ln or "centroid_id" in ln], q.__name__
+
+
 def test_ann_lsh_probe_is_pure_expressions(spark):
     """Bucket filter + cosine top-k: no Python at all, top-k as
     TakeOrderedAndProject (no global sort materialization)."""

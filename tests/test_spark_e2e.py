@@ -134,8 +134,10 @@ def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory):
                m.groupBy("run_id").agg(SF.sum("docs_in").alias("docs")).collect()}
     assert per_run == {"r": n_total}  # both batches, no double count
     # checkpoint accumulated by APPEND: every url exactly once for run r
+    # (a row count, not a distinct-url count: the fixture has duplicate
+    # urls, so this pins one checkpoint row per url)
     ck = spark.read.parquet(r2["checkpoint_path"])
-    assert ck.filter("run_id = 'r'").select("url").distinct().count() == n_total
+    assert ck.filter("run_id = 'r'").count() == n_total
 
     resumed = spark.read.parquet(r2["extracted_path"]).select("url", "cleaned_text", "status")
     single_dir = str(tmp_path_factory.mktemp("single"))

@@ -253,26 +253,50 @@ def test_dedup_groups_covers_every_vector(spark):
     assert (grp.index == grp.values).all()
 
 
-def test_simhash_hot_bucket_routes_to_star_edges(spark, monkeypatch):
-    """VERDICT r2 item 7: a pathological all-identical corpus must not
-    build a quadratic pair expansion (or a giant collect_list array) —
-    buckets over HOT_BUCKET_CAP emit linear star edges keyed by the full
-    fingerprint, component-equivalent to the clique for keeper
-    resolution."""
-    import pandas as pd
-
+@pytest.mark.parametrize("family", ["simhash", "minhash", "semdedup"])
+def test_simhash_hot_bucket_routes_to_star_edges(spark, monkeypatch, tmp_path,
+                                                 family):
+    """VERDICT r2 item 7, for every family bucket_pairs serves: a
+    pathological all-identical bucket must not build a quadratic pair
+    expansion (or a giant collect_list array) — buckets over
+    HOT_BUCKET_CAP emit linear star edges keyed by the exact value,
+    component-equivalent to the clique for keeper resolution."""
     monkeypatch.setattr(T, "HOT_BUCKET_CAP", 3)
     n = 60
+    if family == "semdedup":
+        from goose_spark.ann import N_CENTROIDS, q_semdedup
+
+        # seeds 0..7 are basis vectors; vec 100.. are n copies of one
+        # vector at cosine 0.89 to seed 0, so cluster 0 is hot
+        basis = [(i, [float(i == j) for j in range(N_CENTROIDS)])
+                 for i in range(N_CENTROIDS)]
+        dup = [1.0, 0.5] + [0.0] * (N_CENTROIDS - 2)
+        spark.createDataFrame(
+            basis + [(100 + i, dup) for i in range(n)],
+            "vec_id long, embedding array<float>",
+        ).write.parquet(f"{tmp_path}/embeddings.parquet")
+        kept = {r.vec_id for r in q_semdedup(spark, str(tmp_path)).collect()
+                if r.kept}
+        # only identical vectors pair in a hot cluster: the copies fold
+        # onto vec 100, which survives its seed neighbour — a hot
+        # cluster under-deduplicates, it never drops a wrong vector
+        assert kept == set(range(N_CENTROIDS)) | {100}
+        return
     pdf = pd.DataFrame({
         "doc_id": range(n),
         "text": ["the same identical document text for every row here"] * n,
     })
-    out = T.simhash_pairs(spark.createDataFrame(pdf)).toPandas()
+    if family == "simhash":
+        out = T.simhash_pairs(spark.createDataFrame(pdf)).toPandas()
+        assert (out.hamming == 0).all()
+    else:
+        spark.createDataFrame(pdf).write.parquet(f"{tmp_path}/documents.parquet")
+        out = T.q_minhash_pairs(spark, str(tmp_path)).toPandas()
+        assert (out.jaccard == 1.0).all()
     # linear, not quadratic: n-1 star edges, all anchored at doc 0
     assert len(out) == n - 1
     assert set(out.id_a) == {0}
     assert set(out.id_b) == set(range(1, n))
-    assert (out.hamming == 0).all()
     # downstream keeper resolution sees ONE component
     from goose_spark.components import connected_components
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
@@ -391,14 +415,19 @@ def test_simhash_oracle_corpus_assumptions():
 
 
 def test_simhash_pairs_no_hot_bucket_at_grading_sf():
-    """ORACLE_SIMHASH_PAIRS equals the banded Spark plan only while no
-    (band_id, band_val) bucket exceeds HOT_BUCKET_CAP (hot buckets route
-    to star edges, the brute-force twin emits the clique). Pin the
-    margin on the grading corpus."""
+    """The DuckDB twins of q_simhash_pairs, q_minhash_pairs /
+    q_minhash_est_vs_exact and q_semdedup equal the Spark plans only
+    while no bucket exceeds HOT_BUCKET_CAP (hot buckets route to star
+    edges, the twins emit the clique). Pin the margin on the grading
+    corpus for every bucket key: the SimHash (band_id, band_val), the
+    MinHash (band_id, band_hash) and the SemDeDup cluster."""
     from collections import Counter
 
+    import duckdb
     import pandas as pd
 
+    from goose_spark.ann import ORACLE_SEMDEDUP
+    from goose_spark.ducklab import duck_views
     from goose_spark.textops import HOT_BUCKET_CAP, SIMHASH_BANDS, _simhash_kernel
 
     sims = _simhash_kernel(pd.Series(_grading_texts()))
@@ -406,6 +435,15 @@ def test_simhash_pairs_no_hot_bucket_at_grading_sf():
         (b, (int(s) >> (16 * b)) & 0xFFFF)
         for s in sims for b in range(SIMHASH_BANDS))
     assert max(counts.values()) < HOT_BUCKET_CAP
+    con = duck_views(duckdb.connect())
+    band = con.execute(T._oracle_minhash_cte() + """
+SELECT max(n) FROM (SELECT count(*) AS n FROM bands
+                    GROUP BY band_id, band_hash)""").fetchone()[0]
+    cluster = con.execute(f"""
+SELECT max(n) FROM (SELECT count(*) AS n FROM ({ORACLE_SEMDEDUP})
+                    GROUP BY centroid_id)""").fetchone()[0]
+    assert 1 < band < HOT_BUCKET_CAP
+    assert 1 < cluster < HOT_BUCKET_CAP
 
 
 def test_precap_keeps_null_domains(spark):
