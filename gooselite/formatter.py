@@ -8,6 +8,14 @@
      <object>/<embed> (remove_fewwords_paragraphs, reverse doc order);
   5. text of each remaining direct child, innerTrim'd, joined '\n\n'.
 
+Steps 1–4 read one pre-order walk of the top node (:func:`_walk`). It
+does not descend into a negative-score element, so a scored node below
+one goes with it, as in the sequential passes. It yields the doomed set,
+the drop-tag groups in canonical ``a, b, strong, i, br`` order, and the
+elements that survive both, in pre-order. Unwrapping never adds, removes
+or reorders the other elements, so that list is the pre-order of the
+tree step 4 sees, and step 4 folds over it bottom-up.
+
 THIS stage defines the bytes the north rule compares (BASELINE.json:14
 "byte-identical extracted text per url"); see SURVEY.md §7.5.
 Deviation recorded: the canonical add_newline_to_br quirk (br.text set to a
@@ -18,31 +26,48 @@ drop-tagging — identical observable output under innerTrim.
 from __future__ import annotations
 
 from gooselite import constants as C
-from gooselite.minidom import Node, remove_all
-from gooselite.text import count_is_additive, inner_trim, stopword_count_fast
+from gooselite.minidom import TEXT, Node, drop_all, remove_all
+from gooselite.text import count_is_additive, stopword_counter
+
+_DROP_ORDER = ("a",) + C.FORMATTER_DROP_TAGS
+_MEDIA = frozenset(("object", "embed"))
 
 
-def _remove_negativescore_nodes(top_node: Node) -> None:
-    doomed = [
-        e for e in top_node.iter_elements()
-        if e.score is not None and int(e.score) < C.FORMATTER_MIN_NODE_SCORE
-    ]
-    remove_all(doomed)
+def _walk(top_node: Node) -> tuple[list[Node], list[Node], list[Node]]:
+    """(negative-score doomed, drop-tag nodes in canonical group order,
+    surviving elements in pre-order) of the top node, in one walk."""
+    doomed: list[Node] = []
+    kept: list[Node] = []
+    groups: dict[str, list[Node]] = {t: [] for t in _DROP_ORDER}
+    min_score = C.FORMATTER_MIN_NODE_SCORE
+    stack = list(reversed(top_node.children))
+    pop, push = stack.pop, stack.extend
+    while stack:
+        node = pop()
+        if not node.is_element:
+            continue
+        score = node.score
+        if score is not None and int(score) < min_score:
+            doomed.append(node)
+            continue
+        group = groups.get(node.tag)
+        if group is None:
+            kept.append(node)
+        else:
+            group.append(node)
+        if node.children:
+            push(reversed(node.children))
+    drops: list[Node] = []
+    for t in _DROP_ORDER:
+        drops.extend(groups[t])
+    return doomed, drops, kept
 
 
-def _drop_tags(top_node: Node, tags: tuple[str, ...]) -> None:
-    # One walk for all tags (get_elements_by_tag concatenates PER TAG
-    # GROUP in document order — the canonical per-tag loop order).
-    # Unwrapping never adds/removes/reorders OTHER elements, so the
-    # pre-collected groups equal what per-tag re-walks would find.
-    for e in top_node.get_elements_by_tag(*tags):
-        e.drop_tag()
-
-
-def _remove_fewwords_paragraphs(top_node: Node, lang: str | None) -> None:
+def _remove_fewwords_paragraphs(ordered: list[Node], lang: str | None) -> None:
     """Remove elements with stopword_count < 3 (object/embed-containing
     exempt), evaluating in reverse document order so ancestors see the
-    already-pruned text of their descendants.
+    already-pruned text of their descendants. ``ordered`` is the top
+    node's elements in pre-order.
 
     [canon: outputformatters.py remove_fewwords_paragraphs — sequential
     reversed() loop]. Reverse document order is bottom-up (all descendants
@@ -50,65 +75,71 @@ def _remove_fewwords_paragraphs(top_node: Node, lang: str | None) -> None:
     memoized bottom-up pass with a single batched removal — identical
     decisions, O(n) instead of the naive O(n²) on skew-tail pages.
     """
-    live_media: dict[int, int] = {}     # id(element) → live object/embed descendants
+    # kept element → live object/embed below it, stored when > 0 (Nodes
+    # hash by identity)
+    live_media: dict[Node, int] = {}
     doomed: list[Node] = []
-    ordered = list(top_node.iter_elements())
+    count = stopword_counter(lang)
     if count_is_additive(lang):
         # Default counter: count(" ".join(parts)) == sum(count(part))
         # exactly (whitespace split; the joining space never merges
         # tokens), so fold CHILD COUNTS bottom-up instead of recounting
         # each ancestor's full concatenation — O(total text) instead of
         # O(depth × text) on deep/fat pages, identical decisions.
-        live_cnt: dict[int, int] = {}   # id(element) → count after pruning
+        live_cnt: dict[Node, int] = {}  # kept element → count after pruning
         for e in reversed(ordered):
             cnt = 0
             desc_media = 0
             for child in e.children:
                 if child.is_element:
-                    ccnt = live_cnt.get(id(child))
+                    ccnt = live_cnt.get(child)
                     if ccnt is None:  # child was doomed
                         continue
                     cnt += ccnt
-                    desc_media += live_media.get(id(child), 0)
-                elif child.tag == "#text" and child.text:
-                    cnt += stopword_count_fast(child.text, lang)
+                    if live_media:
+                        desc_media += live_media.get(child, 0)
+                elif child.tag == TEXT and child.text:
+                    cnt += count(child.text)
             # exemption counts object/embed DESCENDANTS only (canonical
             # getElementsByTag semantics — an element never matches itself)
             if cnt < C.FORMATTER_MIN_PARA_STOPWORDS and desc_media == 0:
                 doomed.append(e)
             else:
-                live_cnt[id(e)] = cnt
-                live_media[id(e)] = desc_media + (
-                    1 if e.tag in ("object", "embed") else 0)
+                live_cnt[e] = cnt
+                media = desc_media + (e.tag in _MEDIA)
+                if media:
+                    live_media[e] = media
         remove_all(doomed)
         return
     # Segmenting counters (zh/ja/th/ko/ar): additivity across part
     # boundaries is not asserted, so keep the exact concatenation.
-    live_text: dict[int, str] = {}      # id(element) → text after pruning below it
+    live_text: dict[Node, str] = {}     # kept element → text after pruning below it
     for e in reversed(ordered):
         parts: list[str] = []
         desc_media = 0
         for child in e.children:
             if child.is_element:
-                ctext = live_text.get(id(child))
+                ctext = live_text.get(child)
                 if ctext is None:  # child was doomed (empty-kept stores "")
                     continue
                 parts.append(ctext)
-                desc_media += live_media.get(id(child), 0)
-            elif child.tag == "#text" and child.text:
+                desc_media += live_media.get(child, 0)
+            elif child.tag == TEXT and child.text:
                 parts.append(child.text)
         # raw (untrimmed) concatenation: live_text only feeds stopword
         # counting, which is whitespace-insensitive; the displayed text is
         # recomputed from the pruned tree in _convert_to_text
         text = " ".join(parts)
-        cnt = stopword_count_fast(text, lang)
+        cnt = count(text)
         # exemption counts object/embed DESCENDANTS only (canonical
         # getElementsByTag semantics — an element never matches itself)
         if cnt < C.FORMATTER_MIN_PARA_STOPWORDS and desc_media == 0:
             doomed.append(e)
         else:
-            live_text[id(e)] = text
-            live_media[id(e)] = desc_media + (1 if e.tag in ("object", "embed") else 0)
+            live_text[e] = text
+            media = desc_media + (e.tag in _MEDIA)
+            if media:
+                live_media[e] = media
     remove_all(doomed)
 
 
@@ -125,8 +156,8 @@ def _convert_to_text(top_node: Node) -> str:
 
 
 def get_formatted_text(top_node: Node, lang: str | None) -> str:
-    _remove_negativescore_nodes(top_node)
-    # canonical order: <a> group first, then b/strong/i/br — one walk
-    _drop_tags(top_node, ("a",) + C.FORMATTER_DROP_TAGS)
-    _remove_fewwords_paragraphs(top_node, lang)
+    doomed, drops, kept = _walk(top_node)
+    remove_all(doomed)
+    drop_all(drops)
+    _remove_fewwords_paragraphs(kept, lang)
     return _convert_to_text(top_node)

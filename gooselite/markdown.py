@@ -25,8 +25,8 @@ Semantics, deliberately simple and deterministic:
 
 from __future__ import annotations
 
-from gooselite.formatter import _remove_negativescore_nodes
-from gooselite.minidom import TEXT, Node
+from gooselite.formatter import _walk
+from gooselite.minidom import TEXT, Node, remove_all
 from gooselite.text import inner_trim
 
 _SKIP = frozenset({"script", "style"})
@@ -151,7 +151,7 @@ def _block(el: Node) -> list[str]:
 def to_markdown(top_node: Node, title: str | None = None) -> str:
     """Render the cleaned top node as markdown. Mutates only via the
     idempotent negative-score prune shared with the flat formatter."""
-    _remove_negativescore_nodes(top_node)
+    remove_all(_walk(top_node)[0])
     blocks = _blocks_of(top_node)
     head = inner_trim(title or "")
     if head:

@@ -60,7 +60,7 @@ class Node:
     comment nodes carry ``text`` and have tag ``#text`` / ``#comment``."""
 
     __slots__ = ("tag", "attrib", "children", "parent", "text", "score",
-                 "gravity_nodes", "is_element", "swc")
+                 "gravity_nodes", "is_element", "swc", "link_dense")
 
     def __init__(self, tag: str, attrib: dict[str, str] | None = None, text: str | None = None):
         self.tag = tag
@@ -74,6 +74,8 @@ class Node:
         # subtree text is unchanged — scoring/sibling phases never mutate
         # a counted paragraph's text, only detach/attach whole blocks
         self.swc: int | None = None
+        # link-density cache (scoring A9), set with swc and valid while it is
+        self.link_dense: bool | None = None
         # precomputed: the profiler showed a property here costs ~13% of
         # total extraction time (6M+ calls/150 docs). Node kind never
         # changes (div→p stays an element), so a plain slot is safe.
@@ -100,16 +102,7 @@ class Node:
 
         [canon: lxml drop_tag — used by Goose for <a>/<b>/<strong>/<i>/<br>/
         <em>/<span> drop-tagging (A15, A6)]."""
-        parent = self.parent
-        if parent is None:
-            return
-        idx = parent.children.index(self)
-        kids = list(self.children)
-        parent.children[idx:idx + 1] = kids
-        for k in kids:
-            k.parent = parent
-        self.children = []
-        self.parent = None
+        drop_all([self])
 
     # -- traversal (document order, iterative) ------------------------------
     # These return LISTS, not generators: traversal is the single hottest
@@ -282,6 +275,47 @@ def remove_all(nodes: list["Node"]) -> None:
         parent.children = [c for c in parent.children if id(c) not in doomed]
     for n in nodes:
         n.parent = None
+
+
+def drop_all(nodes: list["Node"]) -> None:
+    """Batch drop-tag: replace every node with its children, in place, with
+    one children-list rebuild per affected parent.
+
+    Same tree as ``drop_tag()`` on each node in any order (unwrapping is
+    confluent), without its per-node ``index`` + slice splice, which is
+    O(len(parent.children)) each and so O(n²) under a wide parent. Nested
+    drops (a span in a span, a <b> in an <a>) splice the inner node's
+    children straight into the nearest kept ancestor. A node with no
+    parent is left in place, as ``drop_tag`` leaves it.
+    """
+    dropped = {id(n) for n in nodes if n.parent is not None}
+    if not dropped:
+        return
+    anchors: dict[int, Node] = {}
+    for n in nodes:
+        p = n.parent
+        if p is not None and id(p) not in dropped:
+            anchors[id(p)] = p
+    for parent in anchors.values():
+        kids: list[Node] = []
+        append = kids.append
+        for c in parent.children:
+            if id(c) not in dropped:
+                append(c)
+                continue
+            stack = list(reversed(c.children))
+            while stack:
+                k = stack.pop()
+                if id(k) in dropped:
+                    stack.extend(reversed(k.children))
+                else:
+                    k.parent = parent
+                    append(k)
+        parent.children = kids
+    for n in nodes:
+        if id(n) in dropped:
+            n.children = []
+            n.parent = None
 
 
 def dispose(root: Node) -> None:

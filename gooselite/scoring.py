@@ -7,36 +7,42 @@ add_siblings/get_siblings_content/get_siblings_score, post_cleanup,
 is_table_and_no_para_exist, is_nodescore_threshold_met]. Reference checkout
 empty at build time (SURVEY.md §0.1); every constant sourced from
 :mod:`gooselite.constants` (§2.4) for one-place re-verification.
+
+Candidate enumeration and the A9 link-density fold of every candidate
+share one tree walk (:func:`_link_walk`). ``calculate_best_node`` caches
+each candidate's stopword count and link-density decision on the node
+(``Node.swc``, ``Node.link_dense``); post_cleanup reads them back for the
+same, still unchanged paragraphs instead of rescanning them.
 """
 
 from __future__ import annotations
 
 from gooselite import constants as C
-from gooselite.minidom import Node, new_element
-from gooselite.text import get_stopword_count, stopword_count_fast
+from gooselite.minidom import TEXT, Node, new_element, remove_all
+from gooselite.text import (get_stopword_count, stopword_count_fast,
+                            stopword_counter)
+
+
+def _is_dense(words: int, links: int, link_words: int) -> bool:
+    """A9: (link words / words) * n_links >= 1.0, from whitespace-token
+    counts; a node with links and no words is all link."""
+    if not links:
+        return False
+    if not words:
+        return True
+    return (link_words / words) * links >= C.LINK_DENSITY_THRESHOLD
 
 
 def is_highlink_density(node: Node, lang: str | None = None) -> bool:
-    """A9: (len(words(link text)) / len(words(node text))) * n_links >= 1.0.
-    raw_text is used because only whitespace-split token COUNTS matter."""
-    links = node.get_elements_by_tag("a")
-    if not links:
-        return False
-    words = node.raw_text().split()
-    if not words:
-        return True  # all-link node: nothing but anchors
-    n_link_words = sum(len(a.raw_text().split()) for a in links)
-    score = (n_link_words / len(words)) * len(links)
-    return score >= C.LINK_DENSITY_THRESHOLD
+    """A9 for one node: the totals of one :func:`_link_walk` over it."""
+    _, _, links, link_words = _link_walk(node, ())
+    return bool(links) and _is_dense(len(node.raw_text().split()), links,
+                                     link_words)
 
 
-def _update_score(node: Node, add: float) -> None:
-    current = node.score if node.score is not None else 0.0
-    node.score = current + add
-
-
-def _update_node_count(node: Node, add: int) -> None:
-    node.gravity_nodes += add
+def _link_dense(node: Node) -> bool:
+    dense = node.link_dense
+    return is_highlink_density(node) if dense is None else dense
 
 
 def is_boostable(node: Node, lang: str | None) -> bool:
@@ -64,48 +70,123 @@ def is_boostable(node: Node, lang: str | None) -> bool:
 
 
 def _precompute_boostable(candidates: list[Node],
-                          lang: str | None) -> dict[int, bool]:
+                          lang: str | None) -> set[Node]:
     """One pass per parent: for each candidate, whether any of its nearest
     BOOST_SIBLING_REACH previous <p> siblings has stopword_count >
-    BOOST_MIN_STOPWORDS (same decision as :func:`is_boostable`)."""
-    wanted = {id(n) for n in candidates}
-    parents: list[Node] = []
-    seen_parents: set[int] = set()
-    for n in candidates:
-        p = n.parent
-        if p is not None and id(p) not in seen_parents:
-            seen_parents.add(id(p))
-            parents.append(p)
-    out: dict[int, bool] = {}
+    BOOST_MIN_STOPWORDS (same decision as :func:`is_boostable`); returns
+    the boostable ones. Nodes hash by identity."""
+    wanted = set(candidates)
+    parents = dict.fromkeys(n.parent for n in candidates)
+    parents.pop(None, None)
+    out: set[Node] = set()
     reach = C.BOOST_SIBLING_REACH
     for parent in parents:
-        recent_p_flags: list[bool] = []  # nearest-last; True = count > threshold
+        gap = reach  # <p> siblings since the last one over the threshold
         for child in parent.children:
-            if id(child) in wanted:
-                out[id(child)] = any(recent_p_flags[-reach:])
-            if child.is_element and child.tag == "p":
+            if gap < reach and child in wanted:
+                out.add(child)
+            if child.tag == "p":
                 cnt = child.swc
                 if cnt is None:
                     cnt = stopword_count_fast(child.raw_text(), lang)
                     child.swc = cnt
-                recent_p_flags.append(cnt > C.BOOST_MIN_STOPWORDS)
+                gap = 0 if cnt > C.BOOST_MIN_STOPWORDS else gap + 1
     return out
+
+
+def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
+        list[Node], dict[Node, tuple[int, int, int]], int, int]:
+    """One walk below ``root``: the nodes tagged ``tags`` (per tag group,
+    each in document order — A7's candidate order), the A9 link fold of
+    each that has an <a> below it, and the fold's totals for ``root``.
+
+    The fold is (n_links, Σ words × <a>-depth, <a>-depth at the node).
+    Word counts are additive over text nodes (the join space never merges
+    tokens), and a text's words count once per <a> above it: nested <a>
+    count the way ``get_elements_by_tag("a")`` lists them. Running totals
+    are read where a node's subtree begins and ends; a None on the walk
+    stack marks the end of the innermost open <a> or tagged node. Only
+    text below an <a> is tokenized here. A node's own word count W comes
+    from the raw text its caller reads anyway, and its link words are
+    Σ − depth × W."""
+    buckets: dict[str, list[Node]] = {t: [] for t in tags}
+    links: dict[Node, tuple[int, int, int]] = {}
+    exits: list[Node] = []
+    marks: list[tuple[int, int, int]] = []
+    n_a = a_words = depth = 0
+    stack = list(reversed(root.children))
+    pop, push, push_end = stack.pop, stack.extend, stack.append
+    while stack:
+        node = pop()
+        if node is None:
+            e = exits.pop()
+            if e.tag == "a":
+                depth -= 1
+            else:
+                n0, w0, d0 = marks.pop()
+                if n_a > n0:
+                    links[e] = (n_a - n0, a_words - w0, d0)
+            continue
+        kids = node.children
+        if not kids:
+            if node.tag == TEXT:
+                if depth and node.text:
+                    a_words += len(node.text.split()) * depth
+            elif node.tag == "a":
+                n_a += 1
+            else:
+                bucket = buckets.get(node.tag)
+                if bucket is not None:
+                    bucket.append(node)
+            continue
+        tag = node.tag
+        if tag == "a":
+            n_a += 1
+            depth += 1
+            exits.append(node)
+            push_end(None)
+        else:
+            bucket = buckets.get(tag)
+            if bucket is not None:
+                bucket.append(node)
+                exits.append(node)
+                marks.append((n_a, a_words, depth))
+                push_end(None)
+        push(reversed(kids))
+    out: list[Node] = []
+    for t in tags:
+        out.extend(buckets[t])
+    return out, links, n_a, a_words
 
 
 def calculate_best_node(root: Node, lang: str | None) -> Node | None:
     """A7–A12: enumerate candidates, score, propagate to parents and
     grandparents, return argmax parent (first-in-document-order tie-break)."""
-    candidates = root.get_elements_by_tag(*C.CANDIDATE_TAGS)
+    candidates, links, _, _ = _link_walk(root, C.CANDIDATE_TAGS)
 
-    # stopword counts cached ON the node (Node.swc): the sibling-baseline
-    # pass (A13) re-reads the same paragraphs and nothing between here and
-    # there mutates a counted paragraph's text
+    # stopword counts and link-density decisions cached ON the node
+    # (Node.swc, Node.link_dense): the sibling-baseline pass (A13) re-reads
+    # the same paragraphs and nothing between here and there mutates a
+    # counted paragraph's subtree
+    count = stopword_counter(lang)
     nodes_with_text: list[Node] = []
     for node in candidates:
-        cnt = stopword_count_fast(node.raw_text(), lang)
+        text = node.raw_text()
+        cnt = count(text)
         node.swc = cnt
-        if cnt > C.CANDIDATE_MIN_STOPWORDS and not is_highlink_density(node, lang):
-            nodes_with_text.append(node)
+        if cnt > C.CANDIDATE_MIN_STOPWORDS:
+            fold = links.get(node)
+            if fold is None:
+                dense = False
+            else:
+                n_links, a_words, depth = fold
+                words = len(text.split())
+                dense = _is_dense(words, n_links, a_words - depth * words)
+            node.link_dense = dense
+            if not dense:
+                nodes_with_text.append(node)
+        else:
+            node.link_dense = None
 
     boostable = _precompute_boostable(nodes_with_text, lang)
 
@@ -113,12 +194,11 @@ def calculate_best_node(root: Node, lang: str | None) -> Node | None:
     negative_scoring = 0.0
     bottom_negativescore_nodes = nodes_number * C.NEGATIVE_SCORING_BOTTOM_FRACTION
     starting_boost = 1.0
-    parent_nodes: list[Node] = []
-    parent_seen: set[int] = set()
+    parent_nodes: dict[Node, None] = {}  # insertion-ordered set
 
     for i, node in enumerate(nodes_with_text):
         boost_score = 0.0
-        if boostable.get(id(node), False):
+        if node in boostable:
             boost_score = (1.0 / starting_boost) * C.BOOST_BASE
             starting_boost += 1
         if nodes_number > C.NEGATIVE_SCORING_MIN_NODES:
@@ -134,18 +214,16 @@ def calculate_best_node(root: Node, lang: str | None) -> Node | None:
         parent = node.parent
         if parent is None:
             continue
-        _update_score(parent, upscore)
-        _update_node_count(parent, 1)
-        if id(parent) not in parent_seen:
-            parent_seen.add(id(parent))
-            parent_nodes.append(parent)
+        # A11 update_score / update_node_count
+        parent.score = (parent.score or 0.0) + upscore
+        parent.gravity_nodes += 1
+        parent_nodes[parent] = None
         grandparent = parent.parent
         if grandparent is not None:
-            _update_score(grandparent, upscore / C.GRANDPARENT_SCORE_DIVISOR)
-            _update_node_count(grandparent, 1)
-            if id(grandparent) not in parent_seen:
-                parent_seen.add(id(grandparent))
-                parent_nodes.append(grandparent)
+            grandparent.score = ((grandparent.score or 0.0)
+                                 + upscore / C.GRANDPARENT_SCORE_DIVISOR)
+            grandparent.gravity_nodes += 1
+            parent_nodes[grandparent] = None
 
     top_node: Node | None = None
     top_node_score = 0.0
@@ -169,7 +247,7 @@ def _get_siblings_baseline_score(top_node: Node, lang: str | None) -> float:
         if cnt is None:
             cnt = stopword_count_fast(node.raw_text(), lang)
             node.swc = cnt
-        if cnt > C.CANDIDATE_MIN_STOPWORDS and not is_highlink_density(node, lang):
+        if cnt > C.CANDIDATE_MIN_STOPWORDS and not _link_dense(node):
             paragraphs_number += 1
             paragraphs_score += cnt
     if paragraphs_number > 0:
@@ -190,7 +268,7 @@ def _get_siblings_content(sibling: Node, baseline_score: float, lang: str | None
             continue
         stats = get_stopword_count(text, lang)
         threshold = baseline_score * C.SIBLING_SCORE_MULTIPLIER
-        if threshold < stats.stop_word_count and not is_highlink_density(para, lang):
+        if threshold < stats.stop_word_count and not _link_dense(para):
             out.append(new_element("p", text=text))
     return out
 
@@ -207,9 +285,8 @@ def add_siblings(top_node: Node, lang: str | None) -> Node:
 def _is_table_and_no_para_exist(e: Node) -> bool:
     """A14 helper [canon: is_table_and_no_para_exist] — also destructively
     drops sub-paragraphs shorter than TABLE_PARA_MIN_CHARS."""
-    for p in e.get_elements_by_tag("p"):
-        if len(p.get_text()) < C.TABLE_PARA_MIN_CHARS:
-            p.detach()
+    remove_all([p for p in e.get_elements_by_tag("p")
+                if len(p.get_text()) < C.TABLE_PARA_MIN_CHARS])
     remaining = e.get_elements_by_tag("p")
     return len(remaining) == 0 and e.tag != "td"
 
@@ -230,7 +307,7 @@ def post_cleanup(top_node: Node, lang: str | None) -> Node:
     for e in list(node.children):
         if not e.is_element or e.tag == "p":
             continue
-        if (is_highlink_density(e, lang)
+        if (_link_dense(e)
                 or _is_table_and_no_para_exist(e)
                 or not _is_nodescore_threshold_met(node, e)):
             e.detach()

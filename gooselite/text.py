@@ -10,6 +10,7 @@ import re
 import string
 from dataclasses import dataclass, field
 from functools import lru_cache
+from typing import Callable
 
 from gooselite.stopwords_data import DEFAULT_LANGUAGE, STOPWORDS
 
@@ -242,14 +243,25 @@ def stopword_count_fast(content: str, lang: str | None = None) -> int:
     worker for no hit-rate. 65536 entries × ≤2 KiB keys bounds the
     cache at ~128 MiB worst case, in practice far less.
     """
-    if not content:
-        return 0
-    if len(content) > _CACHEABLE_LEN:
-        return _stopword_count_uncached(content, resolve_language(lang))
-    return _stopword_count_cached(content, resolve_language(lang))
+    return stopword_counter(lang)(content)
 
 
 _CACHEABLE_LEN = 2048
+
+
+def stopword_counter(lang: str | None) -> Callable[[str], int]:
+    """:func:`stopword_count_fast` for one language, resolved once: the
+    scoring and formatter loops count up to 10^5 texts per page."""
+    code = resolve_language(lang)
+    cached, uncached = _stopword_count_cached, _stopword_count_uncached
+
+    def count(content: str) -> int:
+        if not content:
+            return 0
+        if len(content) > _CACHEABLE_LEN:
+            return uncached(content, code)
+        return cached(content, code)
+    return count
 
 
 @lru_cache(maxsize=65536)
