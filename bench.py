@@ -20,8 +20,8 @@ _TAIL_QUERIES = (
     "q_hash_agg", "q_window_dedupe", "q_equi_join_3way", "q_topk",
     "q_dedup_exact", "q_token_count", "q_fingerprint",
     "q_minhash_pairs", "q_simhash", "q_ann_cosine_topk",
-    "q_pdf_extract", "q_image_decode", "q_repetition_filter",
-    "q_paragraph_dedup", "q_pagerank", "q_substring_dedup",
+    "q_pdf_extract", "q_repetition_filter", "q_paragraph_dedup",
+    "q_substring_dedup",
 )
 
 

@@ -245,8 +245,8 @@ def q_ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _vectors_pyarrow(sf_dir: str):
     """Oracle-side parameter source: read embeddings without Spark.
-    Cached per sf_dir — one oracle_sql() render calls this five times
-    (lsh probe/buckets, ivf, kmeans, cosine) and the parquet is static."""
+    Cached per sf_dir — one oracle_sql() render calls this four times
+    (cosine, lsh probe, lsh buckets, ivf probe) and the parquet is static."""
     return list(_vectors_pyarrow_cached(sf_dir))
 
 
@@ -448,143 +448,6 @@ WITH t AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
 SELECT vec_id, label, CAST({bucket_sql} AS INT) AS bucket
 FROM t
 """
-
-
-# ---- k-means trainer: 3 full Lloyd rounds, exact integers ------------------
-# The third distributed training loop (with textops.q_bpe_train and
-# filterops.q_perceptron_train): the IVF coarse quantizer's centroids
-# TRAINED rather than seeded — q_ann_ivf_probe proves one refinement
-# step; this runs the actual Lloyd iteration three times with every
-# step exact, so round 2's assignment provably happens against round
-# 1's learned centroids in both engines.
-#
-# Exactness across rounds is the design problem: ROUND(avg, 6) is fine
-# for ONE step but a single sub-ulp disagreement would diverge every
-# later round. So the loop runs on the quantized integer grid
-# (floor(v*QUANT) + KM_SHIFT, the LSH oracle's proven double-multiply
-# + floor, shifted non-negative so integer division is engine-exact:
-# Spark div == DuckDB // == Python // only for non-negative operands):
-# squared-Euclidean distances, sums, and the mean's integer division
-# are all int64 with no rounding anywhere.
-#
-# Scale shape per round: assignment is a broadcast of K tiny centroid
-# rows + a vec_id-keyed argmin window; the update collects K×dim
-# integers to the driver (the parameter server is K rows — same O(1)
-# pattern as the perceptron's weight vector); inertia/count ride the
-# same aggregate. At 10^12 vectors nothing grows with N on the driver.
-KM_K = N_CENTROIDS
-KM_ROUNDS = 3
-# derived from QUANT: floor(v*QUANT) >= -KM_SHIFT for unit-ish embeddings
-# (|v| <= 1), keeping the shifted grid non-negative — the corpus
-# assumption is pinned by tests/test_textops.py so a regenerated corpus
-# with |v| > 1 fails loudly in pytest, not as a driver hash mismatch
-KM_SHIFT = int(QUANT)
-
-
-def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per (round, centroid): assignment count, integer inertia,
-    and the md5 of the updated centroid's integer coordinates."""
-    import hashlib
-
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id",
-        F.expr(
-            f"transform(cast(embedding as array<double>),"
-            f" x -> cast(floor(x * {QUANT}) + {KM_SHIFT} as bigint))"
-        ).alias("qv")).localCheckpoint()
-    cents = {int(r.vec_id): list(r.qv)
-             for r in base.filter(F.col("vec_id") < KM_K).collect()}
-    out_rows = []
-    for rnd in range(1, KM_ROUNDS + 1):
-        cdf = spark.createDataFrame(
-            [(cid, c) for cid, c in sorted(cents.items())],
-            "cid long, c array<bigint>")
-        dist = F.expr(
-            "aggregate(zip_with(qv, c, (a, b) -> (a - b) * (a - b)),"
-            " cast(0 as bigint), (acc, x) -> acc + x)")
-        scored = base.crossJoin(F.broadcast(cdf)).select(
-            "vec_id", "qv", "cid", dist.alias("dist"))
-        w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-        # localCheckpoint: the assignment feeds TWO collect actions
-        # (stats + coordinate sums); without it each round would run
-        # the crossJoin + argmin window — the advertised at-scale
-        # bottleneck — twice
-        assign = (scored.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1)
-                  .select("vec_id", "qv", "cid", "dist")
-                  .localCheckpoint())
-        stats = {int(r.cid): (int(r.n), int(r.inertia))
-                 for r in assign.groupBy("cid").agg(
-                     F.count(F.lit(1)).alias("n"),
-                     F.sum("dist").alias("inertia")).collect()}
-        sums = assign.select(
-            "cid", F.posexplode("qv").alias("pos", "val")
-        ).groupBy("cid", "pos").agg(F.sum("val").alias("s")).collect()
-        acc: dict[int, dict[int, int]] = {}
-        for r in sums:
-            acc.setdefault(int(r.cid), {})[int(r.pos)] = int(r.s)
-        for cid in sorted(cents):
-            n, inertia = stats.get(cid, (0, 0))
-            if n > 0:
-                cents[cid] = [acc[cid][p] // n
-                              for p in range(len(cents[cid]))]
-            # empty centroid: keep previous coordinates (same rule in SQL)
-            c_md5 = hashlib.md5(
-                ",".join(str(x) for x in cents[cid]).encode()).hexdigest()
-            out_rows.append((rnd, cid, n, inertia, c_md5))
-    return spark.createDataFrame(
-        out_rows,
-        "round int, centroid_id long, n_assigned long,"
-        " inertia long, c_md5 string")
-
-
-def oracle_kmeans_train(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    """DuckDB twin: KM_ROUNDS unrolled Lloyd rounds on the same integer
-    grid; dim read via pyarrow (no Spark needed)."""
-    dim = len(_vectors_pyarrow(sf_dir))
-    parts = [f"""
-v AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        x -> CAST(floor(x * {QUANT}) + {KM_SHIFT}
-                                  AS BIGINT)) AS qv
-  FROM embeddings),
-c0 AS (SELECT vec_id AS cid, qv AS c FROM v WHERE vec_id < {KM_K})"""]
-    sel = []
-    for r in range(1, KM_ROUNDS + 1):
-        parts.append(f"""
-a{r} AS (
-  SELECT v.vec_id, v.qv, c.cid,
-         list_sum(list_transform(generate_series(1, {dim}),
-                  i -> (v.qv[i] - c.c[i]) * (v.qv[i] - c.c[i]))) AS dist
-  FROM v, c{r - 1} c),
-g{r} AS (
-  SELECT vec_id, qv, cid, dist,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-  FROM a{r}),
-s{r} AS (SELECT vec_id, qv, cid, dist FROM g{r} WHERE rn = 1),
-st{r} AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(SUM(dist) AS BIGINT) AS inertia
-          FROM s{r} GROUP BY cid),
-sm{r} AS (SELECT cid, i AS pos, CAST(SUM(qv[i]) AS BIGINT) AS s
-          FROM s{r}, unnest(generate_series(1, {dim})) t(i)
-          GROUP BY cid, i),
-nc{r} AS (SELECT sm{r}.cid, list(s // n ORDER BY pos) AS c
-          FROM sm{r} JOIN st{r} USING (cid) GROUP BY sm{r}.cid),
-c{r} AS (SELECT p.cid, COALESCE(n.c, p.c) AS c
-         FROM c{r - 1} p LEFT JOIN nc{r} n USING (cid))""")
-        sel.append(f"""
-SELECT CAST({r} AS INT) AS round, p.cid AS centroid_id,
-       COALESCE(st.n, 0) AS n_assigned,
-       COALESCE(st.inertia, 0) AS inertia,
-       md5(array_to_string(cc.c, ',')) AS c_md5
-FROM c{r - 1} p
-LEFT JOIN st{r} st ON st.cid = p.cid
-JOIN c{r} cc ON cc.cid = p.cid""")
-    return "WITH " + ",".join(parts) + "\n" + "\nUNION ALL\n".join(sel)
 
 
 # ---- SemDeDup: semantic deduplication via cluster-blocked cosine -----------

@@ -160,99 +160,3 @@ reach(id, r) AS (
 SELECT id AS vec_id, MIN(r) AS keeper_id FROM reach GROUP BY id
 """
 
-
-# ------------------------------------------------------------- PageRank --
-# The canonical web-scale iterative operator: link-graph PageRank over a
-# deterministic synthesized edge set (doc_ids are contiguous 0..N-1 at
-# every SF, so modular targets always exist: node u has outdeg = u%3+1
-# edges to (u*P_k + Q_k) % N). In a real crawl pipeline this ranks hosts
-# for crawl scheduling and gives a quality prior for filtering.
-#
-# All arithmetic is integer-exact in both engines: ranks live at scale
-# 10^12, every division is an explicit parenthesized integer div, and
-# update order is identical — so five iterations later the int64 ranks
-# match DuckDB bit-for-bit (truncation loses a little probability mass;
-# that loss is deterministic and identical cross-engine).
-PR_SCALE = 10 ** 12
-PR_ITERS = 5
-
-# shared edge-target lambda body (Spark transform / DuckDB
-# list_transform agree on CASE + %): k-th target of node doc_id
-# edge-target constants: the k-th outlink of node u is
-# (u * PR_MULT[k] + PR_ADD[k]) % N. The single source of truth —
-# q_link_extract's page synthesis, its oracle, and the pytests all
-# import these (retuning them here retunes the whole crawl loop).
-PR_MULT = (7, 31, 97)
-PR_ADD = (13, 57, 241)
-_PR_DST = (f"(doc_id * (CASE WHEN k = 0 THEN {PR_MULT[0]}"
-           f" WHEN k = 1 THEN {PR_MULT[1]} ELSE {PR_MULT[2]} END)"
-           f" + (CASE WHEN k = 0 THEN {PR_ADD[0]}"
-           f" WHEN k = 1 THEN {PR_ADD[1]}"
-           f" ELSE {PR_ADD[2]} END)) % n")
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Five PageRank iterations (damping 0.85) over the synthesized link
-    graph. Per-round shape — the one that survives 10^12 edges: ONE
-    src-keyed equi-join (edges × ranks; both sides hash-partitioned on
-    the id, so successive rounds reuse the partitioning) + one dst-keyed
-    partial/final aggregate + a left join back to the node list for
-    dangling/unlinked nodes. N reaches the plan through a broadcast
-    1-row aggregate — no collect. At deploy scale add a
-    localCheckpoint lineage cut every few rounds exactly as
-    connected_components does; five fixed rounds don't need it."""
-    from goose_spark.queries import load
-
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    n_df = d.agg(F.count(F.lit(1)).alias("n"))
-    nodes = d.crossJoin(F.broadcast(n_df))
-    edges = nodes.select(
-        F.col("doc_id").alias("src"),
-        (F.col("doc_id") % 3 + 1).alias("outdeg"),
-        F.explode(F.expr(
-            f"transform(sequence(0, doc_id % 3), k -> {_PR_DST})"
-        )).alias("dst"))
-    ranks = nodes.select(
-        "doc_id", F.expr(f"{PR_SCALE} div n").alias("rank"))
-    for _ in range(PR_ITERS):
-        contribs = (
-            edges.join(ranks.withColumnRenamed("doc_id", "src"), "src")
-            .select("dst", F.expr("rank div outdeg").alias("c"))
-            .groupBy("dst").agg(F.sum("c").alias("s")))
-        ranks = (
-            nodes.join(contribs, nodes["doc_id"] == contribs["dst"], "left")
-            .select(
-                "doc_id",
-                F.expr(f"((15 * ({PR_SCALE} div n)) div 100)"
-                       " + ((85 * coalesce(s, 0)) div 100)").alias("rank")))
-    return ranks
-
-
-def _oracle_pagerank() -> str:
-    dst = _PR_DST
-    ctes = [f"""nn AS (SELECT COUNT(*) AS n FROM documents),
-nodes AS (SELECT doc_id, n FROM documents, nn),
-edges AS (
-  SELECT doc_id AS src, doc_id % 3 + 1 AS outdeg,
-         unnest(list_transform(range(0, CAST(doc_id % 3 + 1 AS INT)),
-                               k -> {dst})) AS dst
-  FROM nodes),
-r0 AS (SELECT doc_id, {PR_SCALE} // n AS rank FROM nodes)"""]
-    for i in range(PR_ITERS):
-        ctes.append(f"""r{i + 1} AS (
-  SELECT v.doc_id,
-         ((15 * ({PR_SCALE} // v.n)) // 100)
-         + ((85 * COALESCE(s.s, 0)) // 100) AS rank
-  FROM nodes v LEFT JOIN (
-    SELECT e.dst AS doc_id, SUM(r.rank // e.outdeg) AS s
-    FROM edges e JOIN r{i} r ON r.doc_id = e.src GROUP BY e.dst) s
-  USING (doc_id))""")
-    # CAST: DuckDB SUM() yields HUGEINT, which propagates into `rank` and
-    # arrives as arrow decimal128(38,0); the driver's value hash is
-    # type-sensitive vs Spark's int64 (CORRECTNESS_r04 q_pagerank).
-    return ("WITH " + ",\n".join(ctes)
-            + f"\nSELECT doc_id, CAST(rank AS BIGINT) AS rank"
-            + f" FROM r{PR_ITERS}")
-
-
-ORACLE_PAGERANK = _oracle_pagerank()

@@ -2,8 +2,8 @@
 training-data pipeline runs BETWEEN crawls and extraction passes —
 paragraph-level boilerplate removal (CCNet-style line dedup), mixture
 sampling to per-language token budgets, crawl-snapshot deltas, PMI
-collocation mining, and outlink extraction (the link-graph feed for
-components.q_pagerank).
+collocation mining, and outlink extraction (the crawl frontier's link
+graph).
 
 House rules (same as textops/filterops): every step is a JVM-side
 expression; outputs are exact integers / md5 gates so each probe is
@@ -275,16 +275,26 @@ LIMIT {PMI_TOP_K}
 
 # ------------------------------------------------------ link extraction --
 # Closes the crawl loop: page HTML -> DOM parse -> outlink extraction ->
-# link graph -> q_pagerank. Each doc gets a deterministic page whose
-# anchors encode the SAME modular targets as components.q_pagerank's
-# synthesized graph (P/Q constants imported, not copied), in three href
-# shapes a real crawl sees — root-relative ("/d/7"), dot-dot-relative
-# ("../d/7"), and protocol-absolute — all resolved by urllib's urljoin
+# link graph. Each doc gets a deterministic page whose anchors encode a
+# closed-form edge set, in three href shapes a real crawl sees —
+# root-relative ("/d/7"), dot-dot-relative ("../d/7"), and
+# protocol-absolute — all resolved by urllib's urljoin
 # against the page URL. The DuckDB oracle never parses HTML: it
 # recomputes the resolved URLs closed-form, so a hash match proves the
 # real parser + resolver chain (gooselite.minidom + urljoin) extracted
-# exactly the planted edge set. A pytest additionally asserts this edge
-# set equals q_pagerank's own edges.
+# exactly the planted edge set.
+#
+# The k-th outlink of node u is (u * PR_MULT[k] + PR_ADD[k]) % n for
+# k <= u % 3 (doc_ids are contiguous 0..n-1 at every SF, so every target
+# exists). The page synthesis, the oracles (through LINK_DST_SQL, over
+# columns doc_id, pos and n) and the pytests all read these constants.
+PR_MULT = (7, 31, 97)
+PR_ADD = (13, 57, 241)
+LINK_DST_SQL = (f"(doc_id * (CASE WHEN pos = 0 THEN {PR_MULT[0]}"
+                f" WHEN pos = 1 THEN {PR_MULT[1]} ELSE {PR_MULT[2]} END)"
+                f" + (CASE WHEN pos = 0 THEN {PR_ADD[0]}"
+                f" WHEN pos = 1 THEN {PR_ADD[1]}"
+                f" ELSE {PR_ADD[2]} END)) % n")
 
 
 def synth_link_page(doc_id: int, source: str, n: int) -> tuple:
@@ -292,8 +302,6 @@ def synth_link_page(doc_id: int, source: str, n: int) -> tuple:
     outlinks exercising root-relative / parent-relative / absolute hrefs,
     plus a <title> for the WAT metadata probe. Shared by _link_pages and
     warcops._wat_batches so the link formula has ONE definition."""
-    from goose_spark.components import PR_ADD, PR_MULT
-
     page_url = f"https://{source}.example/d/{doc_id}"
     anchors = []
     for k in range(doc_id % 3 + 1):
@@ -343,7 +351,7 @@ def q_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of page bytes; N enters via a broadcast 1-row aggregate.
     At crawl scale this runs fused with the extraction UDF over the
     same WARC batches — the edge list, not the HTML, is what shuffles
-    into the q_pagerank rounds."""
+    into a link-graph ranking."""
     return _link_edges(spark, sf_dir).select("doc_id", "pos", "dst_url")
 
 
@@ -358,8 +366,6 @@ def _link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_link_extract() -> str:
-    from goose_spark.components import PR_ADD, PR_MULT
-
     return f"""
 WITH nn AS (SELECT COUNT(*) AS n FROM documents),
 d AS (SELECT doc_id, source, n FROM documents, nn),
@@ -368,12 +374,7 @@ e AS (SELECT doc_id, source, n,
       FROM d)
 SELECT doc_id, CAST(pos AS INT) AS pos,
        'https://' || source || '.example/d/' ||
-       CAST((doc_id * (CASE WHEN pos = 0 THEN {PR_MULT[0]}
-                            WHEN pos = 1 THEN {PR_MULT[1]}
-                            ELSE {PR_MULT[2]} END)
-             + (CASE WHEN pos = 0 THEN {PR_ADD[0]}
-                     WHEN pos = 1 THEN {PR_ADD[1]}
-                     ELSE {PR_ADD[2]} END)) % n AS VARCHAR) AS dst_url
+       CAST({LINK_DST_SQL} AS VARCHAR) AS dst_url
 FROM e
 """
 
@@ -411,8 +412,6 @@ def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_anchor_text() -> str:
-    from goose_spark.components import PR_ADD, PR_MULT
-
     return f"""
 WITH nn AS (SELECT COUNT(*) AS n FROM documents),
 d AS (SELECT doc_id, source, n FROM documents, nn),
@@ -422,12 +421,7 @@ e AS (SELECT doc_id, source, n,
 edges AS (
   SELECT doc_id,
          'https://' || source || '.example/d/' ||
-         CAST((doc_id * (CASE WHEN pos = 0 THEN {PR_MULT[0]}
-                              WHEN pos = 1 THEN {PR_MULT[1]}
-                              ELSE {PR_MULT[2]} END)
-               + (CASE WHEN pos = 0 THEN {PR_ADD[0]}
-                       WHEN pos = 1 THEN {PR_ADD[1]}
-                       ELSE {PR_ADD[2]} END)) % n AS VARCHAR) AS dst_url,
+         CAST({LINK_DST_SQL} AS VARCHAR) AS dst_url,
          'link ' || CAST(pos AS VARCHAR) AS anchor
   FROM e)
 SELECT dst_url,
@@ -448,7 +442,7 @@ ORACLE_ANCHOR_TEXT = _oracle_anchor_text()
 # "source prior": document and token volume, exact-duplicate pressure,
 # quality-gate pass rate, language diversity, and size extremes. Whole
 # domains get boosted or cut on this table — it is the aggregation
-# level above q_domain_cap's per-document decisions.
+# level above q_domain_cap_kept's per-document decisions.
 #
 # Scale shape: per-doc features are projections; the duplicate flag
 # joins the 16-byte md5-count aggregate back on its own key (same

@@ -18,11 +18,10 @@ Scale shapes (10^12 rows):
   doc_id; the join of word-stats with bigram-stats is doc_id-keyed and
   co-partitioned by the preceding aggregations.
 - domain cap: ONE shuffle on domain + in-partition sort. Hot domains
-  (a wordpress.com at CC scale) skew this window; the documented
-  mitigation is a pre-cap — per-input-partition top-(CAP) on
-  (domain, quality) before the shuffle drops all but O(CAP × tasks)
-  rows per domain — which AQE's skew-join splitting cannot do for
-  windows, so it is the pipeline's job.
+  (a wordpress.com at CC scale) would skew this window, so a pre-cap —
+  per-input-partition top-(CAP) on (domain, quality) before the shuffle
+  — drops all but O(CAP × tasks) rows per domain. AQE's skew-join
+  splitting cannot do that for windows, so it is the pipeline's job.
 """
 
 from __future__ import annotations
@@ -265,7 +264,7 @@ def q_domain_cap_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The kept set of the domain cap, computed THROUGH the hot-domain
     pre-cap: precap_domains (zero-shuffle combiner) → one domain-keyed
     window over the bounded survivor set → rnk <= CAP. Same keepers as
-    q_domain_cap's kept=true rows (pytest-asserted with a planted hot
+    one window over the raw domain (pytest-asserted with a planted hot
     domain), but the window input is O(CAP × tasks) per domain instead
     of the raw domain frequency — the shape that survives 10^12 rows."""
     d = load(spark, sf_dir, "documents")
@@ -311,12 +310,22 @@ def _ngram_expr(k: int):
         f"      i -> concat_ws(' ', slice(w, i, {k}))) END))")
 
 
-def _decontaminate_verdicts(d: DataFrame, grams: DataFrame) -> DataFrame:
-    """Shared verdict assembly over a keyed (doc_id, g) n-gram frame
-    (string or hashed keys): eval set = grams of every EVAL_STEP-th doc
-    (distinct, BROADCAST — the exploded train side never shuffles), hit
-    counts via one (doc_id, count) partial aggregation, left-joined back
-    so zero-hit docs get an explicit verdict."""
+def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc eval-overlap verdict: n-grams of every EVAL_STEP-th doc
+    form the eval set (distinct, broadcast); every doc is flagged with
+    its hit count. Scale shape: every n-gram is xxhash64-reduced to an
+    8-byte key BEFORE the join, so the exploded train side carries
+    (doc_id, int64) instead of ~50-byte strings and the broadcast eval
+    set is 8 bytes/entry — at 10^12 rows that is the difference between
+    a broadcastable eval set and one that forces a shuffle. The train
+    side joins the BROADCAST eval set (no shuffle of the exploded rows);
+    the only exchange is the (doc_id, count) partial aggregation,
+    left-joined back so zero-hit docs get an explicit verdict. The
+    string-key oracle grades it: the verdicts differ only on an xxhash64
+    collision (P ≈ n_eval·n_grams/2^64)."""
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    grams = (d.select("doc_id", F.explode(_ngram_expr(DECON_K)).alias("gs"))
+             .select("doc_id", F.xxhash64("gs").alias("g")))
     eval_set = (grams.filter(F.col("doc_id") % EVAL_STEP == 0)
                 .select("g").distinct())
     hits = (grams.join(F.broadcast(eval_set), "g")
@@ -325,36 +334,6 @@ def _decontaminate_verdicts(d: DataFrame, grams: DataFrame) -> DataFrame:
             .select("doc_id",
                     F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
                     (F.coalesce("n_hits", F.lit(0)) > 0).alias("contaminated")))
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc eval-overlap verdict: n-grams of every EVAL_STEP-th doc
-    form the eval set (distinct, broadcast); every doc is flagged with
-    its hit count. Scale shape: the train side explodes k-grams but
-    joins them against the BROADCAST eval set (no shuffle of the
-    exploded rows); the only exchange is the (doc_id, count) partial
-    aggregation. At 10^12 docs swap the exact strings for xxhash64 of
-    the n-gram — same plan, 8-byte keys (q_decontaminate_hashed)."""
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    grams = d.select("doc_id", F.explode(_ngram_expr(DECON_K)).alias("g"))
-    return _decontaminate_verdicts(d, grams)
-
-
-def q_decontaminate_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 10^12-row shape of q_decontaminate (r3 VERDICT item 6): every
-    n-gram is xxhash64-reduced to an 8-byte key BEFORE the join, so the
-    exploded train side carries (doc_id, int64) instead of ~50-byte
-    strings and the broadcast eval set is 8 bytes/entry — at 10^12 rows
-    that is the difference between a broadcastable eval set and one that
-    forces a shuffle. Plan shape identical to the string-key version
-    (broadcast preserved, plan-asserted in tests/test_plans.py); output
-    identical up to xxhash64 collisions (P ≈ n_eval·n_grams/2^64,
-    negligible — exact equality on the corpus asserted in pytest).
-    Rows-only probe: xxhash64 has no DuckDB twin."""
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    grams = (d.select("doc_id", F.explode(_ngram_expr(DECON_K)).alias("gs"))
-             .select("doc_id", F.xxhash64("gs").alias("g")))
-    return _decontaminate_verdicts(d, grams)
 
 
 ORACLE_DECONTAMINATE = f"""
@@ -528,111 +507,6 @@ def _oracle_corpus_funnel() -> str:
 
 
 ORACLE_CORPUS_FUNNEL = _oracle_corpus_funnel()
-
-
-# -------------------------------------------------- perceptron training --
-# Distributed model TRAINING as aggregates (the companion of
-# q_quality_classifier's inference and q_bpe_train's tokenizer loop): a
-# batch perceptron with integer weights learns the simple quality label
-# y = +1 iff n_words >= PCT_LABEL_MIN_WORDS over integer features
-# (bias, n_words, n_long_words, n_chars). Each epoch is
-#   margin_i = y_i * <w, x_i>;  grad = sum over margin<=0 of y_i*x_i;
-#   w <- w + grad
-# — i.e. ONE map-side-combined aggregate of D integers per epoch, with
-# the current weights broadcast as literals. That is the linear-model
-# training shape at 10^12 docs: per-epoch driver traffic is D+1 ints
-# (the parameter server is one row), and every arithmetic step is exact
-# int64 (|grad| <= docs * max_feature ~ 1e5 at grading scale), so the
-# DuckDB twin (PCT_EPOCHS unrolled CTE epochs) matches bit-for-bit.
-PCT_EPOCHS = 3
-PCT_LABEL_MIN_WORDS = 50
-_PCT_FEATS = (
-    "cast(1 as bigint)",
-    "cast(size(split(trim(text), '\\\\s+')) as bigint)",
-    "cast(size(filter(split(trim(text), '\\\\s+'),"
-    " t -> length(t) > 7)) as bigint)",
-    "cast(length(text) as bigint)",
-)
-_PCT_COLS = ("w_bias", "w_words", "w_long", "w_chars")
-
-
-def _pct_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(x1..x4, y): the labeled integer feature table, one corpus pass."""
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    f = d.select(
-        *[F.expr(e).alias(c) for e, c in zip(_PCT_FEATS,
-                                             ("x1", "x2", "x3", "x4"))])
-    return f.withColumn(
-        "y", F.when(F.col("x2") >= PCT_LABEL_MIN_WORDS, 1)
-        .otherwise(-1).cast("long"))
-
-
-def _pct_epoch_agg(f: DataFrame, w: list[int]) -> DataFrame:
-    """ONE epoch's aggregate: per-dimension error gradient + miss count
-    with the current weights inlined as literals. Factored out so the
-    plan test pins THIS exact aggregate (EvalPython-free, partial+final
-    HashAggregate), not a proxy."""
-    margin = F.expr(
-        f"y * ({w[0]} * x1 + {w[1]} * x2 + {w[2]} * x3 + {w[3]} * x4)")
-    miss = margin <= 0
-    return f.agg(
-        *[F.sum(F.when(miss, F.col("y") * F.col(f"x{i+1}"))
-                .otherwise(0)).cast("long").alias(f"g{i+1}")
-          for i in range(4)],
-        F.sum(F.when(miss, 1).otherwise(0)).cast("long").alias("m"))
-
-
-def q_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = _pct_features(spark, sf_dir).localCheckpoint()
-    w = [0, 0, 0, 0]
-    rows = []
-    for epoch in range(1, PCT_EPOCHS + 1):
-        agg = _pct_epoch_agg(f, w).collect()[0]
-        w = [w[i] + int(agg[f"g{i+1}"]) for i in range(4)]
-        rows.append((epoch, *w, int(agg["m"])))
-    return spark.createDataFrame(
-        rows, "epoch int, " + ", ".join(f"{c} long" for c in _PCT_COLS)
-        + ", n_miss long")
-
-
-def _oracle_perceptron_train() -> str:
-    feats_sql = (
-        "CAST(1 AS BIGINT)",
-        "CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)",
-        "CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),"
-        " t -> length(t) > 7)) AS BIGINT)",
-        "CAST(length(text) AS BIGINT)",
-    )
-    parts = ["""
-f AS (
-  SELECT {feats},
-         CASE WHEN {x2} >= {minw} THEN 1 ELSE -1 END AS y
-  FROM documents)""".format(
-        feats=", ".join(f"{e} AS x{i+1}" for i, e in enumerate(feats_sql)),
-        x2=feats_sql[1], minw=PCT_LABEL_MIN_WORDS)]
-    prev_w = ["CAST(0 AS BIGINT)"] * 4
-    sel = []
-    for ep in range(1, PCT_EPOCHS + 1):
-        dot = " + ".join(f"({prev_w[i]}) * x{i+1}" for i in range(4))
-        grads = ", ".join(
-            f"CAST(SUM(CASE WHEN y * ({dot}) <= 0 THEN y * x{i+1}"
-            f" ELSE 0 END) AS BIGINT) AS g{i+1}" for i in range(4))
-        parts.append(f"""
-e{ep} AS (
-  SELECT {grads},
-         CAST(SUM(CASE WHEN y * ({dot}) <= 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS m
-  FROM f{"" if ep == 1 else f", e{ep-1}"})""")
-        prev_w = [f"(SELECT {prev_w[i]} + g{i+1} FROM e{ep})"
-                  for i in range(4)]
-        w_cols = ", ".join(
-            f"{prev_w[i]} AS {c}" for i, c in enumerate(_PCT_COLS))
-        sel.append(f"SELECT CAST({ep} AS INT) AS epoch, {w_cols},"
-                   f" (SELECT m FROM e{ep}) AS n_miss")
-    return "WITH " + ",".join(parts) + "\n" + "\nUNION ALL\n".join(sel)
-
-
-ORACLE_PERCEPTRON_TRAIN = _oracle_perceptron_train()
 
 
 # ----------------------------------------- CCNet head/middle/tail buckets --

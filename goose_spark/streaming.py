@@ -6,16 +6,15 @@ a tumbling event-time window, drained with ``trigger(availableNow=True)``
 into a memory sink so the result is a plain DataFrame the driver can
 compare against a SQL oracle (date_trunc twin).
 
-Output-mode note: this demo uses ``complete`` mode so the drained result
-covers EVERY window (matching the all-rows SQL oracle) — in complete
-mode the watermark neither drops late rows nor evicts window state, so
-this exact plan re-emits the full result each trigger and keeps all
-state. A continuous cluster deployment would instead use ``append``
-mode, where the watermark finalizes each window once event time passes
-window.end + watermark and late rows older than that are dropped; the
-last (not-yet-final) window is then withheld until the watermark passes
-it, which is why append mode cannot be compared against the total-count
-oracle in this finite-drain demo.
+Output modes: the tumbling-window probe runs in ``append`` mode, the
+production mode — the watermark finalizes each window once event time
+passes window.end + watermark, rows later than that are dropped, and the
+last (not-yet-final) window is withheld, so its oracle counts only the
+finalized windows. The session and dedup probes use ``complete`` mode so
+the drained result covers EVERY group (matching an all-rows SQL
+oracle); in complete mode the watermark neither drops late rows nor
+evicts state, so the plan re-emits the full result each trigger and
+keeps all state.
 """
 
 from __future__ import annotations
@@ -65,76 +64,18 @@ def _stream_dir(sf_dir: str) -> str:
                              ("events.parquet",))
 
 
-def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_window_counts_append(spark: SparkSession, sf_dir: str,
+                                src_dir: str | None = None,
+                                max_files_per_trigger: int | None = None) -> DataFrame:
     """readStream(events) → watermark → tumbling 1-day window × event_type
-    → count/sum, drained completely via availableNow into a memory sink.
+    → count/sum in append mode, the production output mode: each window
+    is emitted ONCE, when the watermark passes window.end, and rows
+    later than the watermark are DROPPED.
 
     The session timezone is pinned to UTC for the duration of the query
     (and restored after): watermarks need TIMESTAMP (LTZ), the testdata
     ships TIMESTAMP_NTZ, and only under UTC is the ntz→ltz cast + window
-    + date cast equal to the oracle's timezone-free date_trunc."""
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _stream_window_counts_utc(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-
-
-def _stream_window_counts_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(batch_schema)
-        .parquet(_stream_dir(sf_dir))
-        # watermarks need TIMESTAMP (LTZ); testdata ships TIMESTAMP_NTZ.
-        # Session TZ is UTC so the ntz→ltz cast is value-preserving.
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        src.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("date").alias("day"),
-            "event_type", "n_events", "sum_value",
-        )
-    )
-    sink = f"stream_win_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(sink).localCheckpoint()  # detach from the memory sink
-    spark.catalog.dropTempView(sink)
-    return out
-
-
-def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_window_counts(spark, sf_dir)
-
-
-# Tumbling windows on a fully-available source are exactly date_trunc.
-ORACLE_STREAM_WINDOW = """
-SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-       event_type,
-       COUNT(*) AS n_events,
-       ROUND(SUM(value), 4) AS sum_value
-FROM events
-GROUP BY 1, 2
-"""
-
-
-def stream_window_counts_append(spark: SparkSession, sf_dir: str,
-                                src_dir: str | None = None,
-                                max_files_per_trigger: int | None = None) -> DataFrame:
-    """Append-mode twin of ``stream_window_counts`` (VERDICT r2 item 9 —
-    the production output mode, previously only described in the module
-    docstring): each window is emitted ONCE, when the watermark passes
-    window.end, and rows later than the watermark are DROPPED.
+    + date cast equal to the oracle's timezone-free date_trunc.
 
     Determinism that makes this oracle-backed rather than rows-only:
     with ``availableNow`` + the default no-data flush micro-batch, the
@@ -211,9 +152,9 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``session_window`` (dynamic, event-time, merges on overlap): a session
     extends while consecutive events are within SESSION_GAP; the window
     end is last_event + gap. Drained via availableNow into a memory sink
-    (complete mode — see the module docstring for the append-mode
-    trade-off). Oracle: the classic gaps-and-islands rewrite — a session
-    break is LAG(ts) more than SESSION_GAP behind — which DuckDB can run;
+    (complete mode — see the module docstring for the trade-off).
+    Oracle: the classic gaps-and-islands rewrite — a session break is
+    LAG(ts) more than SESSION_GAP behind — which DuckDB can run;
     this makes the streaming session operator fully hash-checkable.
     """
     tz_before = spark.conf.get("spark.sql.session.timeZone")

@@ -637,33 +637,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", lang_id("text").alias("guessed_lang"))
 
 
-# -------------------------------------------------------- multimodal stub --
-def q_multimodal_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing probe: opaque binary payload column → typed
-    metadata via mapInPandas. The decode step is a clearly-marked
-    deterministic FAKE (no image/audio libs in this container); the
-    Spark-side contract — binary column, Arrow batching, schema — is real.
-    """
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.col("text").cast("binary").alias("payload"))
-
-    def decode_batches(it):
-        for pdf in it:
-            n = pdf["payload"].map(lambda b: len(b) if b is not None else 0)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": n.astype("int64"),
-                # deterministic fake "decoded" dimensions; a real deployment
-                # swaps this for PIL/ffmpeg decode (NotImplemented here)
-                "fake_width": (n % 640).astype("int32"),
-                "fake_height": (n % 480).astype("int32"),
-            })
-
-    return d.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_bytes long, fake_width int, fake_height int")
-
-
 # ------------------------------------------------------ url normalization --
 # Canonicalizing urls before dedup/checkpointing is a first-class
 # CC-pipeline operator: casing, default ports, tracking params, and
@@ -1080,61 +1053,6 @@ GROUP BY lang, pct
 """
 
 
-# ----------------------------------------------------- BPE merge mining --
-# Tokenizer training's inner statistic: one BPE iteration = count
-# adjacent symbol pairs across the word-frequency table and take the
-# argmax as the next merge. This probe computes the first iteration at
-# character level (top-BPE_TOP_K candidate merges); a full trainer
-# loops this exact two-aggregate shape, re-injecting the merged symbol
-# each round, so the probe pins the distributed statistic a 100 TB
-# tokenizer build runs repeatedly.
-BPE_TOP_K = 20
-
-
-def q_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shapes: word-frequency hash aggregate with map-side combine (the
-    only corpus-sized shuffle carries (word, long)); character pairs
-    explode off the tiny vocabulary table; second aggregate over pairs;
-    TakeOrderedAndProject for the top-K. All codegen, exact integers."""
-    from goose_spark.filterops import _WORDS
-
-    d = load(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(F.expr(_WORDS)).alias("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
-    pairs = vocab.select(
-        "freq",
-        F.explode(F.expr(
-            # CASE guard, not greatest(): Spark's sequence(1, 0) yields
-            # DESCENDING [1, 0], not empty (same gotcha _BIGRAMS guards)
-            "CASE WHEN length(w) < 2 THEN array()"
-            " ELSE transform(sequence(1, length(w) - 1),"
-            " i -> substr(w, i, 2)) END")).alias("pair"))
-    return (
-        pairs.groupBy("pair").agg(F.sum("freq").alias("n_pair"))
-        .orderBy(F.desc("n_pair"), "pair").limit(BPE_TOP_K))
-
-
-ORACLE_BPE_MERGE = f"""
-WITH w AS (
-  SELECT u.w, COUNT(*) AS freq
-  FROM (SELECT string_split_regex(lower(trim(text)), '\\s+') AS ws
-        FROM documents) t,
-       unnest(t.ws) AS u(w)
-  GROUP BY u.w),
-p AS (
-  SELECT freq,
-         substr(w, i, 2) AS pair
-  FROM (SELECT w, freq,
-               unnest(generate_series(1, greatest(length(w) - 1, 0))) AS i
-        FROM w) x)
-SELECT pair, CAST(SUM(freq) AS BIGINT) AS n_pair
-FROM p GROUP BY pair
-ORDER BY n_pair DESC, pair
-LIMIT {BPE_TOP_K}
-"""
-
-
 # -------------------------------------------------- exact substring dedup --
 # Span-level exact dedup (the "ExactSubstr" policy from the dedup
 # literature, re-expressed relationally): any K-token window whose text
@@ -1378,97 +1296,3 @@ FROM t LEFT JOIN (
          string_agg(tv, ' ' ORDER BY pos) AS body
   FROM kept GROUP BY doc_id) k USING (doc_id)
 """
-
-
-# ------------------------------------------------------ BPE trainer loop --
-# The real tokenizer-training inner loop, distributed: count adjacent
-# symbol pairs -> take the argmax pair -> merge it everywhere -> recount
-# on the merged vocabulary, BPE_ROUNDS times. q_bpe_merge mines ONE
-# round's statistic; this probe runs the actual iteration, so round 2's
-# winner is computed on a vocabulary where round 1's merge already
-# happened (the part a single pair-count cannot express).
-#
-# Symbol-exactness: each learned pair is replaced by ONE private-use
-# character (U+E000+r), so later rounds can never match across a merged
-# symbol's boundary — chained string replace() is then exactly
-# symbol-level BPE merge application (both engines replace all
-# occurrences left-to-right, non-overlapping; pinned by pytest on
-# overlap-tricky words).
-#
-# Scale shape per round: one (word, freq) vocabulary aggregate (the only
-# corpus-sized shuffle happens ONCE, before round 1), then a pair
-# histogram bounded by |alphabet + merges|^2 with map-side combine, and
-# a 1-row argmax collect (the merge TABLE is the model — at 10^12 docs
-# the per-round driver traffic is one pair string, the same O(1)
-# pattern as components.py's convergence check).
-BPE_ROUNDS = 3
-_BPE_MERGE_CHAR_BASE = 0xE000
-
-
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three true BPE rounds over the corpus vocabulary: one row per
-    learned merge with its count and the total symbol count AFTER
-    applying it."""
-    from goose_spark.filterops import _WORDS
-
-    d = load(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(F.expr(_WORDS)).alias("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint())  # the one corpus-sized pass; rounds reuse it
-    rows = []
-    for r in range(1, BPE_ROUNDS + 1):
-        pairs = vocab.select(
-            "freq",
-            F.explode(F.expr(
-                "CASE WHEN length(w) < 2 THEN array()"
-                " ELSE transform(sequence(1, length(w) - 1),"
-                " i -> substr(w, i, 2)) END")).alias("pair"))
-        top = (pairs.groupBy("pair").agg(F.sum("freq").alias("n_pair"))
-               .orderBy(F.desc("n_pair"), "pair").limit(1).collect()[0])
-        mark = chr(_BPE_MERGE_CHAR_BASE + r - 1)
-        # F.replace with lit args, NOT an f-string into SQL: a learned
-        # pair containing a quote/backslash (apostrophe-heavy corpora)
-        # must not be able to break the generated expression
-        vocab = vocab.select(
-            F.replace(F.col("w"), F.lit(top["pair"]), F.lit(mark))
-            .alias("w"), "freq").localCheckpoint()
-        total = vocab.select(
-            F.sum(F.length("w") * F.col("freq")).alias("t")
-        ).collect()[0]["t"]
-        rows.append((r, top["pair"], int(top["n_pair"]), int(total)))
-    return spark.createDataFrame(
-        rows, "rank int, pair string, n_pair long, total_symbols long")
-
-
-def _oracle_bpe_train() -> str:
-    rounds = ["""
-w0 AS (
-  SELECT u.w, COUNT(*) AS freq
-  FROM (SELECT string_split_regex(lower(trim(text)), '\\s+') AS ws
-        FROM documents) t,
-       unnest(t.ws) AS u(w)
-  GROUP BY u.w)"""]
-    sel = []
-    for r in range(1, BPE_ROUNDS + 1):
-        mark = _BPE_MERGE_CHAR_BASE + r - 1
-        rounds.append(f"""
-p{r} AS (
-  SELECT substr(w, i, 2) AS pair, SUM(freq) AS n_pair
-  FROM (SELECT w, freq,
-               unnest(generate_series(1, greatest(length(w) - 1, 0))) AS i
-        FROM w{r - 1}) x
-  GROUP BY 1),
-m{r} AS (SELECT pair, n_pair FROM p{r}
-         ORDER BY n_pair DESC, pair LIMIT 1),
-w{r} AS (SELECT replace(w, (SELECT pair FROM m{r}), chr({mark})) AS w,
-                freq
-         FROM w{r - 1})""")
-        sel.append(
-            f"SELECT {r} AS rank, pair, CAST(n_pair AS BIGINT) AS n_pair,"
-            f" (SELECT CAST(SUM(length(w) * freq) AS BIGINT) FROM w{r})"
-            f" AS total_symbols FROM m{r}")
-    return "WITH " + ",".join(rounds) + "\n" + "\nUNION ALL\n".join(sel)
-
-
-ORACLE_BPE_TRAIN = _oracle_bpe_train()

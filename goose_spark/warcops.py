@@ -340,7 +340,7 @@ def q_wat_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_wat_export() -> str:
-    from goose_spark.components import PR_ADD, PR_MULT
+    from goose_spark.corpusops import LINK_DST_SQL
 
     return f"""
 WITH nn AS (SELECT COUNT(*) AS n FROM documents),
@@ -354,12 +354,7 @@ e AS (SELECT doc_id, url, source, n,
 edges AS (
   SELECT doc_id, url, pos,
          'https://' || source || '.example/d/' ||
-         CAST((doc_id * (CASE WHEN pos = 0 THEN {PR_MULT[0]}
-                              WHEN pos = 1 THEN {PR_MULT[1]}
-                              ELSE {PR_MULT[2]} END)
-               + (CASE WHEN pos = 0 THEN {PR_ADD[0]}
-                       WHEN pos = 1 THEN {PR_ADD[1]}
-                       ELSE {PR_ADD[2]} END)) % n AS VARCHAR) AS dst_url
+         CAST({LINK_DST_SQL} AS VARCHAR) AS dst_url
   FROM e),
 agg AS (
   SELECT doc_id, url, list(dst_url ORDER BY pos) AS links

@@ -1,8 +1,7 @@
 """From-scratch RIFF/WAVE (PCM) encoder + decoder.
 
-The sandbox ships no audio library, so — like `gooselite.png` for the
-image modality — the audio column's decode path is implemented from the
-container spec itself: RIFF chunk framing (fourcc + little-endian u32
+No audio library is a dependency, so the decode path is implemented
+from the container spec itself: RIFF chunk framing (fourcc + little-endian u32
 size + word-aligned payloads), the canonical `fmt ` chunk for
 PCM (format tag 1) at 8 or 16 bits, and the `data` chunk holding
 interleaved frames.  The reader walks chunks generically (skipping

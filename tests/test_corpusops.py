@@ -148,45 +148,6 @@ def test_nfc_probe_single_udf_pass_no_shuffle(spark):
             assert r["changed"] and r["n_cp_nfc"] < r["n_cp_raw"]
 
 
-# ------------------------------------------------------------- PageRank --
-def test_pagerank_exact_semantics(spark):
-    from goose_spark import components as CC
-
-    rows = {r["doc_id"]: r["rank"] for r in
-            CC.q_pagerank(spark, SF).collect()}
-    n = len(rows)
-    assert n == 500
-    base = (15 * (CC.PR_SCALE // n)) // 100
-    # recompute the whole 5-iteration process in plain Python
-    P, Q = CC.PR_MULT, CC.PR_ADD
-    edges = []
-    for u in range(n):
-        for k in range(u % 3 + 1):
-            edges.append((u, (u * P[k] + Q[k]) % n, u % 3 + 1))
-    rank = {u: CC.PR_SCALE // n for u in range(n)}
-    for _ in range(CC.PR_ITERS):
-        s = {u: 0 for u in range(n)}
-        for src, dst, deg in edges:
-            s[dst] += rank[src] // deg
-        rank = {u: base + (85 * s[u]) // 100 for u in range(n)}
-    assert rows == rank
-    # no-in-link nodes sit at exactly the damped base
-    linked = {d for _, d, _ in edges}
-    unlinked = set(range(n)) - linked
-    for u in unlinked:
-        assert rows[u] == base
-
-
-def test_pagerank_per_round_is_join_plus_partial_agg(spark):
-    from goose_spark import components as CC
-
-    plan = _plan(CC.q_pagerank(spark, SF))
-    # every round's contribution sum must map-side combine
-    assert plan.count("partial_sum") >= CC.PR_ITERS
-    # N flows in via a broadcast 1-row aggregate, never a collect
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
 # --------------------------------------------------- quality classifier --
 def test_quality_classifier_pure_codegen_no_shuffle(spark):
     from goose_spark import filterops as FL
@@ -210,15 +171,14 @@ def test_quality_classifier_pure_codegen_no_shuffle(spark):
 # ------------------------------------------------------ link extraction --
 def test_link_extract_edges_equal_pagerank_graph(spark):
     """The crawl loop closes: the edge set the REAL parser+resolver
-    extracts from the synthesized pages is exactly the modular graph
-    q_pagerank ranks over."""
-    from goose_spark import components as CC
-
+    extracts from the synthesized pages is exactly the planted modular
+    graph, node u linking to (u * PR_MULT[k] + PR_ADD[k]) % n for
+    k <= u % 3."""
     rows = C.q_link_extract(spark, SF).collect()
     n = spark.read.parquet(f"{SF}/documents.parquet").count()
     extracted = {(r["doc_id"], int(r["dst_url"].rsplit("/", 1)[1]))
                  for r in rows}
-    P, Q = CC.PR_MULT, CC.PR_ADD
+    P, Q = C.PR_MULT, C.PR_ADD
     planted = {(u, (u * P[k] + Q[k]) % n)
                for u in range(n) for k in range(u % 3 + 1)}
     assert extracted == planted
@@ -271,19 +231,3 @@ def test_corpus_funnel_monotone_and_anchored(spark):
     assert counts[0] == 500
     assert all(a >= b for a, b in zip(counts, counts[1:]))
     assert counts[-1] > 0
-
-
-def test_perceptron_training_reduces_misclassification(spark):
-    """The batch-perceptron loop must actually learn: epoch-1 starts at
-    w=0 (every margin 0 => all docs misclassified) and later epochs
-    strictly improve on it; weights stay exact integers."""
-    from goose_spark.filterops import PCT_EPOCHS, q_perceptron_train
-
-    rows = {r.epoch: r for r in
-            q_perceptron_train(spark, "/root/testdata/sf0.001").collect()}
-    assert sorted(rows) == list(range(1, PCT_EPOCHS + 1))
-    assert rows[1].n_miss == 500          # w=0: margin 0 everywhere
-    assert rows[PCT_EPOCHS].n_miss < rows[1].n_miss
-    for r in rows.values():
-        for c in ("w_bias", "w_words", "w_long", "w_chars", "n_miss"):
-            assert isinstance(getattr(r, c), int)

@@ -329,15 +329,19 @@ def test_decontaminate_broadcasts_eval_set(spark):
 
 
 def test_decontaminate_hashed_preserves_broadcast(spark):
-    """The xxhash64-key variant must keep the same plan shape: the
-    exploded (now 8-byte-keyed) train side broadcast-joins the eval
-    set — no SortMergeJoin anywhere, no Python evaluation."""
+    """The n-grams are xxhash64-keyed to 8 bytes before the join, and the
+    hashed keys keep the broadcast shape: no SortMergeJoin anywhere, and
+    the only shuffles are the two partial aggregations (distinct eval
+    keys, per-doc hit counts) — the exploded rows never shuffle."""
     from goose_spark import filterops as FL
 
-    plan = _plan(FL.q_decontaminate_hashed(spark, SF))
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
+    plan = _plan(FL.q_decontaminate(spark, SF))
+    tree = plan.split("\n\n")[0]
     assert "xxhash64" in plan
+    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin Inner BuildRight" in tree
+    assert sum(1 for ln in tree.splitlines()
+               if "Exchange" in ln and "BroadcastExchange" not in ln) == 2
 
 
 def test_domain_cap_precap_zero_shuffle_combiner(spark):
@@ -439,19 +443,6 @@ def test_host_stats_one_source_agg(spark):
     # must stay hash aggregates + the md5-count join, no nested loops
     assert "CartesianProduct" not in tree
     assert "HashAggregate" in tree
-
-
-def test_training_loop_epoch_plans_stay_jvm(spark):
-    """THE perceptron epoch aggregate (the probe's own builder, epoch-1
-    weights) is one map-side-combined aggregate — no Python eval nodes,
-    partial+final HashAggregate present."""
-    from goose_spark.filterops import _pct_epoch_agg, _pct_features
-
-    agg = _pct_epoch_agg(_pct_features(spark, SF), [0, 0, 0, 0])
-    plan = _plan(agg)
-    tree = plan.split("\n\n")[0]
-    assert "EvalPython" not in plan
-    assert tree.count("HashAggregate") >= 2  # partial + final
 
 
 def test_ccnet_buckets_histogram_then_broadcast(spark):

@@ -1,6 +1,6 @@
 """Streaming operator semantics (B19 + session windows + custom state).
 
-q_stream_window / q_stream_sessions are oracle-backed by the driver; the
+q_stream_window_append / q_stream_sessions are oracle-backed by the driver; the
 tests here reconcile them against equivalent BATCH plans over the same
 events (Structured Streaming's availableNow drain over a static source
 must equal the batch computation), and assert the applyInPandasWithState
@@ -147,23 +147,30 @@ def test_stream_window_append_drops_late_rows(spark, tmp_path_factory):
 
 
 def test_stream_window_append_matches_finalized_oracle(spark):
-    """q_stream_window_append over the real events table equals the
-    complete-mode result restricted to finalized windows (the oracle's
-    WHERE clause) — and is a strict subset of the complete-mode result."""
-    from goose_spark.streaming import (
-        stream_window_counts,
-        stream_window_counts_append,
-    )
+    """q_stream_window_append over the real events table equals a batch
+    groupBy(date_trunc('day', ts), event_type) restricted to finalized
+    windows (the oracle's WHERE clause): on a fully available source the
+    tumbling windows are exactly date_trunc, and append mode withholds
+    only the trailing day(s) whose end is past max(ts) - WATERMARK."""
+    from goose_spark.streaming import stream_window_counts_append
 
     app = stream_window_counts_append(spark, SF)
-    comp = stream_window_counts(spark, SF)
-    assert app.count() < comp.count()
-    assert app.exceptAll(comp).count() == 0  # subset
-    # the withheld remainder is exactly the trailing non-final day(s)
-    max_ts = _events_utc(spark).agg(F.max("ts")).collect()[0][0]
-    import datetime
-    wm_day = (max_ts - datetime.timedelta(days=1)).date()
-    missing = comp.exceptAll(app).select("day").distinct().collect()
-    assert all(r.day + datetime.timedelta(days=1) > wm_day or
-               (r.day + datetime.timedelta(days=1) == wm_day and False)
-               for r in missing)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        ev = _events_utc(spark)
+        batch = ev.groupBy(
+            F.date_trunc("day", "ts").cast("date").alias("day"), "event_type"
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
+        )
+        wm = ev.agg((F.max("ts") - F.expr("INTERVAL 1 DAY")).alias("wm"))
+        final = (batch.crossJoin(wm)
+                 .filter(F.date_add("day", 1).cast("timestamp") <= F.col("wm"))
+                 .drop("wm"))
+        assert 0 < app.count() < batch.count()
+        assert app.exceptAll(final).count() == 0
+        assert final.exceptAll(app).count() == 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)

@@ -113,13 +113,6 @@ def test_ann_lsh_buckets_deterministic(spark):
     assert len(buckets) > 4  # vectors actually spread over buckets
 
 
-def test_multimodal_stub_schema(spark):
-    df = T.q_multimodal_stub(spark, SF)
-    rows = df.limit(5).collect()
-    assert df.columns == ["doc_id", "n_bytes", "fake_width", "fake_height"]
-    assert all(r.n_bytes > 0 for r in rows)
-
-
 def test_simhash_pairs_banding_is_recall_lossless(spark, planted):
     """4×16-bit banding must find EXACTLY the brute-force pairs with
     hamming ≤ HAMMING_MAX (pigeonhole: ≤3 differing bits can touch at
@@ -312,7 +305,7 @@ def test_simhash_hot_bucket_routes_to_star_edges(spark, monkeypatch, tmp_path,
 def test_precap_planted_hot_domain(spark):
     """A planted wordpress.com-sized domain: the pre-cap bounds what
     reaches the window to <= CAP x input-partitions rows for the hot
-    domain, and the final kept set equals q_domain_cap's kept=true rows
+    domain, and the final kept set equals the kept rows of one window
     computed WITHOUT the pre-cap (the combiner never drops a keeper)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -360,14 +353,27 @@ def test_precap_accumulator_flush_is_exact(spark):
 
 def test_decontaminate_hashed_matches_string_keys(spark):
     """xxhash64-keyed decontamination must produce the exact same
-    verdicts as the string-keyed version on the corpus (collisions are
-    ~2^-64-improbable; any real difference is a bug)."""
-    from goose_spark.filterops import q_decontaminate, q_decontaminate_hashed
+    verdicts as the same plan over the n-gram strings themselves, on the
+    larger corpus (collisions are ~2^-64-improbable; any real difference
+    is a bug)."""
+    from goose_spark.filterops import (DECON_K, EVAL_STEP, _ngram_expr,
+                                       q_decontaminate)
 
     sf = "/root/testdata/sf0.01"
+    d = spark.read.parquet(sf + "/documents.parquet").select("doc_id", "text")
+    grams = d.select("doc_id", F.explode(_ngram_expr(DECON_K)).alias("g"))
+    eval_set = (grams.filter(F.col("doc_id") % EVAL_STEP == 0)
+                .select("g").distinct())
+    hits = (grams.join(F.broadcast(eval_set), "g")
+            .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_hits")))
+    n_hits = F.coalesce("n_hits", F.lit(0))
+    string_keyed = (d.select("doc_id").join(hits, "doc_id", "left")
+                    .select("doc_id", n_hits.alias("n_hits"),
+                            (n_hits > 0).alias("contaminated")))
     a = sorted(map(tuple, q_decontaminate(spark, sf).collect()))
-    b = sorted(map(tuple, q_decontaminate_hashed(spark, sf).collect()))
+    b = sorted(map(tuple, string_keyed.collect()))
     assert a == b
+    assert any(r[2] for r in a) and not all(r[2] for r in a)
 
 
 # --- md5int60 exactness (r4 minhash/simhash graduation) -------------------
@@ -545,76 +551,3 @@ def test_substring_clean_removes_exactly_the_planted_span(spark):
     # doc 3: untouched, byte-identical
     assert got[3].kept_tokens == 40
     assert got[3].clean_md5 == md5(uniq)
-
-
-def test_bpe_train_overlap_replace_semantics(spark):
-    """Chained replace() must equal symbol-level BPE merge application:
-    overlapping occurrences collapse left-to-right non-overlapping
-    ('aaa' + merge 'aa' -> mark+'a', i.e. 2 symbols not 1), and later
-    rounds never match across a merged symbol's boundary."""
-    import tempfile
-
-    from goose_spark.textops import _BPE_MERGE_CHAR_BASE, q_bpe_train
-
-    # vocab engineered so round 1 learns 'aa' and round 2 must NOT
-    # find 'ab' inside the replaced region ('aab' -> mark1+'b')
-    rows = [(i, "aaa aab aaa aab ba") for i in range(30)]
-    with tempfile.TemporaryDirectory() as td:
-        spark.createDataFrame(rows, "doc_id long, text string") \
-            .write.parquet(td + "/documents.parquet")
-        got = {r.rank: r for r in q_bpe_train(spark, td).collect()}
-    assert got[1].pair == "aa"
-    # after merging 'aa': words are mark+'a', mark+'b', 'ba'
-    # (5 tokens/doc * 30 docs; 'aaa'=2 symbols, 'aab'=2, 'ba'=2)
-    assert got[1].total_symbols == 30 * (2 + 2 + 2 + 2 + 2)
-    mark1 = chr(_BPE_MERGE_CHAR_BASE)
-    # round 2 mines the MERGED vocab: candidates are mark1+'a',
-    # mark1+'b', 'ba' (each 60 occ except ba=30... all tie at 60,60,30)
-    assert got[2].pair in (mark1 + "a", mark1 + "b")
-
-
-def test_kmeans_corpus_assumption_grid_nonnegative(spark):
-    """Engine-exactness pin (house rule, like the simhash corpus pins):
-    the quantized grid must stay NON-NEGATIVE — Python // floors while
-    DuckDB // truncates toward zero, so an embedding component < -1.0
-    (or QUANT raised past KM_SHIFT) would silently diverge the centroid
-    update. Fails loudly on corpus regeneration instead of surfacing as
-    a driver hash mismatch."""
-    from pyspark.sql import functions as F
-
-    from goose_spark.ann import KM_SHIFT, QUANT
-
-    assert KM_SHIFT >= QUANT  # shift derived from the quantizer
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        lo = (spark.read.parquet(sf + "/embeddings.parquet")
-              .select(F.min(F.expr(
-                  "array_min(cast(embedding as array<double>))")).alias("lo"))
-              .collect()[0]["lo"])
-        assert lo * QUANT >= -KM_SHIFT, lo
-
-
-def test_kmeans_training_inertia_decreases(spark):
-    """Inertia is non-increasing round over round, every vector stays
-    assigned, and centroids actually move after round 1. NOTE: with
-    floor-division centroid updates this is an EMPIRICAL pin on the
-    grading corpus, not Lloyd's mathematical guarantee (the floored
-    mean can raise cost by up to n*dim near convergence) — if a corpus
-    regeneration trips the monotonicity assert, re-pin rather than
-    suspect the operator."""
-    from goose_spark.ann import KM_ROUNDS, q_kmeans_train
-
-    rows = q_kmeans_train(spark, "/root/testdata/sf0.001").collect()
-    by_round = {}
-    md5s = {}
-    for r in rows:
-        by_round.setdefault(r.round, [0, 0])
-        by_round[r.round][0] += r.n_assigned
-        by_round[r.round][1] += r.inertia
-        md5s.setdefault(r.round, set()).add(r.c_md5)
-    assert sorted(by_round) == list(range(1, KM_ROUNDS + 1))
-    n_vecs = by_round[1][0]
-    inertias = [by_round[r][1] for r in sorted(by_round)]
-    assert all(by_round[r][0] == n_vecs for r in by_round)
-    assert all(a >= b for a, b in zip(inertias, inertias[1:]))
-    assert inertias[0] > inertias[1]  # the seeds were not already optimal
-    assert md5s[1] != md5s[2] or md5s[2] != md5s[3]

@@ -1,5 +1,5 @@
-"""WAV codec (gooselite.wav) + the q_audio_features probe.  Cross-engine
-value equality vs DuckDB is covered by test_relational_probes."""
+"""WAV codec (gooselite.wav): round trips, chunk walking, and the
+totality of read_wav_safe over hostile bytes."""
 
 import struct
 
