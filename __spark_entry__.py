@@ -12,8 +12,7 @@
 All three come from one table, ``probes()``. A probe's name is its
 function's ``__name__``. A probe is rows-only (no oracle, so the grader
 checks only that it returns rows) when its result has no exact SQL
-twin: an HLL estimate, or the extraction UDF itself. Each rows-only
-probe has a pytest asserting its semantics.
+twin. The one such probe is the extraction UDF itself.
 """
 
 from __future__ import annotations
@@ -79,17 +78,14 @@ def probes() -> tuple[tuple[Probe, ...], tuple[Probe, ...]]:
     graded = (
         (CC.q_dedup_groups, CC.ORACLE_DEDUP_GROUPS),
         (S.q_stream_window_append, S.ORACLE_STREAM_WINDOW_APPEND),
-        # the ANN oracles take the query vector / bucket from sf0.01,
-        # read via pyarrow, so they render without a live session
+        # the ANN oracles take the query vector from sf0.01, read via
+        # pyarrow, so they render without a live session
         (A.q_ann_cosine_topk, A.oracle_ann_cosine_topk),
-        (A.q_ann_lsh_buckets, A.oracle_ann_lsh_buckets),
         (A.q_ann_lsh_probe, A.oracle_ann_lsh_probe),
         (A.q_embed_neardup, A.ORACLE_EMBED_NEARDUP),
         (A.q_ann_ivf_probe, A.oracle_ann_ivf_probe),
         # streaming must not change a byte of the batch extraction
         (S.q_stream_extract, W.ORACLE_WARC_EXTRACT),
-        (S.q_stream_sessions, S.ORACLE_STREAM_SESSIONS),
-        (S.q_stateful_running_max, S.ORACLE_STATEFUL_RUNNING_MAX),
         (S.q_stream_dedup, S.ORACLE_STREAM_DEDUP),
         (FL.q_corpus_funnel, FL.ORACLE_CORPUS_FUNNEL),
         (FL.q_repetition_filter, FL.ORACLE_REPETITION_FILTER),
@@ -111,7 +107,6 @@ def probes() -> tuple[tuple[Probe, ...], tuple[Probe, ...]]:
         (T.q_length_quantiles, T.ORACLE_LENGTH_QUANTILES),
         (CO.q_paragraph_dedup, CO.ORACLE_PARAGRAPH_DEDUP),
         (CO.q_crawl_delta, CO.ORACLE_CRAWL_DELTA),
-        (CO.q_pmi_bigrams, CO.ORACLE_PMI_BIGRAMS),
         (CO.q_link_extract, CO.ORACLE_LINK_EXTRACT),
         (CO.q_host_stats, CO.ORACLE_HOST_STATS),
         (EN.q_unicode_nfc, EN.ORACLE_UNICODE_NFC),
@@ -130,50 +125,35 @@ def probes() -> tuple[tuple[Probe, ...], tuple[Probe, ...]]:
         (FL.q_soft404, FL.ORACLE_SOFT404),
         (W.q_wat_export, W.ORACLE_WAT_EXPORT),
         (CO.q_cdx_index, CO.ORACLE_CDX_INDEX),
+        (CO.q_mix_sample, CO.ORACLE_MIX_SAMPLE),
+        (FL.q_ccnet_buckets, FL.ORACLE_CCNET_BUCKETS),
+        (FL.q_unigram_lm_score, FL.ORACLE_UNIGRAM_LM_SCORE),
+        (RB.q_feed_parse, RB.ORACLE_FEED_PARSE),
         (Q.q_equi_join_3way, Q.ORACLE_EQUI_JOIN_3WAY),
     )
     tail = (
+        (S.q_stream_sessions, S.ORACLE_STREAM_SESSIONS),
+        (S.q_stateful_running_max, S.ORACLE_STATEFUL_RUNNING_MAX),
         (Q.q_grouped_agg, Q.ORACLE_GROUPED_AGG),
-        (CO.q_mix_sample, CO.ORACLE_MIX_SAMPLE),
-        (A.q_ann_ivf, A.ORACLE_ANN_IVF),
         (T.q_dedup_exact, T.ORACLE_DEDUP_EXACT),
         (T.q_chunk_windows, T.ORACLE_CHUNK_WINDOWS),
         (T.q_pack_sequences, T.ORACLE_PACK_SEQUENCES),
         (W.q_warc_roundtrip, W.ORACLE_WARC_ROUNDTRIP),
         (W.q_wet_export, W.ORACLE_WET_EXPORT),
         (EN.q_charset_decode, EN.ORACLE_CHARSET_DECODE),
-        (T.q_token_bpeish, T.ORACLE_TOKEN_BPEISH),
         (T.q_gopher_rules, T.ORACLE_GOPHER_RULES),
         (FL.q_pii_redact, FL.ORACLE_PII_REDACT),
         (Q.q_anti_join, Q.ORACLE_ANTI_JOIN),
-        (Q.q_broadcast_join, Q.ORACLE_BROADCAST_JOIN),
-        (Q.q_semi_join, Q.ORACLE_SEMI_JOIN),
         (Q.q_hash_agg, Q.ORACLE_HASH_AGG),
         (Q.q_window_dedupe, Q.ORACLE_WINDOW_DEDUPE),
         # rows-only: the full chain is hash-gated by q_warc_extract
         (q_udf_extract, None),
-        (Q.q_scan_filter_project, Q.ORACLE_SCAN_FILTER_PROJECT),
-        (Q.q_window_running, Q.ORACLE_WINDOW_RUNNING),
-        (Q.q_predicates, Q.ORACLE_PREDICATES),
-        (Q.q_project_derived, Q.ORACLE_PROJECT_DERIVED),
-        (Q.q_distinct, Q.ORACLE_DISTINCT),
-        (Q.q_approx_distinct, None),  # rows-only: HLL estimate
-        (Q.q_rollup, Q.ORACLE_ROLLUP),
         (Q.q_topk, Q.ORACLE_TOPK),
-        (Q.q_union_except, Q.ORACLE_UNION_EXCEPT),
-        (Q.q_scalar_funcs, Q.ORACLE_SCALAR_FUNCS),
-        (Q.q_json, Q.ORACLE_JSON),
-        (Q.q_salt_invariance, Q.ORACLE_SALT_INVARIANCE),
         (T.q_token_count, T.ORACLE_TOKEN_COUNT),
-        (FL.q_domain_cap, FL.ORACLE_DOMAIN_CAP),
         (T.q_fingerprint, T.ORACLE_FINGERPRINT),
         (T.q_url_normalize, T.ORACLE_URL_NORMALIZE),
         (T.q_quality_score, T.ORACLE_QUALITY_SCORE),
         (T.q_ngram_jaccard, T.ORACLE_NGRAM_JACCARD),
-        (FL.q_ccnet_buckets, FL.ORACLE_CCNET_BUCKETS),
-        (FL.q_unigram_lm_score, FL.ORACLE_UNIGRAM_LM_SCORE),
-        (RB.q_feed_parse, RB.ORACLE_FEED_PARSE),
-        (RB.q_rss_parse, RB.ORACLE_RSS_PARSE),
     )
     return graded, tail
 

@@ -9,6 +9,9 @@ probes one bucket instead of scanning all vectors.
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -16,7 +19,6 @@ from goose_spark.queries import load
 
 TOP_K = 10
 QUERY_VEC_ID = 0
-N_PLANES = 8  # LSH hyperplanes → 256 buckets
 
 
 def _dot(a, b):
@@ -60,7 +62,7 @@ def oracle_ann_cosine_topk(sf_dir: str = "/root/testdata/sf0.01") -> str:
     pyarrow so rendering never depends on a live SparkSession (the
     previous getActiveSession() path silently degraded the probe to
     rows-only whenever oracle_sql() ran outside a session)."""
-    q = _vectors_pyarrow(sf_dir)
+    q = _oracle_query_vector(sf_dir)
     lit = "[" + ", ".join(repr(x) for x in q) + "]::DOUBLE[]"
     return f"""
 WITH q AS (SELECT {lit} AS qv)
@@ -111,58 +113,6 @@ FROM t a JOIN t b ON a.label = b.label AND a.vec_id < b.vec_id
 """
 
 
-N_CENTROIDS = 8  # IVF: deterministic seed centroids = vec_id 0..7
-
-
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style coarse quantization: assign every vector to its
-    argmax-cosine centroid. Centroids are the embeddings of vec_id <
-    N_CENTROIDS (deterministic seed choice — a real deployment k-means
-    refines them; assignment/probing is the Spark-shaped part).
-
-    Plan shape: tiny centroid side broadcasts into the scan; ranking is a
-    row_number window partitioned by vec_id over 8 candidate rows. The
-    scale path probes one inverted list per query instead of all vectors.
-    """
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    cent = (
-        e.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("v").alias("c"))
-    )
-    from pyspark.sql import Window
-
-    cos = _dot(F.col("v"), F.col("c")) / (_norm(F.col("v")) * _norm(F.col("c")))
-    scored = e.join(F.broadcast(cent)).select(
-        "vec_id", "centroid_id", cos.alias("cosine"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("centroid_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "centroid_id", F.round("cosine", 4).alias("cosine"))
-    )
-
-
-ORACLE_ANN_IVF = f"""
-WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-     c AS (SELECT vec_id AS centroid_id, v AS cv FROM t WHERE vec_id < {N_CENTROIDS}),
-     scored AS (
-       SELECT t.vec_id, c.centroid_id,
-              list_dot_product(t.v, c.cv)
-                / (sqrt(list_dot_product(t.v, t.v))
-                   * sqrt(list_dot_product(c.cv, c.cv))) AS cosine,
-              ROW_NUMBER() OVER (PARTITION BY t.vec_id
-                                 ORDER BY list_dot_product(t.v, c.cv)
-                                   / (sqrt(list_dot_product(t.v, t.v))
-                                      * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                                 c.centroid_id) AS rn
-       FROM t, c)
-SELECT vec_id, centroid_id, ROUND(cosine, 4) AS cosine
-FROM scored WHERE rn = 1
-"""
-
-
 # ---- hyperplane LSH: engine-exact bucketing --------------------------------
 # Bucket bits must be identical in Spark and the DuckDB oracle, so the
 # projection is EXACT integer arithmetic carried in doubles: embeddings
@@ -204,18 +154,6 @@ def _bucket_of(vec: list[float], n_planes: int) -> int:
     return bucket
 
 
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH bucket assignment (rows-only probe): sign pattern of
-    N_PLANES deterministic hyperplanes → bucket id. The scale path for
-    ANN: shuffle once on bucket (or partition the table by it), probe one
-    bucket per query — see q_ann_lsh_probe for the probe itself."""
-    e = load(spark, sf_dir, "embeddings")
-    dim = len(e.select("embedding").first()[0])
-    emb = F.col("embedding").cast("array<double>")
-    return e.select("vec_id", "label",
-                    _bucket_expr(emb, dim, N_PLANES).alias("bucket"))
-
-
 N_PLANES_PROBE = 4  # 16 buckets → ~30 vectors/bucket at sf0.01
 
 
@@ -243,30 +181,16 @@ def q_ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _vectors_pyarrow(sf_dir: str):
-    """Oracle-side parameter source: read embeddings without Spark.
-    Cached per sf_dir — one oracle_sql() render calls this four times
-    (cosine, lsh probe, lsh buckets, ivf probe) and the parquet is static."""
-    return list(_vectors_pyarrow_cached(sf_dir))
-
-
-def _vectors_pyarrow_cached(sf_dir: str):
-    if sf_dir not in _VEC_CACHE:
-        _VEC_CACHE[sf_dir] = _read_query_vector(sf_dir)
-    return _VEC_CACHE[sf_dir]
-
-
-_VEC_CACHE: dict = {}
-
-
-def _read_query_vector(sf_dir: str):
-    import os
-
+@functools.lru_cache(maxsize=None)
+def _oracle_query_vector(sf_dir: str) -> tuple[float, ...]:
+    """The query vector for the oracles, read with pyarrow so that they
+    render without Spark. Cached per sf_dir: one oracle_sql() render
+    calls this three times (cosine, lsh probe, ivf probe) and the
+    parquet is static."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"),
-                      columns=["vec_id", "embedding"])
-    d = t.to_pydict()
+    d = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"),
+                      columns=["vec_id", "embedding"]).to_pydict()
     by_id = dict(zip(d["vec_id"], d["embedding"]))
     return tuple(float(x) for x in by_id[QUERY_VEC_ID])
 
@@ -275,7 +199,7 @@ def oracle_ann_lsh_probe(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """DuckDB twin of q_ann_lsh_probe: recomputes every vector's bucket
     with the same quantized-integer projection and filters to the query's
     bucket (computed here driver-side with identical double math)."""
-    q = _vectors_pyarrow(sf_dir)
+    q = _oracle_query_vector(sf_dir)
     dim = len(q)
     qbucket = _bucket_of(q, N_PLANES_PROBE)
     qlit = "[" + ", ".join(repr(x) for x in q) + "]::DOUBLE[]"
@@ -301,6 +225,7 @@ ORDER BY cosine DESC, vec_id LIMIT {TOP_K}
 
 
 # ---- IVF: one k-means refinement + multi-list probe ------------------------
+N_CENTROIDS = 8  # seed centroids: the embeddings of vec_id 0..7
 NPROBE = 2    # refined inverted lists probed per query
 ROUND_C = 6   # centroid/assignment rounding — absorbs sub-ulp fold-order
               # differences between Spark partial aggs and DuckDB
@@ -379,7 +304,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def oracle_ann_ivf_probe(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """DuckDB twin of q_ann_ivf_probe (same seed centroids, same one
     refinement iteration, same ROUND(…, 6) comparisons, same nprobe)."""
-    q = _vectors_pyarrow(sf_dir)
+    q = _oracle_query_vector(sf_dir)
     dim = len(q)
     qlit = "[" + ", ".join(repr(x) for x in q) + "]::DOUBLE[]"
     return f"""
@@ -425,31 +350,6 @@ ORDER BY cosine DESC, vec_id LIMIT {TOP_K}
 """
 
 
-def oracle_ann_lsh_buckets(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    """DuckDB twin of q_ann_lsh_buckets (graduating it from rows-only):
-    the full-corpus N_PLANES bucket assignment with the same
-    quantized-integer projection — floor(v·QUANT) ints against integer
-    planes keeps every dot product exact (< 2^53) in any summation
-    order, so both engines assign identical buckets. Only `dim` is read
-    from the parquet (via pyarrow, no Spark needed)."""
-    dim = len(_vectors_pyarrow(sf_dir))
-    bits = []
-    for p in range(N_PLANES):
-        plane = ("[" + ", ".join(str(_plane_int(p, j)) for j in range(dim))
-                 + "]::DOUBLE[]")
-        weight = 2 ** (N_PLANES - 1 - p)
-        bits.append(
-            f"(CASE WHEN list_dot_product(list_transform(v, x -> floor(x * {QUANT})),"
-            f" {plane}) > 0 THEN {weight} ELSE 0 END)")
-    bucket_sql = " + ".join(bits)
-    return f"""
-WITH t AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings)
-SELECT vec_id, label, CAST({bucket_sql} AS INT) AS bucket
-FROM t
-"""
-
-
 # ---- SemDeDup: semantic deduplication via cluster-blocked cosine -----------
 # [canon: SemDeDup, Abbas et al. 2023, arXiv:2303.09540] — the published
 # recipe for semantic dedup at web scale: k-means the embedding space,
@@ -463,7 +363,7 @@ FROM t
 # corpus).
 #
 # Scale shape: centroid assignment is a broadcast of K tiny rows + a
-# vec_id-keyed argmax window (identical to q_ann_ivf, oracle-proven);
+# vec_id-keyed argmax window (ORACLE_SEMDEDUP recomputes it);
 # the pair step is textops.bucket_pairs keyed by centroid_id, the same
 # bounded kernel as the MinHash and SimHash bands. SemDeDup's K grows
 # with N (paper: K ~ N/10k), so a cluster normally stays under
@@ -476,7 +376,8 @@ SEMDEDUP_TAU = 0.35  # sf0.01: drops 76/500 — non-degenerate either way
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup keep/drop decision per vector: seed-centroid assignment
-    (vec_id < N_CENTROIDS, as q_ann_ivf), then within-cluster cosine
+    (vec_id < N_CENTROIDS, checked by ORACLE_SEMDEDUP's own argmax),
+    then within-cluster cosine
     pruning against lower-id members at SEMDEDUP_TAU."""
     from pyspark.sql import Window
 

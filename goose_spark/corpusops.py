@@ -1,9 +1,8 @@
 """Corpus-maintenance operators (round 4): the jobs a web-scale
 training-data pipeline runs BETWEEN crawls and extraction passes —
 paragraph-level boilerplate removal (CCNet-style line dedup), mixture
-sampling to per-language token budgets, crawl-snapshot deltas, PMI
-collocation mining, and outlink extraction (the crawl frontier's link
-graph).
+sampling to per-language token budgets, crawl-snapshot deltas and
+outlink extraction (the crawl frontier's link graph).
 
 House rules (same as textops/filterops): every step is a JVM-side
 expression; outputs are exact integers / md5 gates so each probe is
@@ -202,74 +201,6 @@ SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
             WHEN ha != hb THEN 'changed'
             ELSE 'unchanged' END AS status
 FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-"""
-
-
-# ------------------------------------------------------ PMI collocations --
-# Corpus collocation mining: top-K bigrams by pointwise mutual
-# information — the statistic behind phrase detection / tokenizer-merge
-# candidates. Integer PMI surrogate score = n_ab * 1e6 * N div (n_a*n_b)
-# (monotone in the PMI argument; exact int64 in both engines — deploy
-# swaps the final log back in, same plan). Bounds at probe scale:
-# n_ab * 1e6 * N ~ 2e3 * 1e6 * 2e4 = 4e13 << 2^63; at web scale compute
-# the ratio as two integer divisions or go to DECIMAL(38).
-PMI_TOP_K = 50
-
-
-def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shapes: two hash aggregates with map-side combine (unigram and
-    bigram counts — the shuffles carry (term, long) rows, never
-    documents), the bigram table joined to unigram counts twice on term
-    (vocabulary-keyed shuffle joins; AQE broadcasts them when the vocab
-    is small), one scalar total broadcast, TakeOrderedAndProject for the
-    top-K. Reuses filterops' CSE-safe let-bound bigram expression — a
-    naive split() inside the transform lambda re-tokenizes per bigram."""
-    from goose_spark.filterops import _BIGRAMS, _WORDS
-
-    d = load(spark, sf_dir, "documents")
-    uni = (
-        d.select(F.explode(F.expr(_WORDS)).alias("term"))
-        .groupBy("term").agg(F.count(F.lit(1)).alias("n_term")))
-    bi = (
-        d.select(F.explode(F.expr(_BIGRAMS)).alias("bigram"))
-        .groupBy("bigram").agg(F.count(F.lit(1)).alias("n_ab")))
-    total = uni.agg(F.sum("n_term").alias("n_total"))
-    scored = (
-        bi.withColumn("w1", F.split(F.col("bigram"), " ")[0])
-        .withColumn("w2", F.split(F.col("bigram"), " ")[1])
-        .join(uni.select(F.col("term").alias("w1"),
-                         F.col("n_term").alias("n_a")), "w1")
-        .join(uni.select(F.col("term").alias("w2"),
-                         F.col("n_term").alias("n_b")), "w2")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "bigram", "n_ab",
-            F.expr("n_ab * 1000000 * n_total div (n_a * n_b)")
-            .alias("score")))
-    return scored.orderBy(F.desc("score"), "bigram").limit(PMI_TOP_K)
-
-
-ORACLE_PMI_BIGRAMS = f"""
-WITH w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS ws
-  FROM documents),
-uni AS (
-  SELECT u.term, COUNT(*) AS n_term
-  FROM w, unnest(ws) AS u(term) GROUP BY 1),
-bx AS (SELECT ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM w),
-bi AS (
-  SELECT ws[i] || ' ' || ws[i + 1] AS bigram, COUNT(*) AS n_ab
-  FROM bx GROUP BY 1),
-total AS (SELECT SUM(n_term) AS n_total FROM uni)
-SELECT bigram, n_ab,
-       CAST(n_ab * 1000000 * n_total // (a.n_term * b.n_term)
-            AS BIGINT) AS score
-FROM bi
-JOIN uni a ON a.term = string_split(bigram, ' ')[1]
-JOIN uni b ON b.term = string_split(bigram, ' ')[2]
-CROSS JOIN total
-ORDER BY score DESC, bigram
-LIMIT {PMI_TOP_K}
 """
 
 

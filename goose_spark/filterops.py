@@ -178,38 +178,6 @@ _DOMAIN_SYNTH_T = "concat('site', CAST(doc_id % 37 AS {S}), '.example')"
 DOMAIN_CAP = 5  # keep the CAP highest-quality docs per domain
 
 
-def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain frequency cap: rank docs within their (synthesized)
-    domain by quality proxy (n_chars desc, doc_id tie-break) and keep the
-    top DOMAIN_CAP. One shuffle on domain; see module docstring for the
-    hot-domain pre-cap at CC scale."""
-    d = load(spark, sf_dir, "documents")
-    dom = F.expr(_DOMAIN_SYNTH_T.format(S="STRING"))
-    win = Window.partitionBy("domain").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc())
-    return (d.select("doc_id", "n_chars", dom.alias("domain"))
-            .withColumn("rnk", F.row_number().over(win))
-            .withColumn("domain_total",
-                        F.count(F.lit(1)).over(Window.partitionBy("domain")))
-            .select("doc_id", "domain", "rnk", "domain_total",
-                    (F.col("rnk") <= DOMAIN_CAP).alias("kept")))
-
-
-ORACLE_DOMAIN_CAP = f"""
-WITH t AS (
-  SELECT doc_id, {_DOMAIN_SYNTH_T.format(S='VARCHAR')} AS domain,
-         ROW_NUMBER() OVER (PARTITION BY {_DOMAIN_SYNTH_T.format(S='VARCHAR')}
-                            ORDER BY n_chars DESC, doc_id) AS rnk,
-         COUNT(*) OVER (PARTITION BY {_DOMAIN_SYNTH_T.format(S='VARCHAR')})
-           AS domain_total
-  FROM documents)
-SELECT doc_id, domain, CAST(rnk AS INTEGER) AS rnk,
-       CAST(domain_total AS BIGINT) AS domain_total,
-       rnk <= {DOMAIN_CAP} AS kept
-FROM t
-"""
-
-
 def precap_domains(df: DataFrame, cap: int,
                    flush_rows: int = 50_000) -> DataFrame:
     """Hot-domain pre-cap (the map-side combiner the module docstring

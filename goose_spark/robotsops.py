@@ -307,181 +307,129 @@ UNION ALL SELECT 3, 'first_batch', c3 FROM a
 """
 
 
-# ------------------------------------------------------ Atom feed parse --
+# ------------------------------------------------------------ feed parse --
 # Crawl discovery's third channel beside robots.txt sitemaps and page
-# outlinks: site feeds. One Atom feed per host is synthesized as REAL
-# XML by a JVM aggregate (entry fields keyed on doc_id, entries in
-# sorted-id document order), then parsed back by gooselite.minidom in
-# one mapInPandas pass — Atom rather than RSS 2.0 because RSS puts the
-# article URL in <link>TEXT</link> and `link` is an HTML void element
-# (an HTML-recovery parser drops its text child), while Atom's
-# <link href="..."/> is attribute-carried and parses exactly; the
-# practical rule for feed ingestion through an HTML-tolerant parser.
-# The DuckDB oracle recomputes every field closed-form and never sees
-# XML, so a hash match proves the parse round-trip including entry
-# order (pos = document order within the feed).
+# outlinks: site feeds, in both formats a crawl meets. One Atom feed and
+# one RSS 2.0 feed per host are synthesized as REAL XML by a JVM
+# aggregate (entry fields keyed on doc_id, entries in sorted-id document
+# order), then parsed back by gooselite.minidom in one mapInPandas pass.
+# The formats differ in three places, and _FEED_TAGS is that whole
+# difference: Atom carries the article URL in <link href="..."/>, RSS in
+# <link>TEXT</link>; identity is <id> against <guid>; dates are RFC 3339
+# <updated> against RFC-822 <pubDate>. The parse always runs in
+# xml_mode, since `link` is an HTML void element and RSS's link text
+# would escape the node under HTML rules. The DuckDB oracle recomputes
+# every field closed-form and never sees XML, so a hash match proves the
+# parse round-trip including entry order (pos = document order within
+# the feed). 2026-01-01 is a Thursday, so the RSS weekday token is
+# constant and the oracle needs no calendar math.
 #
 # Scale shape: same as q_sitemap_parse — feeds are per-host documents,
 # the build side is a host-keyed aggregate with protocol-bounded
-# groups, and the parse is one linear mapInPandas pass over
-# (host, xml) rows; no corpus shuffle in either direction.
+# groups, and the parse is one linear mapInPandas pass over the
+# per-host rows; no corpus shuffle in either direction.
 
-_FEED_XML = (
-    "concat('<?xml version=\"1.0\" encoding=\"UTF-8\"?>"
-    "<feed xmlns=\"http://www.w3.org/2005/Atom\"><title>', source, "
-    "'</title>',"
-    " array_join(transform(array_sort(collect_list(doc_id)), i -> concat("
-    "   '<entry><title>Article ', cast(i as string), '</title>',"
-    "   '<link href=\"https://', source, '.example/d/', cast(i as string),"
-    "   '\"/>',"
-    "   '<id>urn:doc:', cast(i as string), '</id>',"
-    "   '<updated>2026-', lpad(cast(i % 12 + 1 as string), 2, '0'), '-',"
-    "   lpad(cast(i % 28 + 1 as string), 2, '0'),"
-    "   'T00:00:00Z</updated></entry>')), ''),"
-    " '</feed>')"
-)
+_FEED_XML = {
+    "atom": (
+        "concat('<?xml version=\"1.0\" encoding=\"UTF-8\"?>"
+        "<feed xmlns=\"http://www.w3.org/2005/Atom\"><title>', source, "
+        "'</title>',"
+        " array_join(transform(array_sort(collect_list(doc_id)), i -> concat("
+        "   '<entry><title>Article ', cast(i as string), '</title>',"
+        "   '<link href=\"https://', source, '.example/d/', cast(i as string),"
+        "   '\"/>',"
+        "   '<id>urn:doc:', cast(i as string), '</id>',"
+        "   '<updated>2026-', lpad(cast(i % 12 + 1 as string), 2, '0'), '-',"
+        "   lpad(cast(i % 28 + 1 as string), 2, '0'),"
+        "   'T00:00:00Z</updated></entry>')), ''),"
+        " '</feed>')"
+    ),
+    "rss": (
+        "concat('<?xml version=\"1.0\" encoding=\"UTF-8\"?>"
+        "<rss version=\"2.0\"><channel><title>', source, '</title>',"
+        " array_join(transform(array_sort(collect_list(doc_id)), i -> concat("
+        "   '<item><title>Article ', cast(i as string), '</title>',"
+        "   '<link>https://', source, '.example/d/', cast(i as string),"
+        "   '</link>',"
+        "   '<guid isPermaLink=\"false\">urn:doc:', cast(i as string),"
+        "   '</guid>',"
+        "   '<pubDate>Thu, 01 Jan 2026 ',"
+        "   lpad(cast(i % 24 as string), 2, '0'), ':',"
+        "   lpad(cast(i % 60 as string), 2, '0'),"
+        "   ':00 GMT</pubDate></item>')), ''),"
+        " '</channel></rss>')"
+    ),
+}
+
+# format -> (entry tag, id tag, date tag, link is the href attribute);
+# html.parser lowercases tag names, hence "pubdate"
+_FEED_TAGS = {
+    "atom": ("entry", "id", "updated", True),
+    "rss": ("item", "guid", "pubdate", False),
+}
+
+_FEED_COLS = ("source", "format", "pos", "title", "link", "entry_id",
+              "updated")
 
 
 def _feed_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from gooselite.minidom import parse_html
 
+    def text(e, tag):
+        els = e.get_elements_by_tag(tag)
+        return els[0].get_text() if els else ""
+
     for batch in it:
         if not len(batch):
             continue
-        rows = {"source": [], "pos": [], "title": [], "link": [],
-                "entry_id": [], "updated": []}
-        for source, xml in zip(batch["source"], batch["xml"]):
-            root = parse_html(xml)
-            for pos, e in enumerate(root.get_elements_by_tag("entry")):
-                t = e.get_elements_by_tag("title")
-                ln = e.get_elements_by_tag("link")
-                eid = e.get_elements_by_tag("id")
-                up = e.get_elements_by_tag("updated")
-                rows["source"].append(source)
-                rows["pos"].append(pos)
-                rows["title"].append(t[0].get_text() if t else "")
-                rows["link"].append(
-                    (ln[0].attrib or {}).get("href", "") if ln else "")
-                rows["entry_id"].append(eid[0].get_text() if eid else "")
-                rows["updated"].append(up[0].get_text() if up else "")
-        yield pd.DataFrame({
-            "source": pd.Series(rows["source"], dtype="object"),
-            "pos": pd.Series(rows["pos"], dtype="int32"),
-            "title": pd.Series(rows["title"], dtype="object"),
-            "link": pd.Series(rows["link"], dtype="object"),
-            "entry_id": pd.Series(rows["entry_id"], dtype="object"),
-            "updated": pd.Series(rows["updated"], dtype="object"),
-        })
+        rows = []
+        for fmt, (entry, id_tag, date_tag, href) in _FEED_TAGS.items():
+            for source, xml in zip(batch["source"], batch[fmt]):
+                root = parse_html(xml, xml_mode=True)
+                for pos, e in enumerate(root.get_elements_by_tag(entry)):
+                    ln = e.get_elements_by_tag("link")
+                    if not ln:
+                        link = ""
+                    elif href:
+                        link = (ln[0].attrib or {}).get("href", "")
+                    else:
+                        link = ln[0].get_text()
+                    rows.append((source, fmt, pos, text(e, "title"), link,
+                                 text(e, id_tag), text(e, date_tag)))
+        yield pd.DataFrame(rows, columns=_FEED_COLS).astype({"pos": "int32"})
 
 
 def q_feed_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     d = load(spark, sf_dir, "documents")
-    feeds = d.groupBy("source").agg(F.expr(_FEED_XML).alias("xml"))
+    feeds = d.groupBy("source").agg(
+        *[F.expr(xml).alias(fmt) for fmt, xml in _FEED_XML.items()])
     return feeds.mapInPandas(
         _feed_batches,
-        schema=("source string, pos int, title string, link string,"
-                " entry_id string, updated string"))
+        schema=("source string, format string, pos int, title string,"
+                " link string, entry_id string, updated string"))
 
 
 ORACLE_FEED_PARSE = """
-SELECT source,
-       CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) - 1
-            AS INT) AS pos,
-       'Article ' || CAST(doc_id AS VARCHAR) AS title,
-       'https://' || source || '.example/d/' || CAST(doc_id AS VARCHAR)
-           AS link,
-       'urn:doc:' || CAST(doc_id AS VARCHAR) AS entry_id,
+WITH d AS (
+  SELECT source, doc_id,
+         CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) - 1
+              AS INT) AS pos,
+         'Article ' || CAST(doc_id AS VARCHAR) AS title,
+         'https://' || source || '.example/d/' || CAST(doc_id AS VARCHAR)
+             AS link,
+         'urn:doc:' || CAST(doc_id AS VARCHAR) AS entry_id
+  FROM documents)
+SELECT source, 'atom' AS format, pos, title, link, entry_id,
        '2026-' || lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || '-' ||
            lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') || 'T00:00:00Z'
            AS updated
-FROM documents
-"""
-
-
-# RSS 2.0 twin of the Atom probe: the older-but-more-common discovery
-# channel. Unlike Atom, <link> is element TEXT (not an href attribute),
-# identity is <guid>, and dates are RFC-822 <pubDate> — a parser that
-# only handles Atom misreads all three. Synth is closed-form on doc_id
-# (2026-01-01 is a Thursday, so the weekday token is constant and the
-# DuckDB twin needs no calendar math).
-_RSS_XML = (
-    "concat('<?xml version=\"1.0\" encoding=\"UTF-8\"?>"
-    "<rss version=\"2.0\"><channel><title>', source, '</title>',"
-    " array_join(transform(array_sort(collect_list(doc_id)), i -> concat("
-    "   '<item><title>Article ', cast(i as string), '</title>',"
-    "   '<link>https://', source, '.example/d/', cast(i as string),"
-    "   '</link>',"
-    "   '<guid isPermaLink=\"false\">urn:doc:', cast(i as string),"
-    "   '</guid>',"
-    "   '<pubDate>Thu, 01 Jan 2026 ',"
-    "   lpad(cast(i % 24 as string), 2, '0'), ':',"
-    "   lpad(cast(i % 60 as string), 2, '0'),"
-    "   ':00 GMT</pubDate></item>')), ''),"
-    " '</channel></rss>')"
-)
-
-
-def _rss_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from gooselite.minidom import parse_html
-
-    for batch in it:
-        if not len(batch):
-            continue
-        rows = {"source": [], "pos": [], "title": [], "link": [],
-                "guid": [], "pub_date": []}
-        for source, xml in zip(batch["source"], batch["xml"]):
-            # xml_mode: RSS's <link>url</link> is a void element under
-            # HTML rules (text would silently escape the node); html.
-            # parser also lowercases tag names, hence "pubdate".
-            root = parse_html(xml, xml_mode=True)
-            for pos, e in enumerate(root.get_elements_by_tag("item")):
-                t = e.get_elements_by_tag("title")
-                ln = e.get_elements_by_tag("link")
-                g = e.get_elements_by_tag("guid")
-                pd_ = e.get_elements_by_tag("pubdate")
-                rows["source"].append(source)
-                rows["pos"].append(pos)
-                rows["title"].append(t[0].get_text() if t else "")
-                rows["link"].append(ln[0].get_text() if ln else "")
-                rows["guid"].append(g[0].get_text() if g else "")
-                rows["pub_date"].append(pd_[0].get_text() if pd_ else "")
-        yield pd.DataFrame({
-            "source": pd.Series(rows["source"], dtype="object"),
-            "pos": pd.Series(rows["pos"], dtype="int32"),
-            "title": pd.Series(rows["title"], dtype="object"),
-            "link": pd.Series(rows["link"], dtype="object"),
-            "guid": pd.Series(rows["guid"], dtype="object"),
-            "pub_date": pd.Series(rows["pub_date"], dtype="object"),
-        })
-
-
-def q_rss_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS 2.0 feed parse round-trip (crawl discovery, the non-Atom
-    half). One synth aggregate per host + one linear mapInPandas parse
-    pass; at crawl scale the synth drops out and the parse pass runs
-    over fetched feed bodies directly."""
-    from pyspark.sql import functions as F
-
-    d = load(spark, sf_dir, "documents")
-    feeds = d.groupBy("source").agg(F.expr(_RSS_XML).alias("xml"))
-    return feeds.mapInPandas(
-        _rss_batches,
-        schema=("source string, pos int, title string, link string,"
-                " guid string, pub_date string"))
-
-
-ORACLE_RSS_PARSE = """
-SELECT source,
-       CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) - 1
-            AS INT) AS pos,
-       'Article ' || CAST(doc_id AS VARCHAR) AS title,
-       'https://' || source || '.example/d/' || CAST(doc_id AS VARCHAR)
-           AS link,
-       'urn:doc:' || CAST(doc_id AS VARCHAR) AS guid,
+FROM d
+UNION ALL
+SELECT source, 'rss' AS format, pos, title, link, entry_id,
        'Thu, 01 Jan 2026 ' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0')
            || ':' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0')
-           || ':00 GMT' AS pub_date
-FROM documents
+           || ':00 GMT' AS updated
+FROM d
 """

@@ -38,49 +38,37 @@ FROM documents GROUP BY md5(text)
 
 
 # ------------------------------------------------------------ token count --
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace token count + distinct-token count, all JVM-side."""
-    d = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    return d.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-    )
-
-
-ORACLE_TOKEN_COUNT = """
-SELECT doc_id,
-       CAST(len(string_split_regex(trim(text), '\\s+')) AS INT) AS n_tokens,
-       CAST(len(list_distinct(string_split_regex(trim(text), '\\s+'))) AS INT)
-           AS n_distinct_tokens
-FROM documents
-"""
-
-
 # BPE-ish pre-tokenizer: letter runs, digit runs, single non-alnum marks
 # (ASCII classes only — Java regex and DuckDB's RE2 agree on these;
 # unicode classes \p{L} diverge across engines).
 BPEISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def q_token_bpeish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-style token counting: the subword pre-tokenization shape used
-    by training-data pipelines, as a JVM-side regexp_extract_all."""
+def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Whitespace and BPE-style token counts, each with its distinct
+    count, all JVM-side. The BPE-style tokens are the subword
+    pre-tokenization shape of training-data pipelines, taken with
+    regexp_extract_all."""
     d = load(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     # Spark SQL string literals consume one level of backslash escaping
     # (unlike DuckDB's standard-SQL literals), so \s must be doubled here
     spark_re = BPEISH_RE.replace("\\", "\\\\")
-    toks = F.expr(f"regexp_extract_all(text, '{spark_re}', 0)")
+    bpe = F.expr(f"regexp_extract_all(text, '{spark_re}', 0)")
     return d.select(
         "doc_id",
-        F.size(toks).alias("n_bpe_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_bpe_tokens"),
+        F.size(toks).alias("n_tokens"),
+        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
+        F.size(bpe).alias("n_bpe_tokens"),
+        F.size(F.array_distinct(bpe)).alias("n_distinct_bpe_tokens"),
     )
 
 
-ORACLE_TOKEN_BPEISH = f"""
+ORACLE_TOKEN_COUNT = f"""
 SELECT doc_id,
+       CAST(len(string_split_regex(trim(text), '\\s+')) AS INT) AS n_tokens,
+       CAST(len(list_distinct(string_split_regex(trim(text), '\\s+'))) AS INT)
+           AS n_distinct_tokens,
        CAST(len(regexp_extract_all(text, '{BPEISH_RE}', 0)) AS INT)
            AS n_bpe_tokens,
        CAST(len(list_distinct(regexp_extract_all(text, '{BPEISH_RE}', 0))) AS INT)

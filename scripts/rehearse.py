@@ -9,7 +9,7 @@ Probes without an oracle get the weaker rows-only check, like the driver.
 Usage:
     python scripts/rehearse.py            # the 50 graded probes
     python scripts/rehearse.py --all      # all registered probes
-    python scripts/rehearse.py q_link_extract q_pmi_bigrams   # just these
+    python scripts/rehearse.py q_link_extract q_feed_parse    # just these
 
 Writes a JSON report to /tmp/rehearsal.json and prints one line per
 probe plus a summary; exit code 1 if anything fails.

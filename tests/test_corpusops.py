@@ -104,18 +104,6 @@ def test_crawl_delta_partitions_url_space(spark):
             assert rows[i] == ("changed" if i % 3 == 0 else "unchanged")
 
 
-# ------------------------------------------------------------------ PMI --
-def test_pmi_bigrams_deterministic_topk(spark):
-    a = C.q_pmi_bigrams(spark, SF).collect()
-    b = C.q_pmi_bigrams(spark, SF).collect()
-    assert a == b
-    assert len(a) == C.PMI_TOP_K
-    scores = [r["score"] for r in a]
-    assert scores == sorted(scores, reverse=True)
-    plan = _plan(C.q_pmi_bigrams(spark, SF))
-    assert "TakeOrderedAndProject" in plan
-
-
 # ------------------------------------------------------------------ NFC --
 def test_nfc_actually_composes():
     # the decoration classes exercised by q_unicode_nfc, asserted

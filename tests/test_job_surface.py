@@ -1,11 +1,17 @@
-"""The harnesses and scripts outside the test suite call
+"""The surface of the product, ``goose_spark.job`` with ``udf`` and
+``schema``, pinned with no Spark session.
+
+The harnesses and scripts outside the test suite call
 ``goose_spark.job`` by attribute (``J.<name>``) or by a ``from`` import,
 so a rename or deletion there fails only when they run. This pins every
-such name to the module, with no Spark session.
+such name to the module. It also pins which project modules the job
+imports, so a probe module cannot drift into the job's closure unseen.
 """
 
 import pathlib
 import re
+import subprocess
+import sys
 
 from goose_spark import job
 
@@ -22,3 +28,23 @@ def test_harnesses_reference_only_existing_job_names():
     assert {path for path, _ in refs} == set(CALLERS)
     missing = sorted((p, n) for p, n in refs if not hasattr(job, n))
     assert missing == []
+
+
+# the extraction core plus the job: what a worker running the job loads
+JOB_CLOSURE = {
+    "goose_spark", "goose_spark.job", "goose_spark.schema", "goose_spark.udf",
+    "gooselite", "gooselite.cleaner", "gooselite.config",
+    "gooselite.constants", "gooselite.encoding", "gooselite.formatter",
+    "gooselite.metadata", "gooselite.minidom", "gooselite.pipeline",
+    "gooselite.scoring", "gooselite.stopwords_data", "gooselite.text",
+}
+
+
+def test_job_imports_only_the_extraction_core():
+    code = ("import sys, goose_spark.job, goose_spark.udf, goose_spark.schema\n"
+            "print(*[m for m in sys.modules\n"
+            "        if m.split('.')[0] in ('goose_spark', 'gooselite')])\n")
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, cwd=str(ROOT), timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    assert set(proc.stdout.split()) == JOB_CLOSURE

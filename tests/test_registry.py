@@ -15,7 +15,7 @@ import __spark_entry__ as entry
 
 GRADED, TAIL = entry.probes()
 NAMES = [fn.__name__ for fn, _ in GRADED + TAIL]
-ROWS_ONLY = {"q_udf_extract", "q_approx_distinct"}
+ROWS_ONLY = {"q_udf_extract"}
 
 
 def test_probe_names_are_unique():

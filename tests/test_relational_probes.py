@@ -74,14 +74,12 @@ def test_ann_cosine_topk_matches_duckdb(spark, duck):
 
 
 def test_rows_only_probes_run(spark):
-    """Rows-only probes must execute and return a stable schema."""
+    """The one rows-only probe, the extraction UDF, must execute and
+    return a stable schema."""
     qs = entry.queries()
     oracles = entry.oracle_sql()
     rows_only = [n for n in qs if n not in oracles]
-    # q_lang_id / q_ann_lsh_buckets graduated to oracle-backed in r3;
-    # q_minhash_pairs / q_simhash / q_simhash_pairs in r4 (md5-exact
-    # hashing + brute-force hamming twin)
-    assert set(rows_only) == {"q_udf_extract", "q_approx_distinct"}
-    assert {"q_minhash_pairs", "q_simhash", "q_simhash_pairs"} <= set(oracles)
-    df = qs["q_approx_distinct"](spark, SF_DIR)
-    assert df.count() >= 0 and len(df.columns) >= 1
+    assert rows_only == ["q_udf_extract"]
+    df = qs["q_udf_extract"](spark, SF_DIR)
+    assert df.columns[:3] == ["url", "status", "lang"]
+    assert df.count() > 0
