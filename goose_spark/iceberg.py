@@ -68,8 +68,9 @@ PARTITIONED BY (bucket(1024, url))
 
 # The B21 commit as Iceberg executes it: WHEN NOT MATCHED INSERT keyed on
 # (run_id, url). A retried/replayed commit of the same batch matches every
-# row and inserts nothing — the idempotence the local path approximates
-# with append + read-side distinct() (job.py resume_filter).
+# row and inserts nothing — the idempotence the local path gets from
+# append + a LEFT ANTI resume join, which duplicate checkpoint urls
+# cannot change (job.py resume_filter).
 CHECKPOINT_MERGE = """
 MERGE INTO {catalog}.checkpoint t
 USING (SELECT run_id, url, MAX(completed_ts) AS completed_ts
@@ -90,8 +91,8 @@ WHEN NOT MATCHED THEN
 # NOT EXISTS only guards against rows already in the TARGET; duplicate
 # (run_id, url) rows WITHIN one batch (task retries re-listing a url)
 # would all insert, so both statements pre-collapse the source with a
-# GROUP BY on the key — the same .distinct() the local path applies in
-# job.py resume_filter.
+# GROUP BY on the key. (The local path needs no such collapse: its
+# checkpoint is only read through job.py resume_filter's anti-join.)
 CHECKPOINT_MERGE_PORTABLE = """
 INSERT INTO {checkpoint_table} (run_id, url, completed_ts)
 SELECT s.run_id, s.url, s.completed_ts

@@ -23,6 +23,10 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
 * **Exactly-once-ish resume (B21).** EXTRACTED is written before the
   checkpoint append; on restart the anti-join plus write-side idempotence
   make replays safe.
+* **Any Hadoop filesystem.** The output dir may be a local path or a URI
+  (``file://``, ``hdfs://``, ``s3a://``): the job reads its own batch back
+  through Spark's reader and asks Hadoop's ``FileSystem`` about the
+  checkpoint, with no driver-local file calls.
 """
 
 from __future__ import annotations
@@ -39,6 +43,10 @@ from goose_spark.udf import make_extract_batches
 # Arrow batch caps (B16): ≤64 MB or ≤256 rows per batch, whichever first.
 ARROW_MAX_BYTES = str(64 * 1024 * 1024)
 ARROW_MAX_RECORDS = "256"
+
+# Checkpoint bytes on storage past which resume stops forcing a broadcast
+# of the url history (run_job_df's size guard).
+CHECKPOINT_BROADCAST_MAX_BYTES = 512 * 1024 * 1024
 
 # glibc malloc knobs for the python workers: without these, every
 # multi-MB string copy during giant-doc extraction is served by
@@ -86,19 +94,21 @@ def dedupe_latest(pages: DataFrame) -> DataFrame:
 
 
 def write_pages_bucketed(pages: DataFrame, table: str,
-                         buckets: int = 32) -> None:
+                         buckets: int | None = None) -> None:
     """The cluster-scale table layout named in the module docstring: a
     url-bucketed (and in-bucket url-sorted) pages table. Reading it back,
     the scan reports HashPartitioning(url) so the dedupe window — and the
     checkpoint anti-join when both sides share the layout — run with ZERO
     exchange: the fat html column never shuffles (plan-asserted in
-    tests/test_plans.py). Write it with ``buckets`` equal to the UDF width
-    (cluster cores): the scan then already has the partitioning
-    ``prepare`` asks for and the whole pre-UDF plan is exchange-free; any
-    other count costs the one url shuffle a plain table pays. At 10^12
-    rows this is the Iceberg `bucket(url, N)` partition transform
-    (goose_spark/iceberg.py DDL); locally it is Spark's native bucketed
-    parquet via saveAsTable."""
+    tests/test_plans.py). ``buckets`` defaults to the UDF width
+    (defaultParallelism, as in ``prepare``): the scan then already has the
+    partitioning ``prepare`` asks for and the whole pre-UDF plan is
+    exchange-free; any other count costs the one url shuffle a plain
+    table pays. At 10^12 rows this is the Iceberg `bucket(url, N)`
+    partition transform (goose_spark/iceberg.py DDL); locally it is
+    Spark's native bucketed parquet via saveAsTable."""
+    if buckets is None:
+        buckets = pages.sparkSession.sparkContext.defaultParallelism
     (pages.write.mode("overwrite")
      .bucketBy(buckets, "url").sortBy("url").saveAsTable(table))
 
@@ -130,8 +140,8 @@ def resume_filter(pages: DataFrame, checkpoint: DataFrame | None,
     big to build driver/executor-side (the forced hint would OOM
     outright): the join falls back to Catalyst/AQE strategy choice.
     This stays a pure plan-builder — the size decision belongs to the
-    caller, who can see the checkpoint's storage (run_job_df checks the
-    on-disk bytes; no extra Spark action per resume). At 10^12-row
+    caller, who can see the checkpoint's storage (run_job_df checks its
+    bytes on storage; no extra Spark action per resume). At 10^12-row
     checkpoint scale use resume_filter_bucketed instead (co-bucketed
     zero-exchange SMJ; no broadcast, no re-shuffle of the fat side)."""
     if checkpoint is None:
@@ -258,8 +268,8 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     Everything after the extraction derives from **this batch only**:
     the UDF runs exactly once (for the durable write), and metrics /
     checkpoint / row count come from a column-pruned re-read of the
-    files THAT WRITE created (driver-side before/after listing — the
-    local stand-in for reading an Iceberg write's own snapshot). The job
+    batch=<id> directory THAT WRITE created (the local stand-in for
+    reading an Iceberg write's own snapshot). The job
     never re-reads prior history, never caches the fat text columns
     (persisting the full output was measured 4× slower than the bare
     extraction — columnar cache compression of the article text), and a
@@ -273,17 +283,17 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
 
     checkpoint = None
     broadcast_ckpt = True
-    if os.path.exists(ckpt_path):
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(ckpt_path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(jpath):
         checkpoint = spark.read.parquet(ckpt_path)
-        # Driver-side size guard (no Spark action): a checkpoint whose
-        # parquet exceeds the cap would OOM the forced broadcast build
-        # (urls compress ~3-5x on disk → ~512 MB of files is already a
-        # multi-GB build side). Fall back to Catalyst/AQE choice; at
-        # 10^12-row history the answer is resume_filter_bucketed.
-        ckpt_bytes = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(ckpt_path) for f in files)
-        if ckpt_bytes > 512 * 1024 * 1024:
+        # Size guard from the filesystem's metadata (no Spark action): a
+        # checkpoint whose parquet exceeds the cap would OOM the forced
+        # broadcast build (urls compress ~3-5x on disk → ~512 MB of files
+        # is already a multi-GB build side). Fall back to Catalyst/AQE
+        # choice; at 10^12-row history the answer is resume_filter_bucketed.
+        ckpt_bytes = fs.getContentSummary(jpath).getLength()
+        if ckpt_bytes > CHECKPOINT_BROADCAST_MAX_BYTES:
             import warnings
 
             warnings.warn(
@@ -307,8 +317,8 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     # the writer's target-file-size + fanout handles this instead.
     #
     # Each batch writes under its own batch=<run_id>-<uuid> partition dir,
-    # so "this batch's files" is a listing of that subtree — never a
-    # global before/after diff. Concurrent runs (or a crash between the
+    # so "this batch's rows" is a read of that subtree — never a global
+    # before/after diff. Concurrent runs (or a crash between the
     # extracted append and the checkpoint append) cannot mis-attribute
     # another writer's files into this batch's metrics/checkpoint; the
     # batch id doubles as write-level lineage in the table layout (the
@@ -318,18 +328,17 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     (extract(todo)
      .repartition(F.col("bucket"))
      .write.mode("append").partitionBy("bucket").parquet(batch_root))
-    new_files = sorted(_parquet_files(batch_root))
 
-    # This batch's rows, via the new files only — a column-pruned scan
-    # (the fat cleaned_text column is never read back); basePath keeps
-    # the bucket partition column.
+    # This batch's rows: a column-pruned re-read of its own subtree (the
+    # fat cleaned_text column is never read back). The given schema
+    # skips footer inference and lets an empty batch (only _SUCCESS)
+    # read as 0 rows; basePath keeps the bucket partition column.
     batch = (
-        spark.read.option("basePath", extracted_path).parquet(*new_files)
+        spark.read.schema(EXTRACTED).option("basePath", extracted_path)
+        .parquet(batch_root)
         .select("url", "lang", "status", "bytes_in", "parse_ms",
                 "partition_id", "bucket", "lang_fallback")
-    ) if new_files else spark.createDataFrame([], EXTRACTED).select(
-        "url", "lang", "status", "bytes_in", "parse_ms",
-        "partition_id", "bucket", "lang_fallback")
+    )
 
     metrics_from_extracted(batch, run_id).write.mode("append").parquet(metrics_path)
     n = batch.count()
@@ -348,18 +357,3 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     return {"batch_rows": n, "extracted_rows": n,
             "extracted_path": extracted_path,
             "metrics_path": metrics_path, "checkpoint_path": ckpt_path}
-
-
-def _parquet_files(root: str) -> set[str]:
-    """Data files under a parquet dir (driver-side metadata listing —
-    the local stand-in for an Iceberg snapshot's file manifest;
-    O(file count), touches no data). Callers pass a batch-scoped
-    batch=<id> subtree, so the listing is immune to concurrent writers
-    in the same table root; Iceberg's snapshot isolation is the cluster
-    equivalent."""
-    out: set[str] = set()
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                out.add(os.path.join(dirpath, f))
-    return out

@@ -14,7 +14,8 @@ from typing import Iterator
 
 import pandas as pd
 
-from gooselite.pipeline import extract_one
+from gooselite.config import DEFAULT_CONFIG, ExtractionConfig
+from gooselite.pipeline import ExtractionTimeout, extract_one, timeout_result
 
 # Per-document wall-clock budget (SURVEY.md §4.2): an adversarial or
 # pathological page must produce a status='timeout' row, not a pinned
@@ -23,13 +24,11 @@ from gooselite.pipeline import extract_one
 DOC_TIMEOUT_S = float(os.environ.get("GOOSE_DOC_TIMEOUT_S", "300"))
 
 
-def _extract_with_timeout(html, lang, url, budget_s: float, config=None):
-    kw = {} if config is None else {"config": config}
+def _extract_with_timeout(html, lang, url, budget_s: float,
+                          config: ExtractionConfig = DEFAULT_CONFIG):
     if budget_s <= 0:
-        return extract_one(html, lang, url, **kw)
+        return extract_one(html, lang, url, config)
     import signal
-
-    from gooselite.pipeline import ExtractionTimeout
 
     def _on_alarm(signum, frame):
         raise ExtractionTimeout()
@@ -37,10 +36,10 @@ def _extract_with_timeout(html, lang, url, budget_s: float, config=None):
     try:
         prev = signal.signal(signal.SIGALRM, _on_alarm)
     except (ValueError, OSError, AttributeError):
-        return extract_one(html, lang, url, **kw)  # not main thread / platform
+        return extract_one(html, lang, url, config)  # not main thread / platform
     try:
         signal.setitimer(signal.ITIMER_REAL, budget_s)
-        result = extract_one(html, lang, url, **kw)
+        result = extract_one(html, lang, url, config)
         # Disarm INSIDE the guarded region: if the alarm lands in the gap
         # between extract_one returning and the timer being cleared, the
         # ExtractionTimeout is still caught below instead of escaping the
@@ -50,31 +49,10 @@ def _extract_with_timeout(html, lang, url, budget_s: float, config=None):
         signal.setitimer(signal.ITIMER_REAL, 0.0)
         return result
     except ExtractionTimeout:
-        return _timeout_result(html, lang, url, budget_s, config)
+        return timeout_result(html, lang, url, budget_s, config)
     finally:
         signal.setitimer(signal.ITIMER_REAL, 0.0)
         signal.signal(signal.SIGALRM, prev)
-
-
-def _timeout_result(html, lang, url, budget_s: float, config=None):
-    from gooselite.pipeline import (
-        STATUS_TIMEOUT,
-        _empty_result,
-        _requested_lang_ok,
-    )
-    from gooselite.text import resolve_language
-
-    # Mirror extract_one's A21 semantics (pipeline.py:85): a forced
-    # target_language overrides the row lang, so a timed-out doc reports
-    # the same effective lang / lang_fallback as its non-timeout peers
-    # and METRICS lang grouping stays consistent under config.
-    primary = (config.target_language if config is not None
-               and config.target_language else lang)
-    return _empty_result(url, STATUS_TIMEOUT,
-                         f"exceeded {budget_s:.0f}s budget",
-                         len(html) if html else 0,
-                         resolve_language(primary), budget_s * 1000.0,
-                         lang_fallback=not _requested_lang_ok(primary))
 
 # column order must match goose_spark.schema.EXTRACTED
 _OUT_COLS = [
@@ -87,14 +65,12 @@ _OUT_COLS = [
 
 
 def make_extract_batches(doc_timeout_s: float | None = None, config=None):
-    """Build the mapInPandas body with an explicit per-doc budget and an
-    optional ExtractionConfig (A21). Both are captured in the closure so
-    they serialize to the workers (a module global patched on the driver
-    never reaches them). config.doc_timeout_s is used when doc_timeout_s
-    is not given explicitly."""
-    if doc_timeout_s is None and config is not None:
-        doc_timeout_s = config.doc_timeout_s
+    """Build the mapInPandas body with the per-doc budget resolved here,
+    once (None → GOOSE_DOC_TIMEOUT_S) and an optional ExtractionConfig
+    (A21). Both are captured in the closure so they serialize to the
+    workers (a module global patched on the driver never reaches them)."""
     budget = DOC_TIMEOUT_S if doc_timeout_s is None else doc_timeout_s
+    config = DEFAULT_CONFIG if config is None else config
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return extract_batches(it, budget, config)
@@ -102,9 +78,9 @@ def make_extract_batches(doc_timeout_s: float | None = None, config=None):
     return _batches
 
 
-def extract_batches(it: Iterator[pd.DataFrame],
-                    doc_timeout_s: float | None = None,
-                    config=None) -> Iterator[pd.DataFrame]:
+def extract_batches(it: Iterator[pd.DataFrame], budget_s: float,
+                    config: ExtractionConfig = DEFAULT_CONFIG
+                    ) -> Iterator[pd.DataFrame]:
     """mapInPandas body: (url, warc_ts, html, lang, bucket) → EXTRACTED.
 
     Input batches are Arrow record batches sized by
@@ -112,7 +88,8 @@ def extract_batches(it: Iterator[pd.DataFrame],
     ``maxRecordsPerBatch`` (size-bucketed batching, SURVEY.md B16) so one
     batch never mixes 1 KB and 100 MB documents into an oversized
     allocation. partition_id comes from TaskContext for the per-partition
-    lineage metrics (BASELINE.json:6).
+    lineage metrics (BASELINE.json:6). budget_s is the per-doc budget
+    (0 disables).
     """
     import gc
 
@@ -120,8 +97,6 @@ def extract_batches(it: Iterator[pd.DataFrame],
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    budget = DOC_TIMEOUT_S if doc_timeout_s is None else doc_timeout_s
-    from gooselite.pipeline import ExtractionTimeout
 
     # Cyclic-GC policy: extract_one dispose()s each DOM so refcounting
     # reclaims the bulk; threshold-triggered collections during the
@@ -140,12 +115,12 @@ def extract_batches(it: Iterator[pd.DataFrame],
                 pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"], pdf["bucket"]
             ):
                 try:
-                    r = _extract_with_timeout(html, lang, url, budget, config)
+                    r = _extract_with_timeout(html, lang, url, budget_s, config)
                 except ExtractionTimeout:
                     # alarm delivered in _extract_with_timeout's 1-2
                     # bytecode disarm window — doc finished at the budget
                     # boundary; record it as a timeout row, not a task kill
-                    r = _timeout_result(html, lang, url, budget, config)
+                    r = timeout_result(html, lang, url, budget_s, config)
                 r["warc_ts"] = warc_ts
                 r["partition_id"] = pid
                 r["bucket"] = int(bucket) if pd.notna(bucket) else 0

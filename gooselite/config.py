@@ -28,9 +28,6 @@ class ExtractionConfig:
     enable_markdown: additionally render the cleaned top node as
         markdown (gooselite.markdown; beyond-reference surface). OFF by
         default — the canonical flat-text bytes are never affected.
-    doc_timeout_s: per-document wall budget enforced by the Spark UDF
-        watchdog (not by extract_one itself); None → GOOSE_DOC_TIMEOUT_S
-        env default in goose_spark.udf.
     """
 
     target_language: str | None = None
@@ -42,7 +39,6 @@ class ExtractionConfig:
     enable_opengraph: bool = True
     enable_links: bool = True
     enable_markdown: bool = False
-    doc_timeout_s: float | None = None
 
 
 DEFAULT_CONFIG = ExtractionConfig()

@@ -75,6 +75,20 @@ def _requested_lang_ok(lang: str | None) -> bool:
     return bool(lang) and lang.strip().lower()[:2] in STOPWORDS
 
 
+def timeout_result(html: bytes | None, lang: str | None, url: str,
+                   budget_s: float,
+                   config: ExtractionConfig = DEFAULT_CONFIG) -> dict[str, Any]:
+    """The row for a document that ran past the per-doc budget: the same
+    effective lang / lang_fallback rule as extract_one (config's
+    target_language first), so METRICS lang grouping stays consistent."""
+    primary = config.target_language or lang
+    return _empty_result(url, STATUS_TIMEOUT,
+                         f"exceeded {budget_s:.0f}s budget",
+                         len(html) if html else 0,
+                         resolve_language(primary), budget_s * 1000.0,
+                         lang_fallback=not _requested_lang_ok(primary))
+
+
 def extract_one(html: bytes | None, lang: str | None, url: str,
                 config: ExtractionConfig = DEFAULT_CONFIG) -> dict[str, Any]:
     """Extract the main article content of one page.

@@ -9,7 +9,8 @@ With --iceberg, --src is an Iceberg table identifier instead of a
 Parquet path (requires the iceberg-spark runtime jar on the cluster;
 not present in this sandbox — SURVEY.md §0.4). Resume: re-running with
 the same --dst/--run-id anti-joins completed urls from the checkpoint
-table and extracts only the remainder.
+table and extracts only the remainder. --dst may be a local path or
+any Hadoop filesystem URI (s3a://, hdfs://, file://).
 """
 
 from __future__ import annotations

@@ -469,3 +469,26 @@ def test_danda_final_stopwords_counted():
 
     assert stopword_count_fast("वह घर में है।", "hi") == 3
     assert stopword_count_fast("αυτό είναι εδώ· και", "el") == 4
+
+
+def test_timeout_row_follows_extract_ones_lang_rule():
+    """A document past the per-doc budget reports the effective lang and
+    lang_fallback that extract_one would: config's target_language first,
+    then the row lang, then 'en'."""
+    from gooselite.config import ExtractionConfig
+    from goose_spark import udf
+
+    page = (b"<html><body><div>"
+            + b"<p>Some of the words that we know are stopwords here.</p>" * 500
+            + b"</div></body></html>")
+    url = "https://slow.example/a"
+    forced = udf._extract_with_timeout(
+        page, "en", url, 1e-4, ExtractionConfig(target_language="de"))
+    assert forced["status"] == "timeout"
+    assert forced["lang"] == "de"
+    assert forced["lang_fallback"] is False
+
+    unknown = udf._extract_with_timeout(page, "xx", url, 1e-4)
+    assert unknown["status"] == "timeout"
+    assert unknown["lang"] == "en"
+    assert unknown["lang_fallback"] is True

@@ -3,6 +3,7 @@ gooselite.extract_one oracle, byte-identical, under multiple partitionings
 and Arrow batch sizes; plus the job-level resume contract."""
 
 import os
+import pathlib
 import shutil
 
 import pandas as pd
@@ -108,19 +109,23 @@ def test_dedupe_keeps_latest(spark, sf0001_fixtures):
     assert deduped.groupBy("url").count().filter("count > 1").count() == 0
 
 
-def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory,
+                                   as_uri):
     """B21/§5.4: run on half the corpus, then full corpus with same run-id —
     second run must extract only the missing urls; final result equals a
-    single-shot run (exceptAll both ways empty, B13)."""
+    single-shot run (exceptAll both ways empty, B13). The output dir is a
+    plain path or a file:// URI: resume must not depend on local OS calls."""
     pages_path, _ = sf0001_fixtures
     out_dir = str(tmp_path_factory.mktemp("resume"))
     pages = J.read_pages(spark, pages_path)
     half = pages.filter(F.xxhash64("url") % 2 == 0)
     half_path = os.path.join(out_dir, "pages_half")
     half.write.parquet(half_path)
+    dst = pathlib.Path(out_dir).as_uri() if as_uri else out_dir
 
-    r1 = J.run_job(spark, half_path, out_dir, run_id="r", partitions=4)
-    r2 = J.run_job(spark, pages_path, out_dir, run_id="r", partitions=4)
+    r1 = J.run_job(spark, half_path, dst, run_id="r", partitions=4)
+    r2 = J.run_job(spark, pages_path, dst, run_id="r", partitions=4)
     # batch_rows is per-run: the resume run extracts ONLY the missing urls
     n_total = J.prepare(pages).count()
     assert r1["batch_rows"] + r2["batch_rows"] == n_total
@@ -147,6 +152,22 @@ def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory):
     assert resumed.exceptAll(single).count() == 0
     assert single.exceptAll(resumed).count() == 0
     shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_resume_skips_completed_urls_without_forced_broadcast(
+        spark, sf0001_fixtures, tmp_path, monkeypatch):
+    """A checkpoint past the size cap drops the forced broadcast (with a
+    warning) but resume still skips every completed url."""
+    pages_path, _ = sf0001_fixtures
+    monkeypatch.setattr(J, "CHECKPOINT_BROADCAST_MAX_BYTES", 0)
+    r1 = J.run_job(spark, pages_path, str(tmp_path), run_id="r", partitions=4)
+    assert r1["batch_rows"] > 0
+    with pytest.warns(UserWarning, match="skipping the forced broadcast"):
+        r2 = J.run_job(spark, pages_path, str(tmp_path), run_id="r",
+                       partitions=4)
+    assert r2["batch_rows"] == 0
+    extracted = spark.read.parquet(r2["extracted_path"])
+    assert extracted.count() == r1["batch_rows"]
 
 
 def test_per_doc_timeout_yields_timeout_row(spark):
