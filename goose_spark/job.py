@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 
 from goose_spark.schema import EXTRACTED
 from goose_spark.udf import make_extract_batches
+from gooselite.pipeline import (STATUS_DECODE_ERROR, STATUS_EMPTY, STATUS_OK,
+                                STATUS_PARSE_ERROR, STATUS_TIMEOUT)
 
 # Arrow batch caps (B16): ≤64 MB or ≤256 rows per batch, whichever first.
 ARROW_MAX_BYTES = str(64 * 1024 * 1024)
@@ -191,14 +193,14 @@ def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     return df.repartition(partitions, "url")
 
 
-def extract(pages: DataFrame, doc_timeout_s: float | None = None,
-            config=None) -> DataFrame:
+def extract(pages: DataFrame, doc_timeout_s: float | None = None) -> DataFrame:
     """The extraction operator (B17): prune columns, bucket, then one
     mapInPandas pass with gooselite over the input's own partitions
     (``prepare`` has placed them). doc_timeout_s: per-doc wall budget
-    (None → GOOSE_DOC_TIMEOUT_S env, default 300s; 0 disables).
-    config: optional gooselite.config.ExtractionConfig (A21) riding the
-    UDF closure to every worker."""
+    (None → GOOSE_DOC_TIMEOUT_S env, default 300s; 0 disables). The
+    ``lang`` column is the language override (the reference's
+    target_language); the markdown column is null here, markdown is
+    ``gooselite.extract_one(markdown=True)``."""
     configure_session(pages.sparkSession)
     cols = pages.select("url", "warc_ts", "html", "lang")
     # Decorrelate arrival order from any upstream ordering: after the
@@ -208,7 +210,7 @@ def extract(pages: DataFrame, doc_timeout_s: float | None = None,
     # allocator churn). A cheap in-partition hash sort interleaves sizes.
     shuffled = with_bucket(cols).sortWithinPartitions(
         F.xxhash64(F.col("url"), F.lit(1)))
-    return shuffled.mapInPandas(make_extract_batches(doc_timeout_s, config),
+    return shuffled.mapInPandas(make_extract_batches(doc_timeout_s),
                                 schema=EXTRACTED)
 
 
@@ -229,15 +231,19 @@ def metrics_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
     """B8: per-(partition, bucket, lang) lineage metrics (FIXTURES.md §3).
     Pure hash aggregation with map-side partial combine — no extra pass
     over html."""
+
+    def count(status):
+        return F.sum((F.col("status") == status).cast("long"))
+
     return (
         extracted.groupBy("partition_id", "bucket", "lang")
         .agg(
             F.count(F.lit(1)).alias("docs_in"),
-            F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
-            F.sum((F.col("status") == "parse_error").cast("long")).alias("parse_failures"),
-            F.sum((F.col("status") == "empty").cast("long")).alias("empty_extractions"),
-            F.sum((F.col("status") == "decode_error").cast("long")).alias("decode_errors"),
-            F.sum((F.col("status") == "timeout").cast("long")).alias("timeouts"),
+            count(STATUS_OK).alias("ok"),
+            count(STATUS_PARSE_ERROR).alias("parse_failures"),
+            count(STATUS_EMPTY).alias("empty_extractions"),
+            count(STATUS_DECODE_ERROR).alias("decode_errors"),
+            count(STATUS_TIMEOUT).alias("timeouts"),
             F.sum(F.col("lang_fallback").cast("long")).alias("lang_fallbacks"),
             F.sum("bytes_in").alias("bytes_processed"),
             F.sum("parse_ms").alias("wall_ms"),

@@ -46,8 +46,8 @@ EXTRACTED = StructType([
     # iteration order is nondeterministic on collect; array is stable)
     StructField("opengraph", ArrayType(StringType()), True),
     StructField("links", ArrayType(StringType()), True),  # A16-ext: in-article anchors
-    # markdown output surface (gooselite/markdown.py): populated only
-    # when ExtractionConfig.enable_markdown is set, else null
+    # markdown output surface (gooselite/markdown.py): filled only by
+    # extract_one(markdown=True); the job's rows leave it null
     StructField("markdown", StringType(), True),
     StructField("lang_fallback", BooleanType(), True),  # A5 non-primary lang
     StructField("status", StringType(), False),       # ok|empty|parse_error|decode_error

@@ -197,15 +197,14 @@ def _md_page(doc_id: int, text: str) -> bytes:
 
 def _md_batches(it):
     from gooselite import extract_one
-    from gooselite.config import ExtractionConfig
 
-    cfg = ExtractionConfig(enable_markdown=True)
     for batch in it:
         out = {"doc_id": [], "title": [], "md_md5": [], "n_blocks": []}
         for i, t in zip(batch["doc_id"], batch["text"]):
             doc_id = int(i)
             art = extract_one(_md_page(doc_id, t or ""), "en",
-                              f"https://example.com/doc/{doc_id}", cfg)
+                              f"https://example.com/doc/{doc_id}",
+                              markdown=True)
             md = art["markdown"] or ""
             out["doc_id"].append(doc_id)
             out["title"].append(art["title"])

@@ -6,7 +6,7 @@ canonical flat text.
 node-goose's OutputFormatter emits plain text only; LLM-corpus
 pipelines increasingly keep this much structure (headings anchor
 sections, anchors carry link context). This formatter is ADDITIVE and
-opt-in (``ExtractionConfig.enable_markdown``, default False): the
+opt-in (``extract_one(..., markdown=True)``, default False): the
 canonical flat-text bytes that the north rule compares are untouched,
 which the L1/L2 golden suites keep proving.
 

@@ -28,10 +28,6 @@ def metadata_index(root: Node) -> dict[str, list[Node]]:
     return root.get_elements_map(*_INDEX_TAGS)
 
 
-def _nodes(root: Node, idx: dict | None, tag: str) -> list[Node]:
-    return idx[tag] if idx is not None else root.get_elements_by_tag(tag)
-
-
 def _split_title(title_text: str, splitter: str) -> str:
     """Pick the longest (by chars) segment [canon: extractors.py split_title]."""
     pieces = title_text.split(splitter)
@@ -42,12 +38,12 @@ def _split_title(title_text: str, splitter: str) -> str:
     return best.strip()
 
 
-def get_title(root: Node, idx: dict | None = None) -> str:
+def get_title(idx: dict) -> str:
     """A4: og:title wins over <title>; either way split on the first
     matching splitter and keep the longest segment (SURVEY.md A4)."""
-    title_text = _meta_property(root, "og:title", idx)
+    title_text = _meta_content(idx, "property", "og:title")
     if not title_text:
-        els = _nodes(root, idx, "title")
+        els = idx["title"]
         if not els:
             return ""
         title_text = els[0].get_text()
@@ -59,43 +55,34 @@ def get_title(root: Node, idx: dict | None = None) -> str:
     return inner_trim(_MOTLEY_RE.sub("", title_text))
 
 
-def _meta_property(root: Node, prop_value: str, idx: dict | None = None) -> str:
-    """First <meta property=...> content (og:* family), inner-trimmed."""
-    target = prop_value.lower()
-    for meta in _nodes(root, idx, "meta"):
-        if meta.attrib.get("property", "").lower() == target:
-            return inner_trim(meta.attrib.get("content", ""))
-    return ""
-
-
-def _meta_content(root: Node, name_attr: str, name_value: str,
-                  idx: dict | None = None) -> str:
+def _meta_content(idx: dict, name_attr: str, name_value: str) -> str:
+    """First <meta name_attr=name_value> content, inner-trimmed."""
     target = name_value.lower()
-    for meta in _nodes(root, idx, "meta"):
+    for meta in idx["meta"]:
         if meta.attrib.get(name_attr, "").lower() == target:
             return inner_trim(meta.attrib.get("content", ""))
     return ""
 
 
-def get_meta_description(root: Node, idx: dict | None = None) -> str:
-    return _meta_content(root, "name", "description", idx)
+def get_meta_description(idx: dict) -> str:
+    return _meta_content(idx, "name", "description")
 
 
-def get_meta_keywords(root: Node, idx: dict | None = None) -> str:
-    return _meta_content(root, "name", "keywords", idx)
+def get_meta_keywords(idx: dict) -> str:
+    return _meta_content(idx, "name", "keywords")
 
 
-def get_meta_lang(root: Node, idx: dict | None = None) -> str | None:
+def get_meta_lang(idx: dict) -> str | None:
     """A5 fallback chain element: html@lang, else meta http-equiv
     content-language, else og:locale prefix."""
-    for html in _nodes(root, idx, "html"):
+    for html in idx["html"]:
         lang = html.attrib.get("lang")
         if lang:
             return lang.strip()[:2].lower()
-    val = _meta_content(root, "http-equiv", "content-language", idx)
+    val = _meta_content(idx, "http-equiv", "content-language")
     if val:
         return val.strip()[:2].lower()
-    for meta in _nodes(root, idx, "meta"):
+    for meta in idx["meta"]:
         if meta.attrib.get("property", "").lower() == "og:locale":
             content = meta.attrib.get("content", "")
             if content:
@@ -114,8 +101,8 @@ def _safe_urljoin(base: str, href: str) -> str:
         return href
 
 
-def get_canonical_link(root: Node, url: str, idx: dict | None = None) -> str:
-    for link in _nodes(root, idx, "link"):
+def get_canonical_link(idx: dict, url: str) -> str:
+    for link in idx["link"]:
         if link.attrib.get("rel", "").lower() == "canonical":
             href = link.attrib.get("href", "").strip()
             if href:
@@ -147,13 +134,13 @@ _PUBLISH_META = (
 )
 
 
-def get_publish_date(root: Node, idx: dict | None = None) -> str | None:
+def get_publish_date(idx: dict) -> str | None:
     """A19: publish timestamp as the page states it (no reformatting —
     byte-stable, parseable downstream with to_timestamp). Meta tags in
     `_PUBLISH_META` priority order, then the first <time datetime=...>.
     The meta list is iterated once per priority entry, but over the
     prebuilt index bucket — no tree walks."""
-    metas = _nodes(root, idx, "meta")
+    metas = idx["meta"]
     for attr, value in _PUBLISH_META:
         target = value.lower()
         for meta in metas:
@@ -161,7 +148,7 @@ def get_publish_date(root: Node, idx: dict | None = None) -> str | None:
                 content = inner_trim(meta.attrib.get("content", ""))
                 if content:
                     return content
-    for t in _nodes(root, idx, "time"):
+    for t in idx["time"]:
         dt = inner_trim(t.attrib.get("datetime", ""))
         if dt:
             return dt
@@ -174,14 +161,14 @@ _MOVIE_SRC_RE = re.compile(
     r"|vimeo\.com|dailymotion\.com)", re.IGNORECASE)
 
 
-def get_movies(root: Node, idx: dict | None = None) -> list[str]:
+def get_movies(idx: dict) -> list[str]:
     """A18: src urls of <iframe>/<embed>/<object data=...> pointing at a
     known video host; iframes first then embeds then objects, document
     order within each group, duplicates dropped (first wins)."""
     movies: list[str] = []
     seen: set[str] = set()
     for tag, attr in (("iframe", "src"), ("embed", "src"), ("object", "data")):
-        for el in _nodes(root, idx, tag):
+        for el in idx[tag]:
             src = el.attrib.get(attr, "").strip()
             if src and src not in seen and _MOVIE_SRC_RE.search(src):
                 seen.add(src)
@@ -205,11 +192,11 @@ _TOP_IMAGE_META = (
 )
 
 
-def get_top_image(root: Node, url: str, idx: dict | None = None) -> str | None:
+def get_top_image(idx: dict, url: str) -> str | None:
     """A17-lite: the page-declared lead image url, resolved against the
     page url; meta schemas in priority order, then <link rel=image_src>.
     None when the page declares no image (never a fetch)."""
-    metas = _nodes(root, idx, "meta")
+    metas = idx["meta"]
     for attr, value in _TOP_IMAGE_META:
         target = value.lower()
         for meta in metas:
@@ -217,7 +204,7 @@ def get_top_image(root: Node, url: str, idx: dict | None = None) -> str | None:
                 content = inner_trim(meta.attrib.get("content", ""))
                 if content:
                     return _safe_urljoin(url, content)
-    for link in _nodes(root, idx, "link"):
+    for link in idx["link"]:
         if link.attrib.get("rel", "").lower() == "image_src":
             href = link.attrib.get("href", "").strip()
             if href:
@@ -295,10 +282,10 @@ def score_top_node_image(top_node: Node | None, url: str) -> str | None:
 _TAG_HREF_RE = re.compile(r"/tag[s]?/")
 
 
-def extract_tags(root: Node, idx: dict | None = None) -> list[str]:
+def extract_tags(idx: dict) -> list[str]:
     """A16: a[rel=tag] plus hrefs matching /tag/; sorted for determinism."""
     tags: set[str] = set()
-    for a in _nodes(root, idx, "a"):
+    for a in idx["a"]:
         rel = a.attrib.get("rel", "").lower()
         href = a.attrib.get("href", "")
         if "tag" == rel or _TAG_HREF_RE.search(href):
@@ -318,11 +305,11 @@ _AUTHOR_META = (
 )
 
 
-def get_authors(root: Node, idx: dict | None = None) -> list[str]:
+def get_authors(idx: dict) -> list[str]:
     """A4-ext: author bylines from meta tags, priority-ordered with an
     order-preserving dedupe (a page repeating the same byline in two
     conventions yields it once)."""
-    metas = _nodes(root, idx, "meta")
+    metas = idx["meta"]
     out: list[str] = []
     seen: set[str] = set()
     for attr, value in _AUTHOR_META:
@@ -336,12 +323,12 @@ def get_authors(root: Node, idx: dict | None = None) -> list[str]:
     return out
 
 
-def get_opengraph(root: Node, idx: dict | None = None) -> dict[str, str]:
+def get_opengraph(idx: dict) -> dict[str, str]:
     """A4-ext: the full OpenGraph map — every meta[property="og:*"]
     keyed by the property minus its "og:" prefix; first occurrence wins
     (same first-wins rule as the og:title lookup in get_title)."""
     og: dict[str, str] = {}
-    for meta in _nodes(root, idx, "meta"):
+    for meta in idx["meta"]:
         prop = meta.attrib.get("property", "").strip().lower()
         if prop.startswith("og:"):
             content = inner_trim(meta.attrib.get("content", ""))

@@ -16,7 +16,6 @@ import time
 from typing import Any
 
 from gooselite.cleaner import clean_document
-from gooselite.config import DEFAULT_CONFIG, ExtractionConfig
 from gooselite.encoding import DecodeError, decode_html
 from gooselite.formatter import get_formatted_text
 from gooselite.metadata import (
@@ -76,87 +75,82 @@ def _requested_lang_ok(lang: str | None) -> bool:
 
 
 def timeout_result(html: bytes | None, lang: str | None, url: str,
-                   budget_s: float,
-                   config: ExtractionConfig = DEFAULT_CONFIG) -> dict[str, Any]:
+                   budget_s: float) -> dict[str, Any]:
     """The row for a document that ran past the per-doc budget: the same
-    effective lang / lang_fallback rule as extract_one (config's
-    target_language first), so METRICS lang grouping stays consistent."""
-    primary = config.target_language or lang
+    effective lang / lang_fallback rule as extract_one, so METRICS lang
+    grouping stays consistent."""
     return _empty_result(url, STATUS_TIMEOUT,
                          f"exceeded {budget_s:.0f}s budget",
                          len(html) if html else 0,
-                         resolve_language(primary), budget_s * 1000.0,
-                         lang_fallback=not _requested_lang_ok(primary))
+                         resolve_language(lang), budget_s * 1000.0,
+                         lang_fallback=not _requested_lang_ok(lang))
 
 
 def extract_one(html: bytes | None, lang: str | None, url: str,
-                config: ExtractionConfig = DEFAULT_CONFIG) -> dict[str, Any]:
+                markdown: bool = False) -> dict[str, Any]:
     """Extract the main article content of one page.
 
     Returns a dict matching goose_spark.schema.EXTRACTED (minus warc_ts,
     which the Spark layer passes through). ``lang`` in the result is the
-    EFFECTIVE language whose stopword table was used: config's
-    target_language overrides everything (A21/EP3), else the lang column
-    is primary (BASELINE.json:6), document meta-lang is the fallback,
-    then 'en' (SURVEY.md A5). ``lang_fallback`` is True when the primary
-    source did NOT directly provide the table (feeds the METRICS
-    lang_fallbacks count).
+    EFFECTIVE language whose stopword table was used: the lang column is
+    primary and is also how a caller forces a table (the reference's
+    target_language, A21/EP3; BASELINE.json:6), document meta-lang is
+    the fallback, then 'en' (SURVEY.md A5). ``lang_fallback`` is True
+    when the lang column did NOT directly provide the table (feeds the
+    METRICS lang_fallbacks count). ``markdown=True`` also renders the
+    cleaned top node as markdown into the ``markdown`` key (else None);
+    the flat ``cleaned_text`` is the same either way.
     """
     t0 = time.perf_counter()
-    primary = config.target_language or lang
-    fallback = not _requested_lang_ok(primary)
+    fallback = not _requested_lang_ok(lang)
     bytes_in = len(html) if html else 0
     if not html:
         return _empty_result(url, STATUS_EMPTY, "no html bytes", 0,
-                             resolve_language(primary), 0.0, fallback)
+                             resolve_language(lang), 0.0, fallback)
 
     try:
         text, _encoding = decode_html(html)
     except DecodeError as exc:
         return _empty_result(url, STATUS_DECODE_ERROR, str(exc), bytes_in,
-                             resolve_language(primary),
+                             resolve_language(lang),
                              (time.perf_counter() - t0) * 1000.0, fallback)
 
     try:
         root = parse_html(text)
     except ParseError as exc:
         return _empty_result(url, STATUS_PARSE_ERROR, str(exc), bytes_in,
-                             resolve_language(primary),
+                             resolve_language(lang),
                              (time.perf_counter() - t0) * 1000.0, fallback)
 
     try:
-        return _extract_parsed(root, primary, url, bytes_in, t0, config)
+        return _extract_parsed(root, lang, url, bytes_in, t0, markdown)
     finally:
         dispose(root)
 
 
 def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
-                    t0: float, config: ExtractionConfig) -> dict[str, Any]:
+                    t0: float, markdown: bool) -> dict[str, Any]:
     # metadata BEFORE cleaning (cleaner strips <meta>-adjacent structure);
     # all getters read from ONE tree walk (metadata_index) — ~20 separate
     # full-document traversals otherwise, ~11% of extraction time
     idx = metadata_index(root)
-    title = get_title(root, idx)
-    meta_description = get_meta_description(root, idx)
-    meta_keywords = get_meta_keywords(root, idx)
-    meta_lang = get_meta_lang(root, idx)
-    canonical_link = get_canonical_link(root, url, idx)
-    tags = extract_tags(root, idx) if config.enable_tags else []
-    movies = get_movies(root, idx) if config.enable_videos else []
-    publish_date = (get_publish_date(root, idx)
-                    if config.enable_publish_date else None)
-    top_image = (get_top_image(root, url, idx)
-                 if config.enable_images else None)
-    authors = get_authors(root, idx) if config.enable_authors else []
+    title = get_title(idx)
+    meta_description = get_meta_description(idx)
+    meta_keywords = get_meta_keywords(idx)
+    meta_lang = get_meta_lang(idx)
+    canonical_link = get_canonical_link(idx, url)
+    tags = extract_tags(idx)
+    movies = get_movies(idx)
+    publish_date = get_publish_date(idx)
+    top_image = get_top_image(idx, url)
+    authors = get_authors(idx)
     # OpenGraph map serialized as sorted "key=value" strings: a plain
     # array column keeps the Spark row deterministic (map column
     # iteration order is not) while staying losslessly parseable
-    opengraph = (sorted(f"{k}={v}"
-                        for k, v in get_opengraph(root, idx).items())
-                 if config.enable_opengraph else [])
+    opengraph = sorted(f"{k}={v}" for k, v in get_opengraph(idx).items())
 
-    # A5: primary lang (target_language or lang column), meta-lang
-    # fallback, then 'en'; lang_fallback records any non-primary path
+    # A5: primary lang (the lang column), meta-lang fallback, then 'en';
+    # lang_fallback records any non-primary path
     lang_fallback = False
     if _requested_lang_ok(lang):
         effective_lang = lang.strip().lower()[:2]
@@ -170,7 +164,7 @@ def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
     clean_document(root)
     top_node = calculate_best_node(root, effective_lang)
     cleaned_text = ""
-    markdown: str | None = None
+    markdown_text: str | None = None
     links: list[str] = []
     if top_node is not None:
         # A17 offline fallback: no page-declared image → attribute-score
@@ -179,7 +173,7 @@ def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
         # node before the prune detaches non-<p> children — a bare <img>
         # child never survives the node-score threshold); meta schemas
         # keep priority, per the check_known_schemas-first order.
-        if config.enable_images and top_image is None:
+        if top_image is None:
             top_image = score_top_node_image(top_node, url)
         top_node = post_cleanup(top_node, effective_lang)
         # A16-ext: anchors surviving the cleaner + post-cleanup — must
@@ -187,15 +181,14 @@ def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
         # is the cleaned-top-node snapshot (goose-family Article.links
         # semantics), so an anchor in a paragraph the FORMATTER later
         # drops (<3 stopwords / negative score) still appears here
-        if config.enable_links:
-            links = extract_links(top_node, url)
+        links = extract_links(top_node, url)
         # markdown renders BEFORE get_formatted_text: the flat formatter
         # drop_tag()s every <a>/<b>/<i> in place, destroying the
         # structure markdown preserves
-        if config.enable_markdown:
+        if markdown:
             from gooselite.markdown import to_markdown
 
-            markdown = to_markdown(top_node, title)
+            markdown_text = to_markdown(top_node, title)
         cleaned_text = get_formatted_text(top_node, effective_lang)
 
     parse_ms = (time.perf_counter() - t0) * 1000.0
@@ -207,7 +200,7 @@ def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
         "canonical_link": canonical_link, "domain": get_domain(url),
         "tags": tags, "movies": movies, "publish_date": publish_date,
         "top_image": top_image, "authors": authors,
-        "opengraph": opengraph, "links": links, "markdown": markdown,
+        "opengraph": opengraph, "links": links, "markdown": markdown_text,
         "lang_fallback": lang_fallback, "status": status, "err": None,
         "bytes_in": bytes_in, "parse_ms": parse_ms,
     }

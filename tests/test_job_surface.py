@@ -5,9 +5,11 @@ The harnesses and scripts outside the test suite call
 ``goose_spark.job`` by attribute (``J.<name>``) or by a ``from`` import,
 so a rename or deletion there fails only when they run. This pins every
 such name to the module. It also pins which project modules the job
-imports, so a probe module cannot drift into the job's closure unseen.
+imports, so a probe module cannot drift into the job's closure unseen,
+and the ``gooselite.pipeline`` names perfbench's trace shims wrap.
 """
 
+import ast
 import pathlib
 import re
 import subprocess
@@ -33,10 +35,10 @@ def test_harnesses_reference_only_existing_job_names():
 # the extraction core plus the job: what a worker running the job loads
 JOB_CLOSURE = {
     "goose_spark", "goose_spark.job", "goose_spark.schema", "goose_spark.udf",
-    "gooselite", "gooselite.cleaner", "gooselite.config",
-    "gooselite.constants", "gooselite.encoding", "gooselite.formatter",
-    "gooselite.metadata", "gooselite.minidom", "gooselite.pipeline",
-    "gooselite.scoring", "gooselite.stopwords_data", "gooselite.text",
+    "gooselite", "gooselite.cleaner", "gooselite.constants",
+    "gooselite.encoding", "gooselite.formatter", "gooselite.metadata",
+    "gooselite.minidom", "gooselite.pipeline", "gooselite.scoring",
+    "gooselite.stopwords_data", "gooselite.text",
 }
 
 
@@ -48,3 +50,23 @@ def test_job_imports_only_the_extraction_core():
                           text=True, cwd=str(ROOT), timeout=120)
     assert proc.returncode == 0, proc.stderr
     assert set(proc.stdout.split()) == JOB_CLOSURE
+
+
+def test_perfbench_trace_shims_resolve_on_the_pipeline():
+    """perfbench's traced run wraps names it looks up on
+    ``gooselite.pipeline`` (``STAGES`` and ``METADATA`` in
+    perfbench/local.py); a rename there otherwise fails only under
+    ``perfbench/run.py --trace 1``."""
+    from gooselite import pipeline
+
+    tree = ast.parse((ROOT / "perfbench/local.py").read_text())
+    found = {target.id: ast.literal_eval(node.value)
+             for node in tree.body if isinstance(node, ast.Assign)
+             for target in node.targets
+             if isinstance(target, ast.Name)
+             and target.id in ("STAGES", "METADATA")}
+    names = set(found["STAGES"]) | set(found["METADATA"])
+    assert len(names) > 20
+    missing = sorted(n for n in names
+                     if not callable(getattr(pipeline, n, None)))
+    assert missing == []

@@ -71,7 +71,6 @@ def test_empty_and_script_only_nodes_render_empty():
 
 def test_markdown_is_opt_in_and_flat_bytes_invariant():
     from gooselite import extract_one
-    from gooselite.config import ExtractionConfig
 
     html = (b"<html><head><title>T</title></head><body><article><p>"
             b"This paragraph has all of the common words that the "
@@ -79,8 +78,7 @@ def test_markdown_is_opt_in_and_flat_bytes_invariant():
             b"</p></article></body></html>")
     plain = extract_one(html, "en", "https://u")
     assert plain["markdown"] is None
-    rich = extract_one(html, "en", "https://u",
-                       ExtractionConfig(enable_markdown=True))
+    rich = extract_one(html, "en", "https://u", markdown=True)
     assert rich["markdown"].startswith("# T\n\n")
     # the canonical flat bytes are byte-identical with markdown enabled
     assert rich["cleaned_text"] == plain["cleaned_text"]

@@ -27,6 +27,7 @@ def test_pyfiles_zip_builds_and_imports(tmp_path):
     assert "gooselite/pipeline.py" in names
     assert "goose_spark/job.py" in names
     assert "gooselite/wav.py" not in names
+    assert "gooselite/config.py" not in names
     assert not any("__pycache__" in n for n in names)
 
     # importable with ONLY the zip on sys.path (the --py-files contract)

@@ -1,3 +1,5 @@
+import pandas as pd
+
 from gooselite import extract_one
 from gooselite.encoding import decode_html, sniff_declared_charset
 
@@ -163,28 +165,21 @@ def test_lang_fallback_flag():
     assert r2["lang_fallback"] is True
 
 
-def test_extraction_config_knobs():
-    from gooselite.config import ExtractionConfig
-
+def test_optional_fields_always_extracted():
     html = _page(lang="de").replace(
         "</body>",
-        '<iframe src="https://www.youtube.com/embed/z"></iframe></body>')
+        '<iframe src="https://www.youtube.com/embed/z"></iframe>'
+        '<a rel="tag" href="/t/fox">fox</a></body>')
     html = html.replace(
         "</head>",
         '<meta property="article:published_time" content="2024-01-01">\n</head>')
-    # target_language forces the table over the lang column (EP3/A21)
-    cfg = ExtractionConfig(target_language="de")
-    r = extract_one(html.encode(), "en", "https://x", config=cfg)
+    # the lang column is the language override (EP3/A21)
+    r = extract_one(html.encode(), "de", "https://x")
     assert r["lang"] == "de" and r["lang_fallback"] is False
-    # feature toggles
-    off = ExtractionConfig(enable_publish_date=False, enable_videos=False,
-                           enable_tags=False)
-    r2 = extract_one(html.encode(), "en", "https://x", config=off)
-    assert r2["publish_date"] is None and r2["movies"] == [] and r2["tags"] == []
-    # defaults keep them on
-    r3 = extract_one(html.encode(), "en", "https://x")
-    assert r3["publish_date"] == "2024-01-01" and r3["movies"] == [
+    r2 = extract_one(html.encode(), "en", "https://x")
+    assert r2["publish_date"] == "2024-01-01" and r2["movies"] == [
         "https://www.youtube.com/embed/z"]
+    assert r2["tags"] == ["fox"]
 
 
 def test_new_language_tables_score():
@@ -323,11 +318,6 @@ def test_top_image_extraction():
     r = extract_one(link.encode(), "en", "https://x.example/sub/1")
     assert r["top_image"] == "https://x.example/sub/pic.png"
     assert extract_one(base.encode(), "en", "https://x")["top_image"] is None
-    # config toggle
-    from gooselite.config import ExtractionConfig
-    off = ExtractionConfig(enable_images=False)
-    r = extract_one(og.encode(), "en", "https://x", config=off)
-    assert r["top_image"] is None
 
 
 def test_top_image_attribute_scoring():
@@ -447,19 +437,13 @@ def test_malformed_href_totality():
                        "https://x.example/1")["canonical_link"] == "http://[bad"
 
 
-def test_new_fields_config_gated():
-    from gooselite.config import ExtractionConfig
-
+def test_new_fields_always_extracted():
     html = """<html><head><meta name="author" content="A">
 <meta property="og:type" content="article"></head><body>
 <div class="article-body"><p>{p} <a href="/c">cite link</a></p></div>
 </body></html>""".format(p=P1)
-    off = ExtractionConfig(enable_authors=False, enable_opengraph=False,
-                           enable_links=False)
-    r = extract_one(html.encode(), "en", "https://x.example/1", off)
-    assert r["authors"] == [] and r["opengraph"] == [] and r["links"] == []
-    r2 = extract_one(html.encode(), "en", "https://x.example/1")
-    assert r2["authors"] == ["A"] and r2["opengraph"] == ["type=article"]
+    r = extract_one(html.encode(), "en", "https://x.example/1")
+    assert r["authors"] == ["A"] and r["opengraph"] == ["type=article"]
 
 
 def test_danda_final_stopwords_counted():
@@ -471,24 +455,62 @@ def test_danda_final_stopwords_counted():
     assert stopword_count_fast("αυτό είναι εδώ· και", "el") == 4
 
 
+SLOW_PAGE = (b"<html><body><div>"
+             + b"<p>Some of the words that we know are stopwords here.</p>"
+             * 500 + b"</div></body></html>")
+
+
+def _udf_frame(langs):
+    """A mapInPandas input batch of SLOW_PAGE rows, one per lang."""
+    return pd.DataFrame({
+        "url": [f"https://slow.example/{i}" for i in range(len(langs))],
+        "warc_ts": [None] * len(langs), "html": [SLOW_PAGE] * len(langs),
+        "lang": list(langs), "bucket": [0] * len(langs)})
+
+
 def test_timeout_row_follows_extract_ones_lang_rule():
     """A document past the per-doc budget reports the effective lang and
-    lang_fallback that extract_one would: config's target_language first,
-    then the row lang, then 'en'."""
-    from gooselite.config import ExtractionConfig
+    lang_fallback that extract_one would: the row lang (the language
+    override), else 'en'."""
+    from goose_spark import udf
+    from goose_spark.schema import EXTRACTED
+
+    out = pd.concat(udf.extract_batches(iter([_udf_frame(["de", "xx"])]),
+                                        1e-4))
+    assert list(out["status"]) == ["timeout", "timeout"]
+    assert list(out["lang"]) == ["de", "en"]
+    assert list(out["lang_fallback"]) == [False, True]
+    assert list(out.columns) == EXTRACTED.fieldNames()
+
+
+def test_alarm_handler_installed_once_per_task_and_restored():
+    """extract_batches installs one SIGALRM handler for the task. An alarm
+    that lands while the generator is suspended between batches is a
+    no-op; the previous handler and the gc state come back whether the
+    generator is exhausted or closed early."""
+    import gc
+    import signal
+
     from goose_spark import udf
 
-    page = (b"<html><body><div>"
-            + b"<p>Some of the words that we know are stopwords here.</p>" * 500
-            + b"</div></body></html>")
-    url = "https://slow.example/a"
-    forced = udf._extract_with_timeout(
-        page, "en", url, 1e-4, ExtractionConfig(target_language="de"))
-    assert forced["status"] == "timeout"
-    assert forced["lang"] == "de"
-    assert forced["lang_fallback"] is False
+    def previous(signum, frame):
+        raise AssertionError("previous handler called")
 
-    unknown = udf._extract_with_timeout(page, "xx", url, 1e-4)
-    assert unknown["status"] == "timeout"
-    assert unknown["lang"] == "en"
-    assert unknown["lang_fallback"] is True
+    outer = signal.signal(signal.SIGALRM, previous)
+    gc_was = gc.isenabled()
+    try:
+        for finish in ("exhaust", "close"):
+            gen = udf.extract_batches(
+                iter([_udf_frame(["en"]), _udf_frame(["en"])]), 30.0)
+            assert list(next(gen)["status"]) == ["ok"]
+            handler = signal.getsignal(signal.SIGALRM)
+            assert handler is not previous and not gc.isenabled()
+            handler(signal.SIGALRM, None)  # a late alarm must not raise
+            if finish == "exhaust":
+                assert len(list(gen)) == 1
+            else:
+                gen.close()
+            assert signal.getsignal(signal.SIGALRM) is previous, finish
+            assert gc.isenabled() is gc_was, finish
+    finally:
+        signal.signal(signal.SIGALRM, outer)
