@@ -27,9 +27,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-from goose_spark import job as _J0
-_J0.apply_malloc_env()  # before JVM start
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 from goose_spark import job as J
 
 # single-core calibration burn: detects noisy-neighbor interference on
@@ -39,14 +37,7 @@ while _x < 30_000_000: _x += 1
 CALIB = time.perf_counter() - _t0
 
 cpus = {cpus}
-spark = (SparkSession.builder.master(f"local[{{cpus}}]")
-         .appName(f"goose-scaling-{{cpus}}")
-         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "24g")
-         .getOrCreate())
-J.configure_session(spark)
+spark = J.local_session(cpus)
 
 pages_path = {pages_path!r}
 # warmup: touch the input + spin up python workers on a tiny slice

@@ -25,23 +25,6 @@ _TAIL_QUERIES = (
 )
 
 
-def build_session(cpus: int):
-    from pyspark.sql import SparkSession
-
-    from goose_spark.job import apply_malloc_env
-
-    apply_malloc_env()  # must precede JVM start to reach python workers
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("goose-bench")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
@@ -54,8 +37,7 @@ def main() -> None:
 
     pages_path, _ = ensure_pages(sf_dir)  # cached; generation NOT timed
 
-    spark = build_session(cpus)
-    J.configure_session(spark)
+    spark = J.local_session(cpus)
 
     # --- flagship: url partitioning → dedupe → mapInPandas extraction ---
     todo = J.prepare(J.read_pages(spark, pages_path))

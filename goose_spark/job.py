@@ -43,6 +43,9 @@ from gooselite.pipeline import (STATUS_DECODE_ERROR, STATUS_EMPTY, STATUS_OK,
                                 STATUS_PARSE_ERROR, STATUS_TIMEOUT)
 
 # Arrow batch caps (B16): ≤64 MB or ≤256 rows per batch, whichever first.
+# The row cap also bounds the Parquet reader's batches: at Spark's default
+# 4096 rows, one batch of a single-row-group pages file holds most of its
+# html column on heap (an sf0.1 scan dies with OutOfMemoryError at 2 GB).
 ARROW_MAX_BYTES = str(64 * 1024 * 1024)
 ARROW_MAX_RECORDS = "256"
 
@@ -73,7 +76,32 @@ def configure_session(spark: SparkSession) -> None:
     """Session knobs for the extraction stage (idempotent)."""
     spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", ARROW_MAX_BYTES)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", ARROW_MAX_RECORDS)
+    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", ARROW_MAX_RECORDS)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def driver_heap_mb(mem_total_mb: float) -> int:
+    """An eighth of RAM, within 1-4 GB: the JVM, the Python workers and
+    the driver process must fit the box together, next to other tenants."""
+    return int(min(4096, max(1024, mem_total_mb // 8)))
+
+
+def local_session(cpus: int) -> SparkSession:
+    """The one local-mode session of every harness and of the test suite:
+    the worker malloc knobs before the JVM starts, ``local[cpus]``, a
+    driver heap sized from RAM, one shuffle partition per core (at least
+    8), no UI, and UTC, so string→timestamp casts do not follow the
+    host's zone (the DuckDB oracles read naive timestamps). A cluster
+    sets its own master and heap, so scripts/run_extract.py builds a
+    plain session instead."""
+    apply_malloc_env()
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**20
+    return (SparkSession.builder.master(f"local[{cpus}]")
+            .config("spark.driver.memory", f"{driver_heap_mb(ram_mb)}m")
+            .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+            .config("spark.sql.session.timeZone", "UTC")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate())
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
@@ -360,6 +388,5 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
         .select("run_id", "url", "completed_ts")
         .write.mode("append").parquet(ckpt_path)
     )
-    return {"batch_rows": n, "extracted_rows": n,
-            "extracted_path": extracted_path,
+    return {"batch_rows": n, "extracted_path": extracted_path,
             "metrics_path": metrics_path, "checkpoint_path": ckpt_path}

@@ -46,9 +46,9 @@ def value_hash(tbl):
 
 def main(argv):
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from goose_spark.job import local_session
 
     qs = entry.queries()
     if "--all" in argv:
@@ -58,15 +58,7 @@ def main(argv):
     else:
         sel = [fn.__name__ for fn, _ in entry.probes()[0]]
 
-    spark = (SparkSession.builder.master("local[16]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.driver.memory", "12g")
-             .config("spark.ui.enabled", "false")
-             # UTC like bench.py/conftest.py: string→timestamp casts in
-             # probes must not drift with the host TZ vs DuckDB's naive
-             # timestamps
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    spark = local_session(os.cpu_count())
     spark.sparkContext.setLogLevel("ERROR")
     osql = entry.oracle_sql()
     con = duck_views(duckdb.connect(), SF_DIR)

@@ -39,7 +39,6 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName(f"goose-extract-{args.run_id}").getOrCreate()
-    J.configure_session(spark)
     if args.iceberg:
         if args.init_ddl:
             from goose_spark.iceberg import ddl_sql

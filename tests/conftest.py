@@ -3,17 +3,9 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from goose_spark.job import local_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("goose-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
+    spark = local_session(4)
     yield spark
     spark.stop()
 

@@ -19,8 +19,9 @@ from goose_spark import job
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 CALLERS = ("perfbench/sparkjob.py", "bench.py", "BENCH/run_scaling.py",
-           "__spark_entry__.py", "scripts/run_extract.py")
-REF = re.compile(r"\b(?:J|_J0)\.(\w+)|from goose_spark\.job import (\w+)")
+           "__spark_entry__.py", "scripts/run_extract.py",
+           "scripts/rehearse.py")
+REF = re.compile(r"\bJ\.(\w+)|from goose_spark\.job import (\w+)")
 
 
 def test_harnesses_reference_only_existing_job_names():
@@ -30,6 +31,26 @@ def test_harnesses_reference_only_existing_job_names():
     assert {path for path, _ in refs} == set(CALLERS)
     missing = sorted((p, n) for p, n in refs if not hasattr(job, n))
     assert missing == []
+
+
+def test_only_the_job_module_sets_master_and_heap():
+    """``job.local_session`` is the one place a master and a driver heap
+    are chosen; a cluster's plain builder sets neither."""
+    session_knob = re.compile(r"spark\.driver\.memory|\.master\(")
+    allowed = {
+        "goose_spark/job.py",
+        "tests/test_job_surface.py",  # the pattern above
+        # perfbench still builds its own session; the next benchmark
+        # change moves it onto job.local_session
+        "perfbench/sparkjob.py",
+    }
+    hits = []
+    for path in ROOT.rglob("*.py"):
+        rel = path.relative_to(ROOT)
+        if (not rel.parts[0].startswith(".") and rel.as_posix() not in allowed
+                and session_knob.search(path.read_text())):
+            hits.append(rel.as_posix())
+    assert hits == []
 
 
 # the extraction core plus the job: what a worker running the job loads
