@@ -81,11 +81,13 @@ def extract_batches(it: Iterator[pd.DataFrame], budget_s: float
         except (ValueError, OSError, AttributeError):
             timed = False  # not the main thread, or no SIGALRM here
 
-    # Cyclic-GC policy: extract_one dispose()s each DOM so refcounting
-    # reclaims the bulk; threshold-triggered collections during the
+    # Cyclic-GC policy: extract_one dispose()s each DOM, detached
+    # subtrees and the cleaner's new nodes included, so refcounting
+    # reclaims it; threshold-triggered collections during the
     # million-allocation parse phase would re-walk every live container
     # (~30% slowdown, worse under 32 concurrent workers). Disable the
-    # collector and run one collect per batch for detached-subtree scraps.
+    # collector and run one collect per batch for what dispose cannot
+    # reach: a tree abandoned mid-parse by a timeout, and other cycles.
     # Spark reuses Python workers across tasks (spark.python.worker.reuse),
     # so the prior GC state and SIGALRM handler MUST be restored on exit —
     # including exceptional exit — or they leak into every later task.

@@ -36,8 +36,8 @@ from __future__ import annotations
 import re
 
 from gooselite import constants as C
-from gooselite.minidom import (COMMENT, TEXT, Node, drop_all, new_element,
-                               new_text, remove_all)
+from gooselite.minidom import (COMMENT, TEXT, Document, Node, drop_all,
+                               new_element, new_text, remove_all)
 
 # Canonical pass order is blacklist (id/class/name) then six targeted
 # regexes (id/class); both doom, so one predicate serves both passes.
@@ -61,7 +61,7 @@ def _is_bad(attrib) -> bool:
                for rx in _TARGETED_RES))
 
 
-def clean_document(root: Node) -> Node:
+def clean_document(root: Document) -> Document:
     unwrap: list[Node] = []    # em / dropcap / span-in-p
     doomed: list[Node] = []    # top-most doomed nodes only
     to_p: list[Node] = []      # divs with no block tag below
@@ -143,19 +143,21 @@ def clean_document(root: Node) -> Node:
     for div in to_p:
         div.tag = "p"
     for div in to_wrap:
-        _wrap_text_runs(div)
+        _wrap_text_runs(div, root.elements)
     return root
 
 
-def _wrap_text_runs(div: Node) -> None:
+def _wrap_text_runs(div: Node, elements: list[Node]) -> None:
     """[canon: cleaners.py div_to_para + get_replacement_nodes] for a div
     that holds block tags: each bare text run between blocks (a direct,
-    non-blank text child) is replaced by a new <p> holding that text."""
+    non-blank text child) is replaced by a new <p> holding that text.
+    Each new <p> goes on ``elements``, the document's list for dispose."""
     kids: list[Node] = []
     for child in div.children:
         if child.tag == TEXT and child.text and child.text.strip():
             p = new_element("p")
             p.append(new_text(child.text))
+            elements.append(p)
             p.parent = div
             child.parent = None
             kids.append(p)

@@ -79,6 +79,13 @@ DIV_TO_P_BLOCK_TAGS = (
 # ---- title splitting (A4) ----------------------------------------------------
 TITLE_SPLITTERS = ("|", "-", "»", ":")
 
+# ---- metadata index (A4/A5/A16–A19) ------------------------------------------
+# The tags the metadata getters read. The tree builder buckets each one
+# as it creates it (gooselite.minidom.Document.index), so the metadata
+# phase reads them without walking the tree.
+INDEX_TAGS = ("title", "meta", "link", "time", "a", "iframe", "embed",
+              "object", "html")
+
 # ---- HTML structural sets (minidom, A3) --------------------------------------
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()

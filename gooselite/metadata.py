@@ -11,21 +11,18 @@ import re
 from urllib.parse import urljoin, urlparse
 
 from gooselite.constants import TITLE_SPLITTERS
-from gooselite.minidom import Node
+from gooselite.minidom import Document, Node
 from gooselite.text import inner_trim
 
 _MOTLEY_RE = re.compile(r"[«»]")
 
-# Tags the metadata phase reads, gathered in ONE pre-clean tree walk
-# (each getter otherwise issues its own full-document traversal).
-_INDEX_TAGS = ("title", "meta", "link", "time", "a", "iframe", "embed",
-               "object", "html")
 
-
-def metadata_index(root: Node) -> dict[str, list[Node]]:
-    """One-walk bucket of every metadata-relevant element (A4/A5/A16/A18/
-    A19 all read from this instead of re-walking the raw tree)."""
-    return root.get_elements_map(*_INDEX_TAGS)
+def metadata_index(root: Document) -> dict[str, list[Node]]:
+    """Every metadata-relevant element (constants.INDEX_TAGS) as {tag:
+    [nodes in document order]}, as the tree builder recorded them: the
+    A4/A5/A16–A19 getters read this instead of walking the raw tree.
+    Read it before the cleaner rewrites the tree."""
+    return root.index
 
 
 def _split_title(title_text: str, splitter: str) -> str:
@@ -337,21 +334,22 @@ def get_opengraph(idx: dict) -> dict[str, str]:
     return og
 
 
-def extract_links(top_node: Node | None, url: str) -> list[str]:
+def extract_links(top_node: Node | None, url: str,
+                  seen: list[Node]) -> list[str]:
     """A16-ext: absolute hrefs of anchors INSIDE the extracted article
     (the goose-family Article.links field) — boilerplate/nav anchors are
     gone by the time this runs (cleaner + link-density scoring), so these
     are the article's own citations; order-preserving dedupe, resolved
-    against the page url."""
+    against the page url. ``seen``: calculate_best_node's, see there."""
     if top_node is None:
         return []
     out: list[str] = []
-    seen: set[str] = set()
-    for a in top_node.get_elements_by_tag("a"):
+    done: set[str] = set()
+    for a in top_node.descendants_in(seen, "a"):
         href = a.attrib.get("href", "").strip()
         if href:
             absolute = _safe_urljoin(url, href)
-            if absolute not in seen:
-                seen.add(absolute)
+            if absolute not in done:
+                done.add(absolute)
                 out.append(absolute)
     return out

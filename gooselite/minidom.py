@@ -25,6 +25,14 @@ stdlib loop's own end-of-input recovery. So the trees, and the inputs
 that raise ParseError, are exactly html.parser's (tests/test_minidom.py
 checks this against the stdlib loop).
 
+The parse root is a ``Document``. As the builder creates each element,
+on either path, it appends it to ``Document.elements`` and, when its tag
+is one the metadata getters read, to its bucket in ``Document.index``.
+Nodes are only ever appended below the open-element stack, so creation
+order is document order and the index needs no walk. ``dispose`` clears
+the children of every listed element (the cleaner and the sibling pass
+list the <p> they create), which reaches subtrees detached earlier too.
+
 All traversals are iterative (no recursion) so pathologically nested
 real-world HTML cannot blow the stack.
 """
@@ -37,7 +45,8 @@ from html import unescape
 from html.parser import HTMLParser
 from types import MappingProxyType
 
-from gooselite.constants import P_CLOSING_TAGS, RAW_TEXT_TAGS, VOID_ELEMENTS
+from gooselite.constants import (INDEX_TAGS, P_CLOSING_TAGS, RAW_TEXT_TAGS,
+                                 VOID_ELEMENTS)
 from gooselite.text import inner_trim
 
 # Shared read-only attrib for the (majority) attribute-less nodes: one
@@ -193,22 +202,19 @@ class Node:
             merged.extend(buckets[t])
         return merged
 
-    def get_elements_map(self, *tags: str) -> dict[str, list["Node"]]:
-        """Descendants matching each tag as {tag: [nodes in document
-        order]}, collected in ONE walk — the metadata phase issues ~20
-        full-tree ``get_elements_by_tag`` calls per document otherwise
-        (title/meta/link/a/iframe/… each walking the raw pre-clean tree)."""
-        buckets: dict[str, list[Node]] = {t: [] for t in tags}
-        stack = list(reversed(self.children))
-        pop, push = stack.pop, stack.extend
-        while stack:
-            node = pop()
-            b = buckets.get(node.tag)
-            if b is not None:
-                b.append(node)
-            if node.children:
-                push(reversed(node.children))
-        return buckets
+    def descendants_in(self, nodes: list["Node"], tag: str) -> list["Node"]:
+        """The ``tag`` nodes of ``nodes`` that lie below self, in the order
+        of ``nodes``: one parent chase per node instead of a walk of self
+        (scoring's ``seen`` list holds every descendant its readers need)."""
+        out: list[Node] = []
+        for node in nodes:
+            if node.tag == tag:
+                up = node.parent
+                while up is not None and up is not self:
+                    up = up.parent
+                if up is not None:
+                    out.append(node)
+        return out
 
     def previous_siblings(self) -> list["Node"]:
         """Element siblings before self, nearest first (reverse document
@@ -227,16 +233,14 @@ class Node:
 
     # -- text ----------------------------------------------------------------
     def get_text(self) -> str:
-        """[canon: goose/parsers.py getText]: ' '.join(itertext) → innerTrim.
-        (str.split() splits on the same Unicode whitespace class as \\s+,
-        so join-split-join ≡ join → innerTrim.)"""
+        """[canon: goose/parsers.py getText]: ' '.join(itertext) → innerTrim."""
         kids = self.children
         if not kids:
             return ""
         if len(kids) == 1 and not kids[0].children:  # single text child
             k = kids[0]
-            return " ".join(k.text.split()) if (k.tag == TEXT and k.text) else ""
-        return " ".join(" ".join(self.itertext()).split())
+            return inner_trim(k.text) if k.tag == TEXT else ""
+        return inner_trim(" ".join(self.itertext()))
 
     def raw_text(self) -> str:
         """Descendant text WITHOUT innerTrim — zero-copy for the common
@@ -318,20 +322,43 @@ def drop_all(nodes: list["Node"]) -> None:
             n.parent = None
 
 
-def dispose(root: Node) -> None:
+class Document(Node):
+    """The parse root, with the builder's two records: ``index``, every
+    element of an ``INDEX_TAGS`` tag bucketed by tag in document order,
+    and ``elements``, every element ever created for this tree."""
+
+    __slots__ = ("index", "elements")
+
+    def __init__(self) -> None:
+        super().__init__(DOCUMENT)
+        self.index: dict[str, list[Node]] = {t: [] for t in INDEX_TAGS}
+        self.elements: list[Node] = []
+
+
+def owner_document(node: Node) -> Document | None:
+    """The Document at the top of node's tree; None for a detached or
+    hand-built tree."""
+    while node.parent is not None:
+        node = node.parent
+    return node if isinstance(node, Document) else None
+
+
+def dispose(root: Document) -> None:
     """Break parent↔child reference cycles so the tree is reclaimed by
     refcounting alone. A 15 MB page builds a ~300k-node DOM whose cycles
     otherwise sit on the cyclic GC: with per-allocation-threshold
     collections repeatedly walking that many live containers, extraction
     measures ~30% slower (worse under concurrent workers, where the GC
-    walks add memory-bandwidth contention). Call when done with the tree;
-    nodes detached from it earlier are not reached (the Spark UDF mops
-    those up with one gc.collect() per batch)."""
-    nodes = root.iter_nodes()
-    root.children = []
-    for n in nodes:
+    walks add memory-bandwidth contention). Call when done with the tree.
+
+    No walk: only elements hold children, and ``root.elements`` lists
+    every one, detached or not, so clearing their children leaves only
+    child→parent references, which form no cycle."""
+    for n in root.elements:
         n.children = []
-        n.parent = None
+    root.children = []
+    root.elements = []
+    root.index = {}
 
 
 def new_text(value: str) -> Node:
@@ -397,7 +424,7 @@ class _TreeBuilder(HTMLParser):
     def __init__(self, keep_raw_text: bool = False,
                  xml_mode: bool = False) -> None:
         super().__init__(convert_charrefs=True)
-        self.root = Node(DOCUMENT)
+        self.root = Document()
         self.stack: list[Node] = [self.root]
         # opt-in: keep script/style text nodes (JSON-LD harvesting
         # needs <script type="application/ld+json"> payloads); the
@@ -422,15 +449,22 @@ class _TreeBuilder(HTMLParser):
             if tag in stops:
                 return
 
-    @staticmethod
-    def _attrs_to_dict(attrs) -> dict[str, str] | None:
-        if not attrs:
-            return None  # Node shares the singleton empty mapping
-        out: dict[str, str] = {}
-        for name, value in attrs:
-            if name not in out:
-                out[name] = value if value is not None else ""
-        return out
+    def _element(self, tag: str, attrs) -> Node:
+        """A new element for html.parser's (tag, attrs), recorded on the
+        root as goahead records the elements it creates."""
+        attrib: dict[str, str] | None = None  # None: the shared empty mapping
+        if attrs:
+            attrib = {}
+            for name, value in attrs:
+                if name not in attrib:
+                    attrib[name] = value if value is not None else ""
+        node = Node(tag, attrib)
+        root = self.root
+        root.elements.append(node)
+        bucket = root.index.get(tag)
+        if bucket is not None:
+            bucket.append(node)
+        return node
 
     # tokenizer ---------------------------------------------------------------
     def goahead(self, end: int) -> None:
@@ -446,6 +480,8 @@ class _TreeBuilder(HTMLParser):
         xml_mode = self.xml_mode
         startswith = rawdata.startswith
         cdata = self.cdata_elem
+        record = self.root.elements.append
+        bucket_of = self.root.index.get
         i = 0
         while i < n:
             if cdata is None:
@@ -509,6 +545,10 @@ class _TreeBuilder(HTMLParser):
                     if tail == ">" or tail == "/>":
                         tag = m.group(1).lower()
                         node = Node(tag, attrib)
+                        record(node)
+                        bucket = bucket_of(tag)
+                        if bucket is not None:
+                            bucket.append(node)
                         i = k
                         if tail == "/>":
                             top = stack[-1]
@@ -581,7 +621,7 @@ class _TreeBuilder(HTMLParser):
     # html.parser callbacks (the rare constructs above) -----------------------
     def handle_starttag(self, tag: str, attrs) -> None:
         if self.xml_mode:
-            node = Node(tag, self._attrs_to_dict(attrs))
+            node = self._element(tag, attrs)
             self._top().append(node)
             self.stack.append(node)
             return
@@ -590,14 +630,13 @@ class _TreeBuilder(HTMLParser):
         implied = _IMPLIED_CLOSE.get(tag)
         if implied is not None:
             self._close_implied(*implied)
-        node = Node(tag, self._attrs_to_dict(attrs))
+        node = self._element(tag, attrs)
         self._top().append(node)
         if tag not in VOID_ELEMENTS:
             self.stack.append(node)
 
     def handle_startendtag(self, tag: str, attrs) -> None:
-        node = Node(tag, self._attrs_to_dict(attrs))
-        self._top().append(node)
+        self._top().append(self._element(tag, attrs))
 
     def handle_endtag(self, tag: str) -> None:
         if tag in VOID_ELEMENTS and not self.xml_mode:
@@ -626,7 +665,7 @@ class _TreeBuilder(HTMLParser):
 
 
 def parse_html(text: str, keep_raw_text: bool = False,
-               xml_mode: bool = False) -> Node:
+               xml_mode: bool = False) -> Document:
     """Parse an HTML string into a mini-DOM; raises ParseError on
     unrecoverable parser failures (rare — html.parser is lenient).
     ``keep_raw_text=True`` retains script/style text nodes (JSON-LD

@@ -131,8 +131,8 @@ def extract_one(html: bytes | None, lang: str | None, url: str,
 def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
                     t0: float, markdown: bool) -> dict[str, Any]:
     # metadata BEFORE cleaning (cleaner strips <meta>-adjacent structure);
-    # all getters read from ONE tree walk (metadata_index) — ~20 separate
-    # full-document traversals otherwise, ~11% of extraction time
+    # all getters read the index the tree builder filled while parsing
+    # (metadata_index), so the metadata phase walks no tree
     idx = metadata_index(root)
     title = get_title(idx)
     meta_description = get_meta_description(idx)
@@ -162,7 +162,8 @@ def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
         lang_fallback = True
 
     clean_document(root)
-    top_node = calculate_best_node(root, effective_lang)
+    seen: list = []  # scoring's <p> and <a>, for the top node's readers
+    top_node = calculate_best_node(root, effective_lang, seen)
     cleaned_text = ""
     markdown_text: str | None = None
     links: list[str] = []
@@ -175,13 +176,13 @@ def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
         # keep priority, per the check_known_schemas-first order.
         if top_image is None:
             top_image = score_top_node_image(top_node, url)
-        top_node = post_cleanup(top_node, effective_lang)
+        top_node = post_cleanup(top_node, effective_lang, seen)
         # A16-ext: anchors surviving the cleaner + post-cleanup — must
         # read BEFORE the formatter, which drop_tag()s every <a>; this
         # is the cleaned-top-node snapshot (goose-family Article.links
         # semantics), so an anchor in a paragraph the FORMATTER later
         # drops (<3 stopwords / negative score) still appears here
-        links = extract_links(top_node, url)
+        links = extract_links(top_node, url, seen)
         # markdown renders BEFORE get_formatted_text: the flat formatter
         # drop_tag()s every <a>/<b>/<i> in place, destroying the
         # structure markdown preserves

@@ -12,13 +12,17 @@ Candidate enumeration and the A9 link-density fold of every candidate
 share one tree walk (:func:`_link_walk`). ``calculate_best_node`` caches
 each candidate's stopword count and link-density decision on the node
 (``Node.swc``, ``Node.link_dense``); post_cleanup reads them back for the
-same, still unchanged paragraphs instead of rescanning them.
+same, still unchanged paragraphs instead of rescanning them. It also
+fills the caller's ``seen`` list with the <p> it scored and the <a> its
+walk met, so the sibling baseline and ``extract_links`` read the top
+node's share of those instead of walking the top node.
 """
 
 from __future__ import annotations
 
 from gooselite import constants as C
-from gooselite.minidom import TEXT, Node, new_element, remove_all
+from gooselite.minidom import (TEXT, Node, new_element, owner_document,
+                               remove_all)
 from gooselite.text import (get_stopword_count, stopword_count_fast,
                             stopword_counter)
 
@@ -35,7 +39,7 @@ def _is_dense(words: int, links: int, link_words: int) -> bool:
 
 def is_highlink_density(node: Node, lang: str | None = None) -> bool:
     """A9 for one node: the totals of one :func:`_link_walk` over it."""
-    _, _, links, link_words = _link_walk(node, ())
+    _, _, links, link_words, _ = _link_walk(node, ())
     return bool(links) and _is_dense(len(node.raw_text().split()), links,
                                      link_words)
 
@@ -95,10 +99,11 @@ def _precompute_boostable(candidates: list[Node],
 
 
 def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
-        list[Node], dict[Node, tuple[int, int, int]], int, int]:
+        list[Node], dict[Node, tuple[int, int, int]], int, int, list[Node]]:
     """One walk below ``root``: the nodes tagged ``tags`` (per tag group,
     each in document order — A7's candidate order), the A9 link fold of
-    each that has an <a> below it, and the fold's totals for ``root``.
+    each that has an <a> below it, the fold's totals for ``root``, and
+    every <a> below ``root`` in document order.
 
     The fold is (n_links, Σ words × <a>-depth, <a>-depth at the node).
     Word counts are additive over text nodes (the join space never merges
@@ -111,6 +116,7 @@ def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
     Σ − depth × W."""
     buckets: dict[str, list[Node]] = {t: [] for t in tags}
     links: dict[Node, tuple[int, int, int]] = {}
+    anchors: list[Node] = []
     exits: list[Node] = []
     marks: list[tuple[int, int, int]] = []
     n_a = a_words = depth = 0
@@ -134,6 +140,7 @@ def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
                     a_words += len(node.text.split()) * depth
             elif node.tag == "a":
                 n_a += 1
+                anchors.append(node)
             else:
                 bucket = buckets.get(node.tag)
                 if bucket is not None:
@@ -142,6 +149,7 @@ def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
         tag = node.tag
         if tag == "a":
             n_a += 1
+            anchors.append(node)
             depth += 1
             exits.append(node)
             push_end(None)
@@ -156,13 +164,16 @@ def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
     out: list[Node] = []
     for t in tags:
         out.extend(buckets[t])
-    return out, links, n_a, a_words
+    return out, links, n_a, a_words, anchors
 
 
-def calculate_best_node(root: Node, lang: str | None) -> Node | None:
+def calculate_best_node(root: Node, lang: str | None,
+                        seen: list[Node]) -> Node | None:
     """A7–A12: enumerate candidates, score, propagate to parents and
-    grandparents, return argmax parent (first-in-document-order tie-break)."""
-    candidates, links, _, _ = _link_walk(root, C.CANDIDATE_TAGS)
+    grandparents, return argmax parent (first-in-document-order tie-break).
+    ``seen`` receives the <p> candidates that scored (above the stopword
+    floor, not link-dense), then every <a>, each in document order."""
+    candidates, links, _, _, anchors = _link_walk(root, C.CANDIDATE_TAGS)
 
     # stopword counts and link-density decisions cached ON the node
     # (Node.swc, Node.link_dense): the sibling-baseline pass (A13) re-reads
@@ -188,6 +199,9 @@ def calculate_best_node(root: Node, lang: str | None) -> Node | None:
         else:
             node.link_dense = None
 
+    # CANDIDATE_TAGS puts every <p> first, in document order
+    seen.extend(n for n in nodes_with_text if n.tag == "p")
+    seen.extend(anchors)
     boostable = _precompute_boostable(nodes_with_text, lang)
 
     nodes_number = len(nodes_with_text)
@@ -237,28 +251,21 @@ def calculate_best_node(root: Node, lang: str | None) -> Node | None:
     return top_node
 
 
-def _get_siblings_baseline_score(top_node: Node, lang: str | None) -> float:
-    """A13 baseline: mean stopword score of top_node's qualifying <p>."""
-    base = 100000.0
-    paragraphs_number = 0
-    paragraphs_score = 0.0
-    for node in top_node.get_elements_by_tag("p"):
-        cnt = node.swc
-        if cnt is None:
-            cnt = stopword_count_fast(node.raw_text(), lang)
-            node.swc = cnt
-        if cnt > C.CANDIDATE_MIN_STOPWORDS and not _link_dense(node):
-            paragraphs_number += 1
-            paragraphs_score += cnt
-    if paragraphs_number > 0:
-        base = paragraphs_score / paragraphs_number
-    return base
+def _get_siblings_baseline_score(top_node: Node, seen: list[Node]) -> float:
+    """A13 baseline: mean stopword score of top_node's qualifying <p>
+    (above the stopword floor, not link-dense). Those are the <p> that
+    calculate_best_node put in ``seen``, with their counts cached on them,
+    and the tree is unchanged since."""
+    counts = [p.swc for p in top_node.descendants_in(seen, "p")]
+    return sum(counts) / len(counts) if counts else 100000.0
 
 
-def _get_siblings_content(sibling: Node, baseline_score: float, lang: str | None) -> list[Node]:
+def _get_siblings_content(sibling: Node, baseline_score: float,
+                          lang: str | None, made: list[Node]) -> list[Node]:
     """A13: content a previous sibling contributes — the sibling itself when
     it is a non-empty <p>, else fresh <p> nodes for each qualifying
-    descendant paragraph (score > 0.30 × baseline, not link-dense)."""
+    descendant paragraph (score > 0.30 × baseline, not link-dense), each
+    also appended to ``made``."""
     if sibling.tag == "p" and sibling.get_text():
         return [sibling]
     out: list[Node] = []
@@ -270,13 +277,18 @@ def _get_siblings_content(sibling: Node, baseline_score: float, lang: str | None
         threshold = baseline_score * C.SIBLING_SCORE_MULTIPLIER
         if threshold < stats.stop_word_count and not _link_dense(para):
             out.append(new_element("p", text=text))
+    made.extend(out)
     return out
 
 
-def add_siblings(top_node: Node, lang: str | None) -> Node:
-    baseline_score = _get_siblings_baseline_score(top_node, lang)
+def add_siblings(top_node: Node, lang: str | None,
+                 seen: list[Node]) -> Node:
+    baseline_score = _get_siblings_baseline_score(top_node, seen)
+    # the new <p> go on the document's element list, for dispose
+    doc = owner_document(top_node)
+    made = doc.elements if doc is not None else []
     for sibling in top_node.previous_siblings():
-        for p in _get_siblings_content(sibling, baseline_score, lang):
+        for p in _get_siblings_content(sibling, baseline_score, lang, made):
             p.detach()
             top_node.insert(0, p)
     return top_node
@@ -300,10 +312,12 @@ def _is_nodescore_threshold_met(top_node: Node, e: Node) -> bool:
     return True
 
 
-def post_cleanup(top_node: Node, lang: str | None) -> Node:
+def post_cleanup(top_node: Node, lang: str | None,
+                 seen: list[Node]) -> Node:
     """A13 + A14: absorb qualifying previous-sibling paragraphs, then prune
-    non-<p> children that are link-dense / para-less tables / low-scored."""
-    node = add_siblings(top_node, lang)
+    non-<p> children that are link-dense / para-less tables / low-scored.
+    ``seen``: what calculate_best_node put in its own."""
+    node = add_siblings(top_node, lang, seen)
     for e in list(node.children):
         if not e.is_element or e.tag == "p":
             continue

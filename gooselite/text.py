@@ -36,9 +36,14 @@ def inner_trim(value: str) -> str:
     str.split() with no separator splits on the same Unicode whitespace
     class as \\s+ for str patterns (incl. \\xa0) and drops leading/trailing
     runs — identical output to the regex, ~3× faster on the hot path.
+    ' ' is the only whitespace character that str.isprintable() accepts,
+    so a printable string with no double space has no run to collapse:
+    only a leading or trailing space to strip.
     """
     if not value:
         return ""
+    if "  " not in value and value.isprintable():
+        return value.strip()
     return " ".join(value.split())
 
 

@@ -70,7 +70,7 @@ ARTICLE = """
 
 def test_top_node_selection_and_scores():
     root = _clean(ARTICLE)
-    top = calculate_best_node(root, "en")
+    top = calculate_best_node(root, "en", [])
     assert top is not None
     assert top.attrib.get("class") == "art"
     assert top.score and top.score > 0
@@ -78,8 +78,9 @@ def test_top_node_selection_and_scores():
 
 def test_sibling_absorption_prepends():
     root = _clean(ARTICLE)
-    top = calculate_best_node(root, "en")
-    top = post_cleanup(top, "en")
+    seen = []
+    top = calculate_best_node(root, "en", seen)
+    top = post_cleanup(top, "en", seen)
     text = get_formatted_text(top, "en")
     paras = text.split("\n\n")
     assert paras[0].startswith("And so it was")
@@ -88,7 +89,7 @@ def test_sibling_absorption_prepends():
 
 def test_no_candidates_returns_none():
     root = _clean("<body><div><a href='x'>only links</a></div></body>")
-    assert calculate_best_node(root, "en") is None
+    assert calculate_best_node(root, "en", []) is None
 
 
 def test_formatter_removes_fewword_paragraphs():
@@ -100,8 +101,9 @@ def test_formatter_removes_fewword_paragraphs():
     </div></body>
     """
     root = _clean(html)
-    top = calculate_best_node(root, "en")
-    top = post_cleanup(top, "en")
+    seen = []
+    top = calculate_best_node(root, "en", seen)
+    top = post_cleanup(top, "en", seen)
     text = get_formatted_text(top, "en")
     assert "short nothing" not in text
     assert len(text.split("\n\n")) == 2
@@ -116,7 +118,8 @@ def test_formatter_drop_tags_keep_text():
     </div></body>
     """
     root = _clean(html)
-    top = calculate_best_node(root, "en")
-    top = post_cleanup(top, "en")
+    seen = []
+    top = calculate_best_node(root, "en", seen)
+    top = post_cleanup(top, "en", seen)
     text = get_formatted_text(top, "en")
     assert "Once upon a time there was a quick brown fox" in text

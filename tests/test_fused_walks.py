@@ -5,8 +5,10 @@ as a test-local oracle: the sequential cleaner passes, the per-candidate
 ``<a>`` scan of link density, the flag-list boost precompute, the
 per-node score updates, the per-paragraph rescans of post_cleanup and
 the three formatter walks, all with the per-node ``drop_tag`` splice.
-Trees, scores, top nodes and output text must be equal on every sf0.001
-and sf0.01 fixture page, on generated tag soup, and on the edge cases
+The top node's <p> and <a> that post_cleanup and ``extract_links`` read
+from scoring's ``seen`` list are checked against a walk of the top node.
+Trees, scores, top nodes, anchors and output text must be equal on every
+sf0.001 and sf0.01 fixture page, on generated tag soup, and on the edge cases
 where the canonical pass order decides the outcome.
 """
 
@@ -316,7 +318,9 @@ def _stages(text, lang, new):
         # the fold against the per-candidate scan, before scoring mutates
         for node in root.get_elements_by_tag(*C.CANDIDATE_TAGS, "div"):
             assert is_highlink_density(node) == _old_highlink_density(node)
-    top = (calculate_best_node if new else _old_best_node)(root, lang)
+    seen = []  # calculate_best_node's <p> and <a>, for post_cleanup
+    top = (calculate_best_node(root, lang, seen) if new
+           else _old_best_node(root, lang))
     out += [_tree(root), top is not None and _path(top)]
     if top is None:
         return out
@@ -324,8 +328,11 @@ def _stages(text, lang, new):
         for node in root.get_elements_by_tag(*C.CANDIDATE_TAGS):
             if node.link_dense is not None:
                 assert node.link_dense == _old_highlink_density(node)
-    top = (post_cleanup if new else _old_post_cleanup)(top, lang)
-    out += [_tree(root), _path(top)]
+    top = (post_cleanup(top, lang, seen) if new
+           else _old_post_cleanup(top, lang))
+    anchors = (top.descendants_in(seen, "a") if new
+               else top.get_elements_by_tag("a"))  # extract_links reads
+    out += [_tree(root), _path(top), [_path(a) for a in anchors]]
     txt = (get_formatted_text if new else _old_format)(top, lang)
     return out + [_tree(root), txt]
 
@@ -511,7 +518,7 @@ def test_nested_links_fold():
     root = parse_html(f"<div><a href=u><p>{_WORDY} <a href=v>one</a></p></a></div>")
     p = root.get_elements_by_tag("p")[0]
     assert not _old_highlink_density(p) and not is_highlink_density(p)
-    calculate_best_node(root, "en")
+    calculate_best_node(root, "en", [])
     assert p.link_dense is False
 
 

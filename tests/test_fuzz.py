@@ -39,9 +39,9 @@ def test_arbitrary_text_never_raises(text, lang):
 _TAGS = ["p", "div", "span", "td", "table", "script", "style", "a", "b",
          "li", "ul", "br", "img", "iframe", "h1", "title", "meta", "html"]
 
-
-@settings(max_examples=150, deadline=None)
-@given(st.lists(
+# The HTML strategies: any text, and tag soup over _TAGS.
+HTML_TEXT = st.text(max_size=2048)
+MANGLED_MARKUP = st.lists(
     st.one_of(
         st.sampled_from(_TAGS).map(lambda t: f"<{t}>"),
         st.sampled_from(_TAGS).map(lambda t: f"</{t}>"),
@@ -49,10 +49,13 @@ _TAGS = ["p", "div", "span", "td", "table", "script", "style", "a", "b",
         st.text(alphabet="abc <>&;\"'=!-", max_size=24),
     ),
     max_size=60,
-))
-def test_mangled_markup_never_raises(parts):
-    html = "".join(parts).encode()
-    _check(extract_one(html, "en", "https://fuzz.example/z"))
+).map("".join)
+
+
+@settings(max_examples=150, deadline=None)
+@given(MANGLED_MARKUP)
+def test_mangled_markup_never_raises(html):
+    _check(extract_one(html.encode(), "en", "https://fuzz.example/z"))
 
 
 @settings(max_examples=60, deadline=None)
@@ -65,7 +68,7 @@ def test_truncation_never_raises(cut):
 
 
 @settings(max_examples=150, deadline=None)
-@given(st.text(max_size=2048))
+@given(HTML_TEXT)
 def test_parse_html_returns_tree_or_parse_error(text):
     for mode in ({}, {"keep_raw_text": True}, {"xml_mode": True}):
         try:
