@@ -53,8 +53,8 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     window COUNT() OVER (PARTITION BY hash) would pin a 10^9-occurrence
     paragraph onto one reducer; (3) reassembly is one doc_id-keyed
     aggregate (collect_list of the surviving (pos, para) structs,
-    array_sort, concat_ws), zero-exchange under the bucketed-by-url
-    layout (goose_spark/job.py)."""
+    array_sort, concat_ws), zero-exchange on a table bucketed by
+    doc_id."""
     d = load(spark, sf_dir, "documents")
     pg = F.expr(_PG_SYNTH.format(S="STRING"))
     paras = d.select(
@@ -166,9 +166,8 @@ FROM base b JOIN thresh t USING (lang)
 
 def q_crawl_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One full-outer sort-merge join keyed on the document id (url at
-    deploy); under the bucketed-by-url layout (goose_spark/job.py) both
-    snapshots are co-bucketed and the join is zero-exchange — the 100 TB
-    shape for diffing consecutive crawls."""
+    deploy); with both snapshots co-bucketed by url the join is
+    zero-exchange — the 100 TB shape for diffing consecutive crawls."""
     d = load(spark, sf_dir, "documents")
     snap_a = (
         d.filter(F.col("doc_id") % 7 != 0)

@@ -401,7 +401,7 @@ FROM s
 # row set.
 #
 # Scale shape: every inter-stage join is doc_id-keyed (co-partitioned
-# under the bucketed layout → zero-exchange), and each gate's own
+# on a table bucketed by doc_id → zero-exchange), and each gate's own
 # shuffle discipline is unchanged from its standalone probe. The funnel
 # adds counts, not new corpus-sized shuffles.
 FUNNEL_STAGES = ("all", "gopher", "repetition", "exact_dedup",

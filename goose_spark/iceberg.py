@@ -4,8 +4,9 @@ code, not prose").
 
 No Iceberg jar ships in this sandbox, so `goose_spark.job` stands the
 tables in as partitioned Parquet; THIS module is the artifact a cluster
-deploy executes instead: the DDL for the four tables and the MERGE that
-replaces the checkpoint append. `tests/test_iceberg_semantics.py` proves
+deploy executes instead: the DDL for the four tables, rendered from
+``goose_spark.schema`` so it cannot drift from the job, and the MERGE
+that replaces the checkpoint append. `tests/test_iceberg_semantics.py` proves
 the MERGE's idempotence contract (re-committing the same url range is a
 no-op) by executing the standard-SQL WHEN-NOT-MATCHED rewrite under
 DuckDB — same semantics, engine-checkable here.
@@ -13,8 +14,10 @@ DuckDB — same semantics, engine-checkable here.
 Scale rationale (BASELINE.json north_star: "resumable from checkpoint by
 anti-joining completed url ranges"):
 
-* pages + checkpoint share ``bucket(1024, url)`` so the resume anti-join
-  is storage-partitioned — shuffle-free at 10^12 rows.
+* resume broadcasts one run's url history, up to 512 MB on storage
+  (``job.CHECKPOINT_BROADCAST_MAX_BYTES``; ~57M urls at the measured
+  8.9 MB per 1M urls). Past it resume still completes, with a
+  sort-merge anti-join after the url shuffle.
 * the MERGE makes checkpoint commits idempotent under task retries and
   speculative execution: a replayed commit of the same (run_id, url)
   range inserts nothing, so a crash between the extracted write and the
@@ -25,46 +28,16 @@ anti-joining completed url ranges"):
 
 from __future__ import annotations
 
-DDL = {
-    "pages": """
-CREATE TABLE IF NOT EXISTS {catalog}.pages (
-  url      string NOT NULL,
-  warc_ts  timestamp,
-  html     binary,
-  text     string,
-  lang     string
-) USING iceberg
-PARTITIONED BY (days(warc_ts), bucket(1024, url))
-""",
-    "extracted": """
-CREATE TABLE IF NOT EXISTS {catalog}.extracted (
-  url string NOT NULL, warc_ts timestamp, lang string, title string,
-  cleaned_text string, meta_description string, meta_keywords string,
-  meta_lang string, canonical_link string, domain string,
-  tags array<string>, movies array<string>, publish_date string,
-  top_image string, authors array<string>, opengraph array<string>,
-  links array<string>, markdown string,
-  lang_fallback boolean, status string, err string,
-  bytes_in bigint, parse_ms double, partition_id int, bucket int
-) USING iceberg
-PARTITIONED BY (bucket)
-""",
-    "metrics": """
-CREATE TABLE IF NOT EXISTS {catalog}.metrics (
-  run_id string, partition_id int, bucket int, lang string,
-  docs_in bigint, ok bigint, parse_failures bigint,
-  empty_extractions bigint, decode_errors bigint, timeouts bigint,
-  lang_fallbacks bigint, bytes_processed bigint, wall_ms double,
-  started_ts timestamp
-) USING iceberg
-""",
-    "checkpoint": """
-CREATE TABLE IF NOT EXISTS {catalog}.checkpoint (
-  run_id string NOT NULL, url string NOT NULL, completed_ts timestamp
-) USING iceberg
-PARTITIONED BY (bucket(1024, url))
-""",
-}
+from goose_spark.schema import CHECKPOINT, EXTRACTED, METRICS, PAGES
+
+# The job's tables in creation order: name, schema.py schema, Iceberg
+# partition spec (None: unpartitioned).
+TABLES = (
+    ("pages", PAGES, "days(warc_ts), bucket(1024, url)"),
+    ("extracted", EXTRACTED, "bucket"),
+    ("metrics", METRICS, None),
+    ("checkpoint", CHECKPOINT, "bucket(1024, url)"),
+)
 
 # The B21 commit as Iceberg executes it: WHEN NOT MATCHED INSERT keyed on
 # (run_id, url). A retried/replayed commit of the same batch matches every
@@ -120,6 +93,17 @@ def checkpoint_merge_portable_sql(checkpoint_table: str = "checkpoint",
 
 
 def ddl_sql(catalog: str = "prod.cc") -> list[str]:
-    """All four table DDLs for the deployment catalog, creation order."""
-    return [DDL[t].format(catalog=catalog)
-            for t in ("pages", "extracted", "metrics", "checkpoint")]
+    """All four table DDLs for the deployment catalog, creation order:
+    one line per schema.py field, NOT NULL where the field is not
+    nullable."""
+    stmts = []
+    for table, schema, partitioned_by in TABLES:
+        cols = ",\n".join(
+            f"  {f.name} {f.dataType.simpleString()}"
+            + ("" if f.nullable else " NOT NULL") for f in schema.fields)
+        stmt = (f"CREATE TABLE IF NOT EXISTS {catalog}.{table} (\n{cols}\n)"
+                " USING iceberg")
+        if partitioned_by:
+            stmt += f"\nPARTITIONED BY ({partitioned_by})"
+        stmts.append(stmt)
+    return stmts

@@ -1,5 +1,5 @@
-"""The extraction job: scan → partition by url → dedupe → resume anti-join
-→ extract → write → metrics → checkpoint (SURVEY.md §3.2).
+"""The extraction job: scan → resume anti-join → partition by url →
+dedupe → extract → write → metrics → checkpoint (SURVEY.md §3.2).
 
 Scale design (the part that must hold at 10^12 documents / 1000 executors):
 
@@ -7,15 +7,17 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
   plan selects only (url, warc_ts, html, lang) before the UDF and lets
   Catalyst push the projection into the Parquet/Iceberg scan — never
   ``select('*')`` (SURVEY.md §4.2).
+* **Completed urls leave at the scan (B4).** Resume broadcasts the
+  run's url history and anti-joins it into the scan, so the url shuffle,
+  the dedupe window and the UDF see only the urls still to do. Past
+  ``CHECKPOINT_BROADCAST_MAX_BYTES`` on storage (~57M urls) the forced
+  broadcast is skipped and the anti-join runs after the url shuffle as a
+  sort-merge join that reuses its partitioning; that is the job's limit.
 * **One url partitioning, before the dedupe (B11, B15).** The scan is
   hash-partitioned by url once, at the UDF width (P = cores). The dedupe
-  window's clustering by url is then met without a second exchange, the
-  broadcast resume anti-join (B4) keeps the partitioning, and the UDF
-  runs on those same P partitions: the fat html column shuffles once. A
-  table written by ``write_pages_bucketed`` with P buckets already has
-  this partitioning, so its pre-UDF plan has no exchange at all (both
-  plan-asserted in tests/test_plans.py). The checkpoint side of the
-  anti-join is small per run → broadcast.
+  window's clustering by url is then met without a second exchange, and
+  the UDF runs on those same P partitions: the fat html column shuffles
+  once (plan-asserted in tests/test_plans.py).
 * **Size-bucketed Arrow batches (B16).** Spark 4.1 supports
   ``spark.sql.execution.arrow.maxBytesPerBatch`` — one giant document
   rides in its own small batch while 2 KB pages batch by the hundreds;
@@ -113,45 +115,16 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
 
 
 def dedupe_latest(pages: DataFrame) -> DataFrame:
-    """B11: keep the latest warc_ts row per url (deterministic tie-break on
-    the full ordering)."""
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc_nulls_last())
+    """B11: keep the latest warc_ts row per url. Rows that tie on
+    (url, warc_ts), null warc_ts included, are ordered by html and then
+    lang, so the kept row does not depend on the input's order."""
+    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc_nulls_last(),
+                                          "html", "lang")
     return (
         pages.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def write_pages_bucketed(pages: DataFrame, table: str,
-                         buckets: int | None = None) -> None:
-    """The cluster-scale table layout named in the module docstring: a
-    url-bucketed (and in-bucket url-sorted) pages table. Reading it back,
-    the scan reports HashPartitioning(url) so the dedupe window — and the
-    checkpoint anti-join when both sides share the layout — run with ZERO
-    exchange: the fat html column never shuffles (plan-asserted in
-    tests/test_plans.py). ``buckets`` defaults to the UDF width
-    (defaultParallelism, as in ``prepare``): the scan then already has the
-    partitioning ``prepare`` asks for and the whole pre-UDF plan is
-    exchange-free; any other count costs the one url shuffle a plain
-    table pays. At 10^12 rows this is the Iceberg `bucket(url, N)`
-    partition transform (goose_spark/iceberg.py DDL); locally it is
-    Spark's native bucketed parquet via saveAsTable."""
-    if buckets is None:
-        buckets = pages.sparkSession.sparkContext.defaultParallelism
-    (pages.write.mode("overwrite")
-     .bucketBy(buckets, "url").sortBy("url").saveAsTable(table))
-
-
-def resume_filter_bucketed(spark: SparkSession, pages_table: str,
-                           checkpoint_table: str) -> DataFrame:
-    """`resume_filter` at 10^12-row scale: when the checkpoint history
-    has grown past broadcast size, co-bucket BOTH sides by url (same
-    bucket count) and the LEFT ANTI join runs as a zero-exchange
-    SortMergeJoin — neither the fat pages side nor the full url history
-    ever shuffles (plan-asserted in tests/test_plans.py)."""
-    return spark.table(pages_table).join(
-        spark.table(checkpoint_table).select("url"), "url", "left_anti")
 
 
 def resume_filter(pages: DataFrame, checkpoint: DataFrame | None,
@@ -171,9 +144,7 @@ def resume_filter(pages: DataFrame, checkpoint: DataFrame | None,
     outright): the join falls back to Catalyst/AQE strategy choice.
     This stays a pure plan-builder — the size decision belongs to the
     caller, who can see the checkpoint's storage (run_job_df checks its
-    bytes on storage; no extra Spark action per resume). At 10^12-row
-    checkpoint scale use resume_filter_bucketed instead (co-bucketed
-    zero-exchange SMJ; no broadcast, no re-shuffle of the fat side)."""
+    bytes on storage; no extra Spark action per resume)."""
     if checkpoint is None:
         return pages
     ckpt = checkpoint
@@ -200,9 +171,9 @@ def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     """B15: the one placement rule — hash-partition by url into
     `partitions` slots, row → pmod(hash(url), P) (Spark's murmur3 hash
     partitioning). ``prepare`` applies it to the scan before the dedupe,
-    so the same partitioning serves the window, the anti-join and the UDF
-    stage; giant-HTML skew cannot be rebalanced by AQE inside the UDF
-    stage, so the spread is explicit.
+    so the same partitioning serves the window and the UDF stage;
+    giant-HTML skew cannot be rebalanced by AQE inside the UDF stage, so
+    the spread is explicit.
 
     The width is one Python task per core. Every Python task costs
     ~0.23-0.28 s of worker CPU before the UDF runs (pyspark.worker's
@@ -245,14 +216,19 @@ def extract(pages: DataFrame, doc_timeout_s: float | None = None) -> DataFrame:
 def prepare(pages: DataFrame, checkpoint: DataFrame | None = None,
             run_id: str | None = None, broadcast: bool = True,
             partitions: int | None = None) -> DataFrame:
-    """partition by url → dedupe → resume filter (the pre-extraction
-    relational shell). partitions: the UDF width (default
-    defaultParallelism, one Python task per core; see
-    salted_repartition)."""
+    """resume filter → partition by url → dedupe (the pre-extraction
+    relational shell). The broadcast anti-join runs on the scan, so
+    completed urls never reach the url shuffle. With broadcast=False it
+    runs after the dedupe instead: there its sort-merge join reuses the
+    url partitioning, where below it the html would shuffle twice.
+    partitions: the UDF width (default defaultParallelism, one Python
+    task per core; see salted_repartition)."""
     if partitions is None:
         partitions = pages.sparkSession.sparkContext.defaultParallelism
+    if broadcast:
+        pages, checkpoint = resume_filter(pages, checkpoint, run_id), None
     return resume_filter(dedupe_latest(salted_repartition(pages, partitions)),
-                         checkpoint, run_id, broadcast=broadcast)
+                         checkpoint, run_id, broadcast=False)
 
 
 def metrics_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
@@ -325,15 +301,14 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
         # checkpoint whose parquet exceeds the cap would OOM the forced
         # broadcast build (urls compress ~3-5x on disk → ~512 MB of files
         # is already a multi-GB build side). Fall back to Catalyst/AQE
-        # choice; at 10^12-row history the answer is resume_filter_bucketed.
+        # choice after the url shuffle (prepare).
         ckpt_bytes = fs.getContentSummary(jpath).getLength()
         if ckpt_bytes > CHECKPOINT_BROADCAST_MAX_BYTES:
             import warnings
 
             warnings.warn(
                 f"run_job_df: checkpoint is {ckpt_bytes >> 20} MB on "
-                "disk; skipping the forced broadcast (consider the "
-                "url-bucketed layout + resume_filter_bucketed)",
+                "disk; skipping the forced broadcast",
                 stacklevel=2)
             broadcast_ckpt = False
 

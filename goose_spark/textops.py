@@ -1057,7 +1057,7 @@ GROUP BY lang, pct
 # aggregate on the md5 key with map-side combine, (3) the >1 keys join
 # back on the SAME key (AQE skew-splits a hot boilerplate key), (4) the
 # interval merge is a doc_id-keyed window over (doc_id, off) int pairs —
-# zero-exchange under the bucketed-by-url layout (goose_spark/job.py).
+# zero-exchange on a table bucketed by doc_id.
 DUP_SPAN_K = 16  # span window length in tokens (sf corpus: ~835 dup keys)
 
 
@@ -1226,7 +1226,7 @@ def q_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: spans aggregate to a per-doc interval array (tiny — spans,
     not text), LEFT-join back to the corpus on doc_id (zero-exchange
-    under the bucketed layout), and the token drop is a pure codegen
+    on a table bucketed by doc_id), and the token drop is a pure codegen
     higher-order filter (transform index + exists over the interval
     array) — no token-level join, no second corpus shuffle."""
     spans = q_substring_dedup(spark, sf_dir)

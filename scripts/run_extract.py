@@ -29,7 +29,7 @@ def main() -> None:
     ap.add_argument("--iceberg", action="store_true")
     ap.add_argument("--init-ddl", action="store_true",
                     help="with --iceberg: CREATE TABLE IF NOT EXISTS the "
-                         "four job tables (goose_spark.iceberg.DDL) in the "
+                         "four job tables (goose_spark.iceberg.ddl_sql) in the "
                          "catalog derived from --src before running")
     args = ap.parse_args()
 

@@ -84,7 +84,7 @@ def test_rendered_statements_shape():
     ddls = ddl_sql("prod.cc")
     assert len(ddls) == 4
     assert any("bucket(1024, url)" in d and "checkpoint" in d for d in ddls)
-    # pages and checkpoint share the url bucketing (shuffle-free anti-join)
+    # pages and checkpoint share the url bucketing
     assert sum("bucket(1024, url)" in d for d in ddls) == 2
 
 
@@ -111,10 +111,10 @@ def test_extracted_ddl_matches_schema():
     lagged this way)."""
     import re
 
-    from goose_spark.iceberg import DDL
     from goose_spark.schema import EXTRACTED
 
-    body = DDL["extracted"].split("(", 1)[1].rsplit(")", 1)[0]
+    ddl = next(d for d in ddl_sql() if ".extracted (" in d)
+    body = ddl.split("(", 1)[1].rsplit(")", 1)[0]
     ddl_cols = [c.strip().split()[0]
                 for c in re.split(r",(?![^<]*>)", body) if c.strip()]
     assert ddl_cols == [f.name for f in EXTRACTED.fields]

@@ -1,7 +1,6 @@
 """Physical-plan shape tests (SURVEY.md §4.2): pushdown, pruning, and join
 strategy must actually reach the scan — not just produce correct rows."""
 
-import os
 from contextlib import contextmanager
 
 import pytest
@@ -155,37 +154,6 @@ def test_warc_extract_single_python_stage(spark):
     assert "Exchange" not in tree        # linear chain, zero shuffles
 
 
-def test_bucketed_dedupe_has_no_exchange(spark, tmp_path):
-    """The module-docstring scale fix made real: on the url-bucketed
-    layout the dedupe window needs NO exchange — the fat html column
-    never shuffles — while the same plan on plain parquet does."""
-    from pyspark.sql import functions as F
-
-    pages = spark.range(300).select(
-        F.concat(F.lit("https://u/"), (F.col("id") % 100).cast("string"))
-        .alias("url"),
-        F.col("id").cast("timestamp").alias("warc_ts"),
-        F.sha2(F.col("id").cast("string"), 256).cast("binary").alias("html"))
-
-    plain_path = str(tmp_path / "plain")
-    pages.write.parquet(plain_path)
-    plain = _plan(J.dedupe_latest(spark.read.parquet(plain_path)))
-    assert "Exchange" in plain.split("\n\n")[0]
-
-    J.write_pages_bucketed(pages, "pages_bucketed_t", buckets=4)
-    try:
-        out = J.dedupe_latest(spark.table("pages_bucketed_t"))
-        tree = _plan(out).split("\n\n")[0]
-        assert "Exchange" not in tree
-        # identical semantics: same surviving (url, warc_ts) set
-        a = sorted((r.url, r.warc_ts) for r in out.collect())
-        b = sorted((r.url, r.warc_ts)
-                   for r in J.dedupe_latest(spark.read.parquet(plain_path)).collect())
-        assert a == b
-    finally:
-        spark.sql("DROP TABLE IF EXISTS pages_bucketed_t")
-
-
 @contextmanager
 def _no_broadcast(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -194,32 +162,6 @@ def _no_broadcast(spark):
         yield
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_bucketed_anti_join_has_no_exchange(spark):
-    """resume_filter at history scale: both sides co-bucketed by url →
-    zero-exchange SortMergeJoin LeftAnti (broadcast no longer possible
-    when the checkpoint history is 10^12 urls)."""
-    from pyspark.sql import functions as F
-
-    pages = spark.range(200).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        F.sha2(F.col("id").cast("string"), 256).alias("html"))
-    ckpt = spark.range(120).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"))
-    J.write_pages_bucketed(pages, "pages_aj_t", buckets=4)
-    (ckpt.write.mode("overwrite")
-     .bucketBy(4, "url").sortBy("url").saveAsTable("ckpt_aj_t"))
-    try:
-        with _no_broadcast(spark):
-            out = J.resume_filter_bucketed(spark, "pages_aj_t", "ckpt_aj_t")
-            tree = _plan(out).split("\n\n")[0]
-            assert "Exchange" not in tree
-            assert "SortMergeJoin LeftAnti" in tree
-            assert out.count() == 80
-    finally:
-        spark.sql("DROP TABLE IF EXISTS pages_aj_t")
-        spark.sql("DROP TABLE IF EXISTS ckpt_aj_t")
 
 
 def _shuffles_before_udf(df) -> list[str]:
@@ -247,54 +189,48 @@ def test_flagship_shuffles_html_once(spark, sf0001_fixtures):
     assert len(exchanges) == 1, exchanges
 
 
-def test_bucketed_flagship_pre_udf_is_exchange_free(spark, tmp_path):
-    """VERDICT r4 item 6: the FLAGSHIP path (dedupe → resume → extract),
-    not just the side APIs, must run with zero non-broadcast Exchange
-    before the UDF on a source bucketed by url at the UDF width — the
-    bucketed scan already has the partitioning prepare() asks for, so the
-    fat html column never shuffles. Any other bucket count costs the one
-    url shuffle a plain table pays, and both give the plain rows."""
+def _one_url_checkpoint(spark):
     import datetime
-    import shutil
 
-    pages = spark.range(300).select(
-        F.concat(F.lit("https://u/"), (F.col("id") % 100).cast("string"))
-        .alias("url"),
-        (F.col("id") % 7).cast("timestamp").alias("warc_ts"),
-        F.concat(F.lit("<html><body><p>"),
-                 F.sha2(F.col("id").cast("string"), 256),
-                 F.lit(" the and of to in a for</p></body></html>"))
-        .cast("binary").alias("html"),
-        F.lit("en").alias("lang"))
-    ckpt = spark.createDataFrame(
+    return spark.createDataFrame(
         [("r0", "https://u/1", datetime.datetime(2025, 1, 1))],
         "run_id string, url string, completed_ts timestamp")
 
-    plain_path = str(tmp_path / "plain")
-    pages.write.parquet(plain_path)
-    plain = J.extract(J.prepare(spark.read.parquet(plain_path), ckpt,
-                                partitions=4))
-    want = sorted((r.url, r.cleaned_text) for r in plain.collect())
-    assert len(want) == 99
 
-    warehouse = str(spark.conf.get("spark.sql.warehouse.dir"))
-    for buckets, n_exchanges in ((4, 0), (8, 1)):
-        # a crashed earlier session can leave the managed-table dir
-        # behind (LOCATION_ALREADY_EXISTS) even when the metastore entry
-        # is gone
-        spark.sql("DROP TABLE IF EXISTS pages_flag_t")
-        shutil.rmtree(os.path.join(warehouse.removeprefix("file:"),
-                                   "pages_flag_t"), ignore_errors=True)
-        J.write_pages_bucketed(pages, "pages_flag_t", buckets=buckets)
-        try:
-            out = J.extract(J.prepare(spark.table("pages_flag_t"), ckpt,
-                                      partitions=4))
-            exchanges = _shuffles_before_udf(out)
-            assert len(exchanges) == n_exchanges, (buckets, exchanges)
-            got = sorted((r.url, r.cleaned_text) for r in out.collect())
-            assert got == want, buckets
-        finally:
-            spark.sql("DROP TABLE IF EXISTS pages_flag_t")
+def test_broadcast_resume_drops_urls_before_the_shuffle(spark,
+                                                        sf0001_fixtures):
+    """With a small checkpoint the broadcast anti-join runs on the scan:
+    the LeftAnti join sits below the url Exchange, so completed urls'
+    html is never shuffled or sorted."""
+    pages_path, _ = sf0001_fixtures
+    out = J.extract(J.prepare(J.read_pages(spark, pages_path),
+                              _one_url_checkpoint(spark)))
+    tree = _plan(out).split("\n\n")[0].splitlines()
+    anti = [i for i, ln in enumerate(tree) if "LeftAnti" in ln]
+    shuffle = [i for i, ln in enumerate(tree)
+               if "Exchange" in ln and "BroadcastExchange" not in ln]
+    assert len(anti) == 1 and len(shuffle) == 1, tree
+    # the formatted tree lists children after their parent
+    assert anti[0] > shuffle[0], tree
+
+
+def test_unbroadcast_resume_shuffles_html_once(spark, sf0001_fixtures):
+    """Past the broadcast cap the anti-join is a sort-merge join after the
+    url shuffle and reuses its partitioning: only the checkpoint's urls
+    shuffle for it, and the html shuffles once."""
+    pages_path, _ = sf0001_fixtures
+    with _no_broadcast(spark):
+        out = J.extract(J.prepare(J.read_pages(spark, pages_path),
+                                  _one_url_checkpoint(spark),
+                                  broadcast=False))
+        sections = _plan(out).split("\n\n")
+    assert "SortMergeJoin LeftAnti" in sections[0]
+    # a details section: "(n) Exchange", then its "Input [...]" columns
+    details = [sec.strip().splitlines() for sec in sections[1:]
+               if sec.strip()]
+    html_shuffles = [d for d in details
+                     if d[0].endswith(") Exchange") and "html#" in d[1]]
+    assert len(html_shuffles) == 1, html_shuffles
 
 
 def test_decontaminate_broadcasts_eval_set(spark):

@@ -2,6 +2,7 @@
 gooselite.extract_one oracle, byte-identical, under multiple partitionings
 and Arrow batch sizes; plus the job-level resume contract."""
 
+import datetime
 import os
 import pathlib
 import shutil
@@ -107,6 +108,34 @@ def test_dedupe_keeps_latest(spark, sf0001_fixtures):
     n = deduped.count()
     assert n < raw  # fixture contains ~5% dup rows
     assert deduped.groupBy("url").count().filter("count > 1").count() == 0
+    # each kept row carries its url's latest warc_ts
+    latest = pages.groupBy("url").agg(F.max("warc_ts").alias("latest"))
+    kept = deduped.join(latest, "url")
+    assert kept.count() == n
+    stale = ~F.col("warc_ts").eqNullSafe(F.col("latest"))
+    assert kept.filter(stale).count() == 0
+
+
+def test_dedupe_tie_break_ignores_input_order(spark):
+    """Rows that tie on (url, warc_ts), a null warc_ts included, keep the
+    same row in either input order, so a resumed re-run extracts the page
+    the first run did."""
+    ts = datetime.datetime(2025, 1, 1)
+    rows = [("https://t/a", ts, bytearray(b"<p>one</p>"), "en"),
+            ("https://t/a", ts, bytearray(b"<p>two</p>"), "en"),
+            ("https://t/b", None, bytearray(b"<p>three</p>"), "en"),
+            ("https://t/b", None, bytearray(b"<p>four</p>"), "en"),
+            ("https://t/c", ts, bytearray(b"<p>same</p>"), "en"),
+            ("https://t/c", ts, bytearray(b"<p>same</p>"), "fr")]
+
+    def kept(op, rows):
+        df = spark.createDataFrame(
+            rows, "url string, warc_ts timestamp, html binary, lang string")
+        return sorted((r.url, bytes(r.html), r.lang)
+                      for r in op(df.coalesce(1)).collect())
+
+    for op in (J.dedupe_latest, lambda df: J.prepare(df, partitions=4)):
+        assert kept(op, rows) == kept(op, rows[::-1])
 
 
 @pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
