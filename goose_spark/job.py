@@ -93,17 +93,21 @@ def local_session(cpus: int) -> SparkSession:
     the worker malloc knobs before the JVM starts, ``local[cpus]``, a
     driver heap sized from RAM, one shuffle partition per core (at least
     8), no UI, and UTC, so string→timestamp casts do not follow the
-    host's zone (the DuckDB oracles read naive timestamps). A cluster
-    sets its own master and heap, so scripts/run_extract.py builds a
-    plain session instead."""
+    host's zone (the DuckDB oracles read naive timestamps). It comes
+    with :func:`configure_session` applied, so a scan that runs before
+    the first ``extract()`` already has the capped Parquet reader batch.
+    A cluster sets its own master and heap, so scripts/run_extract.py
+    builds a plain session instead."""
     apply_malloc_env()
     ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**20
-    return (SparkSession.builder.master(f"local[{cpus}]")
-            .config("spark.driver.memory", f"{driver_heap_mb(ram_mb)}m")
-            .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+             .config("spark.driver.memory", f"{driver_heap_mb(ram_mb)}m")
+             .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+             .config("spark.sql.session.timeZone", "UTC")
+             .config("spark.ui.enabled", "false")
+             .getOrCreate())
+    configure_session(spark)
+    return spark
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

@@ -14,7 +14,8 @@ one goes with it, as in the sequential passes. It yields the doomed set,
 the drop-tag groups in canonical ``a, b, strong, i, br`` order, and the
 elements that survive both, in pre-order. Unwrapping never adds, removes
 or reorders the other elements, so that list is the pre-order of the
-tree step 4 sees, and step 4 folds over it bottom-up.
+tree step 4 sees, and step 4 folds stopword counts over it bottom-up, in
+every language.
 
 THIS stage defines the bytes the north rule compares (BASELINE.json:14
 "byte-identical extracted text per url"); see SURVEY.md §7.5.
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 from gooselite import constants as C
 from gooselite.minidom import TEXT, Node, drop_all, remove_all
-from gooselite.text import count_is_additive, stopword_counter
+from gooselite.text import stopword_counter
 
 _DROP_ORDER = ("a",) + C.FORMATTER_DROP_TAGS
 _MEDIA = frozenset(("object", "embed"))
@@ -74,69 +75,37 @@ def _remove_fewwords_paragraphs(ordered: list[Node], lang: str | None) -> None:
     of X precede X in reversed pre-order), so this is implemented as one
     memoized bottom-up pass with a single batched removal — identical
     decisions, O(n) instead of the naive O(n²) on skew-tail pages.
+    The stopword count is additive over space-joined parts in every
+    language (:func:`gooselite.text.stopword_counter`), so each element's
+    count is the sum of its kept children's counts and its own text
+    nodes' counts, not a recount of the concatenated text: O(total text)
+    instead of O(depth × text) on deep pages.
     """
+    live_cnt: dict[Node, int] = {}  # kept element → count after pruning
     # kept element → live object/embed below it, stored when > 0 (Nodes
     # hash by identity)
     live_media: dict[Node, int] = {}
     doomed: list[Node] = []
     count = stopword_counter(lang)
-    if count_is_additive(lang):
-        # Default counter: count(" ".join(parts)) == sum(count(part))
-        # exactly (whitespace split; the joining space never merges
-        # tokens), so fold CHILD COUNTS bottom-up instead of recounting
-        # each ancestor's full concatenation — O(total text) instead of
-        # O(depth × text) on deep/fat pages, identical decisions.
-        live_cnt: dict[Node, int] = {}  # kept element → count after pruning
-        for e in reversed(ordered):
-            cnt = 0
-            desc_media = 0
-            for child in e.children:
-                if child.is_element:
-                    ccnt = live_cnt.get(child)
-                    if ccnt is None:  # child was doomed
-                        continue
-                    cnt += ccnt
-                    if live_media:
-                        desc_media += live_media.get(child, 0)
-                elif child.tag == TEXT and child.text:
-                    cnt += count(child.text)
-            # exemption counts object/embed DESCENDANTS only (canonical
-            # getElementsByTag semantics — an element never matches itself)
-            if cnt < C.FORMATTER_MIN_PARA_STOPWORDS and desc_media == 0:
-                doomed.append(e)
-            else:
-                live_cnt[e] = cnt
-                media = desc_media + (e.tag in _MEDIA)
-                if media:
-                    live_media[e] = media
-        remove_all(doomed)
-        return
-    # Segmenting counters (zh/ja/th/ko/ar): additivity across part
-    # boundaries is not asserted, so keep the exact concatenation.
-    live_text: dict[Node, str] = {}     # kept element → text after pruning below it
     for e in reversed(ordered):
-        parts: list[str] = []
+        cnt = 0
         desc_media = 0
         for child in e.children:
             if child.is_element:
-                ctext = live_text.get(child)
-                if ctext is None:  # child was doomed (empty-kept stores "")
+                ccnt = live_cnt.get(child)
+                if ccnt is None:  # child was doomed
                     continue
-                parts.append(ctext)
-                desc_media += live_media.get(child, 0)
+                cnt += ccnt
+                if live_media:
+                    desc_media += live_media.get(child, 0)
             elif child.tag == TEXT and child.text:
-                parts.append(child.text)
-        # raw (untrimmed) concatenation: live_text only feeds stopword
-        # counting, which is whitespace-insensitive; the displayed text is
-        # recomputed from the pruned tree in _convert_to_text
-        text = " ".join(parts)
-        cnt = count(text)
+                cnt += count(child.text)
         # exemption counts object/embed DESCENDANTS only (canonical
         # getElementsByTag semantics — an element never matches itself)
         if cnt < C.FORMATTER_MIN_PARA_STOPWORDS and desc_media == 0:
             doomed.append(e)
         else:
-            live_text[e] = text
+            live_cnt[e] = cnt
             media = desc_media + (e.tag in _MEDIA)
             if media:
                 live_media[e] = media

@@ -2,7 +2,7 @@
 selection, sibling absorption, post-cleanup (SURVEY.md A7–A14).
 
 [canon: goose/extractors.py ContentExtractor — calculate_best_node,
-is_boostable, is_highlink_density, update_score/update_node_count,
+the boost check, is_highlink_density, update_score/update_node_count,
 add_siblings/get_siblings_content/get_siblings_score, post_cleanup,
 is_table_and_no_para_exist, is_nodescore_threshold_met]. Reference checkout
 empty at build time (SURVEY.md §0.1); every constant sourced from
@@ -23,8 +23,7 @@ from __future__ import annotations
 from gooselite import constants as C
 from gooselite.minidom import (TEXT, Node, new_element, owner_document,
                                remove_all)
-from gooselite.text import (get_stopword_count, stopword_count_fast,
-                            stopword_counter)
+from gooselite.text import stopword_counter
 
 
 def _is_dense(words: int, links: int, link_words: int) -> bool:
@@ -37,7 +36,7 @@ def _is_dense(words: int, links: int, link_words: int) -> bool:
     return (link_words / words) * links >= C.LINK_DENSITY_THRESHOLD
 
 
-def is_highlink_density(node: Node, lang: str | None = None) -> bool:
+def is_highlink_density(node: Node) -> bool:
     """A9 for one node: the totals of one :func:`_link_walk` over it."""
     _, _, links, link_words, _ = _link_walk(node, ())
     return bool(links) and _is_dense(len(node.raw_text().split()), links,
@@ -49,36 +48,17 @@ def _link_dense(node: Node) -> bool:
     return is_highlink_density(node) if dense is None else dense
 
 
-def is_boostable(node: Node, lang: str | None) -> bool:
-    """A10 precondition: a previous sibling <p> within BOOST_SIBLING_REACH
-    steps has stopword_count > BOOST_MIN_STOPWORDS.
-    [canon: extractors.py is_boostable — walk_siblings = previous siblings].
-
-    Decision rule (equivalent, nearest-first): True iff one of the nearest
-    BOOST_SIBLING_REACH previous <p> siblings has stopword_count >
-    BOOST_MIN_STOPWORDS. Kept for unit-level parity tests; the hot path in
-    :func:`calculate_best_node` precomputes this in one left-to-right pass
-    per parent (the naive per-candidate sibling walk is O(n²) on
-    Common-Crawl skew-tail pages with 10^5 sibling paragraphs).
-    """
-    steps_away = 0
-    for sib in node.previous_siblings():
-        if sib.tag == "p":
-            if steps_away >= C.BOOST_SIBLING_REACH:
-                return False
-            stats = get_stopword_count(sib.get_text(), lang)
-            if stats.stop_word_count > C.BOOST_MIN_STOPWORDS:
-                return True
-            steps_away += 1
-    return False
-
-
-def _precompute_boostable(candidates: list[Node],
-                          lang: str | None) -> set[Node]:
+def _precompute_boostable(candidates: list[Node]) -> set[Node]:
     """One pass per parent: for each candidate, whether any of its nearest
     BOOST_SIBLING_REACH previous <p> siblings has stopword_count >
-    BOOST_MIN_STOPWORDS (same decision as :func:`is_boostable`); returns
-    the boostable ones. Nodes hash by identity."""
+    BOOST_MIN_STOPWORDS; returns the boostable ones. Nodes hash by
+    identity. Every <p> below calculate_best_node's root is a candidate,
+    so its count is already on it (``Node.swc``).
+
+    [canon: extractors.py boost check, SURVEY.md A10 — walk_siblings =
+    previous siblings], nearest-first in one left-to-right pass: the
+    per-candidate sibling walk is O(n²) on Common-Crawl skew-tail pages
+    with 10^5 sibling paragraphs."""
     wanted = set(candidates)
     parents = dict.fromkeys(n.parent for n in candidates)
     parents.pop(None, None)
@@ -90,11 +70,7 @@ def _precompute_boostable(candidates: list[Node],
             if gap < reach and child in wanted:
                 out.add(child)
             if child.tag == "p":
-                cnt = child.swc
-                if cnt is None:
-                    cnt = stopword_count_fast(child.raw_text(), lang)
-                    child.swc = cnt
-                gap = 0 if cnt > C.BOOST_MIN_STOPWORDS else gap + 1
+                gap = 0 if child.swc > C.BOOST_MIN_STOPWORDS else gap + 1
     return out
 
 
@@ -202,7 +178,7 @@ def calculate_best_node(root: Node, lang: str | None,
     # CANDIDATE_TAGS puts every <p> first, in document order
     seen.extend(n for n in nodes_with_text if n.tag == "p")
     seen.extend(anchors)
-    boostable = _precompute_boostable(nodes_with_text, lang)
+    boostable = _precompute_boostable(nodes_with_text)
 
     nodes_number = len(nodes_with_text)
     negative_scoring = 0.0
@@ -269,13 +245,13 @@ def _get_siblings_content(sibling: Node, baseline_score: float,
     if sibling.tag == "p" and sibling.get_text():
         return [sibling]
     out: list[Node] = []
+    count = stopword_counter(lang)
+    threshold = baseline_score * C.SIBLING_SCORE_MULTIPLIER
     for para in sibling.get_elements_by_tag("p"):
         text = para.get_text()
         if not text:
             continue
-        stats = get_stopword_count(text, lang)
-        threshold = baseline_score * C.SIBLING_SCORE_MULTIPLIER
-        if threshold < stats.stop_word_count and not _link_dense(para):
+        if threshold < count(text) and not _link_dense(para):
             out.append(new_element("p", text=text))
     made.extend(out)
     return out

@@ -267,7 +267,7 @@ _RU = """
 # as tokenizer VARIANTS, not plain space-split tables: Chinese is
 # dictionary-segmented, Korean matches agglutinated particles by
 # substring, Arabic strips harakat diacritics first. The matching logic
-# lives in gooselite.text (_zh_count/_ko_count/_ar_count); the tables
+# is gooselite.text.stopword_counter's per-language variants; the tables
 # here are the classic public stopword cores for each language.
 
 # Chinese: 1–2 char function words. The greedy maximal-match segmenter in
@@ -313,7 +313,7 @@ _AR = """
 
 # Japanese: particles + function words (hiragana-heavy, plus common
 # kanji function words); matched by greedy maximal-match over kana/kanji
-# runs in gooselite.text (_ja_count) — Japanese has no word spaces, and
+# runs in gooselite.text.stopword_counter — Japanese has no word spaces, and
 # particles are the highest-frequency tokens, so max-match over this
 # table reproduces the stopword COUNT without a full lexicon, exactly
 # like the zh variant.
@@ -330,7 +330,7 @@ _JA = """
 """
 
 # Thai: no word spaces; common function words matched by greedy
-# maximal-match over Thai-script runs (_th_count in gooselite.text).
+# maximal-match over Thai-script runs (gooselite.text.stopword_counter).
 _TH = """
 ที่ การ ใน เป็น และ ของ มี ได้ ว่า ให้ จะ ไม่ ก็ แต่ หรือ เมื่อ จาก โดย
 กับ ความ นี้ ไป มา ต้อง ถึง อยู่ อย่าง ซึ่ง แล้ว ทำ เรา คือ ยัง ด้วย

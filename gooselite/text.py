@@ -1,14 +1,16 @@
-"""Text utilities: innerTrim, WordStats, StopWords.
+"""Text utilities: innerTrim and the per-language stopword count.
 
-[canon: goose/text.py — StopWords.get_stopword_count, innerTrim]
-(SURVEY.md A8; reference checkout empty at build time, SURVEY.md §0.1).
+[canon: goose/text.py — StopWords, innerTrim] (SURVEY.md A8; reference
+checkout empty at build time, SURVEY.md §0.1). Goose's per-block stats
+also carry the block's word count and stopword list; scoring and
+formatting read only the stopword count, so :func:`stopword_counter`
+returns just that.
 """
 
 from __future__ import annotations
 
 import re
 import string
-from dataclasses import dataclass, field
 from functools import lru_cache
 from typing import Callable
 
@@ -51,15 +53,6 @@ def remove_punctuation(content: str) -> str:
     return content.translate(_PUNCT_TABLE)
 
 
-@dataclass
-class WordStats:
-    """Per-text-block statistics [canon: goose/text.py WordStats]."""
-
-    word_count: int = 0
-    stop_word_count: int = 0
-    stop_words: list[str] = field(default_factory=list)
-
-
 def resolve_language(lang: str | None) -> str:
     """Map a lang code to a shipped stopword table; unknown/None → 'en'.
 
@@ -99,25 +92,31 @@ _JA_RUN_RE = re.compile(r"[぀-ゟ゠-ヿ㐀-䶿一-鿿]+")
 _TH_RUN_RE = re.compile(r"[฀-๿]+")
 _AR_DIACRITICS_RE = re.compile("[\u0640\u064b-\u065f\u0670]")  # tatweel + harakat only (NOT digits/letters)
 
-_ZH_TABLE = STOPWORDS.get("zh", frozenset())
-_ZH_MAX_LEN = max((len(w) for w in _ZH_TABLE), default=1)
+# per-table longest-entry bounds for the max-match variants, computed once
+_MAX_LEN = {c: max((len(w) for w in STOPWORDS.get(c, ())), default=1)
+            for c in ("zh", "ja", "th")}
 
 
-def _zh_match_run(run: str, table, out: list[str] | None,
-                  max_len: int = _ZH_MAX_LEN) -> int:
+def _token_count(content: str, table) -> int:
+    """The default counter: strip punctuation, lowercase, split on
+    whitespace, count the tokens in the table."""
+    n = 0
+    for w in content.translate(_PUNCT_TABLE).lower().split():
+        if w in table:
+            n += 1
+    return n
+
+
+def _zh_match_run(run: str, table, max_len: int) -> int:
     """Greedy maximal-match of table entries over one space-less-script
-    run; returns the match count, appending matched words to `out` when
-    given. Shared by the zh / ja / th variants."""
+    run; returns the match count. Shared by the zh / ja / th variants."""
     n = 0
     i = 0
     L = len(run)
     while i < L:
         for w in range(min(max_len, L - i), 0, -1):
-            cand = run[i:i + w]
-            if cand in table:
+            if run[i:i + w] in table:
                 n += 1
-                if out is not None:
-                    out.append(cand)
                 i += w
                 break
         else:
@@ -125,120 +124,78 @@ def _zh_match_run(run: str, table, out: list[str] | None,
     return n
 
 
-def _run_count(content: str, table, run_re, max_len: int,
-               out: list[str] | None = None) -> tuple[int, int]:
-    """(word_count, stop_word_count) for space-less scripts: script runs
-    are max-match segmented; interleaved other-script spans use the
-    default tokenizer. word_count = run chars + other whitespace tokens."""
-    wc = 0
+def _run_count(content: str, table, run_re, max_len: int) -> int:
+    """Stopword count for space-less scripts: script runs are max-match
+    segmented; interleaved other-script spans use the default tokenizer."""
     sc = 0
     pos = 0
     for m in run_re.finditer(content):
-        gap = content[pos:m.start()]
-        if gap:
-            for tok in gap.translate(_PUNCT_TABLE).lower().split():
-                wc += 1
-                if tok in table:
-                    sc += 1
-                    if out is not None:
-                        out.append(tok)
-        run = m.group()
-        wc += len(run)
-        sc += _zh_match_run(run, table, out, max_len)
+        sc += (_token_count(content[pos:m.start()], table)
+               + _zh_match_run(m.group(), table, max_len))
         pos = m.end()
-    tail = content[pos:]
-    if tail:
-        for tok in tail.translate(_PUNCT_TABLE).lower().split():
-            wc += 1
-            if tok in table:
-                sc += 1
-                if out is not None:
-                    out.append(tok)
-    return wc, sc
+    return sc + _token_count(content[pos:], table)
 
 
-# per-table longest-entry bounds for the max-match variants, computed once
-_MAX_LEN = {c: max((len(w) for w in STOPWORDS.get(c, ())), default=1)
-            for c in ("zh", "ja", "th")}
+def _zh_count(content, table):
+    return _run_count(content, table, _CJK_RUN_RE, _MAX_LEN["zh"])
 
 
-def _zh_count(content, table, out=None):
-    return _run_count(content, table, _CJK_RUN_RE, _MAX_LEN["zh"], out)
-
-
-def _ja_count(content, table, out=None):
+def _ja_count(content, table):
     """Japanese [canon: goose StopWordsKorean-style variant dispatch; no
     StopWordsJapanese in the lineage — this is an extension]: kana+kanji
     runs max-match segmented against the ja particle table."""
-    return _run_count(content, table, _JA_RUN_RE, _MAX_LEN["ja"], out)
+    return _run_count(content, table, _JA_RUN_RE, _MAX_LEN["ja"])
 
 
-def _th_count(content, table, out=None):
+def _th_count(content, table):
     """Thai (extension): Thai-script runs max-match segmented."""
-    return _run_count(content, table, _TH_RUN_RE, _MAX_LEN["th"], out)
+    return _run_count(content, table, _TH_RUN_RE, _MAX_LEN["th"])
 
 
-def _ko_count(content: str, table, out: list[str] | None = None) -> tuple[int, int]:
-    """(word_count, stop_word_count) for Korean: space-split tokens, a
-    token is a stopword hit when any table entry occurs inside it
+def _ko_count(content: str, table) -> int:
+    """Stopword count for Korean: space-split tokens, a token is a
+    stopword hit when any table entry occurs inside it
     [canon: StopWordsKorean's `stop_word in word` containment]."""
-    toks = content.translate(_PUNCT_TABLE).lower().split()
     sc = 0
-    for tok in toks:
+    for tok in content.translate(_PUNCT_TABLE).lower().split():
         for sw in table:
             if sw in tok:
                 sc += 1
-                if out is not None:
-                    out.append(tok)
                 break
-    return len(toks), sc
+    return sc
 
 
-def _ar_count(content: str, table, out: list[str] | None = None) -> tuple[int, int]:
-    """(word_count, stop_word_count) for Arabic: strip tatweel + harakat,
-    then exact token match [canon: StopWordsArabic.remove_harakat]."""
-    normalized = _AR_DIACRITICS_RE.sub("", content)
-    toks = normalized.translate(_PUNCT_TABLE).lower().split()
-    sc = 0
-    for tok in toks:
-        if tok in table:
-            sc += 1
-            if out is not None:
-                out.append(tok)
-    return len(toks), sc
+def _ar_count(content: str, table) -> int:
+    """Stopword count for Arabic: strip tatweel + harakat, then exact
+    token match [canon: StopWordsArabic.remove_harakat]."""
+    return _token_count(_AR_DIACRITICS_RE.sub("", content), table)
 
 
 _VARIANT_COUNTERS = {"zh": _zh_count, "ko": _ko_count, "ar": _ar_count,
                      "ja": _ja_count, "th": _th_count}
 
 
-def count_is_additive(lang: str | None) -> bool:
-    """True when stopword_count_fast is exactly additive over
-    space-joined parts: count(" ".join(parts)) == sum(count(p)).
-
-    Holds for the default counter (whitespace split — a joining space
-    can never merge tokens); NOT asserted for the zh/ja/th/ko/ar
-    segmentation variants, whose substring/n-gram matching could in
-    principle see across a boundary. Callers use this to fold counts
-    bottom-up instead of recounting concatenations (formatter hot path).
-    """
-    return resolve_language(lang) not in _VARIANT_COUNTERS
+_CACHEABLE_LEN = 2048
 
 
-def stopword_count_fast(content: str, lang: str | None = None) -> int:
-    """``get_stopword_count(content, lang).stop_word_count`` without the
-    inner-trim and overlap-list allocations — the scoring hot path only
-    ever consumes the count.
+def stopword_counter(lang: str | None) -> Callable[[str], int]:
+    """The stopword count of a text block in ``lang``, resolved once: the
+    scoring and formatter loops count up to 10^5 texts per page.
 
-    Equivalence proof: the canonical path inner-trims, strips punctuation,
-    lowercases, splits on single spaces, and counts tokens in the table.
-    Punctuation stripping never touches whitespace, and the table holds no
-    empty string, so counting over ``raw.translate().lower().split()``
-    (whitespace split, empties dropped, trim-insensitive) yields the
-    identical count; byte-identity is guarded by the golden suite.
-    zh/ko/ar dispatch to their segmentation variants (module header).
+    [canon: goose/text.py StopWords] inner-trims, strips
+    punctuation, lowercases, splits on single spaces and counts the
+    tokens in the table. Punctuation stripping never touches whitespace
+    and no table holds the empty string, so counting over a whitespace
+    split of the raw text gives the same count without the trim.
+    zh/ja/th/ko/ar dispatch to their segmentation variants (above).
 
-    Memoized on (content, resolved code): scoring + sibling absorption +
+    Every counter is additive over space-joined parts:
+    ``count(" ".join(parts)) == sum(map(count, parts))``. Each tokenizes
+    on whitespace or on script runs, and a space ends both, so the
+    formatter folds child counts bottom-up instead of recounting
+    concatenations (guarded for every table in tests/test_text.py).
+
+    Memoized on (content, resolved code): scoring, sibling absorption and
     the formatter re-count the same node texts, and boilerplate chrome
     repeats across pages — measured 87% repeated calls on the fixture
     corpus, and the count is a pure function of its arguments. Only
@@ -248,15 +205,6 @@ def stopword_count_fast(content: str, lang: str | None = None) -> int:
     worker for no hit-rate. 65536 entries × ≤2 KiB keys bounds the
     cache at ~128 MiB worst case, in practice far less.
     """
-    return stopword_counter(lang)(content)
-
-
-_CACHEABLE_LEN = 2048
-
-
-def stopword_counter(lang: str | None) -> Callable[[str], int]:
-    """:func:`stopword_count_fast` for one language, resolved once: the
-    scoring and formatter loops count up to 10^5 texts per page."""
     code = resolve_language(lang)
     cached, uncached = _stopword_count_cached, _stopword_count_uncached
 
@@ -275,42 +223,4 @@ def _stopword_count_cached(content: str, code: str) -> int:
 
 
 def _stopword_count_uncached(content: str, code: str) -> int:
-    table = STOPWORDS[code]
-    variant = _VARIANT_COUNTERS.get(code)
-    if variant is not None:
-        return variant(content, table)[1]
-    n = 0
-    for w in content.translate(_PUNCT_TABLE).lower().split():
-        if w in table:
-            n += 1
-    return n
-
-
-def get_stopword_count(content: str, lang: str | None = None) -> WordStats:
-    """Count tokens of `content` present in the per-language stopword set.
-
-    [canon: goose/text.py StopWords.get_stopword_count]: strip punctuation,
-    split on single spaces (content is expected inner-trimmed), membership
-    test lowercased. zh/ko/ar dispatch to their segmentation variants.
-    """
-    ws = WordStats()
-    if not content:
-        return ws
-    code = resolve_language(lang)
-    table = STOPWORDS[code]
-    variant = _VARIANT_COUNTERS.get(code)
-    if variant is not None:
-        overlapping: list[str] = []
-        wc, sc = variant(content, table, overlapping)
-        ws.word_count = wc
-        ws.stop_word_count = sc
-        ws.stop_words = overlapping
-        return ws
-    # lowercase the whole block once (lower() never adds/removes spaces,
-    # so the split is unchanged) instead of per candidate word
-    candidate_words = remove_punctuation(content).lower().split(" ")
-    overlapping = [w for w in candidate_words if w in table]
-    ws.word_count = len(candidate_words)
-    ws.stop_word_count = len(overlapping)
-    ws.stop_words = overlapping
-    return ws
+    return _VARIANT_COUNTERS.get(code, _token_count)(content, STOPWORDS[code])

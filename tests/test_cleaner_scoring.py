@@ -52,8 +52,8 @@ def test_link_density():
         " and plenty more text to dilute it well beyond the threshold</p></div>"
     )
     dense, sparse = root.get_elements_by_tag("p")
-    assert is_highlink_density(dense, "en")
-    assert not is_highlink_density(sparse, "en")
+    assert is_highlink_density(dense)
+    assert not is_highlink_density(sparse)
 
 
 ARTICLE = """

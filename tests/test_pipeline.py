@@ -412,11 +412,11 @@ def test_tr_el_bn_tables_resolve():
     """Space-delimited late-r4 tables: lang column resolves directly
     (no fallback) and stopword counting sees the function words."""
     from gooselite.stopwords_data import STOPWORDS
-    from gooselite.text import stopword_count_fast
+    from gooselite.text import stopword_counter
 
-    assert stopword_count_fast("bu bir kitap ve ben onu çok sevdim", "tr") >= 4
-    assert stopword_count_fast("και αυτό είναι ένα βιβλίο για μας", "el") >= 4
-    assert stopword_count_fast("এবং এই বই থেকে আমরা কিছু শিখি", "bn") >= 3
+    assert stopword_counter("tr")("bu bir kitap ve ben onu çok sevdim") >= 4
+    assert stopword_counter("el")("και αυτό είναι ένα βιβλίο για μας") >= 4
+    assert stopword_counter("bn")("এবং এই বই থেকে আমরা কিছু শিখি") >= 3
     for lang in ("hi", "bn", "tr", "el"):
         assert lang in STOPWORDS and len(STOPWORDS[lang]) >= 60
 
@@ -449,10 +449,10 @@ def test_new_fields_always_extracted():
 def test_danda_final_stopwords_counted():
     """Devanagari danda / Greek ano teleia are stripped like ASCII
     punctuation, so sentence-final function words match their tables."""
-    from gooselite.text import stopword_count_fast
+    from gooselite.text import stopword_counter
 
-    assert stopword_count_fast("वह घर में है।", "hi") == 3
-    assert stopword_count_fast("αυτό είναι εδώ· και", "el") == 4
+    assert stopword_counter("hi")("वह घर में है।") == 3
+    assert stopword_counter("el")("αυτό είναι εδώ· και") == 4
 
 
 SLOW_PAGE = (b"<html><body><div>"

@@ -5,8 +5,9 @@ Spark's vectorized reader fills 4096-row batches by default, so here one
 batch would hold all 2,000 pages (~416 MB of html) on heap and the JVM
 dies with OutOfMemoryError in ``OnHeapColumnVector.reserveInternal``.
 ``configure_session`` caps the reader batch at ``ARROW_MAX_RECORDS``
-rows. The JVM exits on that error, so the session runs in a child
-interpreter.
+rows, and ``local_session`` applies it: the child scans on a fresh
+session, before any ``extract()``. The JVM exits on that error, so the
+session runs in a child interpreter.
 """
 
 import pathlib
@@ -39,7 +40,6 @@ del filler, html, table
 
 J.driver_heap_mb = lambda mem_total_mb: 2048
 spark = J.local_session(2)
-J.configure_session(spark)
 row = (J.prepare(J.read_pages(spark, path), partitions=8)
        .agg(F.count(F.lit(1)).alias("rows"),
             F.sum(F.length("html")).alias("bytes"))

@@ -1,4 +1,23 @@
-from gooselite.text import get_stopword_count, inner_trim, resolve_language
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from gooselite.stopwords_data import STOPWORDS
+from gooselite.text import (inner_trim, remove_punctuation, resolve_language,
+                            stopword_counter)
+
+
+def _canonical_count(content, lang):
+    """Oracle: Goose's default stopword count. The caller's text is
+    inner-trimmed, punctuation is stripped, the text is split on single
+    spaces, and each lowercased token is looked up in the table."""
+    table = STOPWORDS[resolve_language(lang)]
+    words = remove_punctuation(inner_trim(content)).split(" ")
+    return sum(w.lower() in table for w in words)
+
+
+def _count(content, lang):
+    return stopword_counter(lang)(content)
 
 
 def test_inner_trim_collapses_all_whitespace():
@@ -8,23 +27,17 @@ def test_inner_trim_collapses_all_whitespace():
 
 
 def test_stopword_count_en():
-    ws = get_stopword_count("the quick brown fox is in the barn", "en")
-    assert ws.stop_word_count == 4  # the, is, in, the
-    assert ws.word_count == 8
-    assert ws.stop_words == ["the", "is", "in", "the"]
+    assert _count("the quick brown fox is in the barn", "en") == 4  # the, is, in, the
 
 
 def test_stopword_count_punctuation_stripped():
-    ws = get_stopword_count("The, quick. fox! is: here?", "en")
-    assert "the" in [w.lower() for w in ws.stop_words]
-    assert ws.stop_word_count == 3  # the, is, here... 'here' is in table
+    assert _count("The, quick. fox! is: here?", "en") == 3  # the, is, here
+    assert _count("The,", "en") == 1
 
 
 def test_stopword_count_lang_tables_differ():
-    de = get_stopword_count("und der die das hund", "de")
-    en = get_stopword_count("und der die das hund", "en")
-    assert de.stop_word_count == 4
-    assert en.stop_word_count == 0
+    assert _count("und der die das hund", "de") == 4
+    assert _count("und der die das hund", "en") == 0
 
 
 def test_resolve_language():
@@ -41,98 +54,103 @@ def test_resolve_language():
 
 
 def test_empty_text():
-    ws = get_stopword_count("", "en")
-    assert ws.word_count == 0 and ws.stop_word_count == 0
+    assert _count("", "en") == 0
+    assert _count("", "zh") == 0
 
 
 # --- Segmentation variants (A8: zh / ko / ar, r3) -----------------------
 
 def test_zh_greedy_max_match():
     # 没有 is one table entry — greedy max-match counts it once, not 没+有
-    ws = get_stopword_count("没有人知道这个故事的结局", "zh")
-    assert ws.stop_words == ["没有", "人", "知道", "这个", "的"]
-    assert ws.stop_word_count == 5
-    # word_count = CJK chars (12) for a pure-CJK run
-    assert ws.word_count == 12
+    assert _count("没有", "zh") == 1
+    # 没有 人 知道 这个 的
+    assert _count("没有人知道这个故事的结局", "zh") == 5
 
 
 def test_zh_mixed_script():
-    # latin spans tokenize by whitespace; CJK runs segment independently
-    ws = get_stopword_count("spark 是一个 engine 的框架", "zh")
-    assert "是" in ws.stop_words and "一个" in ws.stop_words and "的" in ws.stop_words
-    assert ws.stop_word_count == 3
+    # latin spans tokenize by whitespace; CJK runs segment independently:
+    # 是 一个 的
+    assert _count("spark 是一个 engine 的框架", "zh") == 3
 
 
 def test_ko_substring_particles():
     # particles agglutinate: 에서/를 occur INSIDE the tokens
-    ws = get_stopword_count("학교에서 공부를 했다", "ko")
-    assert ws.stop_word_count == 3
+    assert _count("학교에서 공부를 했다", "ko") == 3
 
 
 def test_ar_diacritics_stripped():
     # هَذَا matches table entry هذا after harakat strip; مِنْ matches من
-    ws = get_stopword_count("هَذَا كتاب مِنْ المكتبة", "ar")
-    assert ws.stop_word_count == 2
+    assert _count("هَذَا كتاب مِنْ المكتبة", "ar") == 2
 
 
 def test_ja_kana_kanji_max_match():
     # particles ride inside one kana+kanji run; これ/は/の/です are table
     # entries, greedy max-match finds them without a lexicon
-    ws = get_stopword_count("これは日本語のテストです", "ja")
-    assert "これ" in ws.stop_words and "は" in ws.stop_words
-    assert "の" in ws.stop_words and "です" in ws.stop_words
-    assert ws.stop_word_count >= 4
-    # word_count = run chars for a pure-Japanese run
-    assert ws.word_count == 12
+    assert _count("これは日本語のテストです", "ja") == 4
 
 
 def test_ja_mixed_script():
-    ws = get_stopword_count("spark は高速な engine です", "ja")
-    assert "は" in ws.stop_words and "です" in ws.stop_words
-    assert ws.stop_word_count >= 3  # は + な + です
+    assert _count("spark は高速な engine です", "ja") == 3  # は + な + です
 
 
 def test_th_max_match():
-    # ที่/การ/ใน/เรา/ใช้ are table entries inside unspaced Thai runs
-    ws = get_stopword_count("นี่คือการทดสอบที่เราใช้ในงาน", "th")
-    assert "การ" in ws.stop_words and "ที่" in ws.stop_words
-    assert "ใน" in ws.stop_words
-    assert ws.stop_word_count >= 4
+    # คือ/การ/ที่/เรา/ใช้/ใน are table entries inside unspaced Thai runs
+    assert _count("นี่คือการทดสอบที่เราใช้ในงาน", "th") == 6
 
 
 def test_variant_fast_path_agrees():
-    from gooselite.text import stopword_count_fast
-    for lang, text in (("zh", "没有人知道这个故事的结局"),
-                       ("ko", "학교에서 공부를 했다"),
-                       ("ar", "هَذَا كتاب مِنْ المكتبة"),
-                       ("ja", "これは日本語のテストです"),
-                       ("th", "นี่คือการทดสอบที่เราใช้ในงาน")):
-        assert (stopword_count_fast(text, lang)
-                == get_stopword_count(text, lang).stop_word_count)
+    """Each segmenting counter gives the default count of its text once
+    the text is split into words (particles apart, harakat stripped)."""
+    for lang, text, segmented in (
+            ("zh", "没有人知道这个故事的结局", "没有 人 知道 这个 故事 的 结局"),
+            ("ja", "これは日本語のテストです", "これ は 日本語 の テスト です"),
+            ("th", "นี่คือการทดสอบที่เราใช้ในงาน",
+             "นี่ คือ การ ทดสอบ ที่ เรา ใช้ ใน งาน"),
+            ("ko", "학교에서 공부를 했다", "학교 에서 공부 를 했다"),
+            ("ar", "هَذَا كتاب مِنْ المكتبة", "هذا كتاب من المكتبة")):
+        assert _count(text, lang) == _canonical_count(segmented, lang), lang
 
 
-def test_fewwords_additive_equals_concat_counts():
-    """The formatter's additive fast path must make the same decisions
-    as the canonical concatenate-then-count form: differential check on
-    the fixture corpus (non-segmenting langs route additive, zh/ja/th/
-    ko/ar route concat — both paths must emit identical bytes)."""
-    import pyarrow.parquet as pq
+# Fragments for the properties below: table words plus the characters
+# where tokenizers, punctuation stripping and lowercasing can go wrong —
+# danda, ano teleia, Greek capital sigma (final form on lower()), harakat
+# and tatweel, NBSP, ideographic and zero-width space, and text in the
+# segmented scripts.
+_NOISE = [".", ",", "!", "'", "-", "।", "॥", "·", ";", "Σ", "ΑΣ",
+          "\u064e", "\u0650", "\u0640", "\xa0", "\u3000", "\u200b", " ",
+          "  ", "\t", "\n", "İ", "x", "Fox", "人", "的", "の", "です",
+          "การ", "에서"]
+_DEFAULT_CODES = sorted(c for c in STOPWORDS
+                        if c not in ("zh", "ja", "th", "ko", "ar"))
 
-    from gooselite import extract_one
-    from gooselite import formatter as FM
-    from goose_spark.fixtures import ensure_pages
 
-    pages_path, _ = ensure_pages("/root/testdata/sf0.001")
-    rows = pq.read_table(pages_path).to_pylist()[:120]
+def _fragments(code):
+    return st.one_of(st.sampled_from(sorted(STOPWORDS[code])),
+                     st.sampled_from(_NOISE))
 
-    baseline = [extract_one(r["html"], r["lang"], r["url"])["cleaned_text"]
-                for r in rows]
 
-    orig = FM.count_is_additive
-    FM.count_is_additive = lambda lang: False  # force the concat path
-    try:
-        concat = [extract_one(r["html"], r["lang"], r["url"])["cleaned_text"]
-                  for r in rows]
-    finally:
-        FM.count_is_additive = orig
-    assert baseline == concat
+def _text(code):
+    return st.lists(_fragments(code), max_size=12).map("".join)
+
+
+@pytest.mark.parametrize("code", _DEFAULT_CODES)
+@settings(max_examples=60, deadline=None)
+@given(data=st.data())
+def test_default_counter_matches_canonical(code, data):
+    """The whitespace-split counter of the default languages equals
+    Goose's split-on-single-spaces count of the inner-trimmed text."""
+    text = data.draw(st.lists(st.one_of(_fragments(code), st.just(" ")),
+                              max_size=20).map("".join))
+    assert _count(text, code) == _canonical_count(text, code)
+
+
+@pytest.mark.parametrize("code", sorted(STOPWORDS))
+@settings(max_examples=60, deadline=None)
+@given(data=st.data())
+def test_count_is_additive_over_space_joined_parts(code, data):
+    """The formatter's fold rests on this: a joining space never merges
+    or splits a counted token, so the count of the space-joined parts is
+    the sum of the parts' counts, in every language."""
+    parts = data.draw(st.lists(_text(code), max_size=6))
+    count = stopword_counter(code)
+    assert count(" ".join(parts)) == sum(count(p) for p in parts)
