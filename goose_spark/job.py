@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from goose_spark.schema import EXTRACTED
+from goose_spark.schema import EXTRACTED, METRICS
 from goose_spark.udf import make_extract_batches
 from gooselite.pipeline import (STATUS_DECODE_ERROR, STATUS_EMPTY, STATUS_OK,
                                 STATUS_PARSE_ERROR, STATUS_TIMEOUT)
@@ -258,10 +258,7 @@ def metrics_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("started_ts", F.current_timestamp())
-        .select("run_id", "partition_id", "bucket", "lang", "docs_in", "ok",
-                "parse_failures", "empty_extractions", "decode_errors",
-                "timeouts", "lang_fallbacks", "bytes_processed", "wall_ms",
-                "started_ts")
+        .select(*METRICS.fieldNames())
     )
 
 

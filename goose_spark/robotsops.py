@@ -112,8 +112,6 @@ FROM documents
 # the protocol), so the build side is a host-keyed aggregate whose
 # groups are protocol-bounded, and the parse is one linear mapInPandas
 # pass over (host, xml) rows — no corpus shuffle in either direction.
-_SITEMAP_FREQS = ("daily", "weekly", "monthly", "yearly")
-
 _SITEMAP_XML = (
     "concat('<?xml version=\"1.0\" encoding=\"UTF-8\"?>"
     "<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">',"

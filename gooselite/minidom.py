@@ -94,25 +94,6 @@ class Node:
         child.parent = self
         self.children.append(child)
 
-    def insert(self, index: int, child: "Node") -> None:
-        child.parent = self
-        self.children.insert(index, child)
-
-    def remove_child(self, child: "Node") -> None:
-        self.children.remove(child)
-        child.parent = None
-
-    def detach(self) -> None:
-        if self.parent is not None:
-            self.parent.remove_child(self)
-
-    def drop_tag(self) -> None:
-        """Replace this element with its children, in place.
-
-        [canon: lxml drop_tag — used by Goose for <a>/<b>/<strong>/<i>/<br>/
-        <em>/<span> drop-tagging (A15, A6)]."""
-        drop_all([self])
-
     # -- traversal (document order, iterative) ------------------------------
     # These return LISTS, not generators: traversal is the single hottest
     # code path (millions of visits per batch) and chained generator
@@ -264,7 +245,7 @@ class Node:
 def remove_all(nodes: list["Node"]) -> None:
     """Batch-remove nodes: one children-list rebuild per affected parent.
 
-    Per-node ``detach()`` is O(len(parent.children)) each (list.remove);
+    Removing nodes one by one costs O(len(parent.children)) each (list.remove);
     on Common-Crawl skew-tail pages a parent can hold 10^5 children and a
     cleanup pass can doom most of them — per-node removal would be O(n²).
     """
@@ -285,12 +266,12 @@ def drop_all(nodes: list["Node"]) -> None:
     """Batch drop-tag: replace every node with its children, in place, with
     one children-list rebuild per affected parent.
 
-    Same tree as ``drop_tag()`` on each node in any order (unwrapping is
-    confluent), without its per-node ``index`` + slice splice, which is
-    O(len(parent.children)) each and so O(n²) under a wide parent. Nested
-    drops (a span in a span, a <b> in an <a>) splice the inner node's
-    children straight into the nearest kept ancestor. A node with no
-    parent is left in place, as ``drop_tag`` leaves it.
+    Same tree as a per-node drop-tag (``index`` + slice splice) on each
+    node in any order (unwrapping is confluent), without that splice's
+    O(len(parent.children)) cost per node, O(n²) under a wide parent.
+    Nested drops (a span in a span, a <b> in an <a>) splice the inner
+    node's children straight into the nearest kept ancestor. A node with
+    no parent is left in place.
     """
     dropped = {id(n) for n in nodes if n.parent is not None}
     if not dropped:

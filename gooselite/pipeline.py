@@ -176,15 +176,15 @@ def _extract_parsed(root, lang: str | None, url: str, bytes_in: int,
         # keep priority, per the check_known_schemas-first order.
         if top_image is None:
             top_image = score_top_node_image(top_node, url)
-        top_node = post_cleanup(top_node, effective_lang, seen)
+        top_node = post_cleanup(top_node, seen)
         # A16-ext: anchors surviving the cleaner + post-cleanup — must
-        # read BEFORE the formatter, which drop_tag()s every <a>; this
+        # read BEFORE the formatter, which unwraps every <a>; this
         # is the cleaned-top-node snapshot (goose-family Article.links
         # semantics), so an anchor in a paragraph the FORMATTER later
         # drops (<3 stopwords / negative score) still appears here
         links = extract_links(top_node, url, seen)
         # markdown renders BEFORE get_formatted_text: the flat formatter
-        # drop_tag()s every <a>/<b>/<i> in place, destroying the
+        # unwraps every <a>/<b>/<i> in place, destroying the
         # structure markdown preserves
         if markdown:
             from gooselite.markdown import to_markdown

@@ -237,36 +237,42 @@ def _get_siblings_baseline_score(top_node: Node, seen: list[Node]) -> float:
 
 
 def _get_siblings_content(sibling: Node, baseline_score: float,
-                          lang: str | None, made: list[Node]) -> list[Node]:
+                          made: list[Node]) -> list[Node]:
     """A13: content a previous sibling contributes — the sibling itself when
     it is a non-empty <p>, else fresh <p> nodes for each qualifying
     descendant paragraph (score > 0.30 × baseline, not link-dense), each
-    also appended to ``made``."""
+    also appended to ``made``. Every <p> below calculate_best_node's root
+    was a candidate, so its stopword count is already on it (``Node.swc``:
+    counts do not depend on whitespace, and a paragraph that counts above
+    the threshold has text)."""
     if sibling.tag == "p" and sibling.get_text():
         return [sibling]
     out: list[Node] = []
-    count = stopword_counter(lang)
     threshold = baseline_score * C.SIBLING_SCORE_MULTIPLIER
     for para in sibling.get_elements_by_tag("p"):
-        text = para.get_text()
-        if not text:
-            continue
-        if threshold < count(text) and not _link_dense(para):
-            out.append(new_element("p", text=text))
+        if threshold < para.swc and not _link_dense(para):
+            out.append(new_element("p", text=para.get_text()))
     made.extend(out)
     return out
 
 
-def add_siblings(top_node: Node, lang: str | None,
-                 seen: list[Node]) -> Node:
+def add_siblings(top_node: Node, seen: list[Node]) -> Node:
+    """A13: prepend what each previous sibling contributes, nearest sibling
+    first, as one rebuild of ``top_node.children`` (a per-paragraph
+    ``insert(0, p)`` is O(n) each, so O(n²) on an article split across
+    sibling blocks)."""
     baseline_score = _get_siblings_baseline_score(top_node, seen)
     # the new <p> go on the document's element list, for dispose
     doc = owner_document(top_node)
     made = doc.elements if doc is not None else []
+    absorbed: list[Node] = []
     for sibling in top_node.previous_siblings():
-        for p in _get_siblings_content(sibling, baseline_score, lang, made):
-            p.detach()
-            top_node.insert(0, p)
+        absorbed.extend(_get_siblings_content(sibling, baseline_score, made))
+    if absorbed:
+        remove_all(absorbed)  # a sibling <p> leaves its parent
+        for p in absorbed:
+            p.parent = top_node
+        top_node.children = absorbed[::-1] + top_node.children
     return top_node
 
 
@@ -288,17 +294,14 @@ def _is_nodescore_threshold_met(top_node: Node, e: Node) -> bool:
     return True
 
 
-def post_cleanup(top_node: Node, lang: str | None,
-                 seen: list[Node]) -> Node:
+def post_cleanup(top_node: Node, seen: list[Node]) -> Node:
     """A13 + A14: absorb qualifying previous-sibling paragraphs, then prune
-    non-<p> children that are link-dense / para-less tables / low-scored.
-    ``seen``: what calculate_best_node put in its own."""
-    node = add_siblings(top_node, lang, seen)
-    for e in list(node.children):
-        if not e.is_element or e.tag == "p":
-            continue
-        if (_link_dense(e)
-                or _is_table_and_no_para_exist(e)
-                or not _is_nodescore_threshold_met(node, e)):
-            e.detach()
+    non-<p> children that are link-dense / para-less tables / low-scored,
+    in one batch. ``seen``: what calculate_best_node put in its own."""
+    node = add_siblings(top_node, seen)
+    remove_all([e for e in node.children
+                if e.is_element and e.tag != "p"
+                and (_link_dense(e)
+                     or _is_table_and_no_para_exist(e)
+                     or not _is_nodescore_threshold_met(node, e))])
     return node

@@ -16,11 +16,6 @@ from typing import Callable
 
 from gooselite.stopwords_data import DEFAULT_LANGUAGE, STOPWORDS
 
-# \s with a str pattern matches Unicode whitespace incl. \xa0 (nbsp) —
-# exactly the "innerTrim" normalization of SURVEY.md §2.4 (A15):
-# collapse \s+ to one space, then strip.
-_WHITESPACE_RE = re.compile(r"\s+")
-
 # string.punctuation removal table [canon: goose/text.py remove_punctuation]
 # plus the sentence-final marks of the non-Latin tabled scripts: the
 # Devanagari/Bengali danda and double danda (।॥ end most hi/bn

@@ -7,7 +7,6 @@ Produces dist/goose_pyfiles.zip containing the ``gooselite`` and
 timestamps so the artifact hash is reproducible). Usage on a cluster:
 
     spark-submit --py-files dist/goose_pyfiles.zip \
-        --conf spark.sql.adaptive.enabled=true \
         scripts/run_extract.py --src <pages table> --dst <out dir> --run-id R1
 """
 

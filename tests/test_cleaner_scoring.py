@@ -80,7 +80,7 @@ def test_sibling_absorption_prepends():
     root = _clean(ARTICLE)
     seen = []
     top = calculate_best_node(root, "en", seen)
-    top = post_cleanup(top, "en", seen)
+    top = post_cleanup(top, seen)
     text = get_formatted_text(top, "en")
     paras = text.split("\n\n")
     assert paras[0].startswith("And so it was")
@@ -103,7 +103,7 @@ def test_formatter_removes_fewword_paragraphs():
     root = _clean(html)
     seen = []
     top = calculate_best_node(root, "en", seen)
-    top = post_cleanup(top, "en", seen)
+    top = post_cleanup(top, seen)
     text = get_formatted_text(top, "en")
     assert "short nothing" not in text
     assert len(text.split("\n\n")) == 2
@@ -120,6 +120,6 @@ def test_formatter_drop_tags_keep_text():
     root = _clean(html)
     seen = []
     top = calculate_best_node(root, "en", seen)
-    top = post_cleanup(top, "en", seen)
+    top = post_cleanup(top, seen)
     text = get_formatted_text(top, "en")
     assert "Once upon a time there was a quick brown fox" in text

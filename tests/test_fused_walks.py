@@ -37,6 +37,12 @@ from gooselite.text import stopword_counter
 
 # -- oracles: the replaced code ----------------------------------------------
 
+def _detach(node):
+    if node.parent is not None:
+        node.parent.children.remove(node)
+        node.parent = None
+
+
 def _drop_tag(node):
     parent = node.parent
     if parent is None:
@@ -228,24 +234,25 @@ def _old_post_cleanup(top_node, lang):
                         and not _old_highlink_density(para)):
                     content.append(new_element("p", text=text))
         for p in content:
-            p.detach()
-            top_node.insert(0, p)
+            _detach(p)
+            p.parent = top_node
+            top_node.children.insert(0, p)
     top_score = top_node.score if top_node.score is not None else 0.0
     for e in list(top_node.children):
         if not e.is_element or e.tag == "p":
             continue
         if _old_highlink_density(e):
-            e.detach()
+            _detach(e)
             continue
         for p in e.get_elements_by_tag("p"):
             if len(p.get_text()) < C.TABLE_PARA_MIN_CHARS:
-                p.detach()
+                _detach(p)
         if not e.get_elements_by_tag("p") and e.tag != "td":
-            e.detach()
+            _detach(e)
             continue
         score = e.score if e.score is not None else 0.0
         if score < top_score * C.CHILD_PRUNE_THRESHOLD and e.tag != "td":
-            e.detach()
+            _detach(e)
     return top_node
 
 
@@ -329,7 +336,7 @@ def _stages(text, lang, new):
         for node in root.get_elements_by_tag(*C.CANDIDATE_TAGS):
             if node.link_dense is not None:
                 assert node.link_dense == _old_highlink_density(node)
-    top = (post_cleanup(top, lang, seen) if new
+    top = (post_cleanup(top, seen) if new
            else _old_post_cleanup(top, lang))
     anchors = (top.descendants_in(seen, "a") if new
                else top.get_elements_by_tag("a"))  # extract_links reads
@@ -571,4 +578,39 @@ def test_clean_scales_linearly_on_planted_input(unit):
 
     small, big = _clean_cpu_s(page(4000)), _clean_cpu_s(page(16000))
     # linear is 4; the per-node index + splice of the old code read ~17
+    assert big / small <= 8, (small, big)
+
+
+def _post_cleanup_cpu_s(html):
+    """Min of 3 process_time runs of post_cleanup on fresh scored trees;
+    also the top node's child count and its index under its parent."""
+    best = float("inf")
+    for _ in range(3):
+        root = clean_document(parse_html(html))
+        seen = []
+        top = calculate_best_node(root, "en", seen)
+        gc.collect()
+        gc.disable()
+        try:
+            t0 = time.process_time()
+            post_cleanup(top, seen)
+            best = min(best, time.process_time() - t0)
+        finally:
+            gc.enable()
+    return best, len(top.children), top.parent.children.index(top)
+
+
+def test_sibling_absorption_scales_linearly_on_split_article():
+    """The article split across two sibling <div>s: the second, with more
+    stopwords per <p>, is the top node and absorbs every <p> of the
+    first."""
+    def page(n):
+        return ("<body><div>" + "<p>the fox and the dog were in the barn</p>" * n
+                + f"</div><div>{f'<p>{_WORDY}</p>' * n}</div></body>")
+
+    small, kids, index = _post_cleanup_cpu_s(page(5000))
+    assert (kids, index) == (10000, 1)
+    big, kids, _ = _post_cleanup_cpu_s(page(20000))
+    assert kids == 40000
+    # linear is 4; one insert(0, p) per absorbed <p> read ~10
     assert big / small <= 8, (small, big)

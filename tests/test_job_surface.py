@@ -18,7 +18,7 @@ import sys
 from goose_spark import job
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
-CALLERS = ("perfbench/sparkjob.py", "bench.py", "BENCH/run_scaling.py",
+CALLERS = ("perfbench/sparkjob.py", "bench.py", "scripts/scaling.py",
            "__spark_entry__.py", "scripts/run_extract.py",
            "scripts/rehearse.py")
 REF = re.compile(r"\bJ\.(\w+)|from goose_spark\.job import (\w+)")

@@ -5,7 +5,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from gooselite.minidom import ParseError, _TreeBuilder, parse_html
+from gooselite.minidom import ParseError, _TreeBuilder, drop_all, parse_html
 
 
 def test_basic_tree_and_text():
@@ -79,7 +79,7 @@ def test_previous_siblings_nearest_first():
 def test_drop_tag_splices_children():
     root = parse_html("<p>x <a href=u>link text</a> y</p>")
     a = root.get_elements_by_tag("a")[0]
-    a.drop_tag()
+    drop_all([a])
     p = root.get_elements_by_tag("p")[0]
     assert p.get_text() == "x link text y"
     assert not root.get_elements_by_tag("a")
