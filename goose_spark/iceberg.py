@@ -36,7 +36,7 @@ TABLES = (
     ("pages", PAGES, "days(warc_ts), bucket(1024, url)"),
     ("extracted", EXTRACTED, "bucket"),
     ("metrics", METRICS, None),
-    ("checkpoint", CHECKPOINT, "bucket(1024, url)"),
+    ("checkpoint", CHECKPOINT, "run_id, bucket(1024, url)"),
 )
 
 # The B21 commit as Iceberg executes it: WHEN NOT MATCHED INSERT keyed on

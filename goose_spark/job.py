@@ -9,7 +9,8 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
   ``select('*')`` (SURVEY.md §4.2).
 * **Completed urls leave at the scan (B4).** Resume broadcasts the
   run's url history and anti-joins it into the scan, so the url shuffle,
-  the dedupe window and the UDF see only the urls still to do. Past
+  the dedupe window and the UDF see only the urls still to do. A run
+  lists, sizes and reads only its own ``checkpoint/run_id=<id>/``. Past
   ``CHECKPOINT_BROADCAST_MAX_BYTES`` on storage (~57M urls) the forced
   broadcast is skipped and the anti-join runs after the url shuffle as a
   sort-merge join that reuses its partitioning; that is the job's limit.
@@ -34,7 +35,9 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
 from __future__ import annotations
 
 import os
+import re
 import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -132,10 +135,9 @@ def dedupe_latest(pages: DataFrame) -> DataFrame:
 
 
 def resume_filter(pages: DataFrame, checkpoint: DataFrame | None,
-                  run_id: str | None = None,
                   broadcast: bool = True) -> DataFrame:
     """B4: drop urls already completed — LEFT ANTI join against the
-    checkpoint table. The checkpoint side is urls-only (small relative to
+    run's checkpoint rows. The checkpoint side is urls-only (small relative to
     pages) and broadcast EXPLICITLY by default: relying on the size-stats
     threshold let a stat-less checkpoint source degrade to a
     SortMergeJoin that re-shuffled the fat pages side. No distinct() on
@@ -151,10 +153,7 @@ def resume_filter(pages: DataFrame, checkpoint: DataFrame | None,
     bytes on storage; no extra Spark action per resume)."""
     if checkpoint is None:
         return pages
-    ckpt = checkpoint
-    if run_id is not None:
-        ckpt = ckpt.filter(F.col("run_id") == run_id)
-    urls = ckpt.select("url")
+    urls = checkpoint.select("url")
     if not broadcast:
         return pages.join(urls, on="url", how="left_anti")
     return pages.join(F.broadcast(urls), on="url", how="left_anti")
@@ -200,7 +199,7 @@ def extract(pages: DataFrame, doc_timeout_s: float | None = None) -> DataFrame:
     """The extraction operator (B17): prune columns, bucket, then one
     mapInPandas pass with gooselite over the input's own partitions
     (``prepare`` has placed them). doc_timeout_s: per-doc wall budget
-    (None → GOOSE_DOC_TIMEOUT_S env, default 300s; 0 disables). The
+    (None → ``udf.DOC_TIMEOUT_S``, 300 s; 0 disables). The
     ``lang`` column is the language override (the reference's
     target_language); the markdown column is null here, markdown is
     ``gooselite.extract_one(markdown=True)``."""
@@ -218,7 +217,7 @@ def extract(pages: DataFrame, doc_timeout_s: float | None = None) -> DataFrame:
 
 
 def prepare(pages: DataFrame, checkpoint: DataFrame | None = None,
-            run_id: str | None = None, broadcast: bool = True,
+            broadcast: bool = True,
             partitions: int | None = None) -> DataFrame:
     """resume filter → partition by url → dedupe (the pre-extraction
     relational shell). The broadcast anti-join runs on the scan, so
@@ -230,9 +229,9 @@ def prepare(pages: DataFrame, checkpoint: DataFrame | None = None,
     if partitions is None:
         partitions = pages.sparkSession.sparkContext.defaultParallelism
     if broadcast:
-        pages, checkpoint = resume_filter(pages, checkpoint, run_id), None
+        pages, checkpoint = resume_filter(pages, checkpoint), None
     return resume_filter(dedupe_latest(salted_repartition(pages, partitions)),
-                         checkpoint, run_id, broadcast=False)
+                         checkpoint, broadcast=False)
 
 
 def metrics_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
@@ -274,7 +273,8 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     """Full batch job with durable writes + resumable checkpoint (B20/B21).
 
     Write order is the exactly-once-ish contract: EXTRACTED first, then
-    METRICS, then the checkpoint rows for the urls just completed.
+    METRICS, then the checkpoint rows for the urls just completed, under
+    ``checkpoint/run_id=<run_id>/`` (one path segment of ``[A-Za-z0-9._-]``).
 
     Everything after the extraction derives from **this batch only**:
     the UDF runs exactly once (for the durable write), and metrics /
@@ -287,10 +287,14 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     resumed run is O(batch): each run's METRICS rows count only the
     documents that run processed (per-run lineage, BASELINE.json:6).
     """
+    if not re.fullmatch(r"[A-Za-z0-9._-]+", run_id):
+        raise ValueError(f"run_id {run_id!r} is not one path segment of "
+                         "[A-Za-z0-9._-]")
     configure_session(spark)
     extracted_path = os.path.join(out_dir, "extracted")
     metrics_path = os.path.join(out_dir, "metrics")
-    ckpt_path = os.path.join(out_dir, "checkpoint")
+    ckpt_root = os.path.join(out_dir, "checkpoint")
+    ckpt_path = os.path.join(ckpt_root, f"run_id={run_id}")
 
     checkpoint = None
     broadcast_ckpt = True
@@ -298,22 +302,21 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(jpath):
         checkpoint = spark.read.parquet(ckpt_path)
-        # Size guard from the filesystem's metadata (no Spark action): a
+        # Size guard on this run's directory, what the broadcast builds,
+        # from the filesystem's metadata (no Spark action): a
         # checkpoint whose parquet exceeds the cap would OOM the forced
         # broadcast build (urls compress ~3-5x on disk → ~512 MB of files
         # is already a multi-GB build side). Fall back to Catalyst/AQE
         # choice after the url shuffle (prepare).
         ckpt_bytes = fs.getContentSummary(jpath).getLength()
         if ckpt_bytes > CHECKPOINT_BROADCAST_MAX_BYTES:
-            import warnings
-
             warnings.warn(
                 f"run_job_df: checkpoint is {ckpt_bytes >> 20} MB on "
                 "disk; skipping the forced broadcast",
                 stacklevel=2)
             broadcast_ckpt = False
 
-    todo = prepare(pages, checkpoint, run_id, broadcast=broadcast_ckpt,
+    todo = prepare(pages, checkpoint, broadcast=broadcast_ckpt,
                    partitions=partitions)
 
     # B20: partitioned append; partition by size bucket (dt at real
@@ -359,10 +362,8 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     # input row, so the url set is already unique.
     (
         batch.select("url")
-        .withColumn("run_id", F.lit(run_id))
         .withColumn("completed_ts", F.current_timestamp())
-        .select("run_id", "url", "completed_ts")
         .write.mode("append").parquet(ckpt_path)
     )
     return {"batch_rows": n, "extracted_path": extracted_path,
-            "metrics_path": metrics_path, "checkpoint_path": ckpt_path}
+            "metrics_path": metrics_path, "checkpoint_path": ckpt_root}

@@ -9,7 +9,6 @@ module import — once per executor Python worker, not per batch.
 
 from __future__ import annotations
 
-import os
 import signal
 from typing import Iterator
 
@@ -22,14 +21,14 @@ from gooselite.pipeline import ExtractionTimeout, extract_one, timeout_result
 # pathological page must produce a status='timeout' row, not a pinned
 # task. 0 disables. SIGALRM-based — works in the Spark python worker's
 # main thread; silently disabled where signals are unavailable.
-DOC_TIMEOUT_S = float(os.environ.get("GOOSE_DOC_TIMEOUT_S", "300"))
+DOC_TIMEOUT_S = 300.0
 
 _OUT_COLS = EXTRACTED.fieldNames()
 
 
 def make_extract_batches(doc_timeout_s: float | None = None):
     """Build the mapInPandas body with the per-doc budget resolved here,
-    once (None → GOOSE_DOC_TIMEOUT_S). The budget is captured in the
+    once (None → DOC_TIMEOUT_S). The budget is captured in the
     closure so it serializes to the workers (a module global patched on
     the driver never reaches them)."""
     budget = DOC_TIMEOUT_S if doc_timeout_s is None else doc_timeout_s

@@ -8,17 +8,19 @@ is_table_and_no_para_exist, is_nodescore_threshold_met]. Reference checkout
 empty at build time (SURVEY.md §0.1); every constant sourced from
 :mod:`gooselite.constants` (§2.4) for one-place re-verification.
 
-Candidate enumeration and the A9 link-density fold of every candidate
-share one tree walk (:func:`_link_walk`). ``calculate_best_node`` caches
-each candidate's stopword count and link-density decision on the node
-(``Node.swc``, ``Node.link_dense``); post_cleanup reads them back for the
-same, still unchanged paragraphs instead of rescanning them. It also
-fills the caller's ``seen`` list with the <p> it scored and the <a> its
+Candidate enumeration, the stopword count and the A9 link-density fold
+share one tree walk (:func:`_link_walk`), which leaves each candidate's
+count and link-density decision on the node (``Node.swc``,
+``Node.link_dense``); post_cleanup reads them back for the same, still
+unchanged paragraphs instead of rescanning them. ``calculate_best_node``
+fills the caller's ``seen`` list with the <p> it scored and the <a> the
 walk met, so the sibling baseline and ``extract_links`` read the top
 node's share of those instead of walking the top node.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from gooselite import constants as C
 from gooselite.minidom import (TEXT, Node, new_element, owner_document,
@@ -38,12 +40,13 @@ def _is_dense(words: int, links: int, link_words: int) -> bool:
 
 def is_highlink_density(node: Node) -> bool:
     """A9 for one node: the totals of one :func:`_link_walk` over it."""
-    _, _, links, link_words, _ = _link_walk(node, ())
+    _, links, link_words, _ = _link_walk(node, ())
     return bool(links) and _is_dense(len(node.raw_text().split()), links,
                                      link_words)
 
 
 def _link_dense(node: Node) -> bool:
+    """A candidate's decision from its walk, else a fresh walk."""
     dense = node.link_dense
     return is_highlink_density(node) if dense is None else dense
 
@@ -74,28 +77,29 @@ def _precompute_boostable(candidates: list[Node]) -> set[Node]:
     return out
 
 
-def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
-        list[Node], dict[Node, tuple[int, int, int]], int, int, list[Node]]:
+def _link_walk(root: Node, tags: tuple[str, ...],
+               count: Callable[[str], int] | None = None) -> tuple[
+        list[Node], int, int, list[Node]]:
     """One walk below ``root``: the nodes tagged ``tags`` (per tag group,
-    each in document order — A7's candidate order), the A9 link fold of
-    each that has an <a> below it, the fold's totals for ``root``, and
-    every <a> below ``root`` in document order.
+    each in document order — A7's candidate order), the fold's totals for
+    ``root``, and every <a> below ``root`` in document order. Each tagged
+    node gets its stopword count (``Node.swc``, by ``count``) and its A9
+    link-density decision (``Node.link_dense``).
 
-    The fold is (n_links, Σ words × <a>-depth, <a>-depth at the node).
-    Word counts are additive over text nodes (the join space never merges
-    tokens), and a text's words count once per <a> above it: nested <a>
-    count the way ``get_elements_by_tag("a")`` lists them. Running totals
-    are read where a node's subtree begins and ends; a None on the walk
-    stack marks the end of the innermost open <a> or tagged node. Only
-    text below an <a> is tokenized here. A node's own word count W comes
-    from the raw text its caller reads anyway, and its link words are
-    Σ − depth × W."""
+    The link fold is (n_links, Σ words × <a>-depth, <a>-depth at the
+    node). Word and stopword counts are additive over text nodes (the join
+    space never merges tokens), and a text's words count once per <a>
+    above it: nested <a> count the way ``get_elements_by_tag("a")`` lists
+    them. Running totals are read where a node's subtree begins and ends;
+    a None on the walk stack marks the end of the innermost open <a> or
+    tagged node. Only text below an <a> is tokenized here, and only text
+    below a tagged node is counted. A node with links reads its own word
+    count W from its raw text, and its link words are Σ − depth × W."""
     buckets: dict[str, list[Node]] = {t: [] for t in tags}
-    links: dict[Node, tuple[int, int, int]] = {}
     anchors: list[Node] = []
     exits: list[Node] = []
-    marks: list[tuple[int, int, int]] = []
-    n_a = a_words = depth = 0
+    marks: list[tuple[int, int, int, int]] = []
+    n_a = a_words = depth = stops = 0
     stack = list(reversed(root.children))
     pop, push, push_end = stack.pop, stack.extend, stack.append
     while stack:
@@ -104,23 +108,34 @@ def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
             e = exits.pop()
             if e.tag == "a":
                 depth -= 1
-            else:
-                n0, w0, d0 = marks.pop()
-                if n_a > n0:
-                    links[e] = (n_a - n0, a_words - w0, d0)
+                continue
+            n0, w0, d0, s0 = marks.pop()
+            e.swc = stops - s0
+            dense = False
+            if n_a > n0:
+                words = len(e.raw_text().split())
+                dense = _is_dense(words, n_a - n0, a_words - w0 - d0 * words)
+            e.link_dense = dense
             continue
         kids = node.children
         if not kids:
-            if node.tag == TEXT:
-                if depth and node.text:
-                    a_words += len(node.text.split()) * depth
-            elif node.tag == "a":
+            tag = node.tag
+            if tag == TEXT:
+                text = node.text
+                if text:
+                    if depth:
+                        a_words += len(text.split()) * depth
+                    if marks:
+                        stops += count(text)
+            elif tag == "a":
                 n_a += 1
                 anchors.append(node)
             else:
-                bucket = buckets.get(node.tag)
+                bucket = buckets.get(tag)
                 if bucket is not None:
                     bucket.append(node)
+                    node.swc = 0
+                    node.link_dense = False
             continue
         tag = node.tag
         if tag == "a":
@@ -134,13 +149,13 @@ def _link_walk(root: Node, tags: tuple[str, ...]) -> tuple[
             if bucket is not None:
                 bucket.append(node)
                 exits.append(node)
-                marks.append((n_a, a_words, depth))
+                marks.append((n_a, a_words, depth, stops))
                 push_end(None)
         push(reversed(kids))
     out: list[Node] = []
     for t in tags:
         out.extend(buckets[t])
-    return out, links, n_a, a_words, anchors
+    return out, n_a, a_words, anchors
 
 
 def calculate_best_node(root: Node, lang: str | None,
@@ -149,31 +164,15 @@ def calculate_best_node(root: Node, lang: str | None,
     grandparents, return argmax parent (first-in-document-order tie-break).
     ``seen`` receives the <p> candidates that scored (above the stopword
     floor, not link-dense), then every <a>, each in document order."""
-    candidates, links, _, _, anchors = _link_walk(root, C.CANDIDATE_TAGS)
-
-    # stopword counts and link-density decisions cached ON the node
-    # (Node.swc, Node.link_dense): the sibling-baseline pass (A13) re-reads
-    # the same paragraphs and nothing between here and there mutates a
-    # counted paragraph's subtree
-    count = stopword_counter(lang)
-    nodes_with_text: list[Node] = []
-    for node in candidates:
-        text = node.raw_text()
-        cnt = count(text)
-        node.swc = cnt
-        if cnt > C.CANDIDATE_MIN_STOPWORDS:
-            fold = links.get(node)
-            if fold is None:
-                dense = False
-            else:
-                n_links, a_words, depth = fold
-                words = len(text.split())
-                dense = _is_dense(words, n_links, a_words - depth * words)
-            node.link_dense = dense
-            if not dense:
-                nodes_with_text.append(node)
-        else:
-            node.link_dense = None
+    # the counts and link-density decisions stay on the nodes (Node.swc,
+    # Node.link_dense): the sibling-baseline pass (A13) re-reads the same
+    # paragraphs and nothing between here and there mutates a counted
+    # paragraph's subtree
+    candidates, _, _, anchors = _link_walk(root, C.CANDIDATE_TAGS,
+                                           stopword_counter(lang))
+    nodes_with_text = [n for n in candidates
+                       if n.swc > C.CANDIDATE_MIN_STOPWORDS
+                       and not n.link_dense]
 
     # CANDIDATE_TAGS puts every <p> first, in document order
     seen.extend(n for n in nodes_with_text if n.tag == "p")

@@ -334,8 +334,7 @@ def _stages(text, lang, new):
         return out
     if new:
         for node in root.get_elements_by_tag(*C.CANDIDATE_TAGS):
-            if node.link_dense is not None:
-                assert node.link_dense == _old_highlink_density(node)
+            assert node.link_dense == _old_highlink_density(node)
     top = (post_cleanup(top, seen) if new
            else _old_post_cleanup(top, lang))
     anchors = (top.descendants_in(seen, "a") if new
@@ -397,6 +396,10 @@ def test_fused_phases_match_oracles_on_tag_soup(text):
     _assert_same(text)
 
 
+# Entries of each variant counter's table.
+_LANG_WORDS = {"zh": ["的", "是", "我们"], "ja": ["あの", "ある", "いる"],
+               "th": ["การ", "ของ", "กับ"], "ko": ["그", "것", "그러나"],
+               "ar": ["أن", "أو", "أيضا"]}
 # Soup aimed at the decisions the fused walks make: unwraps with
 # blacklisted attributes, dropcaps, spans under <p>, nested <a>, media,
 # and enough stopwords for candidates to score.
@@ -407,7 +410,8 @@ _ATTRS = ["", "", " class=dropcap", " class=Drop_Cap", " class=sidebar",
           " id=footer", " class=caption", " name=meta", " class=art",
           " id=x-twitter", " class=dropcap id=footer", " src=x.jpg"]
 _WORDS = ["the", "of", "and", "to", "in", "is", "it", "was", "for", "on",
-          "that", "with", "fox", "dog", "ran", "x"]
+          "that", "with", "fox", "dog", "ran", "x",
+          *(w for words in _LANG_WORDS.values() for w in words)]
 _AIMED = st.lists(st.one_of(
     st.tuples(st.sampled_from(_TAGS), st.sampled_from(_ATTRS))
       .map(lambda t: f"<{t[0]}{t[1]}>"),
@@ -418,9 +422,38 @@ _AIMED = st.lists(st.one_of(
 
 
 @settings(max_examples=300, deadline=None)
-@given(_AIMED, st.sampled_from(["en", "zh"]))
+@given(_AIMED, st.sampled_from(["en", *_LANG_WORDS]))
 def test_fused_phases_match_oracles_on_aimed_soup(text, lang):
     _assert_same(text, lang)
+
+
+# Soup aimed at the count folds: blocks, and inline elements that split a
+# block's text into several text nodes, around runs of one table's
+# entries, with no blacklisted attribute or <script> to drop the text.
+# The walks count text nodes one by one where the oracles count their
+# concatenations.
+_BLOCKS = ["p", "div", "td", "tr", "table", "pre", "ul", "li"]
+_INLINE = ["b", "i", "span", "em", "a", "strong"]
+
+
+def _block_soup(words):
+    run = st.lists(st.sampled_from(words), min_size=1,
+                   max_size=14).map(" ".join)
+    return st.lists(st.one_of(
+        st.sampled_from(_BLOCKS).map(lambda t: f"<{t}>"),
+        st.sampled_from(_BLOCKS).map(lambda t: f"</{t}>"),
+        run,
+        st.tuples(st.sampled_from(_INLINE), run)
+          .map(lambda t: f"<{t[0]}>{t[1]}</{t[0]}>"),
+    ), max_size=80).map("".join)
+
+
+@pytest.mark.parametrize("lang", sorted(_LANG_WORDS))
+@settings(max_examples=300, deadline=None)
+@given(data=st.data())
+def test_count_folds_match_oracles_on_block_soup(lang, data):
+    _assert_same(data.draw(_block_soup(_LANG_WORDS[lang] + ["fox", "x"])),
+                 lang)
 
 
 @settings(max_examples=300, deadline=None)
@@ -578,6 +611,42 @@ def test_clean_scales_linearly_on_planted_input(unit):
 
     small, big = _clean_cpu_s(page(4000)), _clean_cpu_s(page(16000))
     # linear is 4; the per-node index + splice of the old code read ~17
+    assert big / small <= 8, (small, big)
+
+
+def _best_node_cpu_s(html, lang):
+    """Min of 3 process_time runs of calculate_best_node on fresh parses."""
+    best = float("inf")
+    for _ in range(3):
+        root = parse_html(html)
+        gc.collect()
+        gc.disable()
+        try:
+            t0 = time.process_time()
+            calculate_best_node(root, lang, [])
+            best = min(best, time.process_time() - t0)
+        finally:
+            gc.enable()
+    return best
+
+
+_NESTED_TEXT = {"en": "the fox and the dog were in the barn ",
+                "zh": "我们的国家是一个大国 "}
+
+
+@pytest.mark.parametrize("lang", ["en", "zh"])
+@pytest.mark.parametrize("unit", ["<table><tr><td>", "<pre>"],
+                         ids=["td", "pre"])
+def test_best_node_scales_linearly_on_nested_candidates(unit, lang):
+    """Unclosed layout tables and <pre> runs nest every candidate in the
+    one before it: a per-candidate count of its subtree's text is
+    quadratic in the depth."""
+    def page(n):
+        return "<body>" + (unit + _NESTED_TEXT[lang]) * n + "</body>"
+
+    small = _best_node_cpu_s(page(1000), lang)
+    big = _best_node_cpu_s(page(4000), lang)
+    # linear is 4; the per-candidate recount read 15-19
     assert big / small <= 8, (small, big)
 
 

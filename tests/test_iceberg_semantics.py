@@ -84,6 +84,9 @@ def test_rendered_statements_shape():
     ddls = ddl_sql("prod.cc")
     assert len(ddls) == 4
     assert any("bucket(1024, url)" in d and "checkpoint" in d for d in ddls)
+    # one run's resume reads only its own partition
+    assert any(d.endswith("PARTITIONED BY (run_id, bucket(1024, url))")
+               and ".checkpoint (" in d for d in ddls)
     # pages and checkpoint share the url bucketing
     assert sum("bucket(1024, url)" in d for d in ddls) == 2
 

@@ -6,6 +6,7 @@ import datetime
 import os
 import pathlib
 import shutil
+import warnings
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -138,6 +139,13 @@ def test_dedupe_tie_break_ignores_input_order(spark):
         assert kept(op, rows) == kept(op, rows[::-1])
 
 
+def _half_pages(spark, pages_path, tmp_path):
+    half_path = str(tmp_path / "pages_half")
+    (J.read_pages(spark, pages_path).filter(F.xxhash64("url") % 2 == 0)
+     .write.parquet(half_path))
+    return half_path
+
+
 @pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
 def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory,
                                    as_uri):
@@ -148,9 +156,7 @@ def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory,
     pages_path, _ = sf0001_fixtures
     out_dir = str(tmp_path_factory.mktemp("resume"))
     pages = J.read_pages(spark, pages_path)
-    half = pages.filter(F.xxhash64("url") % 2 == 0)
-    half_path = os.path.join(out_dir, "pages_half")
-    half.write.parquet(half_path)
+    half_path = _half_pages(spark, pages_path, pathlib.Path(out_dir))
     dst = pathlib.Path(out_dir).as_uri() if as_uri else out_dir
 
     r1 = J.run_job(spark, half_path, dst, run_id="r", partitions=4)
@@ -197,6 +203,56 @@ def test_resume_skips_completed_urls_without_forced_broadcast(
     assert r2["batch_rows"] == 0
     extracted = spark.read.parquet(r2["extracted_path"])
     assert extracted.count() == r1["batch_rows"]
+
+
+def test_resume_guard_sizes_only_its_own_run(spark, sf0001_fixtures,
+                                             tmp_path, monkeypatch):
+    """The broadcast guard sizes the run's own checkpoint directory, which
+    is what the broadcast builds. Run a covers every page, run b half of
+    them; with the cap just above b's own checkpoint, b's rerun keeps the
+    forced broadcast and skips the urls b completed."""
+    pages_path, _ = sf0001_fixtures
+    half_path = _half_pages(spark, pages_path, tmp_path)
+    out = str(tmp_path / "out")
+
+    def ckpt_bytes():
+        return sum(f.stat().st_size for f in pathlib.Path(
+            out, "checkpoint").rglob("*") if f.is_file())
+
+    J.run_job(spark, pages_path, out, run_id="a", partitions=4)
+    a_bytes = ckpt_bytes()
+    b1 = J.run_job(spark, half_path, out, run_id="b", partitions=4)
+    # what b's run added: b's own checkpoint
+    monkeypatch.setattr(J, "CHECKPOINT_BROADCAST_MAX_BYTES",
+                        ckpt_bytes() - a_bytes + 1)
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", ".*skipping the forced broadcast")
+        b2 = J.run_job(spark, pages_path, out, run_id="b", partitions=4)
+    assert 0 < b1["batch_rows"] and 0 < b2["batch_rows"]
+    assert b1["batch_rows"] + b2["batch_rows"] == J.prepare(
+        J.read_pages(spark, pages_path)).count()
+
+
+def test_resume_lists_only_its_own_run(spark, sf0001_fixtures, tmp_path):
+    """An unreadable file in another run's checkpoint directory does not
+    reach this run's resume."""
+    pages_path, _ = sf0001_fixtures
+    half_path = _half_pages(spark, pages_path, tmp_path)
+    out = str(tmp_path / "out")
+    b1 = J.run_job(spark, half_path, out, run_id="b", partitions=4)
+    other = pathlib.Path(out, "checkpoint", "run_id=other")
+    other.mkdir()
+    (other / "part-0.parquet").write_bytes(b"not parquet")
+    b2 = J.run_job(spark, pages_path, out, run_id="b", partitions=4)
+    assert b1["batch_rows"] + b2["batch_rows"] == J.prepare(
+        J.read_pages(spark, pages_path)).count()
+
+
+def test_run_id_is_one_path_segment():
+    """The run id names the run's checkpoint directory."""
+    for bad in ("", "a/b", "r 1", "run_id=x"):
+        with pytest.raises(ValueError, match="one path segment"):
+            J.run_job_df(None, None, "unused", bad)
 
 
 def test_per_doc_timeout_yields_timeout_row(spark):
